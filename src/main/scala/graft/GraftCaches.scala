@@ -93,7 +93,7 @@ object GraftCaches {
     * `spark_partition_id()` reports) is fixed at the `localCheckpoint`
     * CALL, and a single lazily-checkpointed RDD never re-executes its
     * plan — what the contract forbids is two separate executions of the
-    * UN-pinned plan, where AQE may re-coalesce (see PrefixScan.pinned).
+    * UN-pinned plan, where AQE may re-coalesce (see [[graft.operators.PrefixScan]]).
     * Prefer `eager = true` when several SIBLING stages of one action (or
     * concurrent jobs) consume the pin: lazy materialization makes their
     * tasks race on the block-store locks, serializing on whichever task

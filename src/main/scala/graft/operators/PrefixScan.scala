@@ -1,172 +1,70 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, LongType, StructField, StructType}
 
-/** Distributed exact prefix scan (global running sum) over a total order.
+/** Distributed exact prefix scan: running sums (global or per group) and
+  * `ntile`, with every stage partition-parallel. A global
+  * `Window.orderBy(...)` moves the whole relation into one task, and a
+  * `Window.partitionBy(grp)` over few groups puts a whole group in one
+  * task; this operator computes the identical result in two phases:
   *
-  * `Window.orderBy(...)` with no partition key is the textbook
-  * does-not-scale plan: Spark moves the WHOLE relation into one task to
-  * satisfy the global ordering. This operator computes the identical
-  * result with every stage partition-parallel — the classic two-phase
-  * scan:
+  *   1. `repartitionByRange` on (group, order) gives disjoint, ordered
+  *      ranges; each row is tagged `_pid` = its range partition.
+  *   2. one collect returns the totals and NULL counts per (`_pid`,
+  *      group); the driver prefix-adds them per group into per-partition
+  *      offsets and grand totals.
+  *   3. a (`_pid`, group)-partitioned running-sum window plus the
+  *      broadcast offset yields the running sum over the whole group.
   *
-  *   1. `repartitionByRange` on the order key: ranges are disjoint and
-  *      ordered, so partition p holds exactly the rows that precede
-  *      partition p+1 in the total order.
-  *   2. per-partition totals — ONE row per partition — are collected,
-  *      prefix-scanned on the driver (bounded: `numShufflePartitions`
-  *      rows, same driver-traffic shape as k-means++ seeding), and
-  *      broadcast back as per-partition offsets.
-  *   3. a `_pid`-partitioned running-sum window (parallel across
-  *      partitions) plus the offset yields the global cumulative sum.
-  *
-  * Bit-equal to the global window for integer/decimal values because
-  * addition is associative and the order key is total. The order key MUST
-  * be a total order (include a unique id as tie-break); with duplicate
-  * keys crossing a range boundary the per-partition windows could not
-  * reconstruct one global order.
+  * Invariants:
+  *   - `order` is a TOTAL order within each group: it must end in a
+  *     unique tie-break. With duplicate keys across a range boundary the
+  *     per-partition windows could not reconstruct one order.
+  *   - Value columns sum to Long or exact Decimal, whose addition is
+  *     associative, so the result is bit-equal to the window at any
+  *     partitioning. Offsets and outputs carry the sum's own analyzed type.
+  *   - The ranged relation is pinned ([[graft.GraftCaches.pin]]) before
+  *     the collect, which freezes `_pid`: `spark_partition_id()` is
+  *     nondeterministic across executions (AQE may re-coalesce), and the
+  *     collect and the window read the same checkpointed RDD. The pin is
+  *     lazy: the collect is its first action and stores the blocks; a
+  *     lost block fails loudly instead of recomputing.
+  *   - NULL values are rejected: the window's running sum stays NULL
+  *     until a group's first non-NULL value, which per-partition offsets
+  *     cannot reconstruct.
+  *   - NULL group keys are kept as a real group, as `Window.partitionBy`
+  *     does: the offsets rejoin on `<=>`.
   */
 object PrefixScan {
 
-  /** Adds `outCol` = running sum of `valueCol` (long) over the total
-    * order `order`. Partition count follows `spark.sql.shuffle.partitions`
-    * (AQE may coalesce small inputs — harmless: the result is partition-
-    * count-invariant); pass [[runningSumLongPartitioned]] to pin it. */
-  def runningSumLong(df: DataFrame, valueCol: String, outCol: String, order: Column*): DataFrame =
-    scan(df.repartitionByRange(order: _*), valueCol, outCol, order)
-
-  /** SEVERAL long running sums over the SAME total order in ONE scan
-    * (round-15, guide §1.2/§2.4): chaining [[runningSumLong]] per value
-    * column pays a fresh range shuffle + pin + totals collect + window
-    * each time over an already-scanned relation; one pass computes every
-    * column's cumulative sum from one pinned range partitioning (one
-    * collect returns all per-partition totals at once). Also returns the
-    * GRAND TOTAL of each value column — already on the driver from the
-    * totals collect — so callers that need "the sum of the whole column"
-    * (CDF denominators) can inline it as a literal instead of
-    * re-aggregating the input relation. Per column the result is
-    * bit-equal to the chained single-column scans (integer addition,
-    * same range order). */
-  def runningSumsLongWithTotals(df: DataFrame, cols: Seq[(String, String)],
-      order: Column*): (DataFrame, Seq[Long]) = {
-    require(cols.nonEmpty, "runningSumsLongWithTotals: no value columns")
-    val parted = pinned(
-      df.repartitionByRange(order: _*).withColumn("_pid", spark_partition_id()))
-    val totals = parted.groupBy("_pid")
-      .agg(sum(col(cols.head._1)).as("_t0"),
-        cols.tail.zipWithIndex.map { case ((v, _), i) =>
-          sum(col(v)).as(s"_t${i + 1}")
-        }: _*)
-      .collect()
-      .map(r => (r.getInt(0), cols.indices.map(i => r.getLong(i + 1))))
-      .sortBy(_._1)
-    val grand = cols.indices.map(i => totals.map(_._2(i)).sum)
-    // Exclusive prefix per column: offset of partition p = sum of totals
-    // of partitions < p (scanLeft(0)(+) zipped against the pid list).
-    val offsetRows = totals.map(_._1).zipWithIndex.map { case (pid, k) =>
-      org.apache.spark.sql.Row.fromSeq(
-        pid +: cols.indices.map(i => totals.take(k).map(_._2(i)).sum))
-    }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("_pid",
-        org.apache.spark.sql.types.IntegerType) +:
-        cols.indices.map(i => org.apache.spark.sql.types.StructField(
-          s"_off$i", org.apache.spark.sql.types.LongType)))
-    val spark = df.sparkSession
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsetRows.toSeq, 1), offSchema)
-    val w = Window.partitionBy("_pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = cols.zipWithIndex.foldLeft(parted.join(broadcast(offDf), "_pid")) {
-      case (d, ((v, o), i)) =>
-        d.withColumn(o, col(s"_off$i") + sum(col(v)).over(w))
-    }.drop("_pid" +: cols.indices.map(i => s"_off$i"): _*)
-    (out, grand)
-  }
-
-  /** [[runningSumLong]] with an explicit range-partition count. */
-  def runningSumLongPartitioned(df: DataFrame, numPartitions: Int, valueCol: String,
+  /** Adds `outCol` = running sum of `valueCol` over `order`, per group of
+    * `groupCols` (empty for a global scan). */
+  def runningSum(df: DataFrame, groupCols: Seq[String], valueCol: String,
       outCol: String, order: Column*): DataFrame =
-    scan(df.repartitionByRange(numPartitions, order: _*), valueCol, outCol, order)
+    scan(df, groupCols, Seq(valueCol -> outCol), order)._1
 
-  /** [[runningSumDecimal]] that ALSO returns the GRAND TOTAL of the value
-    * column (round-15, guide §1.2): the per-partition decimal totals are
-    * already on the driver from the scan's collect, and exact decimal
-    * addition is associative, so their sum IS `df.agg(sum(valueCol))` —
-    * callers that cross-broadcast "the whole column's sum" (ABC share
-    * denominators) inline it as a literal instead of re-aggregating (and
-    * re-reading) the scanned relation. */
-  def runningSumDecimalWithTotal(df: DataFrame, valueCol: String, outCol: String,
-      order: Column*): (DataFrame, java.math.BigDecimal) =
-    decimalScan(df, valueCol, outCol, order)
+  /** Adds one running sum per (value, output) column pair in one scan, and
+    * returns the grand totals from the scan's own collect as a local
+    * DataFrame: `groupCols` plus one column per value column, named after
+    * it and typed as its sum. A global scan has exactly one totals row. */
+  def runningSums(df: DataFrame, groupCols: Seq[String], cols: Seq[(String, String)],
+      order: Column*): (DataFrame, DataFrame) =
+    scan(df, groupCols, cols, order)
 
-  /** [[runningSumLong]] for exact DECIMAL values (money running totals):
-    * partition totals are collected as BigDecimal, prefix-added exactly
-    * on the driver, and the offsets rejoin cast to the window sum's own
-    * decimal type — so the result is bit-equal to a global decimal
-    * window at any partitioning. */
-  def runningSumDecimal(df: DataFrame, valueCol: String, outCol: String, order: Column*): DataFrame =
-    decimalScan(df, valueCol, outCol, order)._1
-
-  private def decimalScan(df: DataFrame, valueCol: String, outCol: String,
-      order: Seq[Column]): (DataFrame, java.math.BigDecimal) = {
-    // Pinned, NOT cached (see [[pinned]]): the `_pid` column must be
-    // IDENTICAL between the totals job and the window job.
-    val parted = pinned(
-      df.repartitionByRange(order: _*).withColumn("_pid", spark_partition_id()))
-    val sumType = parted.select(sum(col(valueCol)).as("s")).schema.head.dataType
-    val totals = parted.groupBy("_pid")
-      .agg(sum(col(valueCol)).cast(sumType).as("_tot"))
-      .collect()
-      .map(r => (r.getInt(0), r.getDecimal(1)))
-      .sortBy(_._1)
-    val prefix = totals.map(_._2)
-      .scanLeft(java.math.BigDecimal.ZERO)((a, b) => a.add(b))
-    val offDf = df.sparkSession
-      .createDataFrame(totals.map(_._1).zip(prefix).toSeq)
-      .toDF("_pid", "_off")
-      .select(col("_pid"), col("_off").cast(sumType).as("_off"))
-    val w = Window.partitionBy("_pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = parted.join(broadcast(offDf), "_pid")
-      .withColumn(outCol, (col("_off") + sum(col(valueCol)).over(w)).cast(sumType))
-      .drop("_pid", "_off")
-    (out, prefix.last)
-  }
-
-  /** Distributed exact `ntile(k)` over the total order `order` — value-
-    * identical to `ntile(k).over(Window.orderBy(order: _*))` (the
-    * SQL-standard bucketing: the first `n % k` buckets carry ⌈n/k⌉
-    * rows, the rest ⌊n/k⌋) but with no single-partition WindowExec:
-    *
-    *   1. the two-phase scan above with COUNT as the value gives every
-    *      row its global rank (per-range `row_number` + broadcast
-    *      per-partition row-count offsets), every stage parallel;
-    *   2. the bucket is then pure integer arithmetic on
-    *      (rank, n, k) — `q = n DIV k`, `rem = n MOD k`,
-    *      rank ≤ (q+1)·rem ⇒ ⌈rank/(q+1)⌉, else
-    *      rem + ⌈(rank − (q+1)·rem)/q⌉ — with q/rem driver-side
-    *      literals (n comes from the already-collected partition
-    *      counts) and `DIV` keeping the division exact at any n.
-    *
-    * `order` MUST be a total order (tie-break with a unique id), same
-    * as every scan here. Returns `outCol` as BIGINT — cast at the call
-    * site if the window being replaced emitted INT. */
+  /** Adds `outCol` = `ntile(k)` over `order` as BIGINT, value-identical to
+    * `ntile(k).over(Window.orderBy(order: _*))`: the first `n % k` buckets
+    * carry ⌈n/k⌉ rows, the rest ⌊n/k⌋. The global rank is a running count
+    * over the scan; the bucket is integer arithmetic on (rank, n, k) with
+    * `n` from the scan's totals. */
   def ntile(df: DataFrame, k: Int, outCol: String, order: Column*): DataFrame = {
     require(k >= 1, s"ntile k must be >= 1, got $k")
-    val parted = pinned(
-      df.repartitionByRange(order: _*).withColumn("_pid", spark_partition_id()))
-    val counts = parted.groupBy("_pid").agg(count(lit(1)).as("_cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    val offsetRows = counts.map(_._1).zip(counts.map(_._2).scanLeft(0L)(_ + _)).toSeq
-    val offDf = df.sparkSession.createDataFrame(offsetRows).toDF("_pid", "_off")
-    val w = Window.partitionBy("_pid").orderBy(order: _*)
-    val ranked = parted.join(broadcast(offDf), "_pid")
-      .withColumn("_rnk", col("_off") + row_number().over(w).cast("long"))
-      .drop("_pid", "_off")
+    val (ranked, totals) = scan(df.withColumn("_one", lit(1L)), Nil, Seq("_one" -> "_rnk"), order)
+    val n = totals.first().getLong(0)
     val q = n / k
     val rem = n % k
     val bucket =
@@ -174,263 +72,74 @@ object PrefixScan {
       else expr(
         s"CASE WHEN _rnk <= ${(q + 1) * rem} THEN (_rnk + $q) DIV ${q + 1} " +
         s"ELSE $rem + (_rnk - ${(q + 1) * rem} + ${q - 1}) DIV $q END")
-    ranked.withColumn(outCol, bucket.cast("bigint")).drop("_rnk")
+    ranked.withColumn(outCol, bucket.cast("bigint")).drop("_one", "_rnk")
   }
 
-  /** PER-GROUP running sum at population scale — for the low-
-    * cardinality-group case where `Window.partitionBy(grp)` is the
-    * scale trap: 25 nations over a billion customers puts 40M rows in
-    * ONE task per nation. Range-partitioning on (grp, order) keeps each
-    * group's rows in contiguous, ordered partition ranges, so the same
-    * two-phase scan works per group: per-(partition, group) totals —
-    * bounded by #partitions + #groups rows when groups are contiguous —
-    * prefix-scanned per group on the driver, broadcast back, added to a
-    * (pid, grp)-partitioned window. Every stage partition-parallel; the
-    * per-task row count is |relation| / #partitions regardless of group
-    * cardinality. `order` must be total WITHIN each group (id
-    * tie-break), same as every scan here. */
-  def groupedRunningSumLong(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      outCol: String, order: Column*): DataFrame =
-    groupedScanLong(df, groupCols, Seq(valueCol -> outCol), order)._1
-
-  /** [[groupedRunningSumLong]] that ALSO returns the per-group grand
-    * totals as a broadcast-ready local DataFrame (groupCols :+ `totCol`,
-    * LongType) — the totals are already on the driver from the scan's
-    * per-(partition, group) collect, so callers that need "the group's
-    * full sum" (median screens, CDF denominators) skip a second
-    * aggregation pass over the input relation (round-15, guide §1.2). */
-  def groupedRunningSumLongWithTotals(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, outCol: String, totCol: String,
-      order: Column*): (DataFrame, DataFrame) =
-    groupedRunningSumsLongWithTotals(df, groupCols, Seq(valueCol -> outCol),
-      Seq(totCol), order: _*)
-
-  /** SEVERAL per-group long running sums over the SAME (group, order)
-    * range partitioning in ONE scan, plus the per-group grand totals —
-    * the grouped analog of [[runningSumsLongWithTotals]] (round-15,
-    * guide §1.2/§2.4): chaining [[groupedRunningSumLong]] per value
-    * column pays a fresh range shuffle + pin + totals collect + window
-    * each time over an already-scanned relation. `totCols` names the
-    * returned totals DataFrame's columns, one per entry of `cols`
-    * (groupCols ++ totCols, LongType), values identical to
-    * `df.groupBy(groupCols).agg(sum(value))` per column (integer
-    * addition is associative). Per column the running sum is bit-equal
-    * to the chained single-column scans. */
-  def groupedRunningSumsLongWithTotals(df: DataFrame, groupCols: Seq[String],
-      cols: Seq[(String, String)], totCols: Seq[String],
-      order: Column*): (DataFrame, DataFrame) = {
-    require(totCols.length == cols.length,
-      "groupedRunningSumsLongWithTotals: one total column name per value column")
-    val (out, totals, parted) = groupedScanLong(df, groupCols, cols, order)
-    val grand = totals.groupBy(_._2).map { case (g, rows) =>
-      org.apache.spark.sql.Row.fromSeq(
-        g ++ cols.indices.map(i => rows.map(_._3(i)).sum))
-    }.toSeq
-    val schema = org.apache.spark.sql.types.StructType(
-      groupCols.map(c => parted.schema(c)) ++
-        totCols.map(t => org.apache.spark.sql.types.StructField(t,
-          org.apache.spark.sql.types.LongType)))
+  private def scan(df: DataFrame, groupCols: Seq[String], cols: Seq[(String, String)],
+      order: Seq[Column]): (DataFrame, DataFrame) = {
+    require(cols.nonEmpty, "PrefixScan: no value columns")
     val spark = df.sparkSession
-    val totDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(grand, 1), schema)
-    (out, totDf)
-  }
-
-  private def groupedScanLong(df: DataFrame, groupCols: Seq[String],
-      cols: Seq[(String, String)], order: Seq[Column]):
-      (DataFrame, Array[(Int, Seq[Any], Seq[Long])], DataFrame) = {
-    require(cols.nonEmpty, "groupedScanLong: no value columns")
-    val full = groupCols.map(col) ++ order
-    val parted = pinned(
-      df.repartitionByRange(full: _*).withColumn("_pid", spark_partition_id()))
-    val aggs = cols.zipWithIndex.map { case ((v, _), i) => sum(col(v)).as(s"_tot$i") } ++
-      cols.zipWithIndex.map { case ((v, _), i) =>
-        sum(when(col(v).isNull, 1L).otherwise(0L)).as(s"_nulls$i") }
-    val totals = parted.groupBy(col("_pid") +: groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
+    val keys = groupCols.map(col)
+    val parted = graft.GraftCaches.pin(
+      df.repartitionByRange(keys ++ order: _*).withColumn("_pid", spark_partition_id()),
+      eager = false)
+    val sumTypes = parted.select(cols.map { case (v, _) => sum(col(v)) }: _*)
+      .schema.map(_.dataType)
+    cols.zip(sumTypes).foreach { case ((v, _), t) =>
+      require(t == LongType || t.isInstanceOf[DecimalType],
+        s"PrefixScan: value column '$v' sums to $t; only Long and exact Decimal sums are supported")
+    }
+    val aggs = cols.zip(sumTypes).map { case ((v, _), t) => sum(col(v)).cast(t) } ++
+      cols.map { case (v, _) => count(col(v)) }
+    val g = groupCols.length
+    val k = cols.length
+    // One row per non-empty (partition, group): _pid, keys, n, totals, non-NULL counts.
+    val parts = parted.groupBy(col("_pid") +: keys: _*)
+      .agg(count(lit(1)), aggs: _*)
       .collect()
-      .map { r =>
-        cols.zipWithIndex.foreach { case ((v, _), i) =>
-          requireNoNullValues(r.getLong(r.fieldIndex(s"_nulls$i")), v) }
-        (r.getInt(0), groupCols.map(c => r.get(r.fieldIndex(c))),
-          cols.indices.map(i => r.getLong(r.fieldIndex(s"_tot$i"))): Seq[Long])
+    parts.foreach { r =>
+      cols.indices.foreach { i =>
+        val nulls = r.getLong(g + 1) - r.getLong(g + 2 + k + i)
+        require(nulls == 0L,
+          s"PrefixScan: value column '${cols(i)._1}' contains $nulls NULL row(s); " +
+            "a running-sum window and this two-phase scan disagree on NULL " +
+            "prefixes. coalesce() the column (or filter NULLs) before the scan.")
       }
-    // Exclusive per-group prefix over ascending pid, per value column.
-    val offsets = totals.groupBy(_._2).iterator.flatMap { case (_, rows) =>
-      val sorted = rows.sortBy(_._1)
-      sorted.map(_._1).zipWithIndex.map { case (pid, k) =>
-        (pid, sorted.head._2,
-          cols.indices.map(i => sorted.take(k).map(_._3(i)).sum))
-      }
-    }.toSeq
-    val spark = df.sparkSession
-    val offRows = offsets.map { case (pid, g, offs) =>
-      org.apache.spark.sql.Row.fromSeq((pid +: g) ++ offs) }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      (org.apache.spark.sql.types.StructField("_pid", org.apache.spark.sql.types.IntegerType) +:
-        groupCols.map(c => parted.schema(c))) ++
-        cols.indices.map(i => org.apache.spark.sql.types.StructField(s"_off$i",
-          org.apache.spark.sql.types.LongType)))
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1), offSchema)
-    val w = Window.partitionBy(col("_pid") +: groupCols.map(col): _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = cols.zipWithIndex.foldLeft(nullSafeOffsetJoin(parted, offDf, groupCols)) {
-      case (d, ((v, o), i)) => d.withColumn(o, col(s"_off$i") + sum(col(v)).over(w))
-    }.drop("_pid" +: cols.indices.map(i => s"_off$i"): _*)
-    (out, totals, parted)
-  }
-
-  /** [[groupedRunningSumLong]] for exact DECIMAL values (per-group money
-    * running totals): per-(partition, group) totals prefix-added exactly
-    * as BigDecimal on the driver, offsets rejoined cast to the window
-    * sum's own decimal type — bit-equal to a per-group decimal window at
-    * any partitioning. */
-  def groupedRunningSumDecimal(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      outCol: String, order: Column*): DataFrame =
-    groupedDecimalScan(df, groupCols, valueCol, outCol, order)._1
-
-  /** [[groupedRunningSumDecimal]] that ALSO returns the per-group grand
-    * totals as a broadcast-ready local DataFrame (groupCols :+ `totCol`,
-    * the window sum's own decimal type) — the per-(partition, group)
-    * decimal totals are already on the driver from the scan's collect
-    * and exact decimal addition is associative, so callers that need
-    * "the group's full sum" (running-share denominators) skip a second
-    * aggregation pass over the input relation (round-15, guide §1.2). */
-  def groupedRunningSumDecimalWithTotals(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, outCol: String, totCol: String,
-      order: Column*): (DataFrame, DataFrame) = {
-    val (out, totals, parted, sumType) =
-      groupedDecimalScan(df, groupCols, valueCol, outCol, order)
-    val grand = totals.groupBy(_._2).map { case (g, rows) =>
-      org.apache.spark.sql.Row.fromSeq(
-        g :+ rows.map(_._3).foldLeft(java.math.BigDecimal.ZERO)((a, b) => a.add(b)))
-    }.toSeq
-    val schema = org.apache.spark.sql.types.StructType(
-      groupCols.map(c => parted.schema(c)) :+
-        org.apache.spark.sql.types.StructField(totCol,
-          org.apache.spark.sql.types.DecimalType(38, 18)))
-    val spark = df.sparkSession
-    val totDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(grand, 1), schema)
-      .withColumn(totCol, col(totCol).cast(sumType))
-    (out, totDf)
-  }
-
-  private def groupedDecimalScan(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      outCol: String, order: Seq[Column]):
-      (DataFrame, Array[(Int, Seq[Any], java.math.BigDecimal)], DataFrame,
-        org.apache.spark.sql.types.DataType) = {
-    val full = groupCols.map(col) ++ order
-    val parted = pinned(
-      df.repartitionByRange(full: _*).withColumn("_pid", spark_partition_id()))
-    val sumType = parted.select(sum(col(valueCol)).as("s")).schema.head.dataType
-    val totals = parted.groupBy(col("_pid") +: groupCols.map(col): _*)
-      .agg(sum(col(valueCol)).cast(sumType).as("_tot"),
-        sum(when(col(valueCol).isNull, 1L).otherwise(0L)).as("_nulls"))
-      .collect()
-      .map { r =>
-        requireNoNullValues(r.getLong(r.fieldIndex("_nulls")), valueCol)
-        (r.getInt(0), groupCols.map(c => r.get(r.fieldIndex(c))), r.getDecimal(r.fieldIndex("_tot")))
-      }
-    val offsets = totals.groupBy(_._2).iterator.flatMap { case (_, rows) =>
-      val sorted = rows.sortBy(_._1)
-      sorted.map(_._1).zip(sorted.map(_._3)
-          .scanLeft(java.math.BigDecimal.ZERO)((a, b) => a.add(b)))
-        .map { case (pid, off) => (pid, sorted.head._2, off) }
-    }.toSeq
-    val spark = df.sparkSession
-    val offRows = offsets.map { case (pid, g, off) =>
-      org.apache.spark.sql.Row.fromSeq(pid +: g :+ off) }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("_pid", org.apache.spark.sql.types.IntegerType) +:
-        groupCols.map(c => parted.schema(c)) :+
-        org.apache.spark.sql.types.StructField("_off", org.apache.spark.sql.types.DecimalType(38, 18)))
-    val offDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(offRows, 1), offSchema)
-      .withColumn("_off", col("_off").cast(sumType))
-    val w = Window.partitionBy(col("_pid") +: groupCols.map(col): _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = nullSafeOffsetJoin(parted, offDf, groupCols)
-      .withColumn(outCol, (col("_off") + sum(col(valueCol)).over(w)).cast(sumType))
-      .drop("_pid", "_off")
-    (out, totals, parted, sumType)
-  }
-
-  /** Rejoin per-(pid, group) offsets NULL-SAFELY on the group keys:
-    * `Window.partitionBy` treats NULL as a real group, so a plain inner
-    * equi-join would silently drop NULL-keyed rows — `<=>` keeps them
-    * (round-8 ADVICE). Broadcast, and offDf's duplicate key columns are
-    * dropped after the join. */
-  private def nullSafeOffsetJoin(parted: DataFrame, offDf: DataFrame,
-      groupCols: Seq[String]): DataFrame = {
+    }
+    val zero: Seq[Any] = sumTypes.map(t => if (t == LongType) 0L else java.math.BigDecimal.ZERO)
+    def plus(a: Seq[Any], b: Seq[Any]): Seq[Any] = a.zip(b).map {
+      case (x: Long, y: Long) => x + y
+      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.add(y)
+    }
+    // A global scan always has its one group, so an empty input still
+    // yields a (zero) totals row.
+    val groups = if (g == 0) Map(Seq.empty[Any] -> parts.toSeq)
+      else parts.toSeq.groupBy(r => (1 to g).map(r.get))
+    // Per group: exclusive prefix over ascending _pid, and the grand total.
+    val perGroup = groups.toSeq.map { case (key, rows) =>
+      val sorted = rows.sortBy(_.getInt(0))
+      val prefix = sorted.scanLeft(zero)((acc, r) => plus(acc, (g + 2 until g + 2 + k).map(r.get)))
+      (sorted.zip(prefix).map { case (r, off) => Row.fromSeq((r.getInt(0) +: key) ++ off) },
+        Row.fromSeq(key ++ prefix.last))
+    }
+    val field: ((String, DataType)) => StructField = { case (n, t) => StructField(n, t) }
+    val keyFields = groupCols.map(parted.schema(_))
+    val offCols = cols.indices.map(i => s"_off$i")
+    val offDf = local(spark, perGroup.flatMap(_._1),
+      (StructField("_pid", IntegerType) +: keyFields) ++ offCols.zip(sumTypes).map(field))
+    val totals = local(spark, perGroup.map(_._2), keyFields ++ cols.map(_._1).zip(sumTypes).map(field))
     val off = broadcast(offDf)
-    val cond = (parted("_pid") === off("_pid")) +:
-      groupCols.map(c => parted(c) <=> off(c))
-    val joined = parted.join(off, cond.reduce(_ && _))
-    groupCols.foldLeft(joined.drop(off("_pid")))((d, c) => d.drop(off(c)))
-  }
-
-  /** Loud contract check (round-8 ADVICE): a NULL in the value column
-    * makes the two-phase scan diverge from the window it replaces (the
-    * window's running sum stays NULL until the group's first non-null,
-    * which per-partition offsets cannot reconstruct) — fail fast with
-    * the fix spelled out instead of NPE-ing on the driver. */
-  private def requireNoNullValues(nulls: Long, valueCol: String): Unit =
-    require(nulls == 0L,
-      s"PrefixScan: value column '$valueCol' contains $nulls NULL row(s); " +
-        "a running-sum window and this two-phase scan disagree on NULL " +
-        "prefixes. coalesce() the column (or filter NULLs) before the scan.")
-
-  /** Structural fix for the cache-as-correctness hazard (round-4
-    * VERDICT): `spark_partition_id()` is nondeterministic across
-    * executions, so an operator that collects per-partition state in one
-    * job and joins it back in another must make RECOMPUTATION IMPOSSIBLE
-    * (an evicted cache block recomputes → AQE may coalesce differently →
-    * misaligned `_pid` → silently wrong sums). [[graft.GraftCaches.pin]]
-    * checkpoints: blocks spill instead of dropping, and a genuinely lost
-    * block fails loudly.
-    *
-    * The pin is LAZY (round-14): the frozen-`_pid` contract needs one
-    * RDD whose partition INDICES both jobs observe, and that RDD is
-    * created — plan finalized, partition count fixed — at the
-    * `localCheckpoint` CALL, not at materialization. The totals-collect
-    * job right after is the first action, so it computes and stores the
-    * blocks (`_pid` = partition index, fixed for the life of the RDD);
-    * the window job reads those stored blocks, and once checkpointed a
-    * lost block still fails loudly instead of recomputing. Dropping
-    * `eager = true` removes a dedicated ~450 ms materialization job per
-    * scan (MicroBench; ~30 call sites across the query surface) without
-    * weakening the contract — what the contract forbids is two separate
-    * EXECUTIONS of the un-pinned plan (where AQE may re-coalesce), and a
-    * single lazily-checkpointed RDD never re-executes its plan. */
-  private def pinned(df: DataFrame): DataFrame =
-    graft.GraftCaches.pin(df, eager = false)
-
-  private def scan(ranged: DataFrame, valueCol: String, outCol: String,
-      order: Seq[Column]): DataFrame = {
-    val spark = ranged.sparkSession
-    // See [[pinned]]: the totals job and the window job must observe the
-    // IDENTICAL `_pid` assignment, frozen at materialization.
-    val parted = pinned(
-      ranged.withColumn("_pid", spark_partition_id()))
-
-    // One row per partition; empty partitions simply don't appear.
-    val totals = parted.groupBy("_pid")
-      .agg(sum(col(valueCol)).as("_tot"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-
-    // Exclusive prefix: offset of partition p = sum of totals of partitions < p
-    // (zip against scanLeft(0)(+) truncates the trailing grand total).
-    val offsetRows = totals.map(_._1).zip(totals.map(_._2).scanLeft(0L)(_ + _)).toSeq
-    val offDf = spark.createDataFrame(offsetRows).toDF("_pid", "_off")
-
-    val w = Window.partitionBy("_pid").orderBy(order: _*)
+    val cond = (parted("_pid") === off("_pid")) +: groupCols.map(c => parted(c) <=> off(c))
+    val joined = (off("_pid") +: groupCols.map(off(_)))
+      .foldLeft(parted.join(off, cond.reduce(_ && _)))(_.drop(_))
+    val w = Window.partitionBy(col("_pid") +: keys: _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted.join(broadcast(offDf), "_pid")
-      .withColumn(outCol, col("_off") + sum(col(valueCol)).over(w))
-      .drop("_pid", "_off")
+    val out = cols.zip(offCols).zip(sumTypes).foldLeft(joined) { case (d, (((v, o), oc), t)) =>
+      d.withColumn(o, (col(oc) + sum(col(v)).over(w)).cast(t))
+    }.drop("_pid" +: offCols: _*)
+    (out, totals)
   }
+
+  private def local(spark: SparkSession, rows: Seq[Row], fields: Seq[StructField]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
 }

@@ -75,7 +75,7 @@ object CurationQueries {
     val scored = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"), tokens(col("text")).as("t"),
         regexp_count(col("text"), lit("[a-z]+")).cast("bigint").as("alpha"))
-    val cum = graft.operators.PrefixScan.groupedRunningSumLong(
+    val cum = graft.operators.PrefixScan.runningSum(
       scored, Seq("source"), "t", "cum",
       col("alpha").desc, col("doc_id"))
     cum.groupBy("source")

@@ -1295,7 +1295,7 @@ object DedupQueries {
     val c = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name"), lit(1L).as("one"))
     val ranked = graft.GraftCaches.track(
-      PrefixScan.runningSumLong(c, "one", "rnk",
+      PrefixScan.runningSum(c, Nil, "one", "rnk",
         col("c_name"), col("c_custkey")).drop("one"))
     val right = ranked.select(col("rnk").as("rnk_b"),
       col("c_custkey").as("custkey_b"), col("c_name").as("name_b"))
@@ -1664,7 +1664,7 @@ object DedupQueries {
       .select(col("p_partkey"), col("p_name"), lower(col("p_type")).as("ptype"),
         lit(1L).as("one"))
     val ranked = graft.GraftCaches.track(
-      PrefixScan.runningSumLong(p, "one", "rnk",
+      PrefixScan.runningSum(p, Nil, "one", "rnk",
         col("p_name"), col("p_partkey")).drop("one"))
     val right = ranked.select(col("rnk").as("rnk_b"),
       col("p_partkey").as("partkey_b"), col("p_name").as("name_b"),
@@ -1718,7 +1718,7 @@ object DedupQueries {
       .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_type"),
         col("p_size"), lit(1L).as("one"))
     val ranked = graft.GraftCaches.track(
-      PrefixScan.runningSumLong(p, "one", "rnk",
+      PrefixScan.runningSum(p, Nil, "one", "rnk",
         col("p_name"), col("p_partkey")).drop("one"))
     val right = ranked.columns.foldLeft(ranked)((d, c) =>
       d.withColumnRenamed(c, s"b_$c"))

@@ -78,15 +78,9 @@ object GraphQueries {
     val bought = Tables.orders(spark, dir)
       .join(Tables.lineitem(spark, dir),
         col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
+      .select((col("o_custkey") * 2).as("doc_a"), (col("l_suppkey") * 2 + 1).as("doc_b"))
       .distinct()
-    // One-pass mirror (round-14): explode emits both orientations per
-    // distinct edge instead of scanning the distinct relation twice and
-    // doubling downstream partition counts (guide §2.3/§2.4).
-    bought.select(explode(array(
-        struct(col("c").as("src"), col("s").as("dst")),
-        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    graft.operators.Dedup.mirrored(bought)
   }
 
   /** Largest node count int64 carries at the FINEST scale (R0=1e12):
@@ -101,17 +95,6 @@ object GraphQueries {
     * guard spec derives its over-bound fixture from the same constant. */
   val MaxNodesAdaptive: Long = Long.MaxValue / (85L * R0Min)
 
-  /** Largest node count for which the per-round rank state is joined to
-    * the edge relation by BROADCAST (guide §3.1): a (node, contrib) row
-    * is two longs (~16 B of data, ~50 B in the built hash relation), so
-    * 2^21 nodes ≈ 100 MB of executor-side build — comfortably inside
-    * broadcast limits while removing the per-round edge-side exchange
-    * and sort entirely. Data-derived (node count), never core-count-
-    * derived: a 100 TB graph blows past it and takes the SMJ shape.
-    * Shared with [[graft.operators.Dedup.pageRank]] (defined there so
-    * the operator layer never depends on the query layer). */
-  val BroadcastRankNodeBound: Long = graft.operators.Dedup.BroadcastRankNodeBound
-
   /** The guarded integer power iteration over a mirrored edge relation
     * `(src, dst)` — factored out of [[pagerankSuppliers]] so the
     * overflow guard is testable on a synthetic over-bound graph.
@@ -121,15 +104,11 @@ object GraphQueries {
     * wrap silently and rank garbage. The node count is checked BEFORE
     * iterating and raises with the documented remedy, mirroring
     * BitmapStream's id-domain require. `nodeUpperBound` lets the caller
-    * pass a cheap conservative OVER-estimate (e.g. dimension-table row
-    * counts — parquet-metadata-only) instead of the exact `deg.count()`
-    * pass, which measured ~2.5 s of pure guard overhead at sf0.1; a
-    * too-big bound can only over-fire, and a deployment actually near
-    * the bound needs the remedy regardless. The name states the
-    * contract (round-10 ADVICE): an UNDER-estimate silently re-opens
-    * the wrap the guard exists to prevent — set
-    * `GRAFT_CHECK_NODE_BOUND=1` to cross-check the supplied bound
-    * against the exact `deg.count()` in debug runs. */
+    * fix the rank scale from a conservative OVER-estimate that an oracle
+    * can derive too (e.g. dimension-table row counts); a too-big bound
+    * can only over-fire. An UNDER-estimate would re-open the wrap the
+    * guard exists to prevent, so a supplied bound is always checked
+    * against the exact node count and an under-estimate fails loudly. */
   def pagerankIterate(e0: DataFrame, nodeUpperBound: Option[Long] = None): DataFrame = {
     // Degree annotation via PARTIAL-AGG count (round-15, guide §2.5; r14
     // VERDICT skew hazard): the round-14 src-partitioned window buffered
@@ -151,17 +130,14 @@ object GraphQueries {
     val deg = graft.GraftCaches.pin(
       e1.groupBy("src").agg(count(lit(1)).as("d")), eager = true)
     // deg has exactly one row per distinct src — counting its pinned
-    // blocks IS the exact node count (the pre-r15 shape re-derived it
-    // with a distinct over the annotated edge relation).
-    def exactNodes(): Long = deg.count()
-    val nNodes = nodeUpperBound.getOrElse(exactNodes())
-    if (nodeUpperBound.isDefined && sys.env.get("GRAFT_CHECK_NODE_BOUND").contains("1")) {
-      val exact = exactNodes()
-      require(nNodes >= exact,
-        s"pagerank: nodeUpperBound=$nNodes UNDER-estimates the exact node " +
-          s"count $exact — the bound must be conservative or the int64 guard " +
-          "is void")
-    }
+    // blocks IS the exact node count. The RDD count is one job over the
+    // stored blocks; `Dataset.count` would add a shuffle stage and a job.
+    val exact = deg.rdd.count()
+    val nNodes = nodeUpperBound.getOrElse(exact)
+    require(nNodes >= exact,
+      s"pagerank: nodeUpperBound=$nNodes UNDER-estimates the exact node " +
+        s"count $exact — the bound must be conservative or the int64 guard " +
+        "is void")
     // Adaptive rank scale (round-12, replacing the round-9..11 refusal):
     // largest power-of-ten R0 keeping 85·N·R0 < 2^63. Refuses (loudly,
     // with the DECIMAL remedy) only past MaxNodesAdaptive ≈ 1.08e15.
@@ -180,7 +156,7 @@ object GraphQueries {
     // old two-reference shape). One consuming action executes the whole
     // 5-round chain as a single query — each round's exchange runs once,
     // with no checkpoint jobs or block writes between rounds.
-    if (nNodes <= BroadcastRankNodeBound) {
+    if (nNodes <= graft.operators.Dedup.BroadcastRankNodeBound) {
       // BROADCAST-ranks rounds (round-15, guide §3.1 "broadcast the side
       // that fits"): the per-round join pairs the STATIC edge relation
       // with the node-sized rank state. The pre-r15 shape annotated the
@@ -197,7 +173,7 @@ object GraphQueries {
       // combined groupBy(dst) shuffle of (node, contrib) pairs. Same
       // integer algebra, same rows — `contrib = r DIV d` per edge,
       // identical BIGINTs. Guarded by nNodes (data-derived, not
-      // core-count-derived): past [[BroadcastRankNodeBound]] the rank
+      // core-count-derived): past [[graft.operators.Dedup.BroadcastRankNodeBound]] the rank
       // state no longer fits a broadcast build and the SMJ shape below
       // is the scale-correct one.
       (1 to 5).foreach { _ =>

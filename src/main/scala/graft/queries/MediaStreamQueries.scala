@@ -98,7 +98,7 @@ object MediaStreamQueries {
       .select(unix_micros(col("w.start")).as("s"), unix_micros(col("w.end")).as("e"))
     val sweep = sessions.select(col("s").as("t"), lit(1L).as("d"))
       .unionByName(sessions.select(col("e").as("t"), lit(-1L).as("d")))
-    graft.operators.PrefixScan.runningSumLong(sweep, "d", "rs", col("t"), col("d"))
+    graft.operators.PrefixScan.runningSum(sweep, Nil, "d", "rs", col("t"), col("d"))
       .groupBy(to_date(timestamp_micros(col("t"))).cast("timestamp").as("day"))
       .agg(max("rs").as("peak_concurrent"))
       .orderBy("day")
@@ -806,7 +806,7 @@ object MediaStreamQueries {
       .toDF()
       .select(col("modality"), col("id"), col("n_bytes").cast("bigint").as("n_bytes"))
     val cum = graft.operators.PrefixScan
-      .runningSumLong(feats, "n_bytes", "cum", col("modality").asc, col("id").asc)
+      .runningSum(feats, Nil, "n_bytes", "cum", col("modality").asc, col("id").asc)
     val offsets = cum.groupBy("modality")
       .agg(min(col("cum") - col("n_bytes")).as("mod_off"))
     cum.join(broadcast(offsets), "modality")

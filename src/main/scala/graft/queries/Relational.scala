@@ -769,16 +769,17 @@ object Relational {
       .agg(count(lit(1)).as("c"))
       .withColumn("one", lit(1L))
     // ONE two-column grouped prefix scan (round-15, guide §1.2/§2.4):
-    // the two chained groupedRunningSumLong calls paid two range
+    // two chained single-column scans paid two range
     // shuffles + pins + totals collects over the same level relation,
     // and the per-class row count `n` re-scanned the whole FACT table —
     // but n = Σ c over the class's levels, which the grouped scan's own
     // totals collect already knows. Same rows, same doubles (the totals
     // DataFrame carries the identical BIGINT the fact-side count did).
-    val (dense, n) = PrefixScan.groupedRunningSumsLongWithTotals(
+    val (dense, n) = PrefixScan.runningSums(
       lv, Seq("o_orderpriority"), Seq("c" -> "cum_incl", "one" -> "drank"),
-      Seq("n", "n_levels"), col("o_totalprice"))
-    val levels = dense.join(broadcast(n.select("o_orderpriority", "n")), "o_orderpriority")
+      col("o_totalprice"))
+    val levels = dense
+      .join(broadcast(n.select(col("o_orderpriority"), col("c").as("n"))), "o_orderpriority")
       .select(col("o_orderpriority"), col("o_totalprice"), col("drank"),
         when(col("n") > 1L, (col("cum_incl") - col("c")).cast("double") /
           (col("n") - 1L).cast("double")).otherwise(lit(0.0)).as("prank"),
@@ -872,9 +873,9 @@ object Relational {
       .filter(col("o_totalprice") > 400000)
       .select(col("o_orderpriority"), col("o_orderkey"),
         col("o_totalprice").cast(DecimalType(14, 2)).as("p"))
-    val (cum, tot) = graft.operators.PrefixScan.groupedRunningSumDecimalWithTotals(
-      base, Seq("o_orderpriority"), "p", "running_dec", "total_dec", col("o_orderkey"))
-    cum.join(broadcast(tot), "o_orderpriority")
+    val (cum, tot) = graft.operators.PrefixScan.runningSums(
+      base, Seq("o_orderpriority"), Seq("p" -> "running_dec"), col("o_orderkey"))
+    cum.join(broadcast(tot.withColumnRenamed("p", "total_dec")), "o_orderpriority")
       .select(col("o_orderpriority"), col("o_orderkey"),
         col("running_dec").cast("double").as("running"),
         col("total_dec").cast("double").as("class_total"))
@@ -1031,7 +1032,7 @@ object Relational {
     // Per-type rank rides the GROUPED PrefixScan (round 8): the
     // type-partitioned window put |events|/|types| rows in one task —
     // the per-group single-task class with a handful of event types.
-    val ranked = graft.operators.PrefixScan.groupedRunningSumLong(
+    val ranked = graft.operators.PrefixScan.runningSum(
       Tables.events(spark, dir)
         .select(col("event_type"), col("value"), col("event_id"),
           lit(1L).as("one")),
@@ -1592,7 +1593,7 @@ object Relational {
     // key, and a global orderBy's sampling pass would re-run the scan's
     // offset machinery; the driver compare sorts rows itself.
     graft.operators.PrefixScan
-      .runningSumDecimal(o, "price", "cum", col("o_orderdate"), col("o_orderkey"))
+      .runningSum(o, Nil, "price", "cum", col("o_orderdate"), col("o_orderkey"))
       .select(col("o_orderkey"), col("o_orderdate"), col("cum").cast("double").as("cum_revenue"))
   }
 
@@ -1820,7 +1821,7 @@ object Relational {
         least(lit(nBins - 1), floor(col("value") / lit(binW)).cast("long"))).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("cnt"))
     val cum = graft.operators.PrefixScan
-      .runningSumLong(bins, "cnt", "cum", col("bin").asc)
+      .runningSum(bins, Nil, "cnt", "cum", col("bin").asc)
       .withColumn("cum0", col("cum") - col("cnt"))
     val tot = bins.agg(sum("cnt").as("n"))
     val qdf = spark.range(1).select(
@@ -1984,9 +1985,9 @@ object Relational {
     // has ONE consumer chain, and the total is an exact-decimal literal
     // (BigDecimal addition is associative, identical value and type to
     // the old sum(rev) cross-broadcast).
-    val (ranked, grandTot) = PrefixScan.runningSumDecimalWithTotal(
-      perPart, "rev", "cum", col("rev").desc, col("l_partkey"))
-    val total = lit(grandTot).cast(ranked.schema("cum").dataType)
+    val (ranked, grand) = PrefixScan.runningSums(
+      perPart, Nil, Seq("rev" -> "cum"), col("rev").desc, col("l_partkey"))
+    val total = lit(grand.first().getDecimal(0)).cast(ranked.schema("cum").dataType)
     val cls = when(col("cum") * 5 <= total * 4, "A")
       .when(col("cum") * 20 <= total * 19, "B")
       .otherwise("C")
@@ -2418,7 +2419,7 @@ object Relational {
     // lowerMedian rides the GROUPED PrefixScan (round 8): each call's
     // type-partitioned rank window was |events|/|types| rows per task.
     def lowerMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
-      val ranked = graft.operators.PrefixScan.groupedRunningSumLong(
+      val ranked = graft.operators.PrefixScan.runningSum(
         df.withColumn("one", lit(1L)),
         Seq("event_type"), "one", "rn", col(valueCol), col("event_id"))
       val n = df.groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -2588,8 +2589,8 @@ object Relational {
     val cc = graft.GraftCaches.track(counts)
     val stats = cc.agg(count(lit(1)).as("n_keys"),
       sum("c").cast("bigint").as("total_orders"), max("c").as("max_per_key"))
-    val ranked = graft.operators.PrefixScan.runningSumLong(
-      cc.withColumn("one", lit(1L)), "one", "rank", col("c"), col("o_custkey"))
+    val ranked = graft.operators.PrefixScan.runningSum(
+      cc.withColumn("one", lit(1L)), Nil, "one", "rank", col("c"), col("o_custkey"))
     val med = ranked.crossJoin(broadcast(stats.select(col("n_keys").as("nk"))))
       .filter(col("rank") === expr("(nk + 1) div 2"))
       .select(col("c").as("median_per_key"))
@@ -3009,7 +3010,7 @@ object Relational {
       .unionByName(sessions.select(date_add(to_date(col("en")), 1).as("day"),
         lit(-1L).as("delta")))
       .groupBy("day").agg(sum(col("delta")).as("delta"))
-    graft.operators.PrefixScan.runningSumLong(deltas, "delta", "active", col("day").asc)
+    graft.operators.PrefixScan.runningSum(deltas, Nil, "delta", "active", col("day").asc)
       .select(col("day").cast("timestamp").as("day"), col("delta"), col("active"))
       .orderBy("day")
   }
@@ -3157,7 +3158,7 @@ object Relational {
       .filter(col("lag_us").isNotNull).select(col("lag_us"))
     val levels = lags.groupBy("lag_us").agg(count(lit(1)).as("cnt"))
     val cum = graft.operators.PrefixScan
-      .runningSumLong(levels, "cnt", "cum", col("lag_us").asc)
+      .runningSum(levels, Nil, "cnt", "cum", col("lag_us").asc)
       .withColumn("cum0", col("cum") - col("cnt"))
     val tot = levels.agg(sum("cnt").as("n"))
     val qdf = spark.range(1).select(
@@ -3793,9 +3794,9 @@ object Relational {
           .cast("long").as("price_c"))
       .agg(sum((col("l_quantity").cast(DecimalType(12, 2)) * 100)
         .cast("long")).as("w"))
-    val (cum, tot) = PrefixScan.groupedRunningSumLongWithTotals(
-      lv, Seq("l_returnflag"), "w", "cumw", "total", col("price_c"))
-    cum.join(broadcast(tot), "l_returnflag")
+    val (cum, tot) = PrefixScan.runningSums(
+      lv, Seq("l_returnflag"), Seq("w" -> "cumw"), col("price_c"))
+    cum.join(broadcast(tot.withColumnRenamed("w", "total")), "l_returnflag")
       .filter(col("cumw") * 2 >= col("total"))
       .groupBy("l_returnflag")
       .agg((min("price_c").cast("double") / lit(100.0))
@@ -4276,7 +4277,7 @@ object Relational {
     // at population scale. The grouped two-phase scan keeps every task
     // at |relation|/#partitions regardless of group cardinality; n per
     // nation comes from the same fold it always came from (the groupBy).
-    val r = PrefixScan.groupedRunningSumLong(
+    val r = PrefixScan.runningSum(
       Tables.customer(spark, dir)
         .select(col("c_nationkey").as("nat"),
           col("c_acctbal").cast(DecimalType(12, 2)).as("x"),
@@ -4770,7 +4771,7 @@ object Relational {
     // IEEE division each, matching the builtin window functions'
     // arithmetic bit-for-bit; n>1 guard mirrors percent_rank's n=1
     // definition).
-    val ranked = PrefixScan.groupedRunningSumLong(
+    val ranked = PrefixScan.runningSum(
       Tables.part(spark, dir)
         .select(col("p_brand"), col("p_partkey"), col("p_retailprice"),
           lit(1L).as("one")),
@@ -4907,7 +4908,7 @@ object Relational {
     val base = Tables.events(spark, dir)
       .select(round(col("value") * 1e6).cast("bigint").as("vmicro"),
         col("event_id"), lit(1L).as("one"))
-    val ranked = PrefixScan.runningSumLong(base, "one", "rnk",
+    val ranked = PrefixScan.runningSum(base, Nil, "one", "rnk",
       col("vmicro"), col("event_id"))
     // Bounded driver scalar (the PrefixScan discipline: its own offsets
     // are the same shape); the scan is cheap — one column, no shuffle.

@@ -720,7 +720,7 @@ object TextQueries {
     * key is a seeded affine hash of the doc id (reproducible across
     * engines and runs — reshuffling an epoch is just changing the seed),
     * and the GLOBAL position comes from
-    * [[graft.operators.PrefixScan.runningSumLong]] — range-partitioned
+    * [[graft.operators.PrefixScan.runningSum]] — range-partitioned
     * running count, so no single-task `Window.orderBy` over the corpus;
     * at 100 TB every stage stays partition-parallel and each shard of 64
     * docs is addressable as (shard, pos) by the data loader. The oracle
@@ -731,7 +731,7 @@ object TextQueries {
     val m = PolyHash.Mod
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), ((col("doc_id") * a + b) % m).as("skey"), lit(1L).as("one"))
-    graft.operators.PrefixScan.runningSumLong(keyed, "one", "rk", col("skey"), col("doc_id"))
+    graft.operators.PrefixScan.runningSum(keyed, Nil, "one", "rk", col("skey"), col("doc_id"))
       .select(col("doc_id"), col("skey"),
         expr("(rk - 1) div 64").as("shard"),
         expr("(rk - 1) % 64").as("pos"))
@@ -1100,7 +1100,7 @@ object TextQueries {
     val scored = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"), nTokens.as("n_tokens"))
     graft.operators.PrefixScan
-      .runningSumLong(scored, "n_tokens", "cum_tokens", col("n_chars").desc, col("doc_id"))
+      .runningSum(scored, Nil, "n_tokens", "cum_tokens", col("n_chars").desc, col("doc_id"))
       .filter(col("cum_tokens") <= budget)
       .orderBy("doc_id")
   }
@@ -1350,7 +1350,7 @@ object TextQueries {
         size(graft.operators.TextOps.words(col("text"))).cast("long").as("x"))
       .withColumn("one", lit(1L))
     val ranked = graft.operators.PrefixScan
-      .runningSumLong(toks, "one", "rank", col("x").asc, col("doc_id").asc)
+      .runningSum(toks, Nil, "one", "rank", col("x").asc, col("doc_id").asc)
     val d20 = org.apache.spark.sql.types.DecimalType(20, 0)
     // moments are EXACT decimal sums; the closed form runs in doubles
     // (every operand here is an integer < 2^53, so the casts are exact)
@@ -1528,7 +1528,7 @@ object TextQueries {
         size(graft.operators.TextOps.words(col("text"))).cast("long").as("n_tokens"))
       .withColumn("one", lit(1L))
     graft.operators.PrefixScan
-      .runningSumLong(toks, "one", "rank", col("n_tokens").asc, col("doc_id").asc)
+      .runningSum(toks, Nil, "one", "rank", col("n_tokens").asc, col("doc_id").asc)
       .withColumn("batch_no", floor((col("rank") - 1) / 32).cast("bigint"))
       .groupBy("batch_no")
       .agg(count(lit(1)).as("n_docs"),
@@ -2151,7 +2151,7 @@ object TextQueries {
     val nt = size(graft.operators.TextOps.words(col("text"))).cast("bigint")
     val d = Tables.documents(spark, dir).select(col("doc_id"), nt.as("n_tokens"))
     graft.operators.PrefixScan
-      .runningSumLong(d, "n_tokens", "cum_tokens", col("doc_id"))
+      .runningSum(d, Nil, "n_tokens", "cum_tokens", col("doc_id"))
       .withColumn("shard_id", expr(s"(cum_tokens - n_tokens) div $budget"))
       .groupBy("shard_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
@@ -2189,7 +2189,7 @@ object TextQueries {
       .select(col("doc_id"), col("source"), ((col("doc_id") * a + b) % m).as("skey"))
     // Per-source shuffle ranks ride the GROUPED PrefixScan (round 8):
     // the source-partitioned row_number was |docs|/|sources| in one task.
-    val ranked = graft.operators.PrefixScan.groupedRunningSumLong(
+    val ranked = graft.operators.PrefixScan.runningSum(
         d.withColumn("one", lit(1L)), Seq("source"), "one", "r0",
         col("skey"), col("doc_id"))
       .withColumn("r", col("r0") - 1).drop("r0", "one")
@@ -2404,7 +2404,7 @@ object TextQueries {
     val per = d.groupBy("qkey")
       .agg(count(lit(1)).as("n"), sum("pos").as("npos"))
     graft.operators.PrefixScan
-      .runningSumLong(per, "n", "cum", col("qkey"))
+      .runningSum(per, Nil, "n", "cum", col("qkey"))
       .select(col("npos"), col("n"), (col("cum") - col("n")).as("cumb"))
       .agg(sum("npos").as("n_pos"), sum(col("n") - col("npos")).as("n_neg"),
         sum(col("npos") * (lit(2L) * col("cumb") + col("n") + 1L)).as("r2"))
@@ -2462,7 +2462,7 @@ object TextQueries {
     val per = d.groupBy("qkey")
       .agg(sum("a").as("na"), sum("b").as("nb"))
     // ONE two-column prefix scan (round-15, guide §1.2/§2.4): the two
-    // chained runningSumLong calls paid two range shuffles + pins +
+    // chained single-column scans paid two range shuffles + pins +
     // totals collects over the same level relation, and the separate
     // `tot` aggregate re-executed the WHOLE document scan (regexp pass
     // included) because `per` sat un-cached. The combined scan computes
@@ -2470,9 +2470,10 @@ object TextQueries {
     // knows the cohort totals — inlined as literals, so the
     // crossJoin(broadcast(tot)) exchange is gone too. Same rows, same
     // doubles (lit(ta) is the identical BIGINT the old `tot` carried).
-    val (c2, totals) = graft.operators.PrefixScan.runningSumsLongWithTotals(
-      per, Seq("na" -> "cum_a", "nb" -> "cum_b"), col("qkey"))
-    val (ta, tb) = (totals(0), totals(1))
+    val (c2, totals) = graft.operators.PrefixScan.runningSums(
+      per, Nil, Seq("na" -> "cum_a", "nb" -> "cum_b"), col("qkey"))
+    val t = totals.first()
+    val (ta, tb) = (t.getLong(0), t.getLong(1))
     c2.select(col("qkey"), lit(ta).as("n_a"), lit(tb).as("n_b"),
         abs(col("cum_a").cast("double") / lit(ta).cast("double") -
           col("cum_b").cast("double") / lit(tb).cast("double")).as("d"))
@@ -2844,7 +2845,7 @@ object TextQueries {
       .groupBy(expr("first_doc div 50").as("bucket"))
       .agg(count(lit(1)).as("new_types"))
     graft.operators.PrefixScan
-      .runningSumLong(perBucket, "new_types", "cum_types", col("bucket"))
+      .runningSum(perBucket, Nil, "new_types", "cum_types", col("bucket"))
       .orderBy("bucket")
   }
 
@@ -3039,7 +3040,7 @@ object TextQueries {
         .select(col("doc_id"), col("source"),
           floor(quality * 1000000.0).cast("bigint").as("qmicro"),
           lit(1L).as("one")))
-    val ranked = graft.operators.PrefixScan.groupedRunningSumLong(
+    val ranked = graft.operators.PrefixScan.runningSum(
       scored, Seq("source"), "one", "rank", col("qmicro"), col("doc_id"))
     val n = scored.groupBy("source").agg(count(lit(1)).as("n"))
     ranked.drop("one").join(broadcast(n), "source")
@@ -3250,7 +3251,7 @@ object TextQueries {
       .groupBy("gram").agg(count(lit(1)).as("freq"))
       .withColumn("one", lit(1L))
     // ONE two-column prefix scan (round-15, guide §1.2/§2.4, the ks_drift
-    // shape): the two chained runningSumLong calls paid two range
+    // shape): two chained single-column scans paid two range
     // shuffles + pins + totals collects over the same gram relation, and
     // the separate `tot` aggregate re-executed the WHOLE corpus gram
     // explode because `freq` sat un-cached. The combined scan computes
@@ -3258,10 +3259,11 @@ object TextQueries {
     // sum(freq) and the type count — inlined as literals, so the
     // crossJoin(broadcast(tot)) is gone too. Same rows, same doubles
     // (lit(total) is the identical BIGINT the old `tot` carried).
-    val (cum, grand) = graft.operators.PrefixScan.runningSumsLongWithTotals(
-      freq, Seq("one" -> "rank", "freq" -> "cum_freq"),
+    val (cum, grand) = graft.operators.PrefixScan.runningSums(
+      freq, Nil, Seq("one" -> "rank", "freq" -> "cum_freq"),
       col("freq").desc, col("gram"))
-    val (nTypes, total) = (grand(0), grand(1))
+    val g = grand.first()
+    val (nTypes, total) = (g.getLong(0), g.getLong(1))
     cum.filter(col("rank").isin(100L, 500L, 1000L, 2000L, 5000L))
       .select(col("rank").as("top_k"), col("cum_freq"),
         lit(total).as("total"), lit(nTypes).as("n_types"),
@@ -3489,7 +3491,7 @@ object TextQueries {
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), ((col("doc_id") * a + b) % m).as("skey"), lit(1L).as("one"))
     val ranked = graft.operators.PrefixScan
-      .runningSumLong(keyed, "one", "rk", col("skey"), col("doc_id"))
+      .runningSum(keyed, Nil, "one", "rk", col("skey"), col("doc_id"))
       .withColumn("step", expr("(rk - 1) div 16"))
       .filter(col("step").between(5, 7))
       .withColumn("pos_in_batch", expr("(rk - 1) % 16"))

@@ -11,16 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ClusterLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("bucketed fact-fact join plans with ZERO exchanges (co-located SMJ)") {
     val dir = "/root/testdata/sf0.01"
     spark.sql("DROP TABLE IF EXISTS graft_b_orders")
@@ -32,7 +22,7 @@ class ClusterLayoutSpec extends AnyFunSuite {
       .select("l_orderkey", "l_extendedprice")
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .mode("overwrite").saveAsTable("graft_b_lineitem")
-    try withConf(
+    try TestSpark.withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
       val j = spark.table("graft_b_orders")
@@ -70,7 +60,7 @@ class ClusterLayoutSpec extends AnyFunSuite {
     val fact = spark.range(200000).select(lit(0L).as("k"), col("id").as("v"))
       .unionByName(spark.range(10000).select((pmod(col("id"), lit(200)) + 1).as("k"), col("id").as("v")))
     val dim = spark.range(201).select(col("id").as("k"), (col("id") * 7).as("w"))
-    withConf(
+    TestSpark.withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",

@@ -71,6 +71,16 @@ class PagerankGuardSpec extends AnyFunSuite {
     GraftCaches.releaseAll()
   }
 
+  test("a node bound that UNDER-estimates the exact node count fails loudly") {
+    // star(3) has 4 nodes; a bound of 2 would size the rank scale for a
+    // smaller graph than the one iterated, voiding the int64 guard.
+    val ex = intercept[IllegalArgumentException] {
+      GraphQueries.pagerankIterate(star(3L), Some(2L)).count()
+    }
+    assert(ex.getMessage.contains("UNDER-estimates the exact node count 4"))
+    GraftCaches.releaseAll()
+  }
+
   test("a graph the round-11 guard refused now iterates at the stepped-down scale") {
     // bound past MaxNodesAtScale (the old refusal point) on a tiny
     // physical star: the iteration must run, at R0=1e11 not 1e12, and

@@ -15,7 +15,7 @@ class PrefixScanSpec extends AnyFunSuite {
   test("distributed scan equals the global window cumsum (ascending key)") {
     import spark.implicits._
     val df = (1 to 2000).map(i => (i.toLong, ((i * 37) % 101 + 1).toLong)).toDF("id", "v")
-    val got = PrefixScan.runningSumLong(df, "v", "cum", col("id"))
+    val got = PrefixScan.runningSum(df, Nil, "v", "cum", col("id"))
       .orderBy("id").select("id", "v", "cum").collect().toSeq
     val w = Window.orderBy(col("id")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df.withColumn("cum", sum("v").over(w))
@@ -29,7 +29,7 @@ class PrefixScanSpec extends AnyFunSuite {
     val df = (1 to 500).map(i => (i.toLong, (i % 7).toLong, (i % 13 + 1).toLong))
       .toDF("id", "k", "v")
     val order = Seq(col("k").desc, col("id"))
-    val got = PrefixScan.runningSumLong(df, "v", "cum", order: _*)
+    val got = PrefixScan.runningSum(df, Nil, "v", "cum", order: _*)
       .orderBy("id").select("id", "cum").collect().toSeq
     val w = Window.orderBy(order: _*).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df.withColumn("cum", sum("v").over(w))
@@ -40,15 +40,20 @@ class PrefixScanSpec extends AnyFunSuite {
   test("scan runs over MULTIPLE range partitions (not one global-sort task)") {
     import spark.implicits._
     val df = (1 to 2000).map(i => (i.toLong, 1L)).toDF("id", "v")
-    // Pin 8 range partitions (on tiny data AQE would coalesce to 1 —
-    // correct too, since the result is partition-count-invariant, but the
-    // point here is to exercise the multi-partition offset math).
-    val ranged = df.repartitionByRange(8, col("id"))
-    assert(ranged.rdd.getNumPartitions > 1,
-      "repartitionByRange must spread the scan; a single partition would be the global-window shape")
-    val got = PrefixScan.runningSumLongPartitioned(df, 8, "v", "cum", col("id"))
-      .orderBy("id").select("cum").as[Long].collect()
-    assert(got.toSeq == (1L to 2000L))
+    // 8 range partitions with coalescing off (on tiny data AQE would
+    // coalesce to 1 — correct too, since the result is partition-count-
+    // invariant, but the point here is to exercise the multi-partition
+    // offset math).
+    TestSpark.withConf("spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val ranged = df.repartitionByRange(col("id"))
+      assert(ranged.rdd.getNumPartitions > 1,
+        "repartitionByRange must spread the scan; a single partition would be the global-window shape")
+      val got = PrefixScan.runningSum(df, Nil, "v", "cum", col("id"))
+        .orderBy("id").select("cum").as[Long].collect()
+      assert(got.toSeq == (1L to 2000L))
+    }
+    GraftCaches.releaseAll()
   }
 
   test("decimal scan equals the global decimal window (multi-partition)") {
@@ -56,7 +61,7 @@ class PrefixScanSpec extends AnyFunSuite {
     val df = (1 to 5000).map(i => (i.toLong, BigDecimal((i * 13 % 997) + 1).setScale(2)))
       .toDF("id", "v")
       .select(col("id"), col("v").cast(org.apache.spark.sql.types.DecimalType(14, 2)).as("v"))
-    val got = PrefixScan.runningSumDecimal(df, "v", "cum", col("id"))
+    val got = PrefixScan.runningSum(df, Nil, "v", "cum", col("id"))
       .orderBy("id").select("id", "cum").collect().toSeq
     val w = Window.orderBy(col("id")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df.withColumn("cum", sum("v").over(w))
@@ -73,7 +78,7 @@ class PrefixScanSpec extends AnyFunSuite {
     // eviction can produce — must not change a single row.
     import spark.implicits._
     val df = (1 to 3000).map(i => (i.toLong, ((i * 61) % 89 + 1).toLong)).toDF("id", "v")
-    val scanned = PrefixScan.runningSumLong(df, "v", "cum", col("id"))
+    val scanned = PrefixScan.runningSum(df, Nil, "v", "cum", col("id"))
     spark.catalog.clearCache()   // drops every persisted SQL relation
     val got = scanned.orderBy("id").select("id", "cum").collect().toSeq
     val w = Window.orderBy(col("id")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -85,7 +90,7 @@ class PrefixScanSpec extends AnyFunSuite {
     // release — an API-contract violation, not an eviction — must fail
     // LOUDLY (lineage is gone), never silently recompute a different
     // `_pid` assignment.
-    val scanned2 = PrefixScan.runningSumLong(df, "v", "cum2", col("id"))
+    val scanned2 = PrefixScan.runningSum(df, Nil, "v", "cum2", col("id"))
     GraftCaches.releaseAll()
     intercept[org.apache.spark.SparkException] {
       scanned2.orderBy("id").select("cum2").collect()
@@ -95,7 +100,7 @@ class PrefixScanSpec extends AnyFunSuite {
   test("empty input yields empty output") {
     import spark.implicits._
     val df = Seq.empty[(Long, Long)].toDF("id", "v")
-    assert(PrefixScan.runningSumLong(df, "v", "cum", col("id")).count() == 0)
+    assert(PrefixScan.runningSum(df, Nil, "v", "cum", col("id")).count() == 0)
   }
 
   test("grouped scan equals the per-group window cumsum (groups crossing partitions)") {
@@ -106,7 +111,7 @@ class PrefixScanSpec extends AnyFunSuite {
     val df = (1 to 5000).map(i => (i % 3, i.toLong, ((i * 37) % 101 + 1).toLong))
       .toDF("g", "id", "v")
       .repartition(8)
-    val got = PrefixScan.groupedRunningSumLong(df, Seq("g"), "v", "cum", col("id"))
+    val got = PrefixScan.runningSum(df, Seq("g"), "v", "cum", col("id"))
       .orderBy("g", "id").select("g", "id", "cum").collect().toSeq
     val w = Window.partitionBy("g").orderBy("id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -122,7 +127,7 @@ class PrefixScanSpec extends AnyFunSuite {
       .toDF("g", "id", "v")
       .select(col("g"), col("id"),
         col("v").cast(org.apache.spark.sql.types.DecimalType(14, 2)).as("v"))
-    val got = PrefixScan.groupedRunningSumDecimal(df, Seq("g"), "v", "cum", col("id"))
+    val got = PrefixScan.runningSum(df, Seq("g"), "v", "cum", col("id"))
       .orderBy("g", "id").select("g", "id", "cum").collect().toSeq
     val w = Window.partitionBy("g").orderBy("id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -137,7 +142,7 @@ class PrefixScanSpec extends AnyFunSuite {
     val df = (1 to 999).map(i => (i % 5, (i % 11).toLong, i.toLong, 1L))
       .toDF("g", "k", "id", "one")
     val order = Seq(col("k").desc, col("id"))
-    val got = PrefixScan.groupedRunningSumLong(df, Seq("g"), "one", "rn", order: _*)
+    val got = PrefixScan.runningSum(df, Seq("g"), "one", "rn", order: _*)
       .orderBy("g", "id").select("g", "id", "rn").collect().toSeq
     val w = Window.partitionBy("g").orderBy(order: _*)
     val want = df.withColumn("rn", row_number().over(w).cast("long"))
@@ -149,18 +154,18 @@ class PrefixScanSpec extends AnyFunSuite {
   test("grouped scan: empty input, single group, and single-row groups") {
     import spark.implicits._
     val empty = Seq.empty[(Int, Long, Long)].toDF("g", "id", "v")
-    assert(PrefixScan.groupedRunningSumLong(empty, Seq("g"), "v", "cum", col("id")).count() == 0)
+    assert(PrefixScan.runningSum(empty, Seq("g"), "v", "cum", col("id")).count() == 0)
     GraftCaches.releaseAll()
     // One group == the global scan.
     val one = (1 to 300).map(i => (7, i.toLong, (i % 13 + 1).toLong)).toDF("g", "id", "v")
-    val gotOne = PrefixScan.groupedRunningSumLong(one, Seq("g"), "v", "cum", col("id"))
+    val gotOne = PrefixScan.runningSum(one, Seq("g"), "v", "cum", col("id"))
       .orderBy("id").select("cum").as[Long].collect().toSeq
     val wantOne = (1 to 300).map(i => (1 to i).map(j => (j % 13 + 1).toLong).sum)
     assert(gotOne == wantOne)
     GraftCaches.releaseAll()
     // Every row its own group: cum == v everywhere.
     val singletons = (1 to 200).map(i => (i, i.toLong, (i * 3 % 17 + 1).toLong)).toDF("g", "id", "v")
-    val gotS = PrefixScan.groupedRunningSumLong(singletons, Seq("g"), "v", "cum", col("id"))
+    val gotS = PrefixScan.runningSum(singletons, Seq("g"), "v", "cum", col("id"))
       .filter(col("cum") =!= col("v")).count()
     assert(gotS == 0)
     GraftCaches.releaseAll()
@@ -215,7 +220,7 @@ class PrefixScanSpec extends AnyFunSuite {
     val df = (1 to 900)
       .map(i => (if (i % 3 == 0) None else Some(i % 2), i.toLong, (i % 13 + 1).toLong))
       .toDF("g", "id", "v")
-    val got = PrefixScan.groupedRunningSumLong(df, Seq("g"), "v", "cum", col("id"))
+    val got = PrefixScan.runningSum(df, Seq("g"), "v", "cum", col("id"))
       .orderBy(col("g").asc_nulls_first, col("id"))
       .select("g", "id", "cum").collect().toSeq
     val w = Window.partitionBy("g").orderBy("id")
@@ -230,7 +235,7 @@ class PrefixScanSpec extends AnyFunSuite {
     // Decimal edition, same contract.
     val ddf = df.select(col("g"), col("id"),
       col("v").cast(org.apache.spark.sql.types.DecimalType(14, 2)).as("v"))
-    val dgot = PrefixScan.groupedRunningSumDecimal(ddf, Seq("g"), "v", "cum", col("id"))
+    val dgot = PrefixScan.runningSum(ddf, Seq("g"), "v", "cum", col("id"))
       .orderBy(col("g").asc_nulls_first, col("id")).select("g", "id", "cum").collect().toSeq
     val dwant = ddf.withColumn("cum", sum("v").over(w))
       .orderBy(col("g").asc_nulls_first, col("id")).select("g", "id", "cum").collect().toSeq
@@ -243,17 +248,45 @@ class PrefixScanSpec extends AnyFunSuite {
     val df = (1 to 100)
       .map(i => (i % 2, i.toLong, if (i == 37) None else Some((i % 7 + 1).toLong)))
       .toDF("g", "id", "v")
-    val e = intercept[IllegalArgumentException] {
-      PrefixScan.groupedRunningSumLong(df, Seq("g"), "v", "cum", col("id")).count()
+    // Global inputs: a run of NULL values mid-relation. Unguarded, the
+    // global scan returned NULL running sums for those rows where the
+    // window carries the prefix of the non-NULL values.
+    val gdf = (1 to 1000)
+      .map(i => (i.toLong, if (i >= 500 && i < 520) None else Some(i.toLong)))
+      .toDF("id", "v")
+    def dec(d: org.apache.spark.sql.DataFrame) = d.withColumn("v",
+      col("v").cast(org.apache.spark.sql.types.DecimalType(14, 2)))
+    for ((in, grp) <- Seq(df -> Seq("g"), dec(df) -> Seq("g"), gdf -> Nil, dec(gdf) -> Nil)) {
+      val e = intercept[IllegalArgumentException] {
+        PrefixScan.runningSum(in, grp, "v", "cum", col("id")).count()
+      }
+      assert(e.getMessage.contains("NULL"), s"${in.schema("v").dataType} groups=$grp")
+      GraftCaches.releaseAll()
     }
-    assert(e.getMessage.contains("NULL"))
+  }
+
+  test("runningSums: several columns in one scan, grand totals from the scan's collect") {
+    import spark.implicits._
+    val df = (1 to 3000).map(i => (i % 4, i.toLong, (i % 11).toLong, 1L)).toDF("g", "id", "v", "one")
+      .withColumn("d", (col("v") / 4).cast(org.apache.spark.sql.types.DecimalType(14, 2)))
+    val w = Window.partitionBy("g").orderBy("id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (got, tot) = PrefixScan.runningSums(df, Seq("g"),
+      Seq("v" -> "cv", "one" -> "rn", "d" -> "cd"), col("id"))
+    val want = df.withColumn("cv", sum("v").over(w)).withColumn("rn", sum("one").over(w))
+      .withColumn("cd", sum("d").over(w))
+    assert(got.schema == want.schema)
+    assert(got.orderBy("id").collect().toSeq == want.orderBy("id").collect().toSeq)
+    val wantTot = df.groupBy("g").agg(sum("v").as("v"), sum("one").as("one"), sum("d").as("d"))
+    assert(tot.schema.map(f => f.name -> f.dataType) == wantTot.schema.map(f => f.name -> f.dataType))
+    assert(tot.orderBy("g").collect().toSeq == wantTot.orderBy("g").collect().toSeq)
     GraftCaches.releaseAll()
-    val ddf = df.select(col("g"), col("id"),
-      col("v").cast(org.apache.spark.sql.types.DecimalType(14, 2)).as("v"))
-    val ed = intercept[IllegalArgumentException] {
-      PrefixScan.groupedRunningSumDecimal(ddf, Seq("g"), "v", "cum", col("id")).count()
-    }
-    assert(ed.getMessage.contains("NULL"))
+    // Global: one totals row, also for an empty input.
+    val (_, gTot) = PrefixScan.runningSums(df, Nil, Seq("v" -> "cv", "d" -> "cd"), col("id"))
+    assert(gTot.collect().toSeq == df.agg(sum("v"), sum("d")).collect().toSeq)
+    GraftCaches.releaseAll()
+    val (_, eTot) = PrefixScan.runningSums(df.filter(lit(false)), Nil, Seq("v" -> "cv"), col("id"))
+    assert(eTot.collect().toSeq.map(_.getLong(0)) == Seq(0L))
     GraftCaches.releaseAll()
   }
 }

@@ -22,16 +22,6 @@ class RuntimeBloomFilterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.01"
 
-  private def withConfs[A](pairs: (String, String)*)(body: => A): A = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private def selectiveJoin() = {
     val l = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir)
@@ -42,7 +32,7 @@ class RuntimeBloomFilterSpec extends AnyFunSuite {
   }
 
   test("bloom filter is injected into the large side of a selective shuffle join") {
-    withConfs(
+    TestSpark.withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force the shuffle-join shape
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
@@ -54,11 +44,11 @@ class RuntimeBloomFilterSpec extends AnyFunSuite {
   }
 
   test("bloom-filtered join returns the same rows as with the rewrite disabled") {
-    val expected = withConfs(
+    val expected = TestSpark.withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
       selectiveJoin().collect().toSeq
     }
-    val got = withConfs(
+    val got = TestSpark.withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {

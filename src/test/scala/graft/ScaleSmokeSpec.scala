@@ -328,7 +328,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
     val df = spark.range(n).select(
       pmod(col("id"), lit(5)).as("g"), col("id"),
       pmod(hash(col("id")), lit(100000)).cast("long").as("v"))
-    val ranked = graft.operators.PrefixScan.groupedRunningSumLong(
+    val ranked = graft.operators.PrefixScan.runningSum(
       df.withColumn("one", lit(1L)), Seq("g"), "one", "rn", col("v"), col("id"))
     def bare(p: org.apache.spark.sql.execution.SparkPlan): Seq[WindowExec] = p match {
       case a: AdaptiveSparkPlanExec => bare(a.inputPlan)
@@ -337,7 +337,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
     }
     assert(bare(ranked.queryExecution.executedPlan).isEmpty,
       "grouped scan must not plan a partition-less window")
-    val maxRn = timed(s"groupedRunningSumLong over $n rows x 5 groups")(
+    val maxRn = timed(s"grouped PrefixScan.runningSum over $n rows x 5 groups")(
       ranked.agg(max("rn")).collect()(0).getLong(0))
     assert(maxRn === n / 5, "each group's top rank must equal the group size")
     GraftCaches.releaseAll()
