@@ -617,10 +617,12 @@ object Dedup {
     // and the big per-round probe is a broadcast hash join over the
     // pinned mirror — zero exchange and zero sort on the edge side; the
     // pre-r15 SMJ shape re-ran the edge-side Exchange(src) every round.
-    // The count job over the pinned node-sized deg blocks is the cheap
-    // price of a DATA-derived bound (never core-count-derived); graphs
-    // past the bound keep the SMJ shape, which is scale-correct there.
-    if (deg.count() <= BroadcastRankNodeBound) {
+    // The count over the pinned node-sized deg blocks is the cheap price
+    // of a DATA-derived bound (never core-count-derived); graphs past the
+    // bound keep the SMJ shape, which is scale-correct there. The RDD
+    // count is one job over the stored blocks; `Dataset.count` would add
+    // a shuffle stage and a job.
+    if (deg.rdd.count() <= BroadcastRankNodeBound) {
       (1 to iters).foldLeft(init) { (r, _) =>
         // deg is under the bound in this branch — broadcast the divisor
         // join too (identical pinned-leaf BroadcastExchange, reused

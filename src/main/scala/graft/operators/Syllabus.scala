@@ -16,8 +16,18 @@ import graft.model._
   *
   * The reference processes one PDF per thread with a 4-thread pool
   * (etl_pipeline.py:33-41); here each document is a row and Spark's task
-  * parallelism replaces the pool — the plan has no shuffle until the
-  * calendar aggregation, so the parse scales linearly with input splits.
+  * parallelism replaces the pool. A parse over pre-extracted documents
+  * (`parse`) has no shuffle; one over per-page extractions
+  * (`parseFromPages`) hash-exchanges once on `doc_id`, where
+  * `SectionRouting.assembleDocs` gathers each document's pages.
+  *
+  * The reference extracts each syllabus once and loads it several ways,
+  * and so does this pipeline: the result of `parse`/`parseFromPages` is
+  * computed once, by the first action over any relation derived from it,
+  * and every later action reads its stored blocks. Those blocks live as
+  * long as the returned Dataset: they are not registered in
+  * [[graft.GraftCaches]] or the session's cache, and Spark's ContextCleaner
+  * frees them once the Dataset is unreachable.
   */
 object Syllabus {
 
@@ -79,10 +89,14 @@ object Syllabus {
       units_raw: Seq[Seq[String]], assessments_raw: Seq[Seq[String]])
 
   /** Full parse: scalar stage + typed R1-R6/R7 map with the X2 envelope —
-    * one bad document never kills the run; failures surface as rows. */
+    * one bad document never kills the run; failures surface as rows.
+    *
+    * The result is a lazy local checkpoint, computed once (see above).
+    * Under adaptive execution the shuffle map stages of `docs`, if it has
+    * any, run here, when the checkpoint is taken. */
   def parse(docs: DataFrame): Dataset[ParseResult] = {
     val scalars = scalarParse(docs).as(Encoders.product[ScalarParsed])
-    scalars.map({ p =>
+    val results = scalars.map({ p =>
       try {
         if (p.course_id.isEmpty)
           throw new IllegalArgumentException(s"Invalid filename format: ${p.filename}")
@@ -96,12 +110,14 @@ object Syllabus {
           ParseResult(p.doc_id, "error", Option(e.getMessage).getOrElse(e.toString), None)
       }
     }, Encoders.product[ParseResult])
+    results.localCheckpoint(eager = false)
   }
 
   /** Full parse from UNROUTED per-page extractions: S3 section routing
     * (SectionRouting.assembleDocs) assembles the RawDoc contract, then the
     * standard pipeline runs. This is the complete reference dataflow —
-    * extract_tables' page walk included — over a per-page relation. */
+    * extract_tables' page walk included — over a per-page relation. The
+    * result is computed once, as for [[parse]]. */
   def parseFromPages(pages: DataFrame): Dataset[ParseResult] =
     parse(SectionRouting.assembleDocs(pages))
 

@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   * etl_infrastructure.py:148-158, etl_pipeline.py:52-61) are inherently
   * single-machine layouts, so those writers `collect()` and are documented
   * for small result sets only (a term's courses, not a corpus).
+  *
+  * Each writer is one action over its input. A caller writing one
+  * relation several ways should pass a relation that is already
+  * materialized (e.g. derived from `Syllabus.parse`, which computes its
+  * result once); an unmaterialized plan is recomputed from its sources
+  * by every writer.
   */
 object JsonSinks {
 

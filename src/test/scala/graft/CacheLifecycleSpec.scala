@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.RawPage
+import graft.operators.Syllabus
 import graft.queries.{DedupQueries, SimilarityQueries}
 
 /** The operators persist working-set relations (LSH bands, shingle sets,
@@ -66,5 +68,25 @@ class CacheLifecycleSpec extends AnyFunSuite {
     SimilarityQueries.retrieveRerank(spark, dir)
     assert(GraftCaches.trackedCount === 0,
       "retrieve_rerank tracked a cache; candidates are already bounded")
+  }
+
+  test("the syllabus parse checkpoint is registered in no cache registry") {
+    // Syllabus.parse keeps its result as a local checkpoint owned by the
+    // returned Dataset; a registry holding it strongly would keep one
+    // corpus-sized copy per parse in a session that never releases.
+    import spark.implicits._
+    val pages = Seq(
+      RawPage("d1", "UG-202520_1AEL0244-8281.pdf", 0,
+        "I. INFORMACIÓN GENERAL\nNombre del Curso: Cálculo I", null),
+      RawPage("d2", "syllabus.pdf", 0, "I. INFORMACIÓN GENERAL", null)).toDF()
+    val pins0 = GraftCaches.pinsCreated
+    val tracked0 = GraftCaches.trackedCount
+    val cacheEmpty0 = spark.sharedState.cacheManager.isEmpty
+
+    assert(Syllabus.parseFromPages(pages).count() === 2)
+
+    assert(GraftCaches.pinsCreated === pins0)
+    assert(GraftCaches.trackedCount === tracked0)
+    assert(spark.sharedState.cacheManager.isEmpty === cacheEmpty0)
   }
 }
