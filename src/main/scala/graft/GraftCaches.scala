@@ -2,7 +2,9 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
 /** Session-lifetime registry of the working-set relations the operators
@@ -27,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraftCaches {
   private val tracked = new ConcurrentLinkedQueue[DataFrame]()
-  private val pinnedRdds = new ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+  private val pinnedRdds = new ConcurrentLinkedQueue[RDD[_]]()
 
   // Lifetime creation counters (never reset): Bench diffs them around
   // each query to attribute working-set volume per query (round-13
@@ -101,12 +103,18 @@ object GraftCaches {
     * round 15). */
   def pin(df: DataFrame, eager: Boolean): DataFrame = {
     val cp = df.localCheckpoint(eager = eager)
-    cp.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => pinnedRdds.add(lr.rdd)
-    }
+    pinnedRdd(cp).foreach(pinnedRdds.add)
     pinsTotal.incrementAndGet()
     cp
   }
+
+  /** The checkpointed RDD behind a [[pin]]-ned frame: a job over it reads
+    * (or, for a lazy pin not yet materialized, computes and stores) the
+    * pinned blocks without planning a query. */
+  private[graft] def pinnedRdd(pinned: DataFrame): Option[RDD[InternalRow]] =
+    pinned.queryExecution.logical.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
 
   /** Unpersist every tracked relation (non-blocking) and clear the
     * registry. For [[track]]-ed (persisted) frames this is safe at any

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PolyHash
@@ -32,6 +32,15 @@ object Dedup {
     * takes the SMJ shape. Shared by [[pageRank]] and
     * [[graft.queries.GraphQueries.pagerankIterate]]. */
   val BroadcastRankNodeBound: Long = 1L << 21
+
+  /** Largest mirrored edge relation whose [[pageRank]] and
+    * [[duplicateComponentsConverged]] rounds run on the driver. A
+    * mirrored row is two longs, so 2^16 rows are 1 MB of primitive
+    * arrays in driver memory, and a driver round over them takes
+    * milliseconds, where a Spark round pays a per-job floor of tens of
+    * milliseconds or more. Counted in mirrored rows (two per edge row),
+    * never derived from the core count. */
+  val LocalEdgeBound: Long = 1L << 16
 
   /** Exact dedup: group identical payloads, keep the smallest id.
     * For 100 TB inputs group on a hash of the payload first (same plan
@@ -254,84 +263,88 @@ object Dedup {
   }
 
   /** Iterate-until-stable companion to [[duplicateComponents]]: runs
-    * min-label rounds until a round changes ZERO labels (checked with a
-    * per-round count action — the standard Spark fixpoint shape; one
-    * extra job per round is the price of a convergence guarantee), with
-    * `maxIters` as a runaway cap on PROBE rounds — each probe round
-    * batches TWO label hops (round 14), so the reachable diameter bound
-    * is 2·maxIters hops, not maxIters; callers tuning maxIters as a
-    * per-hop budget should halve it. Use when cluster chains can be deeper
-    * than the fixed round count — a path graph of diameter d needs d
-    * rounds, and the fixed-3 operator would split such a cluster (the
-    * documented honest-but-bounded trade-off). Labels only ever
-    * decrease, so "no label decreased" IS the fixpoint; on convergence
-    * comp_id = min doc id of the full connected component. */
-  def duplicateComponentsConverged(edges: DataFrame, maxIters: Int = 20): DataFrame = {
-    // Pinned per round (localCheckpoint), not cached — see
-    // [[duplicateComponents]] and [[graft.GraftCaches.pin]]. Pins are
-    // LAZY (round-14): the per-round convergence probe below is the
-    // materializing action, so each round costs ONE job where it used
-    // to cost a dedicated eager-checkpoint job plus the probe.
-    // (Round-15 measured dead end, for the record: pinning the mirror
-    // PRE-PARTITIONED by src does NOT let the per-round join skip the
-    // edge exchange — Dataset.localCheckpoint under AQE reports
-    // UnknownPartitioning in its LogicalRDD, so EnsureRequirements
-    // re-shuffles anyway and the upfront repartition is pure loss.)
+    * min-label rounds until a probe round changes ZERO labels, with
+    * `maxIters` as a runaway cap on probe rounds. Each probe round makes
+    * TWO label hops, so the reachable diameter bound is 2·maxIters hops,
+    * not maxIters; callers tuning maxIters as a per-hop budget should
+    * halve it. Use when cluster chains can be deeper than the fixed round
+    * count — a path graph of diameter d needs d hops, and the fixed-3
+    * operator would split such a cluster (its documented trade-off).
+    * Labels only ever decrease, so "no label changed" IS the fixpoint; on
+    * convergence comp_id = min doc id of the full connected component.
+    * A component deeper than 2·maxIters hops fails LOUDLY (the
+    * `require` below) instead of returning labels that would split it;
+    * [[duplicateComponentsStar]] resolves deep chains in O(log d) rounds.
+    *
+    * Branch rule: the mirrored edge relation is pinned and materialized
+    * in one job that counts it. When it holds at most [[LocalEdgeBound]]
+    * rows of non-NULL bigint ids, one more job reads them and the rounds
+    * run on the driver ([[DriverRounds.components]]), returning a local
+    * relation; otherwise every probe round is a Spark job over pinned
+    * label blocks. Both branches share the hop algebra, the two hops per
+    * probe, the stop rule, the `maxIters` cap, the exhaustion message and
+    * the output schema — the distributed plan's analyzed schema,
+    * nullability included — so they return the same rows. */
+  def duplicateComponentsConverged(edges: DataFrame, maxIters: Int = 20): DataFrame =
+    duplicateComponentsConverged(edges, maxIters, LocalEdgeBound)
+
+  /** [[duplicateComponentsConverged]] with the driver-branch bound as an
+    * argument, so specs can force the distributed rounds. */
+  private[graft] def duplicateComponentsConverged(edges: DataFrame, maxIters: Int,
+      localEdgeBound: Long): DataFrame = {
     val bidir = graft.GraftCaches.pin(mirrored(edges), eager = false)
-    var lab = graft.GraftCaches.pin(
-      bidir.select(col("src").as("doc_id")).distinct()
-        .withColumn("comp_id", col("doc_id")), eager = false)
-    // Labels only ever DECREASE, so sum(comp_id) is strictly monotone
-    // while anything changes: "sum unchanged" IS the fixpoint test. One
-    // single-row aggregate per round (exact integer sum over the cached
-    // labels) instead of a join-and-count — the cheapest convergence
-    // probe that is still exact.
-    def labelSum(df: DataFrame): Long = {
-      val r = df.agg(sum("comp_id")).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0) // null = empty edge set
-    }
-    var prevSum = labelSum(lab)
-    var round = 0
-    var converged = false
-    // One aggregation per hop — see [[duplicateComponents]] (round-14).
+    val init = bidir.select(col("src").as("doc_id")).distinct()
+      .withColumn("comp_id", col("doc_id"))
+    // One hop = ONE aggregation: each node's next label is the min of its
+    // own label (the union's carry rows) and its in-neighbors' labels.
     def hop(l: DataFrame): DataFrame =
       bidir.join(l, col("src") === col("doc_id"))
         .select(col("dst").as("doc_id"), col("comp_id"))
         .union(l)
         .groupBy("doc_id").agg(min("comp_id").as("comp_id"))
-    while (!converged && round < maxIters) {
-      // TWO hops per probe (round-14): the driver round-trip — pin +
-      // convergence probe — is fixed cost, so batching two label hops
-      // under one probe halves it for deep graphs. Exactness is
-      // unchanged: labels only decrease, so sum(hop(hop(l))) == sum(l)
-      // forces both intermediate hops unchanged too; the price is at
-      // most one no-op hop of work after the true fixpoint. The inner
-      // hop's exchange is referenced twice and reused (AQE exchange
-      // reuse), not recomputed.
-      val next = graft.GraftCaches.pin(hop(hop(lab)), eager = false)
-      val nextSum = labelSum(next)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      lab = next
-      round += 1
-    }
-    // LOUD failure on exhaustion (round-14, mirroring the star
-    // operator's contract): min-label propagation moves the component
-    // minimum one hop per hop (two hops per probe round), so a duplicate
-    // chain deeper than 2·maxIters leaves far nodes carrying a
-    // non-minimum comp_id — labels
-    // that silently violate "comp_id = min doc id of the component" and
-    // split one cluster into several keepers. The remedy for deep
-    // chains is [[duplicateComponentsStar]] (O(log d) alternations),
-    // not a silent partial answer; StarComponentsSpec plants a
-    // 512-deep chain proving exactly this divergence.
-    require(converged,
+    def keepers(lab: DataFrame): DataFrame =
+      lab.withColumn("is_keeper", col("doc_id") === col("comp_id"))
+    def exhausted: String =
       s"duplicateComponentsConverged: labels still changing after $maxIters " +
         s"probe rounds (2 min-label hops each) - the graph has a component " +
         s"of diameter > ${2 * maxIters} and the partial labels would split " +
         "it. Raise maxIters or use duplicateComponentsStar (O(log diameter) " +
-        "rounds).")
-    lab.withColumn("is_keeper", col("doc_id") === col("comp_id"))
+        "rounds)."
+    DriverRounds.collect(bidir, localEdgeBound) match {
+      case Some(e) =>
+        val (labels, converged) = DriverRounds.components(e, maxIters)
+        require(converged, exhausted)
+        DriverRounds.relation(bidir.sparkSession, keepers(hop(hop(init))).schema,
+          e.nodes.indices.map(i => Row(e.nodes(i), labels(i), e.nodes(i) == labels(i))))
+      case None =>
+        // Each probe round references the previous labels twice (join and
+        // carry), so every round's labels are pinned (a checkpointed round
+        // is the data; a cached one may recompute its doubling lineage).
+        // The pins are lazy: the round's convergence probe is the action
+        // that materializes them.
+        var lab = graft.GraftCaches.pin(init, eager = false)
+        // Labels only decrease, so sum(comp_id) is unchanged exactly when
+        // no label changed: one single-row aggregate per probe round.
+        def labelSum(df: DataFrame): Long = {
+          val r = df.agg(sum("comp_id")).head()
+          if (r.isNullAt(0)) 0L else r.getLong(0) // null = empty edge set
+        }
+        var prevSum = labelSum(lab)
+        var round = 0
+        var converged = false
+        while (!converged && round < maxIters) {
+          // sum(hop(hop(l))) == sum(l) forces both hops unchanged; the
+          // inner hop's exchange is reused, not recomputed.
+          val next = graft.GraftCaches.pin(hop(hop(lab)), eager = false)
+          val nextSum = labelSum(next)
+          converged = nextSum == prevSum
+          prevSum = nextSum
+          lab = next
+          round += 1
+        }
+        require(converged, exhausted)
+        keepers(lab)
+    }
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
@@ -553,102 +566,84 @@ object Dedup {
     * centrality pass that ranks cluster "hubs" (documents similar to many
     * others: boilerplate templates, canonical sources) for triage and
     * keeper selection. Fixed `iters` power-iteration rounds of
-    * r = teleport + damping * Σ_in (r_src / outdeg_src).
+    * r = teleport + damping * Σ_in (r_src / outdeg_src), starting from
+    * r = 1.0 on every node; `outdeg` counts repeated edge rows.
     *
     * Determinism at any partitioning: the per-edge contribution
-    * r/outdeg is one IEEE double division, then micro-scaled to an
-    * integral DECIMAL (1e-9 units) and summed EXACTLY — decimal addition
-    * is associative, so partial aggregation order can't perturb ranks,
-    * and the whole trajectory is DuckDB-checkable (the oracle unrolls
-    * every round). teleport/damping are passed separately rather than
-    * derived (1.0 - 0.85 != the parsed literal 0.15 in doubles).
+    * r/outdeg is one IEEE double division, then micro-scaled (× 1e9),
+    * rounded HALF_UP to an integral DECIMAL(38,0) and summed EXACTLY per
+    * dst — decimal addition is associative, so partial aggregation order
+    * can't perturb ranks, and the whole trajectory is DuckDB-checkable
+    * (the oracle unrolls every round). teleport/damping are passed
+    * separately rather than derived (1.0 - 0.85 != the parsed literal
+    * 0.15 in doubles). On a mirrored edge relation every node has
+    * indegree >= 1, so each round's dst set IS the node set.
     *
-    * Scale shape: per round, one shuffle keyed on dst for the
-    * contribution sum (map-side combined) + a node-keyed left join; the
-    * edge relation is computed once and reused (pinned — at cluster
-    * scale, a table). Per-round label state is PINNED (localCheckpoint),
-    * not cached: the round-4 driver bench measured 17.9 s vs 5.5 s
-    * isolated for this operator — cache eviction under full-run heap
-    * pressure recomputing per-round lineage (round-4 VERDICT). A
-    * checkpointed round cannot recompute; see [[graft.GraftCaches.pin]]. */
+    * Branch rule: the mirrored edge relation is pinned and materialized
+    * in one job that counts it. When it holds at most [[LocalEdgeBound]]
+    * rows of non-NULL bigint ids, one more job reads them and the rounds
+    * run on the driver ([[DriverRounds.pageRank]]), returning a local
+    * relation with the distributed plan's analyzed schema, nullability
+    * included. Otherwise the rounds are one lazily composed Spark plan,
+    * per round one probe of the pinned mirror and one map-side-combined
+    * shuffle keyed on dst; the node-sized rank state is broadcast under
+    * [[BroadcastRankNodeBound]] nodes and sort-merge joined above it.
+    * Both branches evaluate the same contribution, sum and rank
+    * expressions, so they return the same doubles bit for bit. */
   def pageRank(edges: DataFrame, iters: Int = 3,
-      damping: Double = 0.85, teleport: Double = 0.15): DataFrame = {
+      damping: Double = 0.85, teleport: Double = 0.15): DataFrame =
+    pageRank(edges, iters, damping, teleport, LocalEdgeBound)
+
+  /** [[pageRank]] with the driver-branch bound as an argument, so specs
+    * can force the distributed rounds. */
+  private[graft] def pageRank(edges: DataFrame, iters: Int, damping: Double,
+      teleport: Double, localEdgeBound: Long): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // Degree annotation via PARTIAL-AGG count + join (round-15, guide
-    // §2.5; r14 VERDICT skew hazard): the round-14 `count() over
-    // (partition by src)` window collocated a hot node's ENTIRE edge
-    // list in one task's window buffer with no partial aggregation and
-    // no AQE skew handling (AQE splits skewed JOINS, not window
-    // partitions) — on a power-law graph the hub node serializes one
-    // straggler task. The groupBy degree count is map-side combined
-    // (reducers see ≤ #map-tasks rows per node, immune to hot keys) and
-    // the annotate join is AQE-skew-split eligible. `bidir` appears on
-    // both sides of the join but its distinct-input exchange is REUSED
-    // (one scan — ReusedExchange in the executed plan), so the edge
-    // relation still crosses the wire once for the join plus only the
-    // combined (node, count) rows for the degree pass. The mirror is
-    // pinned EAGERLY first: the degree pass and the annotate join are
-    // SIBLING stages of one action (AQE runs them concurrently), so a
-    // lazy pin makes their tasks race on the block-store locks and a
-    // raw self-reference re-executes the whole upstream edge build
-    // twice (both measured on pagerank_suppliers). The annotated
-    // relation stays LAZILY pinned on top: every round consumes it,
-    // the caller's single action materializes it.
-    val bidir = graft.GraftCaches.pin(mirrored(edges), eager = true)
-    // NODE-sized degree relation, eagerly pinned: it anchors the rank
-    // init (deg has one row per src — no distinct pass needed), the
-    // broadcast-bound node count, and one tiny per-round join.
-    val deg = graft.GraftCaches.pin(
-      bidir.groupBy("src").agg(count(lit(1)).as("outdeg")), eager = true)
-    val init = deg.select(col("src").as("doc_id")).withColumn("rank", lit(1.0))
-    // The per-round join BACK to the rank relation is gone (round-14):
-    // on a MIRRORED edge relation every node has indegree >= 1, so the
-    // contribution sum's dst set IS the node set — the left join it
-    // replaced only ever re-attached rows that contrib already carried
-    // (its coalesce-to-0 branch was unreachable). One node-keyed shuffle
-    // per round instead of two — and with the ranks now referenced ONCE
-    // per round the composed plan grows linearly, so the per-round pins
-    // (which existed for the old two-reference doubling shape) are gone
-    // too: one action executes the whole chain.
-    //
-    // BROADCAST-ranks rounds under a node bound (round-15, guide §3.1 —
-    // see GraphQueries.pagerankIterate for the measured evidence): the
-    // per-edge divisor pairs up in a NODE-sized join (ranks ⋈ degrees),
-    // and the big per-round probe is a broadcast hash join over the
-    // pinned mirror — zero exchange and zero sort on the edge side; the
-    // pre-r15 SMJ shape re-ran the edge-side Exchange(src) every round.
-    // The count over the pinned node-sized deg blocks is the cheap price
-    // of a DATA-derived bound (never core-count-derived); graphs past the
-    // bound keep the SMJ shape, which is scale-correct there. The RDD
-    // count is one job over the stored blocks; `Dataset.count` would add
-    // a shuffle stage and a job.
-    if (deg.rdd.count() <= BroadcastRankNodeBound) {
-      (1 to iters).foldLeft(init) { (r, _) =>
-        // deg is under the bound in this branch — broadcast the divisor
-        // join too (identical pinned-leaf BroadcastExchange, reused
-        // across rounds; un-hinted it planned as SMJ with two exchanges
-        // per round).
+    val bidir = graft.GraftCaches.pin(mirrored(edges), eager = false)
+    // A map-side-combined count: reducers see at most one row per node
+    // and map task, so a hub node cannot serialize one task.
+    val degrees = bidir.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    def rank(cs: Column): Column =
+      (lit(teleport) + lit(damping) * (cs.cast("double") / lit(1e9))).as("rank")
+    def contribution(r: Column, outdeg: Column): Column =
+      round(r / outdeg * lit(1e9)).cast(DecimalType(38, 0)).as("c")
+    def init(deg: DataFrame): DataFrame =
+      deg.select(col("src").as("doc_id")).withColumn("rank", lit(1.0))
+    // Ranks are referenced once per round, so the composed plan grows
+    // linearly and needs no per-round pin. Under the node bound both
+    // joins broadcast their node-sized side: no exchange or sort on the
+    // edge side.
+    def broadcastRounds(deg: DataFrame): DataFrame =
+      (1 to iters).foldLeft(init(deg)) { (r, _) =>
         val rc = r.join(broadcast(deg), col("doc_id") === col("src"))
-          .select(col("src"),
-            round(col("rank") / col("outdeg") * lit(1e9)).cast(DecimalType(38, 0)).as("c"))
+          .select(col("src"), contribution(col("rank"), col("outdeg")))
         bidir.join(broadcast(rc), "src")
           .select(col("dst"), col("c"))
           .groupBy("dst").agg(sum("c").as("cs"))
-          .select(col("dst").as("doc_id"),
-            (lit(teleport) + lit(damping) * (col("cs").cast("double") / lit(1e9)))
-              .as("rank"))
+          .select(col("dst").as("doc_id"), rank(col("cs")))
       }
-    } else {
-      val withDeg = graft.GraftCaches.pin(bidir.join(deg, "src"), eager = false)
-      (1 to iters).foldLeft(init) { (r, _) =>
-        withDeg
-          .join(r, col("src") === col("doc_id"))
-          .select(col("dst"),
-            round(col("rank") / col("outdeg") * lit(1e9)).cast(DecimalType(38, 0)).as("c"))
-          .groupBy("dst").agg(sum("c").as("cs"))
-          .select(col("dst").as("doc_id"),
-            (lit(teleport) + lit(damping) * (col("cs").cast("double") / lit(1e9)))
-              .as("rank"))
+    // `collect` materializes the mirror before any round on either
+    // branch: the degree pass and the rounds are sibling stages of one
+    // action, which would otherwise race on the block-store locks of a
+    // lazily stored pin.
+    val onDriver = for {
+      e <- DriverRounds.collect(bidir, localEdgeBound)
+      ranks <- DriverRounds.pageRank(e, iters, damping, teleport)
+    } yield DriverRounds.relation(bidir.sparkSession, broadcastRounds(degrees).schema,
+      e.nodes.indices.map(i => Row(e.nodes(i), ranks(i))))
+    onDriver.getOrElse {
+      val deg = graft.GraftCaches.pin(degrees, eager = true)
+      // One job over the pinned node-sized blocks: a data-derived bound.
+      if (deg.rdd.count() <= BroadcastRankNodeBound) broadcastRounds(deg)
+      else {
+        val withDeg = graft.GraftCaches.pin(bidir.join(deg, "src"), eager = false)
+        (1 to iters).foldLeft(init(deg)) { (r, _) =>
+          withDeg
+            .join(r, col("src") === col("doc_id"))
+            .select(col("dst"), contribution(col("rank"), col("outdeg")))
+            .groupBy("dst").agg(sum("c").as("cs"))
+            .select(col("dst").as("doc_id"), rank(col("cs")))
+        }
       }
     }
   }

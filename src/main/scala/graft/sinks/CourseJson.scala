@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.Course
 
@@ -18,6 +19,38 @@ import graft.model.Course
   * (T12's intended semantics): `start + (week-1)*7 days`.
   */
 object CourseJson {
+  /** The schema a JSON read of a [[serialize]] sink has: serialize's
+    * fields and types as `spark.read.json` infers them from the written
+    * lines — fields in name order at every level, every integral field
+    * `bigint` (JSON has one integral number type), everything nullable.
+    * Read-backs declare it, so they run no schema-inference job; pinned
+    * against both serialize's schema and inference by
+    * SyllabusPipelineSpec. */
+  val readSchema: StructType = {
+    def struct(fields: (String, DataType)*): StructType =
+      StructType(fields.map { case (name, t) => StructField(name, t) })
+    val strings = ArrayType(StringType)
+    struct(
+      "area" -> strings,
+      "assessments" -> ArrayType(struct(
+        "abrev" -> StringType, "initial_date" -> StringType,
+        "last_date" -> StringType, "name" -> StringType,
+        "week" -> LongType, "weight" -> DoubleType)),
+      "credits" -> LongType,
+      "faculty" -> strings,
+      "id" -> StringType,
+      "name" -> StringType,
+      "nrc" -> StringType,
+      "period" -> StringType,
+      "units" -> ArrayType(struct(
+        "achievement" -> StringType, "activities" -> strings,
+        "bibliography" -> strings, "exams" -> strings,
+        "initial_date" -> StringType, "initial_week" -> LongType,
+        "last_date" -> StringType, "last_week" -> LongType,
+        "number" -> LongType, "syllabus" -> strings, "title" -> StringType)),
+      "weeks" -> LongType)
+  }
+
   private val FallbackStart = "2025-08-25"
   private val FallbackEnd = "2025-12-06"
 

@@ -115,10 +115,16 @@ object DocSource {
     * in the reference): the real read path over the serialized JSONL sink —
     * predicate pushdown by column, not filename globbing. `limit(1)`
     * matches the reference's first-match semantics
-    * (etl_infrastructure.py:162-165 loads only the first glob hit). */
+    * (etl_infrastructure.py:162-165 loads only the first glob hit).
+    * The sink is read with the serializer's declared schema
+    * ([[graft.sinks.CourseJson.readSchema]]), so building either read
+    * runs no schema-inference job over the sink. */
   def findById(spark: SparkSession, outDir: String, courseId: String): DataFrame =
-    spark.read.json(outDir).filter(col("id") === courseId).limit(1)
+    readCourses(spark, outDir).filter(col("id") === courseId).limit(1)
 
   def findByPeriod(spark: SparkSession, outDir: String, period: String): DataFrame =
-    spark.read.json(outDir).filter(col("period") === period)
+    readCourses(spark, outDir).filter(col("period") === period)
+
+  private def readCourses(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(graft.sinks.CourseJson.readSchema).json(outDir)
 }

@@ -67,37 +67,39 @@ class DedupComponentsSpec extends AnyFunSuite {
     GraftCaches.releaseAll()
   }
 
-  test("converged variant resolves a chain deeper than the fixed 3 rounds") {
-    import spark.implicits._
-    // path graph 1-2-...-8: diameter 7 > 3, so the fixed-3 operator
-    // MUST mislabel the tail (documented trade-off) while the
-    // iterate-until-stable variant resolves the whole component.
-    val chain = (1L to 8L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("doc_a", "doc_b")
-    val fixed = Dedup.duplicateComponents(chain, iters = 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fixed(8L) !== 1L, "fixed-3 should split a diameter-7 chain")
-    val conv = Dedup.duplicateComponentsConverged(chain).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(conv === (1L to 8L).map(i => (i, 1L, i == 1L)).toSet)
-    GraftCaches.releaseAll()
-  }
-
-  test("converged variant fails LOUDLY when the cap is hit, never returns partial labels") {
-    import spark.implicits._
-    val chain = (1L to 8L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("doc_a", "doc_b")
-    // maxIters=2 cannot resolve a diameter-7 chain; since round 14 the
-    // operator throws instead of silently returning the same split
-    // labels the fixed-2 operator documents as a trade-off (a caller
-    // who asked to "iterate until stable" must never get unstable
-    // labels back). The bounded-by-contract variant stays available as
-    // duplicateComponents(iters = n).
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.duplicateComponentsConverged(chain, maxIters = 2).collect()
+  GraphBranchSpec.componentBranches.foreach { case (branch, converged) =>
+    test(s"converged variant resolves a chain deeper than the fixed 3 rounds$branch") {
+      import spark.implicits._
+      // path graph 1-2-...-8: diameter 7 > 3, so the fixed-3 operator
+      // MUST mislabel the tail (documented trade-off) while the
+      // iterate-until-stable variant resolves the whole component.
+      val chain = (1L to 8L).sliding(2).map(s => (s(0), s(1))).toSeq
+        .toDF("doc_a", "doc_b")
+      val fixed = Dedup.duplicateComponents(chain, iters = 3).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(fixed(8L) !== 1L, "fixed-3 should split a diameter-7 chain")
+      val conv = converged(chain, 20).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      assert(conv === (1L to 8L).map(i => (i, 1L, i == 1L)).toSet)
+      GraftCaches.releaseAll()
     }
-    assert(ex.getMessage.contains("duplicateComponentsConverged"))
-    assert(ex.getMessage.contains("duplicateComponentsStar"))
-    GraftCaches.releaseAll()
+
+    test(s"converged variant fails LOUDLY when the cap is hit, never returns partial labels$branch") {
+      import spark.implicits._
+      val chain = (1L to 8L).sliding(2).map(s => (s(0), s(1))).toSeq
+        .toDF("doc_a", "doc_b")
+      // maxIters=2 cannot resolve a diameter-7 chain: the operator throws
+      // instead of silently returning the same split labels the fixed-2
+      // operator documents as a trade-off (a caller who asked to "iterate
+      // until stable" must never get unstable labels back). The
+      // bounded-by-contract variant stays available as
+      // duplicateComponents(iters = n).
+      val ex = intercept[IllegalArgumentException] {
+        converged(chain, 2).collect()
+      }
+      assert(ex.getMessage.contains("duplicateComponentsConverged"))
+      assert(ex.getMessage.contains("duplicateComponentsStar"))
+      GraftCaches.releaseAll()
+    }
   }
 }

@@ -124,9 +124,10 @@ class ShuffleBudgetSpec extends AnyFunSuite {
                                // (executed once — same overstatement as semdedup)
     "semdedup_recall_t9" -> 44,// identical plan to semdedup_recall at τ=0.9
     "semdedup_clusters" -> 1,  // the probe-2 candidate build, verify, and component
-                               // fixpoint all run at CONSTRUCTION (pinned rounds —
-                               // the rfm_segments shape); the final plan reads the
-                               // converged label relation + one result sort
+                               // fixpoint all run at CONSTRUCTION (driver rounds
+                               // under Dedup.LocalEdgeBound, pinned Spark rounds
+                               // above it); the final plan reads the converged
+                               // label relation + one result sort
     "basket_size_profile" -> 4,// (ok,pk) distinct + basket-size agg + size-bucket agg
                                // + result sort
     "basket_pairs" -> 7,       // round-15: the (ok,pk) distinct is an eager pin
@@ -359,8 +360,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
                                // hll_source_overlap static-overstatement
                                // class); executed once caches materialize:
                                // per dim a broadcast-scored agg + recall fold
-  // media_neardup_clusters is NOT pinned: iterated fixpoint (same
-  // exemption as dedup_components* / graph_pagerank).
+  // media_neardup_clusters is NOT pinned: it runs the converged fixpoint
+  // (same exemption as dedup_components_converged, below).
   // graph_edge_support is NOT pinned: its two NESTED tracked caches
   // (candidate pairs inside the neighbor union, each referenced 2-3x)
   // make the static plan string inline the band self-join subtree ~6x
@@ -375,14 +376,21 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   // each executed round is one src join + one dst fold).
   // Iterated operators (graph_pagerank, dedup_components*,
   // dedup_cluster_stats, graph_communities, bpe_train, unigram_train /
-  // unigram_apply / tokenizer_compare) are NOT pinned: their pre-execution
-  // plan string inlines every tracked-cache subtree per round (and
-  // bpe_train / the unigram family are driver loops of per-round jobs,
-  // not one plan — constructing the final frame EXECUTES the EM rounds),
-  // so the static exchange count overstates what executes (cached rounds
-  // materialize once) — the per-round budget is documented on the
-  // operators instead (Unigram: vocab agg + seed agg once, then per EM
-  // round one explode agg over the VOCABULARY, never the corpus).
+  // unigram_apply / tokenizer_compare) are NOT pinned. graph_pagerank and
+  // dedup_components_converged (with media_neardup_clusters and
+  // semdedup_clusters) run their rounds at CONSTRUCTION: on the driver
+  // when the mirrored edge set is within Dedup.LocalEdgeBound (every
+  // fixture graph; the final plan is then a local relation plus the
+  // result sort), as pinned Spark rounds above it; their budget is the
+  // per-query job ceiling in GraphJobBudgetSpec. For the others the
+  // pre-execution plan string inlines every tracked-cache subtree per
+  // round (and bpe_train / the unigram family are driver loops of
+  // per-round jobs, not one plan — constructing the final frame EXECUTES
+  // the EM rounds), so the static exchange count overstates what
+  // executes (cached rounds materialize once) — the per-round budget is
+  // documented on the operators instead (Unigram: vocab agg + seed agg
+  // once, then per EM round one explode agg over the VOCABULARY, never
+  // the corpus).
 
   test("shuffle count stays within the designed budget") {
     budgets.toSeq.sortBy(_._1).foreach { case (name, budget) =>

@@ -177,6 +177,43 @@ class SyllabusPipelineSpec extends AnyFunSuite {
     assert(body.startsWith("[") && body.endsWith("]"))
   }
 
+  test("JSONL read-backs declare serialize's schema: the one inference finds, built with no job") {
+    import org.apache.spark.sql.types._
+    // Field order and nullability aside; `widen` maps integral types to
+    // bigint, the type a JSON read gives every integral number.
+    def norm(t: DataType, widen: Boolean): DataType = t match {
+      case st: StructType =>
+        StructType(st.fields.sortBy(_.name).map(f => StructField(f.name, norm(f.dataType, widen))))
+      case at: ArrayType => ArrayType(norm(at.elementType, widen))
+      case ByteType | ShortType | IntegerType if widen => LongType
+      case other => other
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val ser = CourseJson.serialize(Syllabus.courses(parseAll()), Periods.default(spark))
+    JsonSinks.writeJsonl(ser, s"$dir/courses")
+    val declared = CourseJson.readSchema
+    assert(norm(declared, widen = true) === norm(ser.schema, widen = true))
+    assert(norm(declared, widen = false) ===
+      norm(spark.read.json(s"$dir/courses").schema, widen = false))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val (byId, byPeriod) =
+      try {
+        val built = (DocSource.findById(spark, s"$dir/courses", "1AEL0244"),
+          DocSource.findByPeriod(spark, s"$dir/courses", "2025-2"))
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        built
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() === 0, "building a read-back ran a job")
+    assert(byId.schema === declared && byPeriod.schema === declared)
+  }
+
   test("per-course sink sanitizes path separators in data-derived names") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sanitize").toString
     val hostile = spark.createDataFrame(Seq(
