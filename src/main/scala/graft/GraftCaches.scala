@@ -85,10 +85,9 @@ object GraftCaches {
     * fixpoint signature) or whose rounds are only ever consumed by the
     * final action, this folds what used to be a dedicated ~450 ms
     * checkpoint job per round into a job the operator was running
-    * anyway (round-14 optimization; MicroBench pins the per-job fixed
-    * costs). Lineage truncation and loud-failure-on-lost-block semantics
-    * are unchanged — the blocks are simply stored by whichever job
-    * computes the partitions first.
+    * anyway. Lineage truncation and loud-failure-on-lost-block
+    * semantics are unchanged — the blocks are simply stored by whichever
+    * job computes the partitions first.
     *
     * `eager = false` is SAFE even for frozen-`_pid` callers like
     * PrefixScan: the RDD (and with it every partition index that

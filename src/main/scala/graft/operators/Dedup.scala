@@ -22,26 +22,6 @@ import graft.functions.PolyHash
 object Dedup {
   import TextOps._
 
-  /** Largest node count for which an iterated graph operator's per-round
-    * rank/label state is joined to the edge relation by BROADCAST (guide
-    * §3.1): a (node, contrib) row is two longs (~16 B of data, ~50 B in
-    * the built hash relation), so 2^21 nodes ≈ 100 MB of executor-side
-    * build — comfortably inside broadcast limits while removing the
-    * per-round edge-side exchange and sort entirely. Data-derived (node
-    * count), never core-count-derived: a 100 TB graph blows past it and
-    * takes the SMJ shape. Shared by [[pageRank]] and
-    * [[graft.queries.GraphQueries.pagerankIterate]]. */
-  val BroadcastRankNodeBound: Long = 1L << 21
-
-  /** Largest mirrored edge relation whose [[pageRank]] and
-    * [[duplicateComponentsConverged]] rounds run on the driver. A
-    * mirrored row is two longs, so 2^16 rows are 1 MB of primitive
-    * arrays in driver memory, and a driver round over them takes
-    * milliseconds, where a Spark round pays a per-job floor of tens of
-    * milliseconds or more. Counted in mirrored rows (two per edge row),
-    * never derived from the core count. */
-  val LocalEdgeBound: Long = 1L << 16
-
   /** Exact dedup: group identical payloads, keep the smallest id.
     * For 100 TB inputs group on a hash of the payload first (same plan
     * shape, fixed-width shuffle key) — see fingerprint op. */
@@ -212,55 +192,22 @@ object Dedup {
     * node's label and its neighbors' labels. A FIXED iteration count
     * keeps the operator deterministic and oracle-unrollable; near-dup
     * clusters are bucket-local and near-clique, so the graph diameter is
-    * tiny and a few iterations converge in practice (at web scale this
-    * is the standard iterated-join CC shape — alternating large/small
-    * star — with each round one shuffle on node id; past a handful of
-    * rounds, materialize labels per round (checkpoint/table) so the
-    * lazily-composed plan doesn't double per iteration).
+    * tiny and a few iterations converge in practice.
     * Returns (doc_id, comp_id, is_keeper): comp_id = min doc id reachable
-    * within `iters` hops, keeper = the cluster minimum itself. */
-  /** Mirrored (src, dst) edge relation in ONE pass (round-14, guide
-    * §2.3/§2.4): explode emits both orientations per edge row, where the
-    * previous `union(a→b, b→a)` scanned the edge relation twice and
-    * DOUBLED the downstream partition count (every per-round stage paid
-    * 2× the tasks). Same rows, same multiset semantics, half the scan
-    * work and partitions. */
-  private[graft] def mirrored(edges: DataFrame): DataFrame =
-    edges.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-
+    * within `iters` hops, keeper = the cluster minimum itself.
+    *
+    * Each round's labels are pinned lazily: the caller's one action
+    * computes the whole chain and stores each round's blocks as it
+    * passes, so the plan stays linear in `iters` with no job per round. */
   def duplicateComponents(edges: DataFrame, iters: Int = 3): DataFrame = {
-    // LAZY pins throughout (round-14): no action runs between rounds, so
-    // eager checkpoints were ~450 ms dedicated jobs each whose only
-    // purpose was materialization — the caller's single consuming action
-    // now computes the whole chain, storing each round's blocks as it
-    // passes (lineage truncation and loud-lost-block semantics
-    // unchanged; see [[graft.GraftCaches.pin]]).
-    val bidir = graft.GraftCaches.pin(mirrored(edges), eager = false)
-    val init = bidir.select(col("src").as("doc_id")).distinct()
-      .withColumn("comp_id", col("doc_id"))
-    // Each round references the previous labels TWICE (neighbor-min join
-    // + own-label carry): without materialization the lineage doubles per
-    // round. PINNED (localCheckpoint), not cached: an evicted cache block
-    // recomputes its whole per-round-doubling lineage — the round-4 bench
-    // composition penalty — while a checkpointed round is the data
-    // (round-4 VERDICT; see [[graft.GraftCaches.pin]]).
-    // Round = ONE aggregation (round-14, guide §2.3): each node's next
-    // label is min(own, neighbor labels) — the neighbor messages UNION
-    // the carried own-label rows feed a single map-side-combined
-    // groupBy-min, replacing the old join→agg→left-join-back chain
-    // (same fixpoint algebra, one node-keyed shuffle fewer per round).
-    val labeled = (1 to iters).foldLeft(init) { (lab, _) =>
-      val l = graft.GraftCaches.pin(lab, eager = false)
-      bidir.join(l, col("src") === col("doc_id"))
-        .select(col("dst").as("doc_id"), col("comp_id"))
-        .union(l)
-        .groupBy("doc_id").agg(min("comp_id").as("comp_id"))
-    }
-    labeled.withColumn("is_keeper", col("doc_id") === col("comp_id"))
+    val bidir = graft.GraftCaches.pin(GraphRounds.mirrored(edges), eager = false)
+    keepers((1 to iters).foldLeft(GraphRounds.nodeLabels(bidir, "comp_id")) { (lab, _) =>
+      GraphRounds.hop(bidir, graft.GraftCaches.pin(lab, eager = false))
+    })
   }
+
+  private def keepers(lab: DataFrame): DataFrame =
+    lab.withColumn("is_keeper", col("doc_id") === col("comp_id"))
 
   /** Iterate-until-stable companion to [[duplicateComponents]]: runs
     * min-label rounds until a probe round changes ZERO labels, with
@@ -277,71 +224,50 @@ object Dedup {
     * [[duplicateComponentsStar]] resolves deep chains in O(log d) rounds.
     *
     * Branch rule: the mirrored edge relation is pinned and materialized
-    * in one job that counts it. When it holds at most [[LocalEdgeBound]]
-    * rows of non-NULL bigint ids, one more job reads them and the rounds
-    * run on the driver ([[DriverRounds.components]]), returning a local
+    * in one job that counts it. When it is small enough
+    * ([[GraphRounds.collect]]), one more job reads it and the rounds run
+    * on the driver ([[GraphRounds.components]]), returning a local
     * relation; otherwise every probe round is a Spark job over pinned
     * label blocks. Both branches share the hop algebra, the two hops per
     * probe, the stop rule, the `maxIters` cap, the exhaustion message and
     * the output schema — the distributed plan's analyzed schema,
     * nullability included — so they return the same rows. */
   def duplicateComponentsConverged(edges: DataFrame, maxIters: Int = 20): DataFrame =
-    duplicateComponentsConverged(edges, maxIters, LocalEdgeBound)
+    duplicateComponentsConverged(edges, maxIters, GraphRounds.Bounds())
 
-  /** [[duplicateComponentsConverged]] with the driver-branch bound as an
+  /** [[duplicateComponentsConverged]] with the branch bounds as an
     * argument, so specs can force the distributed rounds. */
   private[graft] def duplicateComponentsConverged(edges: DataFrame, maxIters: Int,
-      localEdgeBound: Long): DataFrame = {
-    val bidir = graft.GraftCaches.pin(mirrored(edges), eager = false)
-    val init = bidir.select(col("src").as("doc_id")).distinct()
-      .withColumn("comp_id", col("doc_id"))
-    // One hop = ONE aggregation: each node's next label is the min of its
-    // own label (the union's carry rows) and its in-neighbors' labels.
-    def hop(l: DataFrame): DataFrame =
-      bidir.join(l, col("src") === col("doc_id"))
-        .select(col("dst").as("doc_id"), col("comp_id"))
-        .union(l)
-        .groupBy("doc_id").agg(min("comp_id").as("comp_id"))
-    def keepers(lab: DataFrame): DataFrame =
-      lab.withColumn("is_keeper", col("doc_id") === col("comp_id"))
+      bounds: GraphRounds.Bounds): DataFrame = {
+    val bidir = graft.GraftCaches.pin(GraphRounds.mirrored(edges), eager = false)
+    val init = GraphRounds.nodeLabels(bidir, "comp_id")
+    def probe(l: DataFrame): DataFrame = GraphRounds.hop(bidir, GraphRounds.hop(bidir, l))
     def exhausted: String =
       s"duplicateComponentsConverged: labels still changing after $maxIters " +
         s"probe rounds (2 min-label hops each) - the graph has a component " +
         s"of diameter > ${2 * maxIters} and the partial labels would split " +
         "it. Raise maxIters or use duplicateComponentsStar (O(log diameter) " +
         "rounds)."
-    DriverRounds.collect(bidir, localEdgeBound) match {
+    GraphRounds.collect(bidir, bounds.localEdges) match {
       case Some(e) =>
-        val (labels, converged) = DriverRounds.components(e, maxIters)
+        val (labels, converged) = GraphRounds.components(e, maxIters)
         require(converged, exhausted)
-        DriverRounds.relation(bidir.sparkSession, keepers(hop(hop(init))).schema,
+        GraphRounds.relation(bidir.sparkSession, keepers(probe(init)).schema,
           e.nodes.indices.map(i => Row(e.nodes(i), labels(i), e.nodes(i) == labels(i))))
       case None =>
-        // Each probe round references the previous labels twice (join and
-        // carry), so every round's labels are pinned (a checkpointed round
-        // is the data; a cached one may recompute its doubling lineage).
-        // The pins are lazy: the round's convergence probe is the action
-        // that materializes them.
-        var lab = graft.GraftCaches.pin(init, eager = false)
-        // Labels only decrease, so sum(comp_id) is unchanged exactly when
-        // no label changed: one single-row aggregate per probe round.
-        def labelSum(df: DataFrame): Long = {
-          val r = df.agg(sum("comp_id")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0) // null = empty edge set
+        // Each probe round's labels are pinned lazily and summed: labels
+        // only decrease, so sum(comp_id) is unchanged exactly when no
+        // label changed, and sum(hop(hop(l))) == sum(l) forces both hops
+        // unchanged (the inner hop's exchange is reused, not recomputed).
+        // The single-row aggregate is the action that materializes the
+        // pin.
+        def summed(l: DataFrame): (DataFrame, Long) = {
+          val p = graft.GraftCaches.pin(l, eager = false)
+          val r = p.agg(sum("comp_id")).head()
+          (p, if (r.isNullAt(0)) 0L else r.getLong(0)) // null = empty edge set
         }
-        var prevSum = labelSum(lab)
-        var round = 0
-        var converged = false
-        while (!converged && round < maxIters) {
-          // sum(hop(hop(l))) == sum(l) forces both hops unchanged; the
-          // inner hop's exchange is reused, not recomputed.
-          val next = graft.GraftCaches.pin(hop(hop(lab)), eager = false)
-          val nextSum = labelSum(next)
-          converged = nextSum == prevSum
-          prevSum = nextSum
-          lab = next
-          round += 1
-        }
+        val ((lab, _), converged) = GraphRounds.fixpoint(summed(init), maxIters)(
+          s => summed(probe(s._1)))(_._2 == _._2)
         require(converged, exhausted)
         keepers(lab)
     }
@@ -471,15 +397,6 @@ object Dedup {
         (col("n_members") - 1).as("n_dropped"))
   }
 
-  /** Benchmark decontamination: fraction of each corpus document's
-    * distinct 3-gram shingles that appear in a benchmark set — the
-    * eval-contamination check a training pipeline runs before the corpus
-    * ships. The benchmark gram set is small (eval suites are), so it
-    * broadcasts and the corpus is never shuffled: explode grams, semi
-    * match against the broadcast set, partial-aggregate the per-doc
-    * match count. At 100 TB the broadcast side becomes a bloom filter —
-    * same plan shape, one-sided error only. Documents under `benchPred`
-    * form the benchmark and are excluded from the output. */
   /** [[contaminationOverlap]]'s at-scale variant: instead of broadcasting
     * the benchmark gram SET (fine for eval suites, unbounded for a large
     * holdout), build a BLOOM FILTER over the benchmark gram hashes with
@@ -517,6 +434,15 @@ object Dedup {
       .withColumn("contaminated", col("overlap") >= threshold)
   }
 
+  /** Benchmark decontamination: fraction of each corpus document's
+    * distinct 3-gram shingles that appear in a benchmark set — the
+    * eval-contamination check a training pipeline runs before the corpus
+    * ships. The benchmark gram set is small (eval suites are), so it
+    * broadcasts and the corpus is never shuffled: explode grams, semi
+    * match against the broadcast set, partial-aggregate the per-doc
+    * match count. At 100 TB the broadcast side becomes a bloom filter —
+    * same plan shape, one-sided error only. Documents under `benchPred`
+    * form the benchmark and are excluded from the output. */
   def contaminationOverlap(docs: DataFrame, id: String, text: String,
       benchPred: Column, threshold: Double): DataFrame = {
     // Pinned (eager) since round 15 — see [[candidatePairsFromBands]]:
@@ -576,75 +502,41 @@ object Dedup {
     * can't perturb ranks, and the whole trajectory is DuckDB-checkable
     * (the oracle unrolls every round). teleport/damping are passed
     * separately rather than derived (1.0 - 0.85 != the parsed literal
-    * 0.15 in doubles). On a mirrored edge relation every node has
-    * indegree >= 1, so each round's dst set IS the node set.
+    * 0.15 in doubles).
     *
     * Branch rule: the mirrored edge relation is pinned and materialized
-    * in one job that counts it. When it holds at most [[LocalEdgeBound]]
-    * rows of non-NULL bigint ids, one more job reads them and the rounds
-    * run on the driver ([[DriverRounds.pageRank]]), returning a local
-    * relation with the distributed plan's analyzed schema, nullability
-    * included. Otherwise the rounds are one lazily composed Spark plan,
-    * per round one probe of the pinned mirror and one map-side-combined
-    * shuffle keyed on dst; the node-sized rank state is broadcast under
-    * [[BroadcastRankNodeBound]] nodes and sort-merge joined above it.
-    * Both branches evaluate the same contribution, sum and rank
-    * expressions, so they return the same doubles bit for bit. */
+    * in one job that counts it. When it is small enough
+    * ([[GraphRounds.collect]]), one more job reads it and the rounds run
+    * on the driver ([[GraphRounds.pageRank]]), returning a local relation
+    * with the distributed plan's analyzed schema, nullability included.
+    * Otherwise the rounds are [[GraphRounds.powerIteration]]'s one lazily
+    * composed Spark plan. Both branches evaluate the same contribution,
+    * sum and rank expressions, so they return the same doubles bit for
+    * bit. */
   def pageRank(edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85, teleport: Double = 0.15): DataFrame =
-    pageRank(edges, iters, damping, teleport, LocalEdgeBound)
+    pageRank(edges, iters, damping, teleport, GraphRounds.Bounds())
 
-  /** [[pageRank]] with the driver-branch bound as an argument, so specs
-    * can force the distributed rounds. */
+  /** [[pageRank]] with the branch bounds as an argument, so specs can
+    * force the distributed or the sort-merge rounds. */
   private[graft] def pageRank(edges: DataFrame, iters: Int, damping: Double,
-      teleport: Double, localEdgeBound: Long): DataFrame = {
+      teleport: Double, bounds: GraphRounds.Bounds): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val bidir = graft.GraftCaches.pin(mirrored(edges), eager = false)
-    // A map-side-combined count: reducers see at most one row per node
-    // and map task, so a hub node cannot serialize one task.
-    val degrees = bidir.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    def rank(cs: Column): Column =
-      (lit(teleport) + lit(damping) * (cs.cast("double") / lit(1e9))).as("rank")
-    def contribution(r: Column, outdeg: Column): Column =
-      round(r / outdeg * lit(1e9)).cast(DecimalType(38, 0)).as("c")
-    def init(deg: DataFrame): DataFrame =
-      deg.select(col("src").as("doc_id")).withColumn("rank", lit(1.0))
-    // Ranks are referenced once per round, so the composed plan grows
-    // linearly and needs no per-round pin. Under the node bound both
-    // joins broadcast their node-sized side: no exchange or sort on the
-    // edge side.
-    def broadcastRounds(deg: DataFrame): DataFrame =
-      (1 to iters).foldLeft(init(deg)) { (r, _) =>
-        val rc = r.join(broadcast(deg), col("doc_id") === col("src"))
-          .select(col("src"), contribution(col("rank"), col("outdeg")))
-        bidir.join(broadcast(rc), "src")
-          .select(col("dst"), col("c"))
-          .groupBy("dst").agg(sum("c").as("cs"))
-          .select(col("dst").as("doc_id"), rank(col("cs")))
-      }
-    // `collect` materializes the mirror before any round on either
-    // branch: the degree pass and the rounds are sibling stages of one
-    // action, which would otherwise race on the block-store locks of a
-    // lazily stored pin.
+    val bidir = graft.GraftCaches.pin(GraphRounds.mirrored(edges), eager = false)
+    def rounds(deg: DataFrame, nodes: Long): DataFrame =
+      GraphRounds.powerIteration(bidir, deg, nodes, bounds.rankNodes, iters,
+        node = "doc_id", rank = "rank", init = lit(1.0),
+        contribution = round(col("rank") / col("outdeg") * lit(1e9)).cast(DecimalType(38, 0)),
+        update = lit(teleport) + lit(damping) * (sum("contrib").cast("double") / lit(1e9)))
     val onDriver = for {
-      e <- DriverRounds.collect(bidir, localEdgeBound)
-      ranks <- DriverRounds.pageRank(e, iters, damping, teleport)
-    } yield DriverRounds.relation(bidir.sparkSession, broadcastRounds(degrees).schema,
+      e <- GraphRounds.collect(bidir, bounds.localEdges)
+      ranks <- GraphRounds.pageRank(e, iters, damping, teleport)
+    } yield GraphRounds.relation(bidir.sparkSession,
+      rounds(GraphRounds.degrees(bidir), e.nodes.length).schema,
       e.nodes.indices.map(i => Row(e.nodes(i), ranks(i))))
     onDriver.getOrElse {
-      val deg = graft.GraftCaches.pin(degrees, eager = true)
-      // One job over the pinned node-sized blocks: a data-derived bound.
-      if (deg.rdd.count() <= BroadcastRankNodeBound) broadcastRounds(deg)
-      else {
-        val withDeg = graft.GraftCaches.pin(bidir.join(deg, "src"), eager = false)
-        (1 to iters).foldLeft(init(deg)) { (r, _) =>
-          withDeg
-            .join(r, col("src") === col("doc_id"))
-            .select(col("dst"), contribution(col("rank"), col("outdeg")))
-            .groupBy("dst").agg(sum("c").as("cs"))
-            .select(col("dst").as("doc_id"), rank(col("cs")))
-        }
-      }
+      val (deg, nodes) = GraphRounds.pinnedDegrees(bidir)
+      rounds(deg, nodes)
     }
   }
 
@@ -663,11 +555,10 @@ object Dedup {
     * a per-node window), one node-keyed left join; per-round labels are
     * PINNED (localCheckpoint) like every iterated operator here. */
   def labelPropagation(edges: DataFrame, iters: Int = 2): DataFrame = {
-    // Lazy pins — see [[pageRank]] (round-14).
-    val bidir = graft.GraftCaches.pin(mirrored(edges), eager = false)
-    val init = bidir.select(col("src").as("doc_id")).distinct()
-      .withColumn("lbl", col("doc_id"))
-    val labeled = (1 to iters).foldLeft(init) { (lab, _) =>
+    // Lazy pins, as in [[duplicateComponents]]: the caller's action
+    // stores each round's labels as it computes them.
+    val bidir = graft.GraftCaches.pin(GraphRounds.mirrored(edges), eager = false)
+    (1 to iters).foldLeft(GraphRounds.nodeLabels(bidir, "lbl")) { (lab, _) =>
       val l = graft.GraftCaches.pin(lab, eager = false)
       // Votes: neighbor labels per dst; winner = max (count, -label).
       val win = bidir.join(l, col("src") === col("doc_id"))
@@ -679,7 +570,6 @@ object Dedup {
       l.join(win, col("doc_id") === col("dst"), "left")
         .select(col("doc_id"), coalesce(col("win_lbl"), col("lbl")).as("lbl"))
     }
-    labeled
   }
 
   /** Segment-level exact dedup with document reassembly — the CCNet-style

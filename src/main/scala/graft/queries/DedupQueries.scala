@@ -279,8 +279,7 @@ object DedupQueries {
     * labeling, not just to three unrolled rounds like dedup_components. */
   def dedupComponentsConverged(spark: SparkSession, dir: String): DataFrame =
     Dedup.duplicateComponentsConverged(
-        Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"))
-      .orderBy("doc_id")
+      Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"))
 
   val dedupComponentsConvergedSql: String =
     s"""WITH RECURSIVE $shingleCte,
@@ -726,9 +725,8 @@ object DedupQueries {
     * final one — is differentially checked bit for bit. */
   def graphPagerank(spark: SparkSession, dir: String): DataFrame =
     Dedup.pageRank(
-        Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"),
-        iters = 3)
-      .orderBy("doc_id")
+      Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"),
+      iters = 3)
 
   private def prStepCte(j: Int): String =
     s"""c$j AS (SELECT e2.dst,

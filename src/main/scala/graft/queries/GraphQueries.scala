@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.GraphRounds
 import graft.sources.Tables
 
 /** Graph analytics over the purchase graph (customer ↔ supplier edges
@@ -29,18 +30,15 @@ import graft.sources.Tables
   * cust·2 / supp·2+1 to keep the two id spaces disjoint. */
 object GraphQueries {
 
-  /** Finest rank scale (1e12 == 1.0) — used whenever the graph is small
-    * enough for it. Overflow bound, stated honestly: a node's update
-    * computes 85 · Σ_in (r DIV d), and Σ_in is bounded by the graph's
-    * total mass N·R0 — so int64 needs N·R0·85 < 2^63. Rounds 9–11 simply
-    * REFUSED graphs past N ≈ 1.08e5 at R0=1e12; round 12 implements the
-    * remedy that guard message named: [[adaptiveR0]] picks the largest
-    * power-of-ten scale that keeps the mass bound int64-safe (same
-    * integer algebra, coarser granularity), so the engine runs up to
-    * N ≈ 1.08e15 nodes ([[MaxNodesAdaptive]]) and only refuses past
-    * THAT — at which point the documented remedy is the DECIMAL(38,0)
-    * contribution-sum lift. */
-  private val R0Max = 1000000000000L // finest rank scale: 1e12 == 1.0
+  /** Finest rank scale (1e12 == 1.0), used whenever the graph is small
+    * enough for it. A node's update computes 85 · Σ_in (r DIV d), and
+    * Σ_in is bounded by the graph's total mass N·R0, so int64 needs
+    * N·R0·85 < 2^63. [[adaptiveR0]] picks the largest power-of-ten scale
+    * that keeps the mass bound int64-safe (same integer algebra, coarser
+    * granularity), so the engine runs up to N ≈ 1.08e15 nodes
+    * ([[MaxNodesAdaptive]]) and refuses only past that, where the remedy
+    * is the DECIMAL(38,0) contribution-sum lift. */
+  private val R0Max = 1000000000000L
   /** Coarsest scale we accept before refusing: at R0=100 a rank unit is
     * 1% of a node's initial mass — coarser than that and five rounds of
     * integer floors would visibly distort the ranking itself. */
@@ -56,11 +54,7 @@ object GraphQueries {
     * the same row counts. Loud failure past [[MaxNodesAdaptive]]. */
   def adaptiveR0(nodes: Long): Long = {
     require(nodes >= 0, s"pagerank: node count/bound must be >= 0, got $nodes")
-    // n == 0 → finest scale (round-12 ADVICE): an empty edge relation
-    // should yield an empty rank relation, not an IllegalArgumentException
-    // — the pre-round-12 flat guard accepted it, and every downstream
-    // join over zero edges is empty at ANY scale. The loud refusal is
-    // reserved for genuinely over-bound graphs.
+    // An empty edge relation yields an empty rank relation at any scale.
     if (nodes == 0) return R0Max
     require(nodes <= MaxNodesAdaptive,
       s"pagerank: $nodes nodes (or bound) exceeds the adaptive int64-safe " +
@@ -73,20 +67,20 @@ object GraphQueries {
     p
   }
 
-  /** Undirected (mirrored) customer↔supplier edge relation + out-degrees. */
+  /** Undirected (mirrored) customer↔supplier edge relation. */
   private def edges(spark: SparkSession, dir: String): DataFrame = {
     val bought = Tables.orders(spark, dir)
       .join(Tables.lineitem(spark, dir),
         col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).as("doc_a"), (col("l_suppkey") * 2 + 1).as("doc_b"))
       .distinct()
-    graft.operators.Dedup.mirrored(bought)
+    GraphRounds.mirrored(bought)
   }
 
   /** Largest node count int64 carries at the FINEST scale (R0=1e12):
     * N ≤ 2^63 / (85·1e12) ≈ 1.08·10^5. Past this, [[adaptiveR0]] steps
-    * the scale down a decade at a time instead of refusing (the round-12
-    * change); kept public so specs can pin the scale-transition point. */
+    * the scale down a decade at a time; public so specs can pin the
+    * scale-transition point. */
   val MaxNodesAtScale: Long = Long.MaxValue / (85L * R0Max)
 
   /** Largest node count the adaptive scale carries before even R0=100
@@ -96,119 +90,45 @@ object GraphQueries {
   val MaxNodesAdaptive: Long = Long.MaxValue / (85L * R0Min)
 
   /** The guarded integer power iteration over a mirrored edge relation
-    * `(src, dst)` — factored out of [[pagerankSuppliers]] so the
-    * overflow guard is testable on a synthetic over-bound graph.
+    * `(src, dst)`: five rounds of `contrib = r DIV outdeg`,
+    * `r' = 0.15·R0 + (85 · Σcontrib) DIV 100`, returned as
+    * (node, r, rank_r0).
     *
-    * LOUD-FAILURE GUARD (round-9 VERDICT 5): the int64 bound above was
-    * previously documented but unenforced — a 10^8-node deployment would
-    * wrap silently and rank garbage. The node count is checked BEFORE
-    * iterating and raises with the documented remedy, mirroring
-    * BitmapStream's id-domain require. `nodeUpperBound` lets the caller
-    * fix the rank scale from a conservative OVER-estimate that an oracle
-    * can derive too (e.g. dimension-table row counts); a too-big bound
-    * can only over-fire. An UNDER-estimate would re-open the wrap the
-    * guard exists to prevent, so a supplied bound is always checked
-    * against the exact node count and an under-estimate fails loudly. */
-  def pagerankIterate(e0: DataFrame, nodeUpperBound: Option[Long] = None): DataFrame = {
-    // Degree annotation via PARTIAL-AGG count (round-15, guide §2.5; r14
-    // VERDICT skew hazard): the round-14 src-partitioned window buffered
-    // each node's entire edge list in one task with no partial
-    // aggregation and no AQE skew split (AQE handles skewed joins, not
-    // window partitions). The groupBy count is map-side combined
-    // (hot-node immune). The mirrored input is pinned EAGERLY first: the
-    // degree pass and the per-round joins are SIBLING stages of the same
-    // action (AQE runs them concurrently), so a lazy pin makes their
-    // tasks race on the block-store locks (measured: 5-task stages with
-    // ~1.6 s run / ~5 ms CPU — pure lock wait) and a raw self-reference
-    // re-executes the whole orders⋈lineitem edge build twice (measured
-    // 2× input bytes). One dedicated materialization job, then every
-    // consumer reads stored blocks.
+    * The node count is checked BEFORE iterating, so a graph past the
+    * int64 bound fails loudly instead of wrapping. `nodeUpperBound`
+    * lets the caller fix the rank scale from a conservative OVER-estimate
+    * that an oracle can derive too (e.g. dimension-table row counts); a
+    * too-big bound can only over-fire. An UNDER-estimate would re-open
+    * the wrap the guard exists to prevent, so a supplied bound is always
+    * checked against the exact node count and an under-estimate fails
+    * loudly. The scale rides along as `rank_r0` (rank 1.0 == rank_r0
+    * units), so the oracle, which derives the same scale in SQL,
+    * hash-checks the derivation as well as the ranks. */
+  def pagerankIterate(e0: DataFrame, nodeUpperBound: Option[Long] = None): DataFrame =
+    pagerankIterate(e0, nodeUpperBound, GraphRounds.Bounds())
+
+  /** [[pagerankIterate]] with the round bounds as an argument, so specs
+    * can force the sort-merge rounds. */
+  private[graft] def pagerankIterate(e0: DataFrame, nodeUpperBound: Option[Long],
+      bounds: GraphRounds.Bounds): DataFrame = {
+    // The degree pass and the rounds are sibling stages of one action:
+    // the eager pin stores the mirror once before either reads it, where
+    // a lazy pin makes their tasks race on the block-store locks and a
+    // raw reference re-runs the edge build.
     val e1 = graft.GraftCaches.pin(e0, eager = true)
-    // The degree relation is NODE-sized (one row per distinct src) and
-    // eagerly pinned: it anchors the rank init, the exact node count,
-    // and one tiny per-round join.
-    val deg = graft.GraftCaches.pin(
-      e1.groupBy("src").agg(count(lit(1)).as("d")), eager = true)
-    // deg has exactly one row per distinct src — counting its pinned
-    // blocks IS the exact node count. The RDD count is one job over the
-    // stored blocks; `Dataset.count` would add a shuffle stage and a job.
-    val exact = deg.rdd.count()
+    val (deg, exact) = GraphRounds.pinnedDegrees(e1)
     val nNodes = nodeUpperBound.getOrElse(exact)
     require(nNodes >= exact,
       s"pagerank: nodeUpperBound=$nNodes UNDER-estimates the exact node " +
         s"count $exact — the bound must be conservative or the int64 guard " +
         "is void")
-    // Adaptive rank scale (round-12, replacing the round-9..11 refusal):
-    // largest power-of-ten R0 keeping 85·N·R0 < 2^63. Refuses (loudly,
-    // with the DECIMAL remedy) only past MaxNodesAdaptive ≈ 1.08e15.
     val r0 = adaptiveR0(nNodes)
     val base = r0 / 100L * 15L // 0.15·R0, exact for any power of ten ≥ 100
-    // Mirrored edges ⇒ every node has outdeg ≥ 1 and indeg ≥ 1, so the
-    // node set is stable across rounds and no dangling handling is
-    // needed (the honest caveat: a directed deployment adds the
-    // dangling-mass redistribution term). deg has one row per src, so
-    // it IS the node relation — no distinct pass needed.
-    var r = deg.select(col("src").as("node")).withColumn("r", lit(r0))
-    // NO per-round pins (round-14): since the rank-carry join was
-    // dropped, each round references the previous ranks exactly ONCE, so
-    // the composed plan grows LINEARLY with rounds (the round-4
-    // per-round-doubling penalty that motivated pinning applied to the
-    // old two-reference shape). One consuming action executes the whole
-    // 5-round chain as a single query — each round's exchange runs once,
-    // with no checkpoint jobs or block writes between rounds.
-    if (nNodes <= graft.operators.Dedup.BroadcastRankNodeBound) {
-      // BROADCAST-ranks rounds (round-15, guide §3.1 "broadcast the side
-      // that fits"): the per-round join pairs the STATIC edge relation
-      // with the node-sized rank state. The pre-r15 shape annotated the
-      // full edge relation with degrees up front and sort-merge-joined
-      // it against the ranks every round — the profile showed the
-      // edge-side Exchange hashpartitioning(src) re-executing in EVERY
-      // round (AQE does not reuse the exchange across the five
-      // structurally distinct round joins) plus a full rescan of the
-      // annotated cache per round (~60 MB × 5 at sf0.1, 334 MB of input
-      // total). Here the per-edge divisor pairs up in a NODE-sized join
-      // first (ranks ⋈ degrees — both ≤ nNodes rows), and the big probe
-      // is a broadcast hash join over the pinned mirror: ZERO exchange
-      // and zero sort on the edge side, per round just one map-side-
-      // combined groupBy(dst) shuffle of (node, contrib) pairs. Same
-      // integer algebra, same rows — `contrib = r DIV d` per edge,
-      // identical BIGINTs. Guarded by nNodes (data-derived, not
-      // core-count-derived): past [[graft.operators.Dedup.BroadcastRankNodeBound]] the rank
-      // state no longer fits a broadcast build and the SMJ shape below
-      // is the scale-correct one.
-      (1 to 5).foreach { _ =>
-        // deg is ≤ BroadcastRankNodeBound rows in this branch, so the
-        // node-sized divisor join is a broadcast too (the pinned-leaf
-        // BroadcastExchange is identical every round and reused) —
-        // statically the un-hinted join planned as SMJ with two
-        // exchanges per round.
-        val rc = r.join(broadcast(deg), col("node") === col("src"))
-          .select(col("src"), expr("r DIV d").as("contrib"))
-        r = e1.join(broadcast(rc), "src")
-          .select(col("dst"), col("contrib"))
-          .groupBy("dst")
-          .agg((lit(base) + expr("85 * sum(contrib) DIV 100")).as("r"))
-          .select(col("dst").as("node"), col("r"))
-      }
-    } else {
-      // Shuffle shape for graphs whose rank state exceeds the broadcast
-      // bound: annotate degrees once (map-side-combined count + AQE-skew-
-      // split-eligible join), then per round one src-keyed SMJ + one
-      // dst-keyed combined aggregation.
-      val ed = graft.GraftCaches.track(e1.join(deg, "src"))
-      (1 to 5).foreach { _ =>
-        r = ed.join(r, col("node") === col("src"))
-          .select(col("dst"), expr("r DIV d").as("contrib"))
-          .groupBy("dst")
-          .agg((lit(base) + expr("85 * sum(contrib) DIV 100")).as("r"))
-          .select(col("dst").as("node"), col("r"))
-      }
-    }
-    // The scale the ranks are expressed in rides along so the output is
-    // self-describing (rank 1.0 == rank_r0 units) — and so the oracle,
-    // which derives the identical scale in SQL, hash-checks the
-    // derivation itself, not just the ranks.
-    r.withColumn("rank_r0", lit(r0))
+    GraphRounds.powerIteration(e1, deg, nNodes, bounds.rankNodes, 5,
+        node = "node", rank = "r", init = lit(r0),
+        contribution = expr("r DIV outdeg"),
+        update = lit(base) + expr("85 * sum(contrib) DIV 100"))
+      .withColumn("rank_r0", lit(r0))
   }
 
   /** Five integer power-iteration rounds; top-20 suppliers by rank.
@@ -218,8 +138,7 @@ object GraphQueries {
     * `COUNT(customer) + COUNT(supplier)`, so both engines land on the
     * same scale without any value passing between them. At the driver
     * SFs (≤ 16k nodes) the scale stays the finest 1e12; at generated
-    * sf1 (~160k nodes) both sides step down to 1e11 and the query RUNS —
-    * the round-9..11 guard refused here. */
+    * sf1 (~160k nodes) both sides step down to 1e11. */
   def pagerankSuppliers(spark: SparkSession, dir: String): DataFrame =
     pagerankIterate(edges(spark, dir), Some(
       Tables.customer(spark, dir).count() + Tables.supplier(spark, dir).count()))

@@ -7,17 +7,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, GraphRounds}
+import graft.queries.GraphQueries
 
-/** Branch equivalence for the two graph operators with a driver-side
-  * path: on every input, `Dedup.pageRank` and
-  * `Dedup.duplicateComponentsConverged` must return the same schema
-  * (nullability included) and the same row multiset (doubles compared
-  * bit for bit) whether their rounds run on the driver (edge set within
-  * `Dedup.LocalEdgeBound`) or as Spark jobs (bound forced below the
-  * edge count). */
+/** Branch equivalence for the graph operators: on every input,
+  * `Dedup.pageRank` and `Dedup.duplicateComponentsConverged` must return
+  * the same schema (nullability included) and the same row multiset
+  * (doubles compared bit for bit) whether their rounds run on the driver
+  * (the default `GraphRounds.Bounds`) or as Spark jobs (bound forced
+  * below the edge count); and both PageRanks must do the same whether
+  * their Spark rounds broadcast the rank state or sort-merge join it
+  * (node bound forced below the node count). */
 class GraphBranchSpec extends AnyFunSuite {
-  import GraphBranchSpec.ForceDistributed
+  import GraphBranchSpec.{ForceDistributed, ForceSortMerge}
 
   private lazy val spark = TestSpark.spark
 
@@ -33,10 +35,10 @@ class GraphBranchSpec extends AnyFunSuite {
       case v => String.valueOf(v)
     }.mkString("|")).sorted
 
-  private def assertSame(driver: DataFrame, distributed: DataFrame): Unit = {
-    assert(driver.schema === distributed.schema)
-    assert(driver.schema.map(_.nullable) === distributed.schema.map(_.nullable))
-    assert(rowsOf(driver) === rowsOf(distributed))
+  private def assertSame(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.schema === b.schema)
+    assert(a.schema.map(_.nullable) === b.schema.map(_.nullable))
+    assert(rowsOf(a) === rowsOf(b))
   }
 
   private def pageRankBoth(pairs: Seq[(Long, Long)]): Unit =
@@ -84,8 +86,43 @@ class GraphBranchSpec extends AnyFunSuite {
     }
   }
 
+  /** [[assertSame]] with size-based broadcasts off, so the forced rounds'
+    * unhinted joins plan as sort-merge joins and the other rounds
+    * broadcast only through their hints. */
+  private def assertRoundJoinsAgree(broadcastRounds: => DataFrame,
+      sortMergeRounds: => DataFrame): Unit =
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      try {
+        val (b, m) = (broadcastRounds, sortMergeRounds)
+        assert(!b.queryExecution.sparkPlan.toString.contains("SortMergeJoin"))
+        assert(m.queryExecution.sparkPlan.toString.contains("SortMergeJoin"))
+        assertSame(b, m)
+      } finally GraftCaches.releaseAll()
+    }
+
+  Seq("the empty edge set" -> Seq.empty[(Long, Long)], "a diameter-7 chain" -> chain7,
+      "a seeded random graph" -> randomGraph).foreach { case (name, pairs) =>
+    test(s"pageRank: broadcast and sort-merge rounds agree on $name") {
+      assertRoundJoinsAgree(
+        Dedup.pageRank(edgesOf(pairs), 3, 0.85, 0.15, ForceDistributed),
+        Dedup.pageRank(edgesOf(pairs), 3, 0.85, 0.15, ForceSortMerge))
+    }
+  }
+
+  test("pagerankIterate: broadcast and sort-merge rounds agree on star graphs") {
+    // Mirrored stars, hub 0 and spokes 1..n, as in PagerankGuardSpec; the
+    // bound past MaxNodesAtScale steps the rank scale down to 1e11.
+    def star(n: Long): DataFrame = GraphRounds.mirrored(edgesOf((1L to n).map(0L -> _)))
+    Seq((3L, None), (50L, None), (3L, Some(GraphQueries.MaxNodesAtScale + 10L)))
+      .foreach { case (n, bound) =>
+        assertRoundJoinsAgree(
+          GraphQueries.pagerankIterate(star(n), bound, ForceDistributed),
+          GraphQueries.pagerankIterate(star(n), bound, ForceSortMerge))
+      }
+  }
+
   test("maxIters = 2 fails loudly on a diameter-7 chain on both branches") {
-    Seq(Dedup.LocalEdgeBound, ForceDistributed).foreach { bound =>
+    Seq(GraphRounds.Bounds(), ForceDistributed).foreach { bound =>
       val ex = intercept[IllegalArgumentException] {
         Dedup.duplicateComponentsConverged(edgesOf(chain7), 2, bound).collect()
       }
@@ -140,7 +177,10 @@ class GraphBranchSpec extends AnyFunSuite {
 
 object GraphBranchSpec {
   /** A driver-branch bound below every edge count. */
-  val ForceDistributed: Long = -1L
+  val ForceDistributed: GraphRounds.Bounds = GraphRounds.Bounds(localEdges = -1L)
+
+  /** [[ForceDistributed]] with a broadcast bound below every node count. */
+  val ForceSortMerge: GraphRounds.Bounds = ForceDistributed.copy(rankNodes = -1L)
 
   /** `duplicateComponentsConverged` on each branch, with the suffix a
     * spec appends to a test name it registers once per branch: the

@@ -12,13 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Dedup.duplicateComponentsConverged` run their rounds on the driver
   * after one materializing count and one read of the pinned mirror; a
   * per-round Spark job (19 and 31-33 jobs when every round was one) fails
-  * this spec. The ceilings are the counts measured on 2026-10-19
-  * (`local[4]`, 10 jobs each); they may only go down. */
+  * this spec, and so does a result sort over the local relation (3 jobs
+  * of range sampling and exchange). The ceilings are the counts measured
+  * on 2026-10-19 (`local[4]`, 7 jobs each); they may only go down. */
 class GraphJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.01"
 
-  private val ceilings = Seq("dedup_components_converged" -> 10, "graph_pagerank" -> 10)
+  private val ceilings = Seq("dedup_components_converged" -> 7, "graph_pagerank" -> 7)
 
   private def jobsOf(name: String): Int = {
     val jobs = new AtomicInteger

@@ -125,7 +125,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "semdedup_recall_t9" -> 44,// identical plan to semdedup_recall at τ=0.9
     "semdedup_clusters" -> 1,  // the probe-2 candidate build, verify, and component
                                // fixpoint all run at CONSTRUCTION (driver rounds
-                               // under Dedup.LocalEdgeBound, pinned Spark rounds
+                               // under GraphRounds.LocalEdgeBound, pinned Spark rounds
                                // above it); the final plan reads the converged
                                // label relation + one result sort
     "basket_size_profile" -> 4,// (ok,pk) distinct + basket-size agg + size-bucket agg
@@ -379,12 +379,12 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   // unigram_apply / tokenizer_compare) are NOT pinned. graph_pagerank and
   // dedup_components_converged (with media_neardup_clusters and
   // semdedup_clusters) run their rounds at CONSTRUCTION: on the driver
-  // when the mirrored edge set is within Dedup.LocalEdgeBound (every
-  // fixture graph; the final plan is then a local relation plus the
-  // result sort), as pinned Spark rounds above it; their budget is the
-  // per-query job ceiling in GraphJobBudgetSpec. For the others the
-  // pre-execution plan string inlines every tracked-cache subtree per
-  // round (and bpe_train / the unigram family are driver loops of
+  // when the mirrored edge set is within GraphRounds.LocalEdgeBound (every
+  // fixture graph; the final plan is then a local relation, plus a result
+  // sort where the query keeps one), as pinned Spark rounds above it;
+  // their budget is the per-query job ceiling in GraphJobBudgetSpec. For
+  // the others the pre-execution plan string inlines every tracked-cache
+  // subtree per round (and bpe_train / the unigram family are driver loops of
   // per-round jobs, not one plan — constructing the final frame EXECUTES
   // the EM rounds), so the static exchange count overstates what
   // executes (cached rounds materialize once) — the per-round budget is
