@@ -13,7 +13,9 @@ object Bench {
     // immediately before its timed run (JVM JIT + Janino whole-stage-
     // codegen compilation are one-time costs — measured 4-13s; warming
     // ALL queries first doesn't work because the generated-class cache is
-    // bounded and a 49-query warm pass evicts the early entries again).
+    // bounded at GraftSession.CodegenCacheEntries and a full-surface
+    // warm pass compiles about 5000 classes, so it still evicts the early
+    // entries again).
     // Data caches built during warm-up are dropped so the timed pass
     // re-executes the full dataflow; only code/JIT warmth carries over.
     // Full materialization via a noop-format sink (a bare count() lets
@@ -61,6 +63,14 @@ object Bench {
     // identical; gcMs then describes the retry environment, matching
     // the kept-tighter-trio intent.
     val gcMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    // Generated-code work over a query's three timed runs: Janino
+    // compiles (each one a miss in the generated-class cache) and their
+    // total compile time in ms. 0 compiles means the warm run left every
+    // class the query needs in the cache. Kept like gcMs on a retry.
+    val codegen = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
+    def codegenNow(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
     val cachePins = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     def gcNow(): Long = {
       import scala.jdk.CollectionConverters._
@@ -73,6 +83,7 @@ object Bench {
       val pins0 = GraftCaches.pinsCreated
       val tracks0 = GraftCaches.tracksCreated
       val warmOk = run(name, fn)
+      val (compiles0, compileNs0) = codegenNow()
       val timed =
         if (!warmOk) None
         else Some((1 to 3).map { _ =>
@@ -90,6 +101,8 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }.sorted.toIndexedSeq)
       gcMs(name) = gcNow() - gc0
+      val (compiles1, compileNs1) = codegenNow()
+      codegen(name) = (compiles1 - compiles0, (compileNs1 - compileNs0) / 1000000L)
       cachePins(name) =
         (GraftCaches.pinsCreated - pins0, GraftCaches.tracksCreated - tracks0)
       spark.catalog.clearCache()
@@ -155,11 +168,15 @@ object Bench {
       .mkString("{", ",", "}")
     val gcJson = gcMs.map { case (k, v) => s"${jstr(k)}:$v" }
       .mkString("{", ",", "}")
+    val compilesJson = codegen.map { case (k, (n, _)) => s"${jstr(k)}:$n" }
+      .mkString("{", ",", "}")
+    val compileMsJson = codegen.map { case (k, (_, ms)) => s"${jstr(k)}:$ms" }
+      .mkString("{", ",", "}")
     val cachesJson = cachePins.filter { case (_, (p, t)) => p > 0 || t > 0 }
       .map { case (k, (p, t)) => s"${jstr(k)}:[$p,$t]" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2(1)).sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"retried":$retriedJson,"errors":$errJson,"retry_errors":$retryErrJson,"gc_ms":$gcJson,"caches":$cachesJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"retried":$retriedJson,"errors":$errJson,"retry_errors":$retryErrJson,"gc_ms":$gcJson,"codegen_compiles":$compilesJson,"codegen_ms":$compileMsJson,"caches":$cachesJson,"sf":"$sfDir"}""")
     // The per-query line above can be tail-truncated by the driver's
     // stdout capture (BENCH_r03 lost its leading "total" field exactly
     // this way). This compact trailer is printed LAST so the tail always

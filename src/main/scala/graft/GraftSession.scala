@@ -6,21 +6,55 @@ import org.apache.spark.sql.SparkSession
   * engine depends on, so a user embedding graft in their own app gets
   * the same behavior as the Verify/Bench mains.
   *
-  *  - `spark.sql.legacy.parquet.nanosAsLong` — the events fixtures carry
-  *    TIMESTAMP(NANOS), which the vectorized reader otherwise rejects;
-  *    set once here instead of mutating a live session mid-read.
+  *  - `spark.sql.legacy.parquet.nanosAsLong` — legacy-vintage support:
+  *    an `events` file written with `ts` as TIMESTAMP(NANOS) is otherwise
+  *    rejected by the vectorized reader; with the flag it loads as a raw
+  *    int64 that [[graft.sources.Tables.events]] converts. Current files
+  *    carry TIMESTAMP(MICROS) and do not need it. Set once here instead
+  *    of mutating a live session mid-read.
   *  - `spark.sql.shuffle.partitions` sized to the core count — 200-way
   *    shuffles of local data are pure overhead; on a real cluster pass
   *    `shufflePartitions` ≈ 2-3× total executor cores.
   *  - UTC session time zone — every date/timestamp oracle assumes it.
+  *  - `spark.sql.codegen.cache.maxEntries` at [[CodegenCacheEntries]], so
+  *    a recurring query mix compiles its generated classes once.
+  *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` — a
+  *    persisted relation ([[GraftCaches]] pins and tracks) is planned with
+  *    adaptive execution, so its partition count follows its size instead
+  *    of freezing at `spark.sql.shuffle.partitions`, and every consumer of
+  *    it inherits the coalesced count.
   *  - RocksDB state store provider — required by `transformWithState`
   *    (TypeStats) even in batch mode, and the right default at scale
   *    anyway: state lives off-heap/on-disk with incremental checkpoints
   *    instead of the HDFS-backed provider's full in-memory maps.
   *  - [[graft.plans.GraftExtensions]] registered, so the abs-range join
   *    rewrite (and future Catalyst extensions) are active.
+  *
+  * `spark.sql.adaptive.coalescePartitions.parallelismFirst` stays at its
+  * default (true): with `false`, a stage whose shuffle is only moderate
+  * coalesces into one task and its CPU runs on one core. At cluster
+  * scale the advisory partition size governs either way.
   */
 object GraftSession {
+
+  /** Bound of Spark's JVM-wide LRU cache of Janino-compiled generated
+    * classes (Spark's default is 100). Sized from measurement:
+    *  - working set: the benchmark's 12-query `queries` mix (sf0.01)
+    *    generates about 150–160 distinct classes per pass, so at 100
+    *    entries each class is evicted before its next use and every pass
+    *    recompiles about 140–155 of them (2.0–2.3 s of a 9–10 s pass);
+    *  - cost: a retained entry holds about 25–55 KB of heap (+3.2 MB for
+    *    about 60 more entries on that mix; +22 MB for 900 more over all
+    *    354 queries at sf0.001);
+    *  - worst case: 1000 entries, about 6× that mix, hold at most about
+    *    55 MB of heap when full.
+    * One pass over all 354 queries compiles about 5000 classes, so it
+    * still cycles through the cache; Bench warms each query right before
+    * timing it for that reason.
+    * Spark reads the bound once per JVM, when the first code generation
+    * builds the cache, so it holds when this builder makes the JVM's
+    * first session. */
+  private[graft] val CodegenCacheEntries: Int = 1000
 
   /** Builder preconfigured for a local run; call `.getOrCreate()`, or
     * chain further `.config(...)` overrides first. */
@@ -32,30 +66,9 @@ object GraftSession {
         shufflePartitions.getOrElse(cores).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
-      // AQE for CACHED plans (round-14 optimization, guide §2.2/§2.4):
-      // by default Spark plans the body of a persisted relation WITHOUT
-      // adaptive execution so its output partitioning stays stable for
-      // downstream reuse — which freezes every GraftCaches.track'd
-      // working set (LSH bands, shingle sets, ANN index relations) at
-      // the static spark.sql.shuffle.partitions regardless of its actual
-      // size, and every consumer (and every union of consumers) inherits
-      // those partition counts. With AQE allowed, cached relations
-      // coalesce to size-appropriate partition counts — the same
-      // scale-adaptive partitioning the uncached paths already get.
-      // Measured (Profile, sf0.1): semdedup_clusters 1042 → 102 tasks,
-      // executor time 141 s → 6.7 s; media_neardup_clusters 97 s → 2.8 s.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // coalescePartitions.parallelismFirst stays at its DEFAULT (true):
-      // an A/B with the Profile tool showed `false` over-coalesces any
-      // stage whose shuffle is merely moderate (weighted_median 21 MB,
-      // ppjoin 10 MB, pagerank_suppliers 76 MB) into ONE task —
-      // serializing ~1 s of real CPU that the parallelism-first default
-      // spreads across cores (pagerank_suppliers 6.6 s → 4.6 s,
-      // weighted_median 4.8 s → 3.4 s, ppjoin 4.3 s → 2.7 s at sf0.1) —
-      // while on the tiny-shuffle iterated operators both settings
-      // produce identical task counts. At cluster scale the advisory
-      // partition size governs either way once bytes/cores exceeds it.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .withExtensions(new graft.plans.GraftExtensions())

@@ -103,7 +103,9 @@ object GraphQueries {
     * checked against the exact node count and an under-estimate fails
     * loudly. The scale rides along as `rank_r0` (rank 1.0 == rank_r0
     * units), so the oracle, which derives the same scale in SQL,
-    * hash-checks the derivation as well as the ranks. */
+    * hash-checks the derivation as well as the ranks. The bound sets
+    * only the scale: the exact node count picks broadcast or sort-merge
+    * rounds. */
   def pagerankIterate(e0: DataFrame, nodeUpperBound: Option[Long] = None): DataFrame =
     pagerankIterate(e0, nodeUpperBound, GraphRounds.Bounds())
 
@@ -124,7 +126,7 @@ object GraphQueries {
         "is void")
     val r0 = adaptiveR0(nNodes)
     val base = r0 / 100L * 15L // 0.15·R0, exact for any power of ten ≥ 100
-    GraphRounds.powerIteration(e1, deg, nNodes, bounds.rankNodes, 5,
+    GraphRounds.powerIteration(e1, deg, exact, bounds.rankNodes, 5,
         node = "node", rank = "r", init = lit(r0),
         contribution = expr("r DIV outdeg"),
         update = lit(base) + expr("85 * sum(contrib) DIV 100"))

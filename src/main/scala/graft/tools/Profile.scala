@@ -2,7 +2,9 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.{GraftCaches, GraftSession, SparkEntry}
 
@@ -14,7 +16,9 @@ import graft.{GraftCaches, GraftSession, SparkEntry}
   * metrics. The output answers the guide-§1 question the bench total
   * cannot: is a slow query slow because of ONE expensive stage (optimize
   * the operator) or because of MANY sequential tiny jobs (optimize the
-  * pass structure)?
+  * pass structure)? The header line also counts the timed run's Janino
+  * compiles and their time: above 0, the warm run's generated classes
+  * did not all survive in Spark's generated-class cache.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -89,9 +93,14 @@ object Profile {
         shuffleReadB = 0; shuffleWriteB = 0; inputB = 0; executorRunMs = 0; gcMs = 0
         stageRows.clear() }
       spark.sparkContext.addSparkListener(listener)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wallMs = (System.nanoTime() - t0) / 1e6
+      // Janino compiles in the timed run: misses in the generated-class cache.
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000L
       // Let straggler listener events drain.
       Thread.sleep(300)
       spark.sparkContext.removeSparkListener(listener)
@@ -100,7 +109,8 @@ object Profile {
         println(f"\n===== $name%s wall=${wallMs}%.0fms jobs=${done.size}%d (sum ${jobMsSum}ms) " +
           f"stages=$stages%d tasks=$tasks%d shufR=${shuffleReadB / 1024}%dKiB " +
           f"shufW=${shuffleWriteB / 1024}%dKiB input=${inputB / 1024}%dKiB " +
-          f"execMs=$executorRunMs%d gcMs=$gcMs%d =====")
+          f"execMs=$executorRunMs%d gcMs=$gcMs%d " +
+          f"codegenCompiles=$compiles%d codegenMs=$compileMs%d =====")
         done.sortBy(-_._3).take(10).foreach { case (id, desc, ms) =>
           println(f"  job $id%3d ${ms}%6dms  ${desc.take(110)}%s")
         }

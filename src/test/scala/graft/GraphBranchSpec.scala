@@ -121,6 +121,19 @@ class GraphBranchSpec extends AnyFunSuite {
       }
   }
 
+  test("pagerankIterate: a node bound past the broadcast bound still broadcasts a small graph") {
+    // The caller's bound sets the rank scale only; the exact count (4
+    // nodes) picks the rounds, so no round join is sort-merge planned.
+    val star = GraphRounds.mirrored(edgesOf((1L to 3L).map(0L -> _)))
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      try {
+        val pr = GraphQueries.pagerankIterate(star, Some((1L << 21) + 1L))
+        assert(!pr.queryExecution.sparkPlan.toString.contains("SortMergeJoin"))
+        assert(pr.collect().length === 4)
+      } finally GraftCaches.releaseAll()
+    }
+  }
+
   test("maxIters = 2 fails loudly on a diameter-7 chain on both branches") {
     Seq(GraphRounds.Bounds(), ForceDistributed).foreach { bound =>
       val ex = intercept[IllegalArgumentException] {
