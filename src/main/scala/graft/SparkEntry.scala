@@ -3,10 +3,18 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{CurationQueries, DedupQueries, GraphQueries, MediaStreamQueries, Parsing, Relational, SimilarityQueries, TextQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
   * Each capability area contributes a (queries, oracles) pair from
   * `graft.queries.*`; this object is only the aggregation point.
+  *
+  * Query results are unordered: a returned DataFrame is a set of rows,
+  * and a consumer that needs an order sorts. A query sorts only where
+  * the order changes the result: a top-k (`orderBy(...).limit(k)`), a
+  * window ordering, or a step that reads rows in order. Each result-side
+  * global sort would add a range-sampling job and a range exchange.
+  * `PlanGuardSpec` fails on an optimized plan whose root is a global
+  * `Sort`.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

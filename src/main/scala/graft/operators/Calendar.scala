@@ -29,5 +29,4 @@ object Calendar {
           transform(array_sort(collect_list(struct(col("k"), col("line")))),
             x => x.getField("line")),
           "\n").as("content"))
-      .orderBy("week")
 }

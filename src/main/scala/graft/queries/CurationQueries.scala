@@ -50,7 +50,6 @@ object CurationQueries {
           .otherwise("test"))
       .groupBy("lang", "split")
       .agg(count(lit(1)).as("n_docs"), sum("t").as("n_tokens"))
-      .orderBy("lang", "split")
 
   val stratifiedSplitSql: String =
     s"""WITH d AS (
@@ -86,7 +85,6 @@ object CurationQueries {
         sum("t").as("total_tokens"))
       .withColumn("kept_share",
         col("tokens_kept").cast("double") / col("total_tokens").cast("double"))
-      .orderBy("source")
   }
 
   val tokenBudgetTrimSql: String =
@@ -131,7 +129,6 @@ object CurationQueries {
           .as("upsample_vs_max"),
         (col("n_tokens").cast("double") / col("all_tokens").cast("double"))
           .as("token_share"))
-      .orderBy("source")
   }
 
   val domainMixtureWeightsSql: String =
@@ -176,7 +173,6 @@ object CurationQueries {
         out.iterator
       }
       .toDF("shard", "bin_id", "n_docs", "bin_tokens")
-      .orderBy("shard", "bin_id")
   }
 
   val packSequencesSql: String =
@@ -227,7 +223,6 @@ object CurationQueries {
         sum(when(col("pass"), 1L).otherwise(0L)).as("n_pass"))
       .withColumn("pass_share",
         col("n_pass").cast("double") / col("n_docs").cast("double"))
-      .orderBy("split")
   }
 
   val qualityBySplitSql: String =
@@ -282,7 +277,6 @@ object CurationQueries {
         col("quota0") + when(col("rk") <= col("shortfall"), 1L).otherwise(0L))
       .select(col("source"), col("n_tokens"), col("quota"),
         (col("quota").cast("double") / lit(budget.toDouble)).as("quota_share"))
-      .orderBy("source")
   }
 
   val mixtureResamplePlanSql: String =

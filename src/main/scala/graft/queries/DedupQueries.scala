@@ -42,14 +42,14 @@ object DedupQueries {
 
   /** Exact dedup (hash-groupBy on the full payload). */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exactGroups(Tables.documents(spark, dir), "doc_id", "text").orderBy("keeper")
+    Dedup.exactGroups(Tables.documents(spark, dir), "doc_id", "text")
 
   val dedupExactSql: String =
     "SELECT min(doc_id) AS keeper, COUNT(*) AS n_copies FROM documents GROUP BY text ORDER BY keeper"
 
   /** MinHash signatures (8 seeded permutations over shingle hashes). */
   def minhashSig(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashSignatures(Tables.documents(spark, dir), "doc_id", "text").orderBy("doc_id")
+    Dedup.minhashSignatures(Tables.documents(spark, dir), "doc_id", "text")
 
   val minhashSigSql: String = {
     val cols = (0 until 8).map(i => s"  ${mhSql(i)} AS mh$i").mkString(",\n")
@@ -81,7 +81,6 @@ object DedupQueries {
       .groupBy("band", "size_bucket")
       .agg(count(lit(1)).as("n_buckets"), sum("s").as("n_docs"),
         sum(when(col("s") > 100, 1L).otherwise(0L)).as("n_capped"))
-      .orderBy("band", "size_bucket")
 
   val lshBucketProfileSql: String =
     s"""WITH $shingleCte,
@@ -127,7 +126,7 @@ object DedupQueries {
 
   /** 32-bit SimHash over the distinct word-hash set. */
   def simhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashes(Tables.documents(spark, dir), "doc_id", "text").orderBy("doc_id")
+    Dedup.simhashes(Tables.documents(spark, dir), "doc_id", "text")
 
   val simhashSql: String =
     s"""WITH w AS (
@@ -217,7 +216,6 @@ object DedupQueries {
     Dedup.duplicateComponents(
         Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"),
         iters = 3)
-      .orderBy("doc_id")
 
   private[queries] def labelStepCte(j: Int): String =
     s"""l$j AS MATERIALIZED (
@@ -249,7 +247,6 @@ object DedupQueries {
     Dedup.labelPropagation(
         Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"),
         iters = 2)
-      .orderBy("doc_id")
 
   private def lpaStepCte(j: Int): String =
     s"""v$j AS (SELECT e2.dst, p.lbl, COUNT(*) AS cnt
@@ -306,7 +303,6 @@ object DedupQueries {
   def dedupComponentsStar(spark: SparkSession, dir: String): DataFrame =
     Dedup.duplicateComponentsStar(
         Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"))
-      .orderBy("doc_id")
 
   /** Same closure as the converged oracle: components are algorithm-
     * independent, so the recursive-reachability rebuild is shared. */
@@ -361,7 +357,6 @@ object DedupQueries {
     e1.join(e2, col("b") === col("b2"))
       .join(e3, col("a") === col("a3") && col("c") === col("c3"))
       .select("a", "b", "c")
-    // No trailing sort: its sampling pass re-runs both triangle joins.
   }
 
   val graphTrianglesSql: String =
@@ -390,7 +385,6 @@ object DedupQueries {
       .unionByName(e.select(col("doc_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
       .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("degree")
   }
 
   val graphDegreeHistSql: String =
@@ -497,7 +491,6 @@ object DedupQueries {
       .select(col("a_source").as("source_a"), col("b_source").as("source_b"),
         col("a_n_docs").as("n_docs_a"), col("b_n_docs").as("n_docs_b"),
         (sigAgree.cast("double") / 8.0).as("est_jaccard"))
-      .orderBy("source_a", "source_b")
   }
 
   /** Per-source (n_docs, 8 MinHash mins) — shared by
@@ -565,7 +558,6 @@ object DedupQueries {
         (sigAgree.cast("double") / 8.0).as("est_jaccard"),
         sampledJ.as("jaccard_sampled"))
       .withColumn("abs_err", abs(col("est_jaccard") - col("jaccard_sampled")))
-      .orderBy("source_a", "source_b")
   }
 
   val sourceMinhashOverlapSql: String = {
@@ -1080,7 +1072,6 @@ object DedupQueries {
       .withColumn("share", col("n_pairs").cast("double") /
         sum("n_pairs").over(org.apache.spark.sql.expressions.Window.partitionBy())
           .cast("double"))
-      .orderBy("status")
   }
 
   val dedupMethodAgreementSql: String =
@@ -1142,7 +1133,6 @@ object DedupQueries {
         (col("cluster_size") * col("n_clusters")).as("n_docs"),
         ((col("cluster_size") * col("n_clusters")).cast("double") /
           col("total_docs").cast("double")).as("doc_share"))
-      .orderBy("cluster_size")
   }
 
   val dedupClusterStatsSql: String =
@@ -1185,7 +1175,6 @@ object DedupQueries {
         col("n_matched_grams"), col("n_grams"),
         (col("n_matched_grams").cast("double") / col("n_grams").cast("double"))
           .as("gram_overlap"))
-      .orderBy("source")
   }
 
   val decontamStatsSql: String =
@@ -1231,7 +1220,6 @@ object DedupQueries {
       .groupBy("src_lo", "src_hi")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("jacc") >= 0.5, 1L).otherwise(0L)).as("n_strong"))
-      .orderBy("src_lo", "src_hi")
   }
 
   val sourceCopyMatrixSql: String =
@@ -1262,7 +1250,6 @@ object DedupQueries {
       .select(col("source"), col("n_docs"), col("n_droppable"),
         (col("n_droppable").cast("double") / col("n_docs").cast("double"))
           .as("dup_share"))
-      .orderBy("source")
   }
 
   val dedupRateBySourceSql: String =
@@ -1304,7 +1291,6 @@ object DedupQueries {
       .select(col("custkey_a"), col("custkey_b"), col("d"),
         levenshtein(col("name_a"), col("name_b")).cast("bigint").as("lev"))
       .withColumn("candidate", col("lev") <= 4)
-      .orderBy("custkey_a", "custkey_b")
   }
 
   val sortedNeighborhoodPairsSql: String =
@@ -1376,7 +1362,6 @@ object DedupQueries {
         (ni.cast("double") /
           (col("a_n") + col("b_n") - ni).cast("double")).as("jaccard"))
       .withColumn("abs_err", abs(col("est_jaccard") - col("jaccard")))
-      .orderBy("source_a", "source_b")
   }
 
   val kmvSourceOverlapSql: String =
@@ -1447,7 +1432,6 @@ object DedupQueries {
       .groupBy("doc_id", "n_grams")
       .agg(sum(when(col("hit").isNotNull, 1L).otherwise(0L)).as("n_hits"))
       .withColumn("contaminated", col("n_hits") > 0)
-      .orderBy("doc_id")
   }
 
   val decontam13gramSql: String =
@@ -1496,7 +1480,6 @@ object DedupQueries {
         min("p_partkey").as("min_partkey"),
         max("p_partkey").as("max_partkey"))
       .withColumn("n_pairs", expr("(n_parts * (n_parts - 1)) div 2"))
-      .orderBy("pkey")
 
   val phoneticBlockSql: String =
     """SELECT upper(substr(p_name, 1, 1))
@@ -1626,7 +1609,6 @@ object DedupQueries {
         (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jacc") >= t)
       .select("doc_a", "doc_b", "n_a", "n_b", "inter", "jacc")
-      .orderBy("doc_a", "doc_b")
   }
 
   val ppjoinPairsSql: String =
@@ -1678,7 +1660,6 @@ object DedupQueries {
           concat_ws(" ", col("name_a"), col("ptype_a")),
           concat_ws(" ", col("name_b"), col("ptype_b"))).as("jw_label"))
       .withColumn("candidate", col("jw_name") >= 0.8)
-      .orderBy("partkey_a", "partkey_b")
   }
 
   val nameMatchJwSql: String =
@@ -1742,7 +1723,6 @@ object DedupQueries {
         total.as("match_weight"),
         when(total >= 5.0, "link").when(total >= 0.0, "possible")
           .otherwise("non_link").as("decision"))
-      .orderBy("partkey_a", "partkey_b")
   }
 
   val recordLinkageFsSql: String =

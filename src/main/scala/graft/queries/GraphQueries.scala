@@ -196,7 +196,6 @@ object GraphQueries {
         expr("CAST(floor(log2(d)) AS INT)").as("deg_bucket"))
       .groupBy("side", "deg_bucket")
       .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("side", "deg_bucket")
 
   val graphDegreeProfileSql: String =
     """WITH bought AS (

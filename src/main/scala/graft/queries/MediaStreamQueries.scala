@@ -21,7 +21,6 @@ object MediaStreamQueries {
     * `window()`), counts + exact decimal value sums. */
   def windowedEventAgg(spark: SparkSession, dir: String): DataFrame =
     StreamingCalendar.weeklyTypeCounts(Tables.events(spark, dir))
-      .orderBy("window_start", "event_type")
 
   val windowedEventAggSql: String =
     """SELECT make_timestamp((epoch_us(ts) // 604800000000) * 604800000000) AS window_start,
@@ -34,7 +33,6 @@ object MediaStreamQueries {
     * its two covering window starts. */
   def slidingEventAgg(spark: SparkSession, dir: String): DataFrame =
     StreamingCalendar.slidingTypeCounts(Tables.events(spark, dir))
-      .orderBy("window_start", "event_type")
 
   val slidingEventAggSql: String =
     """WITH e AS (SELECT (epoch_us(ts) // 604800000000) * 604800000000 AS s0,
@@ -61,7 +59,6 @@ object MediaStreamQueries {
         sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n"), col("total_value"))
-      .orderBy("user_id", "session_start")
 
   val sessionWindowAggSql: String =
     """WITH o AS (SELECT user_id, event_id, ts, epoch_us(ts) AS t, value FROM events),
@@ -101,7 +98,6 @@ object MediaStreamQueries {
     graft.operators.PrefixScan.runningSum(sweep, Nil, "d", "rs", col("t"), col("d"))
       .groupBy(to_date(timestamp_micros(col("t"))).cast("timestamp").as("day"))
       .agg(max("rs").as("peak_concurrent"))
-      .orderBy("day")
   }
 
   val concurrencyProfileSql: String =
@@ -132,7 +128,6 @@ object MediaStreamQueries {
           (pmod(col("doc_id"), lit(3)) + 1).cast("int")).as("modality"),
         length(col("text").cast("binary")).cast("bigint").as("n_bytes"),
         ascii(substring(col("text"), 1, 1)).as("first_byte"))
-      .orderBy("doc_id")
 
   val binaryMetaExtractSql: String =
     """SELECT doc_id,
@@ -149,7 +144,6 @@ object MediaStreamQueries {
     Multimodal.extractFeatures(
       Multimodal.asMedia(Tables.documents(spark, dir), "doc_id", "text"),
       partitions = 8)
-      .orderBy("id")
       .toDF()
 
   /** DuckDB rebuild of Multimodal.decodeStub over the UTF-8 bytes of
@@ -220,7 +214,6 @@ object MediaStreamQueries {
         sum(when(col("n_copies") > 1, col("n_copies") - 1).otherwise(0L))
           .as("n_dup_copies"),
         sum(col("g_bytes") - col("k_bytes")).as("bytes_saved"))
-      .orderBy("modality")
 
   val mediaDedupSql: String =
     """WITH f AS (
@@ -283,10 +276,9 @@ object MediaStreamQueries {
   def mediaNeardupPairs(spark: SparkSession, dir: String): DataFrame =
     neardupPairEdges(spark, dir)
       .select("modality", "doc_a", "doc_b", "hamming", "n_a", "n_b")
-      .orderBy("doc_a", "doc_b")
 
   /** The banded perceptual-pair relation behind [[mediaNeardupPairs]]
-    * and [[mediaNeardupClusters]] (unsorted, full columns).
+    * and [[mediaNeardupClusters]] (full columns).
     *
     * SKEW DISCIPLINE: identical fingerprints collapse to ONE
     * representative row (min doc_id, group size carried) BEFORE the band
@@ -348,7 +340,6 @@ object MediaStreamQueries {
   def mediaNeardupClusters(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.duplicateComponentsConverged(
         neardupPairEdges(spark, dir))
-      .orderBy("doc_id")
 
   /** DuckDB rebuild of the 56-bit dHash from byte arithmetic — shared by
     * the pair and cluster oracles. The `strlen(text) = length(text)`
@@ -487,7 +478,6 @@ object MediaStreamQueries {
           size(split(trim(col("text")), "\\s+")).cast("bigint").as("n_tokens")),
         capacity = 256L)
       .toDF()
-      .orderBy("shard", "bin_id")
 
   /** mapGroupsWithState stateful aggregation, exercised in batch mode.
     * "Last" is arg_max by event_id (deterministic), so the typed state
@@ -605,7 +595,6 @@ object MediaStreamQueries {
           Multimodal.asMedia(Tables.documents(spark, dir), "doc_id", "text"),
           partitions = 8),
         step = 3)
-      .orderBy("id", "frame_no")
 
   val frameSampleSql: String =
     """WITH f AS (
@@ -625,9 +614,6 @@ object MediaStreamQueries {
   def streamTypeStats(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.TypeStats.userTypeStats(Tables.events(spark, dir))
       .toDF()
-    // No trailing sort: its sampling pass re-runs the whole stateful
-    // operator, including one RocksDB store open per partition — the
-    // round-5 bench spread on this query was exactly that double run.
 
   val streamTypeStatsSql: String =
     """WITH c AS (
@@ -707,7 +693,6 @@ object MediaStreamQueries {
     val u1 = ev.groupBy(col("d").as("day")).agg(countDistinct("user_id").as("u1"))
     u7.join(u1, "day")
       .select(col("day").cast("timestamp").as("day"), col("u1"), col("u7"))
-      .orderBy("day")
   }
 
   val rollingDistinctUsersSql: String =
@@ -744,7 +729,6 @@ object MediaStreamQueries {
         col("n_prior") >= 3 &&
           (col("n").cast("double") - col("mean_prior")) *
             (col("n").cast("double") - col("mean_prior")) > lit(4.0) * col("var_prior"))
-      .orderBy("day")
   }
 
   val eventRateAnomalySql: String =
@@ -784,7 +768,6 @@ object MediaStreamQueries {
     totals.join(kept, "event_type")
       .select(col("event_type"), col("n_total"), col("n_kept"),
         (col("n_kept").cast("double") / col("n_total").cast("double")).as("keep_ratio"))
-      .orderBy("event_type")
   }
 
   val streamDeltaCompressSql: String = graft.queries.Relational.deltaCompressSql
@@ -815,7 +798,6 @@ object MediaStreamQueries {
       .agg(count(lit(1)).as("n_items"),
         sum(col("n_bytes")).as("shard_bytes"),
         min(col("id")).as("first_id"), max(col("id")).as("last_id"))
-      .orderBy("modality", "shard_no")
   }
 
   val mediaShardPlanSql: String =
@@ -843,7 +825,6 @@ object MediaStreamQueries {
   def streamHllUsers(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.HllStream.distinctUsers(Tables.events(spark, dir))
       .toDF()
-      .orderBy("event_type")
 
   val streamHllUsersSql: String =
     s"""WITH h AS (SELECT event_type,
@@ -870,7 +851,6 @@ object MediaStreamQueries {
       .select(explode(graft.operators.TextOps.words(col("text"))).as("term"))
     graft.streaming.CmsStream.sketch(tokens, "term")
       .toDF()
-      .orderBy("row_j", "bucket")
   }
 
   val streamCmsTermsSql: String = {
@@ -901,7 +881,6 @@ object MediaStreamQueries {
       .select(graft.functions.PolyHash.hash(col("text")).as("h"))
     graft.streaming.BloomStream.sketch(elems, "h")
       .toDF()
-      .orderBy("reg")
   }
 
   val streamBloomFingerprintsSql: String = {
@@ -1025,7 +1004,6 @@ object MediaStreamQueries {
         """stack(3, '1_view', v_rows, v_users,
           |         '2_click', c_rows, c_users,
           |         '3_purchase', p_rows, p_users) AS (stage, n_rows, n_users)""".stripMargin)
-      .orderBy("cohort", "stage")
   }
 
   val funnelByCohortSql: String =
@@ -1073,11 +1051,10 @@ object MediaStreamQueries {
     * state any FIFO matcher carries — and the emitted lot matches
     * hash-check against the SAME cumulative-range-overlap oracle as the
     * batch `fifo_match`, the fourth online/offline-parity pair. ONE
-    * user-keyed transformWithState exchange + result sort. */
+    * user-keyed transformWithState exchange. */
   def streamFifo(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.FifoStream.matches(Tables.events(spark, dir))
       .toDF()
-      .orderBy("user_id", "in_event", "out_event")
 
   val streamFifoSql: String = Relational.fifoMatchSql
 
@@ -1096,7 +1073,6 @@ object MediaStreamQueries {
         timestamp_micros(col("from_us")).as("valid_from"),
         timestamp_micros(col("to_us")).as("valid_to"),
         col("to_us").isNull.as("is_current"))
-      .orderBy("user_id", "valid_from")
 
   val streamScd2Sql: String = Relational.scd2HistorySql
 
@@ -1128,7 +1104,6 @@ object MediaStreamQueries {
       .filter(!col("deleted"))
       .select(col("o_orderkey"), col("o_orderstatus"),
         (col("cents").cast("double") / 100.0).as("price"))
-      .orderBy("o_orderkey")
   }
 
   val streamCdcApplySql: String =
@@ -1164,7 +1139,6 @@ object MediaStreamQueries {
         """stack(3, '1_view', v_rows, v_users,
           |         '2_click', c_rows, c_users,
           |         '3_purchase', p_rows, p_users) AS (stage, n_rows, n_users)""".stripMargin))
-      .orderBy("stage")
   }
 
   val streamFunnelSql: String = Relational.windowFunnelSql

@@ -25,7 +25,6 @@ object Parsing {
         col("c_custkey"),
         expr(s"try_cast(regexp_extract(c_name, '^Customer#(\\\\d+)$$', 1) as bigint)").as("cust_no"),
         concat(substring(code, 1, 4), lit("-"), substring(code, 5, 1)).as("period_fmt"))
-      .orderBy("c_custkey")
   }
 
   val filenameMetaParseSql: String =
@@ -42,7 +41,6 @@ object Parsing {
       .select(
         col("doc_id"),
         trim(regexp_extract(col("text"), "(?i)\\bspark\\s+([a-z]+)", 1)).as("label_val"))
-      .orderBy("doc_id")
 
   val labelFieldLookupSql: String =
     """SELECT doc_id, trim(regexp_extract(text, '(?i)\bspark\s+([a-z]+)', 1)) AS label_val
@@ -57,7 +55,6 @@ object Parsing {
         col("doc_id"),
         size(words).cast("bigint").as("n_words"),
         array_join(words, "|").as("words_joined"))
-      .orderBy("doc_id")
   }
 
   val bulletSplitFilterSql: String =
@@ -79,7 +76,6 @@ object Parsing {
           trim(regexp_extract(col("o_orderpriority"), "^[^-]*-(.*)$", 1)))
           .otherwise(lit("")).as("code"),
         col("n"))
-      .orderBy("o_orderpriority")
 
   val nameCodeSplitSql: String =
     """SELECT o_orderpriority,
@@ -101,10 +97,6 @@ object Parsing {
         coalesce(expr("try_cast(regexp_extract(props, '\"k\": (\\\\d+)', 1) as int)"), lit(0)).as("k"),
         coalesce(expr("try_cast(regexp_extract(props, '\"zz\": (\\\\d+)', 1) as int)"), lit(-1)).as("missing_k"),
         coalesce(expr("try_cast(rtrim(event_type, '%') as double)"), lit(0.0)).as("wt"))
-      // No result-side orderBy: RangePartitioning's sampling pass would
-      // re-execute the regex projection (the expensive part) a second
-      // time; the driver's compare sorts rows itself. The REGEX is the
-      // deliberate parity artifact here — the sort never was.
 
   val tryCastDefaultsSql: String =
     """SELECT event_id,
@@ -118,10 +110,7 @@ object Parsing {
     * a regex scan per key (try_cast_defaults keeps the regex
     * deliberately, as the reference-parity artifact whose oracle pays
     * the identical regex; round-2 VERDICT item 6) or per-key
-    * `get_json_object` re-parses (round-3 VERDICT item 4). No global
-    * sort: a result-side orderBy adds a RangePartitioning sampling pass
-    * that re-executes the query (round-3 range_join lesson); the
-    * driver's compare sorts rows itself. */
+    * `get_json_object` re-parses (round-3 VERDICT item 4). */
   def propsJsonExtract(spark: SparkSession, dir: String): DataFrame = {
     val parsed = from_json(col("props"), StructType(Seq(
       StructField("k", IntegerType), StructField("zz", IntegerType),
@@ -148,7 +137,6 @@ object Parsing {
       .select(
         col("doc_id"),
         (size(words) > 5 && lower(col("text")).contains("join")).as("is_flagged"))
-      .orderBy("doc_id")
   }
 
   val recoverableFlagSql: String =
@@ -163,7 +151,6 @@ object Parsing {
       .select(
         col("doc_id"),
         ((length(col("text")) - length(expr("replace(text, 'batch', '')"))) / 5).cast("int").as("n_batch"))
-      .orderBy("doc_id")
 
   val replaceNormalizeSql: String =
     """SELECT doc_id,
@@ -178,7 +165,6 @@ object Parsing {
     val areas = filter(array(a1, a2), x => x =!= "")
     Tables.documents(spark, dir)
       .select(col("doc_id"), array_join(areas, ",").as("areas"), size(areas).cast("bigint").as("n_areas"))
-      .orderBy("doc_id")
   }
 
   val multilineAreasRegexSql: String =
@@ -200,7 +186,6 @@ object Parsing {
           .otherwise(lit("ok")).as("status"))
       .groupBy("status")
       .agg(count(lit(1)).as("n"))
-      .orderBy("status")
 
   val errorEnvelopeRejectsSql: String =
     """SELECT status, COUNT(*) AS n FROM (
@@ -217,7 +202,6 @@ object Parsing {
     Tables.documents(spark, dir)
       .select(col("doc_id"), element_at(words, 1).as("first_word"), size(words).cast("bigint").as("n_cells"))
       .filter(col("n_cells") >= 4 && col("first_word") =!= "the")
-      .orderBy("doc_id")
   }
 
   val headerRowAntifilterSql: String =
@@ -240,7 +224,6 @@ object Parsing {
     Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         last(heading, ignoreNulls = true).over(w).as("section"))
-      .orderBy("event_id")
   }
 
   val sectionRouteLastvalSql: String =
@@ -282,7 +265,6 @@ object Parsing {
         size(col("assessments_raw")).cast("bigint").as("n_assess_rows"),
         array_join(transform(col("units_raw"), r => array_join(r, "|")), ";").as("units_cells"),
         array_join(transform(col("assessments_raw"), r => array_join(r, "|")), ";").as("assess_cells"))
-      .orderBy("doc_id")
   }
 
   val sectionTableRouteSql: String = {

@@ -17,8 +17,6 @@ import graft.operators.Calendar
   *    partition-parallel partial aggregation and DuckDB's sequential sum
   *    agree bit-for-bit; a raw double SUM would be order-dependent.
   *  - doubles are never formatted into strings (Java vs DuckDB repr differ).
-  *  - every query ends in a total ORDER BY so the written parquet is
-  *    deterministic regardless of how the driver compares.
   */
 object Relational {
 
@@ -60,7 +58,6 @@ object Relational {
         sum(price * (lit(1) - disc)).cast("double").as("sum_disc_price"),
         sum(price * (lit(1) - disc) * (lit(1) + tax)).cast("double").as("sum_charge"),
         count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
   }
 
   val pricingSummarySql: String =
@@ -95,7 +92,6 @@ object Relational {
         // pandas as different types (date vs Timestamp) in the compare
         date_add(start, (weekNo - 1) * 7).cast("timestamp").as("initial_date"),
         date_add(start, weekNo * 7 - 1).cast("timestamp").as("last_date"))
-      .orderBy("o_orderkey")
   }
 
   val weekDateEnrichSql: String =
@@ -117,7 +113,6 @@ object Relational {
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
       .withColumn("rn", row_number().over(w).cast("bigint"))
       .filter(col("rn") <= 3)
-      .orderBy("o_orderpriority", "rn")
   }
 
   val topkPerGroupSql: String =
@@ -136,7 +131,6 @@ object Relational {
       .agg(
         count(lit(1)).as("n_docs"),
         array_join(transform(sort_array(collect_list(col("doc_id"))), _.cast("string")), ",").as("ids"))
-      .orderBy("lang", "source")
 
   val groupCollectSortedSql: String =
     """SELECT lang, source, COUNT(*) AS n_docs,
@@ -167,7 +161,6 @@ object Relational {
       .filter(col("o_orderdate") >= to_timestamp(lit("1995-01-01")) &&
         col("o_orderdate") < to_timestamp(lit("1996-01-01")))
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      .orderBy("o_orderkey")
 
   val findByPeriodSql: String =
     """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
@@ -191,7 +184,6 @@ object Relational {
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name", "n_name")
       .agg(sum(revenue).cast("double").as("revenue"), count(lit(1)).as("n_items"))
-      .orderBy("r_name", "n_name")
   }
 
   val revenueByNationSql: String =
@@ -239,7 +231,6 @@ object Relational {
       .select(col("o_year"), col("supp_nation"),
         col("rev_dec").cast("double").as("revenue"),
         (col("rev_dec").cast("double") / col("year_total").cast("double")).as("share"))
-      .orderBy("o_year", "supp_nation")
   }
 
   val marketShareSql: String =
@@ -431,7 +422,6 @@ object Relational {
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         min(col("event_id")).as("first_event"))
-      .orderBy("user_id", "session_no")
   }
 
   val sessionizeSql: String =
@@ -533,7 +523,6 @@ object Relational {
       .groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("n_gaps"), min("gap_us").as("min_us"),
         max("gap_us").as("max_us"))
-      .orderBy("bucket")
   }
 
   val gapHistogramSql: String =
@@ -567,7 +556,6 @@ object Relational {
         coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
         coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
         col("total_price"), col("n_orders"))
-      .orderBy("status", "priority")
 
   val rollupRevenueSql: String =
     """SELECT COALESCE(o_orderstatus, '(all)') AS status,
@@ -590,7 +578,6 @@ object Relational {
         coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
         coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
         col("total_price"), col("n_orders"))
-      .orderBy("status", "priority")
 
   val cubeRevenueSql: String =
     """SELECT COALESCE(o_orderstatus, '(all)') AS status,
@@ -669,7 +656,6 @@ object Relational {
       .agg(count(lit(1)).as("n"))
       .withColumn("from_share", col("n").cast("double") /
         sum("n").over(Window.partitionBy("from_type")).cast("double"))
-      .orderBy("from_type", "to_type")
   }
 
   val eventTransitionsSql: String =
@@ -838,7 +824,6 @@ object Relational {
         width_bucket(col("value"), lit(0d), lit(500d), lit(10L)).as("bucket"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast("double").as("bucket_sum"))
-      .orderBy("event_type", "bucket")
 
   // DuckDB has no width_bucket: the oracle spells out the SQL-standard
   // semantics (underflow 0, overflow n+1, else floor((v-low)/width)+1;
@@ -880,7 +865,6 @@ object Relational {
         col("running_dec").cast("double").as("running"),
         col("total_dec").cast("double").as("class_total"))
       .withColumn("running_share", col("running") / col("class_total"))
-      .orderBy("o_orderpriority", "o_orderkey")
   }
 
   val runningShareSql: String =
@@ -910,7 +894,6 @@ object Relational {
         leftTime = col("ts"), rightTime = col("o_orderdate"),
         rightTie = "o_orderkey", rightPayload = Seq("o_orderkey", "o_totalprice"))
       .select("event_id", "ukey", "asof_o_orderkey", "asof_o_totalprice")
-      .orderBy("event_id")
   }
 
   val asofJoinSql: String =
@@ -948,7 +931,6 @@ object Relational {
         leftTime = col("ts"), rightTime = col("o_orderdate"),
         rightTie = "o_orderkey", rightPayload = Seq("o_orderkey", "o_totalprice"))
       .select("event_id", "ukey", "asof_o_orderkey", "asof_o_totalprice")
-      .orderBy("event_id")
   }
 
   val asofJoinForwardSql: String =
@@ -1042,7 +1024,6 @@ object Relational {
     ranked.join(broadcast(n), "event_type")
       .filter(expr("rn = (n + 1) div 2"))
       .select(col("event_type"), col("value").as("median_value"), col("n"))
-      .orderBy("event_type")
   }
 
   val medianByGroupSql: String =
@@ -1058,15 +1039,7 @@ object Relational {
     * same key bucket within ±6 hours of each other — the
     * near-in-time-event detection pattern. Bucketed equi-join + exact
     * predicate, never a per-key nested loop. The oracle states the naive
-    * inequality join directly; both must agree.
-    *
-    * Deliberately NO global orderBy on the ~3M-pair result: the driver's
-    * compare sorts rows itself before hashing, and in Spark a global sort
-    * is not just a sort — RangePartitioning first runs a sampling pass
-    * that RE-EXECUTES the whole join to estimate boundaries, so sorting
-    * here doubled the query (the round-2 bench outlier: 15s recorded vs
-    * ~4s for the join itself). Sorting a large result belongs to the
-    * consumer that needs it, not the operator. */
+    * inequality join directly; both must agree. */
   def rangeJoin(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     val l = e.select(col("event_id"), (col("user_id") % 25).as("ukey"), col("ts"))
@@ -1099,7 +1072,6 @@ object Relational {
       .groupBy("n_name")
       .agg(count(lit(1)).as("n_cust"),
         sum(col("c_acctbal").cast(DecimalType(18, 2))).cast("double").as("total_acctbal"))
-      .orderBy("n_name")
 
   val skewSaltedJoinSql: String =
     """SELECT n_name, COUNT(*) AS n_cust,
@@ -1113,7 +1085,6 @@ object Relational {
     graft.operators.SkewJoin.distinctCountByKey(
         Tables.events(spark, dir), col("user_id"), col("event_type"),
         keyName = "user_id")
-      .orderBy("user_id")
 
   val skewDistinctCountSql: String =
     """SELECT user_id, COUNT(DISTINCT event_type) AS n_distinct
@@ -1131,7 +1102,6 @@ object Relational {
       .join(Tables.orders(spark, dir).filter(col("o_totalprice") > 400000),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
 
   val antiJoinSql: String =
     """SELECT c_custkey, c_name FROM customer
@@ -1147,7 +1117,6 @@ object Relational {
       .join(Tables.orders(spark, dir).filter(col("o_totalprice") > 400000),
         col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_mktsegment")
-      .orderBy("c_custkey")
 
   val semiJoinSql: String =
     """SELECT c_custkey, c_mktsegment FROM customer
@@ -1167,7 +1136,6 @@ object Relational {
       .select(col("event_type"),
         col("qs")(0).as("p25"), col("qs")(1).as("p50"),
         col("qs")(2).as("p75"), col("qs")(3).as("p90"))
-      .orderBy("event_type")
 
   val quantilesByGroupSql: String =
     """SELECT event_type,
@@ -1186,7 +1154,6 @@ object Relational {
       .count()
       .select(col("user_id") +: Seq("click", "error", "purchase", "signup", "view")
         .map(c => coalesce(col(c), lit(0L)).as(s"n_$c")): _*)
-      .orderBy("user_id")
 
   val pivotEventCountsSql: String =
     """SELECT user_id,
@@ -1261,7 +1228,6 @@ object Relational {
       .select(col("l_returnflag"), col("n_rows"),
         covar.as("covar_qp"), stdQ.as("std_q"), stdP.as("std_p"),
         (covar / (stdQ * stdP)).as("corr_qp"))
-      .orderBy("l_returnflag")
   }
 
   // NB the moment casts go DECIMAL → VARCHAR → DOUBLE: DuckDB's direct
@@ -1297,7 +1263,6 @@ object Relational {
     viewers.except(buyers).withColumn("op", lit("view_no_purchase"))
       .unionByName(viewers.intersect(buyers).withColumn("op", lit("view_and_purchase")))
       .select("op", "user_id")
-      .orderBy("op", "user_id")
   }
 
   val setOpUsersSql: String =
@@ -1373,7 +1338,6 @@ object Relational {
         coalesce(col("n_events"), lit(0L)).as("n_events"),
         last(col("day_value"), ignoreNulls = true).over(w).as("carried_value"),
         col("n_events").isNull.as("is_gap"))
-      .orderBy("user_id", "day")
   }
 
   val timeGapFillSql: String =
@@ -1408,7 +1372,6 @@ object Relational {
       .withColumn("prev_revenue", lag("revenue", 1).over(w))
       .withColumn("growth",
         (col("revenue") - col("prev_revenue")) / col("prev_revenue"))
-      .orderBy("month")
   }
 
   val monthlyGrowthSql: String =
@@ -1440,7 +1403,6 @@ object Relational {
       .withColumn("valid_to", lead("ts", 1).over(w))
       .select(col("user_id"), col("event_type"), col("ts").as("valid_from"),
         col("valid_to"), col("valid_to").isNull.as("is_current"))
-      .orderBy("user_id", "valid_from")
   }
 
   val scd2HistorySql: String =
@@ -1472,7 +1434,6 @@ object Relational {
       .agg(count(lit(1)).as("n_rows"),
         count_distinct(col("col_value")).as("n_distinct"),
         sum(when(col("col_value").isNull, 1L).otherwise(0L)).as("n_nulls"))
-      .orderBy("col_name")
 
   val unpivotProfileSql: String =
     """SELECT col_name, COUNT(*) AS n_rows,
@@ -1511,7 +1472,6 @@ object Relational {
       .groupBy("week")
       .agg(count_distinct(col("user_id")).as("n_users"),
         count(lit(1)).as("n_sessions"))
-      .orderBy("week")
   }
 
   val intervalOverlapSql: String =
@@ -1553,7 +1513,6 @@ object Relational {
         rightTie = "p_event", rightPayload = Seq("p_event", "value"),
         toleranceSec = 3L * 86400)
       .select("event_id", "user_id", "asof_p_event", "asof_value", "asof_age_us")
-      .orderBy("event_id")
   }
 
   val asofJoinToleranceSql: String =
@@ -1589,9 +1548,6 @@ object Relational {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderdate"),
         col("o_totalprice").cast(DecimalType(14, 2)).as("price"))
-    // No trailing sort: PrefixScan already emits rows ordered by the scan
-    // key, and a global orderBy's sampling pass would re-run the scan's
-    // offset machinery; the driver compare sorts rows itself.
     graft.operators.PrefixScan
       .runningSum(o, Nil, "price", "cum", col("o_orderdate"), col("o_orderkey"))
       .select(col("o_orderkey"), col("o_orderdate"), col("cum").cast("double").as("cum_revenue"))
@@ -1628,7 +1584,6 @@ object Relational {
       .agg(count(lit(1)).as("n"),
         min("pk").as("min_pk"), max("pk").as("max_pk"),
         min("sk").as("min_sk"), max("sk").as("max_sk"))
-      .orderBy("z_bucket")
   }
 
   val zorderClusterSql: String =
@@ -1656,9 +1611,6 @@ object Relational {
       .agg(sum(col("l_quantity").cast(DecimalType(12, 2))).as("total_qty"),
         count(lit(1)).as("n_items"))
       .filter(col("total_qty") > 180)
-    // No trailing sort: RangePartitioning's sampling pass would re-execute
-    // the whole scan+join child (there is no shuffle boundary under the
-    // sort — the join is an AQE broadcast); the consumer orders.
     big.join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
       .select(col("o_orderkey"), col("o_custkey"),
         col("total_qty").cast("double").as("total_qty"), col("n_items"))
@@ -1700,8 +1652,6 @@ object Relational {
           coalesce(col("v_base"), lit(0).cast(DecimalType(14, 2)))).as("diff"))
       .groupBy("status")
       .agg(count(lit(1)).as("n"), sum(col("diff")).cast("double").as("net_drift"))
-    // No trailing sort on the 4-row result: the sort's sampling pass costs a
-    // second execution of the final aggregate; the consumer orders.
   }
 
   val snapshotDiffSql: String =
@@ -1755,7 +1705,6 @@ object Relational {
         .agg(count(lit(1)).as("n_checked"),
           sum(when(col("c") > 1, 1L).otherwise(0L)).as("n_violations")))
     qty.unionByName(price).unionByName(nulldate).unionByName(orphan).unionByName(dup)
-      .orderBy("rule")
   }
 
   val constraintAuditSql: String =
@@ -1794,7 +1743,6 @@ object Relational {
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy("c_count")
       .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
 
   val customerOrderHistogramSql: String =
     """SELECT c_count, COUNT(*) AS custdist FROM (
@@ -1833,7 +1781,6 @@ object Relational {
         (col("bin").cast("double") * lit(binW) +
           (col("q") * col("n").cast("double") - col("cum0").cast("double")) /
             col("cnt").cast("double") * lit(binW)).as("est"))
-      .orderBy("q")
   }
 
   val histQuantilesSql: String =
@@ -1888,7 +1835,7 @@ object Relational {
     val c = sum1("customer", Tables.customer(spark, dir),
       term(col("c_custkey"), a0) + term(col("c_nationkey"), a1) +
         PolyHash.hash(col("c_name")) * a2 % m)
-    o.unionByName(l).unionByName(c).orderBy("tbl")
+    o.unionByName(l).unionByName(c)
   }
 
   val tableChecksumSql: String = {
@@ -1945,7 +1892,6 @@ object Relational {
         sum(x).as("sx"), sum(y).as("sy"), sum(x * y).as("sxy"), sum(x * x).as("sx2"))
       .select(col("event_type"), col("n"),
         slope.as("slope"), ((sy - slope * sx) / nd).as("intercept"))
-      .orderBy("event_type")
   }
 
   val trendSlopeSql: String =
@@ -1998,7 +1944,6 @@ object Relational {
         sum("rev").cast("double").as("revenue"),
         (sum("rev").cast("double") /
           first(col("total")).cast("double")).as("share"))
-      .orderBy("cls")
   }
 
   val abcClassificationSql: String =
@@ -2061,7 +2006,6 @@ object Relational {
         (least(col("in_hi"), col("out_hi")) -
           greatest(col("in_lo"), col("out_lo"))).as("qty_cents"),
         (unix_micros(col("out_ts")) - unix_micros(col("in_ts"))).as("wait_us"))
-      .orderBy("user_id", "in_event", "out_event")
   }
 
   val fifoMatchSql: String =
@@ -2155,8 +2099,7 @@ object Relational {
         |WHERE EXISTS (SELECT 1 FROM v_lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
         |  AND CAST(o_totalprice AS DECIMAL(14,2)) * (SELECT COUNT(*) FROM v_orders) >
-        |      (SELECT SUM(CAST(o_totalprice AS DECIMAL(14,2))) FROM v_orders)
-        |ORDER BY o_orderkey""".stripMargin)
+        |      (SELECT SUM(CAST(o_totalprice AS DECIMAL(14,2))) FROM v_orders)""".stripMargin)
   }
 
   val sqlExistsOrdersSql: String =
@@ -2193,7 +2136,6 @@ object Relational {
         count(lit(1)).as("n_events"),
         min("ts").as("min_ts"), max("ts").as("max_ts"),
         count_distinct(when(col("n_splits") > 1, col("user_id"))).as("n_leaked_users"))
-      .orderBy("split")
   }
 
   val leakageAuditSql: String = {
@@ -2292,7 +2234,6 @@ object Relational {
       sum("n_events").over(org.apache.spark.sql.expressions.Window.partitionBy()).cast("double")
     g.select(col("fold"), col("n_users"), col("n_events"),
         share.as("event_share"), abs(share - 0.2).as("dev_from_ideal"))
-      .orderBy("fold")
   }
 
   val groupKfoldSql: String = {
@@ -2335,8 +2276,6 @@ object Relational {
       .join(broadcast(m), "event_type")
       .select(col("event_id"), col("event_type"), col("value"),
         ((col("value") - mean) / stdSafe).as("z"))
-    // No trailing sort: the consumer orders; a global orderBy's sampling
-    // pass would re-run the whole scan + broadcast join.
   }
 
   val featureNormalizeSql: String =
@@ -2380,7 +2319,6 @@ object Relational {
         col("lo"), col("hi"),
         ((col("sum_mid").cast("double") + col("n_lo") * col("lo") + col("n_hi") * col("hi"))
           / col("n")).as("win_mean"))
-      .orderBy("event_type")
   }
 
   val winsorizeStatsSql: String =
@@ -2438,7 +2376,6 @@ object Relational {
         max("med").as("median_value"), max("mad").as("mad"),
         sum(when(col("dev") > lit(3.0) * lit(1.4826) * col("mad"), 1L)
           .otherwise(0L)).as("n_outliers"))
-    // No trailing sort: its sampling pass re-runs both median windows.
   }
 
   val robustOutliersSql: String =
@@ -2486,7 +2423,6 @@ object Relational {
       .select(col("type_a"), col("type_b"), col("n_both"), col("n_a"), col("n_b"),
         ((col("n_both") * col("n_baskets")).cast("double") /
           (col("n_a") * col("n_b")).cast("double")).as("lift"))
-    // No trailing sort: its sampling pass re-runs the basket pair join.
   }
 
   val typeCooccurrenceSql: String =
@@ -2524,7 +2460,6 @@ object Relational {
       .join(broadcast(cohortSize), "cohort_week")
       .select(col("cohort_week"), col("weeks_since"), col("n_active"), col("n_cohort"),
         (col("n_active").cast("double") / col("n_cohort").cast("double")).as("retention"))
-    // No trailing sort: its sampling pass re-runs the cohort join + agg.
   }
 
   val cohortRetentionSql: String =
@@ -2561,7 +2496,6 @@ object Relational {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         (sum(col("wv")).cast("double") / lit(1e9)).as("decayed_value"))
-    // No trailing sort: its sampling pass re-runs the events scan + agg.
   }
 
   val decayedEngagementSql: String =
@@ -2809,7 +2743,6 @@ object Relational {
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n_custs"),
         sum(col("c_acctbal").cast(DecimalType(18, 2))).cast("double").as("total_bal"))
-      .orderBy("c_nationkey")
   }
 
   val idleCustomersSql: String =
@@ -2848,7 +2781,6 @@ object Relational {
       .agg(sum(col("n")).as("n_events"),
         sum(col("v")).cast("double").as("total_value"),
         min(col("mn")).as("first_ts"), max(col("mx")).as("last_ts"))
-      .orderBy("event_type")
   }
 
   val incrementalAggMergeSql: String =
@@ -2931,7 +2863,6 @@ object Relational {
         col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"), "left_semi")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"))
-      .orderBy("o_orderpriority")
   }
 
   val lateShipmentPrioritySql: String =
@@ -2965,7 +2896,6 @@ object Relational {
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"))
       .select(col("event_type"), col("n_total"), col("n_kept"),
         (col("n_kept").cast("double") / col("n_total").cast("double")).as("keep_ratio"))
-      .orderBy("event_type")
   }
 
   val deltaCompressSql: String =
@@ -3012,7 +2942,6 @@ object Relational {
       .groupBy("day").agg(sum(col("delta")).as("delta"))
     graft.operators.PrefixScan.runningSum(deltas, Nil, "delta", "active", col("day").asc)
       .select(col("day").cast("timestamp").as("day"), col("delta"), col("active"))
-      .orderBy("day")
   }
 
   val activeSessionsDailySql: String =
@@ -3072,7 +3001,6 @@ object Relational {
         coalesce(col("new_name"), col("c_name")).as("c_name"),
         coalesce(col("new_acctbal"), col("c_acctbal")).as("c_acctbal"),
         coalesce(col("op"), lit("K")).as("row_src"))
-      .orderBy("c_custkey")
   }
 
   val mergeUpsertSql: String =
@@ -3119,7 +3047,6 @@ object Relational {
         leftTime = col("ts"), rightTime = col("valid_from"),
         rightTie = "change_id", rightPayload = Seq("dim_type", "change_id"))
       .select("user_id", "event_id", "asof_dim_type", "asof_change_id")
-      .orderBy("event_id")
   }
 
   val scd2AsofLookupSql: String =
@@ -3167,7 +3094,6 @@ object Relational {
       .withColumn("target_rank", ceil(col("q") * col("n").cast("double")).cast("bigint"))
       .filter(col("cum") >= col("target_rank") && col("cum0") < col("target_rank"))
       .select(col("q"), col("target_rank"), col("lag_us"), col("n"))
-      .orderBy("q")
   }
 
   val conversionLagQuantilesSql: String =
@@ -3233,7 +3159,6 @@ object Relational {
     stage(views, "1_view")
       .unionByName(stage(s1, "2_click"))
       .unionByName(stage(s2, "3_purchase"))
-      .orderBy("stage")
   }
 
   val windowFunnelSql: String =
@@ -3282,7 +3207,6 @@ object Relational {
           col("s_nationkey") === col("c_nationkey"))
       .groupBy("n_name")
       .agg(sum(revenue).cast("double").as("revenue"), count(lit(1)).as("n_items"))
-      .orderBy("n_name")
   }
 
   val localSupplierVolumeSql: String =
@@ -3326,7 +3250,6 @@ object Relational {
         Tables.supplier(spark, dir), "s_suppkey"))
       .unionByName(edge("orders.custkey->customer", Tables.orders(spark, dir),
         "o_custkey", Tables.customer(spark, dir), "c_custkey"))
-      .orderBy("fk_edge")
   }
 
   val fkIntegrityAuditSql: String = {
@@ -3377,7 +3300,6 @@ object Relational {
         .select(lit(name).as("layout"), col("n_files"), col("n_candidate_files"))
     audit("natural", floor(col("ok") * 32 / (col("okmax") + 1)).cast("bigint"))
       .unionByName(audit("zorder", floor(col("z") * 32 / (col("zmax") + 1)).cast("bigint")))
-      .orderBy("layout")
   }
 
   val layoutSkippingAuditSql: String =
@@ -3430,7 +3352,6 @@ object Relational {
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("o_orderdate")).as("o_year"))
       .agg(sum(revenue).cast("double").as("revenue"), count(lit(1)).as("n_items"))
-      .orderBy("supp_nation", "cust_nation", "o_year")
   }
 
   val nationTradeFlowsSql: String =
@@ -3473,7 +3394,6 @@ object Relational {
     candidate("p_partkey", "p_brand")
       .unionByName(candidate("p_brand", "p_type"))
       .unionByName(candidate("p_type", "p_brand"))
-      .orderBy("fd")
   }
 
   val fdAuditSql: String = {
@@ -3507,7 +3427,6 @@ object Relational {
       .withColumn("day_share",
         col("n").cast("double") / sum(col("n")).over(byDay).cast("double"))
       .withColumn("is_peak", col("n") === max(col("n")).over(byDay))
-      .orderBy("dow", "hod")
   }
 
   val hourlySeasonalitySql: String =
@@ -3546,7 +3465,6 @@ object Relational {
       .filter(col("cost") === col("min_cost"))
       .select(col("p_partkey"), col("p_brand"), col("s_name"), col("n_name"),
         col("cost").cast("double").as("cost"))
-      .orderBy("p_partkey", "s_name")
   }
 
   val minCostSupplierSql: String =
@@ -3592,7 +3510,6 @@ object Relational {
       .groupBy("l_suppkey").agg(count(lit(1)).as("numwait"))
       .join(broadcast(Tables.supplier(spark, dir)), col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("numwait"))
-      .orderBy("s_suppkey")
   }
 
   val soleLateSupplierSql: String =
@@ -3631,7 +3548,6 @@ object Relational {
       .select("p_brand", "p_type", "p_size", "l_suppkey").distinct()
       .groupBy("p_brand", "p_type", "p_size")
       .agg(count(lit(1)).as("supplier_cnt"))
-      .orderBy("p_brand", "p_type", "p_size")
   }
 
   val supplierPartRelationshipSql: String =
@@ -3665,7 +3581,6 @@ object Relational {
       .join(broadcast(Tables.supplier(spark, dir)), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(Tables.nation(spark, dir)), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("n_name"))
-      .orderBy("s_suppkey")
   }
 
   val dominantSupplierSql: String =
@@ -3715,7 +3630,6 @@ object Relational {
         sum(col("x") * col("x")).as("sx2"),
         sum(col("y") * col("y")).as("sy2"))
       .select(col("k"), col("n"), r.as("autocorr"))
-      .orderBy("k")
   }
 
   // Moment casts go DECIMAL → VARCHAR → DOUBLE on the DuckDB side for the
@@ -3801,7 +3715,6 @@ object Relational {
       .groupBy("l_returnflag")
       .agg((min("price_c").cast("double") / lit(100.0))
         .as("weighted_median_price"))
-      .orderBy("l_returnflag")
   }
 
   val weightedMedianByGroupSql: String =
@@ -3834,7 +3747,6 @@ object Relational {
       .filter(col("n") === col("max_n"))
       .groupBy("l_returnflag")
       .agg(min("qty").cast("double").as("mode_qty"), max("max_n").as("n_occurrences"))
-      .orderBy("l_returnflag")
   }
 
   val modeByGroupSql: String =
@@ -3872,7 +3784,6 @@ object Relational {
         benfordP.as("benford_p"),
         ((col("n_obs").cast("double") / col("total").cast("double")) - benfordP)
           .as("excess"))
-      .orderBy("digit")
   }
 
   /** log10(1+1/d) for d = 1..9, evaluated once here so the Spark plan
@@ -3929,7 +3840,6 @@ object Relational {
       .withColumn("m", col("m").cast("timestamp")) // month keys ship as
       // TIMESTAMP like monthly_growth: parquet date32 vs DuckDB DATE hash
       // differently in the driver compare
-      .orderBy("m")
   }
 
   val growthAccountingSql: String =
@@ -3979,7 +3889,6 @@ object Relational {
       .agg(sum("w").cast("bigint").as("n_eff"),
         (sum(col("w") * col("x")).cast("double") /
           sum("w").cast("double")).as("mean_rev"))
-      .orderBy("b")
   }
 
   /** Poisson(1) CDF at k = 0..7, evaluated once so the Spark plan and
@@ -4028,7 +3937,6 @@ object Relational {
         ((col("s_total") - col("s_chars")).cast("double") /
           (col("n_total") - col("n_docs")).cast("double")).as("loo_mean"))
       .withColumn("influence", col("loo_mean") - col("overall_mean"))
-      .orderBy("source")
   }
 
   val looSourceInfluenceSql: String =
@@ -4067,7 +3975,6 @@ object Relational {
       .agg(count(lit(1)).as("n_groups"), sum("k").as("n_rows"),
         sum(when(col("l") === 1, 1L).otherwise(0L)).as("n_homogeneous"),
         min("k").as("min_k"), max("k").as("max_k"))
-      .orderBy("k_band")
   }
 
   val kAnonymityAuditSql: String =
@@ -4099,7 +4006,6 @@ object Relational {
       .join(broadcast(Tables.customer(spark, dir)),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("n_orders"))
-      .orderBy("c_custkey")
   }
 
   val relationalDivisionSql: String =
@@ -4140,7 +4046,6 @@ object Relational {
       .agg(count(lit(1)).as("n_direct"))
     bm.join(direct, Seq("seg", "nat"))
       .withColumn("agree", col("n_bitmap") === col("n_direct"))
-      .orderBy("seg", "nat")
   }
 
   val bitmapIndexAuditSql: String =
@@ -4194,7 +4099,6 @@ object Relational {
       .withColumn("n_at_risk", sum("n_ending").over(atRisk).cast("bigint"))
       .select(col("t_days"), col("n_at_risk"), col("d_events"),
         (col("d_events").cast("double") / col("n_at_risk").cast("double")).as("hazard"))
-      .orderBy("t_days")
   }
 
   val hazardTableSql: String =
@@ -4291,7 +4195,6 @@ object Relational {
       .select(col("nat"), col("n"),
         ((lit(2.0) * sixD - (col("n") + 1).cast("double") * sxD) /
           (col("n").cast("double") * sxD)).as("gini"))
-      .orderBy("nat")
   }
 
   val giniByNationSql: String =
@@ -4329,7 +4232,6 @@ object Relational {
           (col("n_days") * col("n_events")).cast("double")).as("fano"),
         (col("n_days") * col("sx2") - col("n_events") * col("n_events") >
           col("n_days") * col("n_events")).as("bursty"))
-      .orderBy("user_id")
   }
 
   val burstinessIndexSql: String =
@@ -4371,7 +4273,6 @@ object Relational {
       .select(col("decile"), col("n"),
         (col("cum_n").cast("double") / col("total_n").cast("double")).as("pop_share"),
         (col("cum_s").cast("double") / col("total_s").cast("double")).as("wealth_share"))
-      .orderBy("decile")
   }
 
   val lorenzCurveSql: String =
@@ -4414,7 +4315,6 @@ object Relational {
       .filter(col("sd") > 0)
       .select(col("user_id"), col("n_intervals"),
         (col("svd").cast("double") / col("sd").cast("double")).as("twap"))
-      .orderBy("user_id")
   }
 
   val twapByUserSql: String =
@@ -4498,7 +4398,6 @@ object Relational {
       .groupBy("mo")
       .agg(count(lit(1)).as("n_years"),
         (sum("ri").cast("double") / (lit(1e9) * count(lit(1)))).as("seasonal_index"))
-      .orderBy("mo")
   }
 
   val seasonalIndexSql: String =
@@ -4621,8 +4520,7 @@ object Relational {
     // frequency joins + the scalar cross-broadcast touch 20 rows instead
     // of every distinct pair (the pre-r15 plan shuffled the full pair
     // relation through two joins only to discard all but 20 rows). Same
-    // 20 rows, same values; the final orderBy re-asserts the output
-    // order the joins don't preserve.
+    // 20 rows, same values.
     pairs
       .groupBy(col("p1"), col("p2"))
       .agg(count(lit(1)).as("pair_cnt"))
@@ -4634,7 +4532,6 @@ object Relational {
       .select(col("p1"), col("p2"), col("pair_cnt"), col("c1"), col("c2"),
         ((col("pair_cnt") * col("n_orders")).cast("double") /
           (col("c1") * col("c2")).cast("double")).as("lift"))
-      .orderBy(col("pair_cnt").desc, col("p1"), col("p2"))
   }
 
   val basketPairsSql: String =
@@ -4673,7 +4570,6 @@ object Relational {
         (least(col("basket_size"), lit(BasketCap.toLong)) *
           (least(col("basket_size"), lit(BasketCap.toLong)) - 1) / 2 * col("n_orders"))
           .cast("bigint").as("pairs_capped"))
-      .orderBy("basket_size")
   }
 
   val basketSizeProfileSql: String =
@@ -4711,7 +4607,6 @@ object Relational {
       .select(((lit(5) * expr("(ms - pmod(ms, 7)) div 7") + least(col("ms") % 7, lit(5))) -
         (lit(5) * expr("(mo - pmod(mo, 7)) div 7") + least(col("mo") % 7, lit(5)))).as("bus_days"))
       .groupBy("bus_days").agg(count(lit(1)).as("n_items"))
-      .orderBy("bus_days")
   }
 
   val businessDayLagSql: String =
@@ -4741,7 +4636,6 @@ object Relational {
       .select(col("priority"), col("n"), col("pos"),
         ((col("pos") - 1).cast("double") / (col("n") - 1).cast("double")).as("enc_pos"),
         (col("pos").cast("double") / (col("n") - 1).cast("double")).as("enc_neg"))
-      .orderBy("priority")
 
   val targetEncodeLooSql: String =
     """WITH o AS (
@@ -4786,7 +4680,6 @@ object Relational {
         when(col("n_g") > 1, (col("rn") - 1).cast("double") /
           (col("n_g") - 1).cast("double")).otherwise(lit(0.0)).as("pr"),
         (col("rn").cast("double") / col("n_g").cast("double")).as("cd"))
-      .orderBy("brand", "rn")
   }
 
   val percentRankPartsSql: String =
@@ -4872,7 +4765,6 @@ object Relational {
       .agg(count(lit(1)).as("n_keys"),
         sum("n_orders").as("total_orders"),
         coalesce(sum("rev").cast("double"), lit(0.0)).as("total_rev"))
-      .orderBy("status")
   }
 
   val fullOuterReconcileSql: String =
@@ -4919,7 +4811,6 @@ object Relational {
       .toDF("pct", "k")
     ranked.join(broadcast(kDf), col("rnk") === col("k"))
       .select(col("pct"), (col("vmicro").cast("double") / 1e6).as("value"))
-      .orderBy("pct")
   }
 
   val exactQuantilesSql: String =

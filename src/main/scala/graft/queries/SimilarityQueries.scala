@@ -50,7 +50,6 @@ object SimilarityQueries {
   def cosineTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.bruteForceTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
         col("vec_id") < 5, k = 10)
-      .orderBy("q_id", "rank")
 
   val cosineTopKSql: String =
     s"""WITH $eCte,
@@ -66,7 +65,6 @@ object SimilarityQueries {
     Similarity.bandRows(
         Similarity.indexed(Tables.embeddings(spark, dir), "vec_id", "embedding"),
         "vec_id")
-      .orderBy("vec_id", "band")
 
   val lshBucketsSql: String =
     s"WITH $bandsCte\nSELECT vec_id, band, key FROM bands ORDER BY vec_id, band"
@@ -75,7 +73,6 @@ object SimilarityQueries {
   def annLshTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.lshTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
         col("vec_id") < 5, k = 10)
-      .orderBy("q_id", "rank")
 
   val annLshTopKSql: String =
     s"""WITH $eCte,
@@ -96,7 +93,6 @@ object SimilarityQueries {
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
     Similarity.nearDupPairs(Tables.embeddings(spark, dir), "vec_id", "embedding",
         threshold = 0.4, maxBucket = 100)
-      .orderBy("id_a", "id_b")
 
   val nearDupPairsSql: String =
     s"""WITH $eCte,
@@ -116,7 +112,6 @@ object SimilarityQueries {
   /** IVF cell assignment (16 deterministic seed centroids). */
   def ivfAssign(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfAssignments(Tables.embeddings(spark, dir), "vec_id", "embedding")
-      .orderBy("vec_id")
 
   val ivfAssignSql: String =
     s"""WITH $eCte,
@@ -131,7 +126,6 @@ object SimilarityQueries {
   def ivfTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
         col("vec_id") < 5, k = 10)
-      .orderBy("q_id", "rank")
 
   val ivfTopKSql: String =
     s"""WITH $eCte,
@@ -176,7 +170,6 @@ object SimilarityQueries {
       .select(col("centroid_id"),
         col("n_old").cast("bigint").as("n_old"), col("n_new").cast("bigint").as("n_new"),
         so.as("share_old"), sn.as("share_new"), abs(sn - so).as("drift"))
-      .orderBy("centroid_id")
   }
 
   val embeddingDriftSql: String =
@@ -204,7 +197,6 @@ object SimilarityQueries {
   def ivfTrainAssign(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfTrainedAssignments(Tables.embeddings(spark, dir), "vec_id", "embedding",
         k = 16, iters = TrainIters)
-      .orderBy("vec_id")
 
   /** Assignment-vs-centroids CTE body (centroid relation `cRel` must
     * expose c_id, cv, c_nrm). */
@@ -250,7 +242,6 @@ object SimilarityQueries {
   def ivfKppAssign(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfKmeansPlusPlusAssignments(
         Tables.embeddings(spark, dir), "vec_id", "embedding", k = KppK)
-      .orderBy("vec_id")
 
   /** One maxmin selection round: seeds s{j-1} → s{j}. */
   private def kppStepCtes(j: Int): String =
@@ -284,7 +275,6 @@ object SimilarityQueries {
     Similarity.quantizeInt8(Tables.embeddings(spark, dir), "vec_id", "embedding")
       .select(col("vec_id"), col("scale"),
         array_join(transform(col("q"), x => x.cast("string")), ",").as("q_codes"))
-      .orderBy("vec_id")
 
   val embedQuantizeSql: String =
     """WITH m AS (
@@ -316,7 +306,6 @@ object SimilarityQueries {
       .groupBy("q_id")
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
-      .orderBy("q_id")
   }
 
   val annRecallSql: String =
@@ -355,7 +344,6 @@ object SimilarityQueries {
     }.reduce(_ unionByName _)
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
       .select("dim", "q_id", "k", "n_hits", "recall")
-      .orderBy("dim", "q_id")
   }
 
   private def mrlDimCtes(d: Int): String =
@@ -400,7 +388,6 @@ object SimilarityQueries {
         (sum(round(col("x") * 1000000.0).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
           .cast("double") / (lit(1000000.0) * count(lit(1)))).as("mean_x"),
         min("x").as("min_x"), max("x").as("max_x"))
-      .orderBy("dim")
 
   val embedDimStatsSql: String =
     """SELECT dim, COUNT(*) AS n,
@@ -443,7 +430,6 @@ object SimilarityQueries {
       .select(col("vec_id"),
         array_join(transform(col("codes"), x => x.cast("string")), ",").as("codes"),
         col("recon_err"))
-      .orderBy("vec_id")
 
   val pqCodesSql: String =
     s"""WITH $pqCtes
@@ -456,7 +442,6 @@ object SimilarityQueries {
   def pqAdcTopKQ(spark: SparkSession, dir: String): DataFrame =
     Similarity.pqAdcTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
         col("vec_id") < 5, topK = 10)
-      .orderBy("q_id", "rank")
 
   val pqAdcTopKSql: String =
     s"""WITH $pqCtes,
@@ -481,7 +466,6 @@ object SimilarityQueries {
   def ivfPqTopKQ(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfPqTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
         col("vec_id") < 5, topK = 10)
-      .orderBy("q_id", "rank")
 
   val ivfPqTopKSql: String =
     s"""WITH $eCte,
@@ -527,7 +511,6 @@ object SimilarityQueries {
       .groupBy("q_id")
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
-      .orderBy("q_id")
   }
 
   val pqRecallSql: String =
@@ -554,7 +537,6 @@ object SimilarityQueries {
       .groupBy("q_id")
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
-      .orderBy("q_id")
   }
 
   val ivfPqRecallSql: String =
@@ -581,7 +563,6 @@ object SimilarityQueries {
       .groupBy("q_id")
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
-      .orderBy("q_id")
   }
 
   val ivfRecallSql: String =
@@ -620,7 +601,6 @@ object SimilarityQueries {
         (dot(col("v"), col("c")) /
           (sqrt(dot(col("v"), col("v"))) * sqrt(dot(col("c"), col("c")))))
           .as("cos_centroid"))
-      .orderBy("vec_id")
   }
 
   val embedOutliersSql: String =
@@ -888,7 +868,6 @@ object SimilarityQueries {
         when(col("idcg") > 0.0, col("dcg") / col("idcg")).as("ndcg"),
         when(col("first_rel_rank").isNotNull,
           lit(1.0) / col("first_rel_rank").cast("double")).as("mrr"))
-      .orderBy("term")
   }
 
   val rankingEvalSql: String = {
@@ -936,8 +915,7 @@ object SimilarityQueries {
     * lower-id cell-mate drops the vector (lowest id survives per
     * duplicate group; cells > 200 members excluded from pairing — the
     * oracle's HAVING mirrors the cap). Emits (vec_id, centroid_id,
-    * is_kept) for the full corpus. No trailing sort: the pair-verify
-    * join is not pinned, and the driver compare sorts rows itself. */
+    * is_kept) for the full corpus. */
   def semDedupQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     Similarity.semDedup(emb, "vec_id", "embedding",
@@ -1277,7 +1255,6 @@ object SimilarityQueries {
     Similarity.semDedupClusters(emb, "vec_id", "embedding",
         threshold = 0.3, k = Similarity.autoCells(emb.count()),
         trainIters = SemTrainIters)
-      .orderBy("doc_id")
   }
 
   val semDedupClustersSql: String =
@@ -1386,7 +1363,6 @@ object SimilarityQueries {
         sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .select(col("n_probe"), col("n_truth"), col("n_hits"),
         (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
-      .orderBy("n_probe")
   }
 
   /** One ivf_topk rebuild with `rn <= np` as the probe cut, wrapped as a
@@ -1442,7 +1418,6 @@ object SimilarityQueries {
       .select(when(isTestA, col("id_a")).otherwise(col("id_b")).as("test_id"),
         when(isTestA, col("id_b")).otherwise(col("id_a")).as("train_id"),
         col("sim"))
-      .orderBy("test_id", "train_id")
   }
 
   val embeddingDecontamSql: String =
@@ -1496,7 +1471,7 @@ object SimilarityQueries {
         .select(lit(nb.toLong).as("n_bands"), col("n_candidates"), col("n_truth"),
           col("n_hits"),
           (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
-    }.reduce(_ unionByName _).orderBy("n_bands")
+    }.reduce(_ unionByName _)
   }
 
   /** One banded-candidate top-10 rebuild restricted to bands < nb. */
@@ -1555,7 +1530,6 @@ object SimilarityQueries {
       .groupBy("q_id")
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
-      .orderBy("q_id")
   }
 
   /** 48-bit sign signature rebuilt in SQL: band 0, 48 planes, the same

@@ -23,7 +23,6 @@ object TextQueries {
         size(split(trim(col("text")), "\\s+")).cast("bigint").as("n_tokens"),
         regexp_count(col("text"), lit("[a-z]+")).cast("bigint").as("n_alpha_runs"),
         col("n_chars"))
-      .orderBy("doc_id")
 
   val tokenCountSql: String =
     """SELECT doc_id,
@@ -46,7 +45,6 @@ object TextQueries {
         regexp_count(lower(col("text")), lit(rx)).cast("bigint").as("n_bpe_tokens"),
         regexp_count(lower(col("text")), lit("[a-z]+")).cast("bigint").as("n_word_tokens"))
       .withColumn("n_nonword_tokens", col("n_bpe_tokens") - col("n_word_tokens"))
-      .orderBy("doc_id")
   }
 
   val bpeTokenCountSql: String =
@@ -68,7 +66,6 @@ object TextQueries {
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .withColumn("bin", ntile(4).over(w).cast("bigint"))
-      .orderBy("doc_id")
   }
 
   val ntileQualityBinsSql: String =
@@ -91,7 +88,6 @@ object TextQueries {
         when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de"), "en")
           .when(col("s_es") >= col("s_de"), "es")
           .otherwise("de"))
-      .orderBy("doc_id")
   }
 
   val langIdHeuristicSql: String =
@@ -125,7 +121,6 @@ object TextQueries {
         (col("n").cast("double") /
           sum("n").over(Window.partitionBy("lang")).cast("double")).as("share_of_lang"),
         (col("lang") === col("pred_lang")).as("correct"))
-      .orderBy("lang", "pred_lang")
   }
 
   val langidConfusionSql: String =
@@ -159,7 +154,6 @@ object TextQueries {
         (col("n_stop").cast("double") / col("n_tokens")).as("stop_ratio"),
         (least(col("n_tokens") / lit(50.0), lit(1.0)) * 0.5 +
           (col("n_stop").cast("double") / col("n_tokens")) * 0.5).as("quality"))
-      .orderBy("doc_id")
 
   val qualityScoreSql: String =
     """SELECT doc_id, n_tokens,
@@ -242,7 +236,6 @@ object TextQueries {
       .withColumn("rep_share",
         (col("grams_total") - col("grams_distinct")).cast("double")
           / col("grams_total").cast("double"))
-      .orderBy("source")
 
   val repNgramProfileSql: String =
     s"""WITH g AS (
@@ -283,7 +276,6 @@ object TextQueries {
         wordsOk.as("words_ok"), meanOk.as("mean_ok"),
         maxOk.as("max_ok"), stopOk.as("stop_ok"),
         (wordsOk && meanOk && maxOk && stopOk).as("pass"))
-      .orderBy("doc_id")
   }
 
   val gopherQualitySql: String =
@@ -407,7 +399,6 @@ object TextQueries {
   def docFingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), PolyHash.hash(col("text")).as("fp"), col("n_chars"))
-      .orderBy("doc_id")
 
   val docFingerprintSql: String =
     s"""SELECT doc_id,
@@ -446,8 +437,6 @@ object TextQueries {
       .rowsBetween(Window.unboundedPreceding, -1)
     lvl.withColumn("on_frontier",
         coalesce(col("n_tokens") < min("n_tokens").over(prior), lit(true)))
-    // No trailing sort: driver compare is order-insensitive and the
-    // level relation is tiny but window-produced (sampling would re-run it).
   }
 
   val paretoFrontierSql: String =
@@ -509,7 +498,6 @@ object TextQueries {
             .otherwise(x)
         }), " ").as("masked_text"))
       .filter(col("n") > 0)
-      .orderBy("doc_id")
   }
 
   val mlmMaskPlanSql: String =
@@ -549,7 +537,6 @@ object TextQueries {
   def spanCorruptionPlan(spark: SparkSession, dir: String): DataFrame =
     graft.operators.TextOps.spanCorruptionPlan(
         Tables.documents(spark, dir), "doc_id", "text", everyN = 20, spanLen = 3)
-      .orderBy("doc_id")
 
   val spanCorruptionPlanSql: String =
     s"""WITH t AS (
@@ -612,7 +599,6 @@ object TextQueries {
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)).cast("bigint"))
       .filter(col("rn") <= 3)
-    // No trailing sort: its sampling pass re-runs the tf/df joins.
   }
 
   val tfidfTopTermsSql: String =
@@ -798,7 +784,6 @@ object TextQueries {
       .filter(pmod(PolyHash.hash(concat(col("doc_id").cast("string"), lit(":s42"))),
         lit(100)) < 10)
       .select("doc_id", "lang", "n_chars")
-      .orderBy("doc_id")
 
   val hashSampleSql: String =
     s"""SELECT doc_id, lang, n_chars FROM documents
@@ -813,7 +798,6 @@ object TextQueries {
     graft.operators.TextOps.chunkTokens(
         Tables.documents(spark, dir), "doc_id", "text",
         chunkSize = 32, overlap = 8)
-      .orderBy("doc_id", "chunk_no")
 
   val docChunkingSql: String =
     """WITH t AS (
@@ -838,7 +822,6 @@ object TextQueries {
           chunkSize = 32, overlap = 0),
         "doc_id", "chunk_no", "n_tokens", shards = 8, budget = 128)
       .toDF()
-      .orderBy("shard", "seq_no")
 
   /** Chunk + greedy-pack CTE chain over `srcRel(doc_id, text)` — shared by
     * pack_sequences and corpus_pipeline. `ch` is MATERIALIZED: the
@@ -894,7 +877,6 @@ object TextQueries {
         when(col("n_grams") > 0,
           lit(1.0) - col("n_distinct").cast("double") / col("n_grams").cast("double"))
           .otherwise(lit(0.0)))
-      .orderBy("doc_id")
   }
 
   val repetitionRatioSql: String =
@@ -922,7 +904,6 @@ object TextQueries {
       .select(col("event_id"),
         regexp_replace(col("props"), "\\d+", "<NUM>").as("redacted"),
         regexp_count(col("props"), lit("\\d+")).cast("bigint").as("n_redacted"))
-      .orderBy("event_id")
 
   val textRedactSql: String =
     """SELECT event_id,
@@ -941,7 +922,6 @@ object TextQueries {
     Tables.documents(spark, dir)
       .filter(h < rate)
       .select("doc_id", "lang", "n_chars")
-      .orderBy("doc_id")
   }
 
   val stratifiedSampleSql: String =
@@ -999,7 +979,6 @@ object TextQueries {
           chunkSize = 32, overlap = 0),
         "doc_id", "chunk_no", "n_tokens", shards = 8, budget = 128)
       .toDF()
-      .orderBy("shard", "seq_no")
   }
 
   val corpusPipelineSql: String =
@@ -1046,7 +1025,6 @@ object TextQueries {
     per.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("n_tokens"),
         (col("total").cast("double") / (col("k") * col("n_tokens")).cast("double")).as("weight"))
-      .orderBy("source")
   }
 
   val sourceMixWeightsSql: String =
@@ -1102,7 +1080,6 @@ object TextQueries {
     graft.operators.PrefixScan
       .runningSum(scored, Nil, "n_tokens", "cum_tokens", col("n_chars").desc, col("doc_id"))
       .filter(col("cum_tokens") <= budget)
-      .orderBy("doc_id")
   }
 
   val tokenBudgetSampleSql: String =
@@ -1136,7 +1113,6 @@ object TextQueries {
         element_at(col("lens"),
           floor((size(col("lens")) + 1) / 2).cast("int")).as("median_len"),
         col("total_chars"))
-      .orderBy("doc_id")
   }
 
   val arrayStatsSql: String =
@@ -1164,7 +1140,6 @@ object TextQueries {
       .limit(100)
       .withColumn("vocab_id",
         row_number().over(Window.orderBy(col("n").desc, col("word"))).cast("bigint"))
-      .orderBy("vocab_id")
   }
 
   val vocabBuildSql: String =
@@ -1195,7 +1170,6 @@ object TextQueries {
         array_join(
           transform(array_sort(collect_list(struct(col("pos"), col("tid")))),
             s => s.getField("tid").cast("string")), ",").as("token_ids"))
-      .orderBy("doc_id")
   }
 
   val encodeTokensSql: String =
@@ -1239,7 +1213,6 @@ object TextQueries {
       .crossJoin(broadcast(tot))
       .filter(col("est").cast("double") >= lit(0.02) * col("total").cast("double"))
       .select(col("term"), col("est"), col("exact"))
-      .orderBy("term")
   }
 
   val cmsHeavyHittersSql: String = {
@@ -1292,7 +1265,6 @@ object TextQueries {
           array_sort(collect_list(struct(col("doc_id"), col("tf")))),
           s => concat(s.getField("doc_id").cast("string"), lit(":"),
             s.getField("tf").cast("string"))), ",").as("postings"))
-      .orderBy("term")
 
   val postingListsSql: String =
     """WITH tf AS (
@@ -1412,9 +1384,6 @@ object TextQueries {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         (sum(col("pi")).cast("double") / (lit(1e9) * count(lit(1)))).as("avg_p"))
-    // No trailing sort: a global orderBy's RangePartitioning sampling pass
-    // re-executes this whole unpinned upstream (the round-3 range_join
-    // lesson, SURVEY §7.6) — result ordering belongs to the consumer.
   }
 
   val lmScoreSql: String =
@@ -1457,9 +1426,6 @@ object TextQueries {
         sum(when(col("df") === 1L, 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty",
         col("n_novel").cast("double") / col("n_grams").cast("double"))
-    // No trailing sort: the sampling pass of a global orderBy would run
-    // the gram inverted-index join twice (driver-measured 3.4 s → the #3
-    // slowest query in round 5 for exactly this reason).
   }
 
   val ngramNoveltySql: String =
@@ -1495,7 +1461,6 @@ object TextQueries {
       .agg(graft.functions.TopKAggregator.topK(10)(col("doc_id"), -col("u")).as("t"))
       .select(col("lang"), posexplode(col("t.ids")).as(Seq("pos", "doc_id")))
       .select(col("lang"), (col("pos") + 1).cast("bigint").as("rank"), col("doc_id"))
-      .orderBy("lang", "rank")
   }
 
   val reservoirPerGroupSql: String = {
@@ -1538,7 +1503,6 @@ object TextQueries {
         (col("n_docs") * col("max_tokens") - col("sum_tokens")).as("padding_waste"),
         (col("sum_tokens").cast("double") /
           (col("n_docs") * col("max_tokens")).cast("double")).as("efficiency"))
-      .orderBy("batch_no")
   }
 
   val paddingWasteSql: String =
@@ -1618,7 +1582,6 @@ object TextQueries {
         regexp_count(col("text"), lit(digits)).cast("bigint").as("n_digit_runs"))
       .withColumn("has_pii",
         col("n_emails") + col("n_urls") + col("n_digit_runs") > 0)
-      .orderBy("doc_id")
   }
 
   val piiInventorySql: String =
@@ -1662,7 +1625,6 @@ object TextQueries {
         sum("nt").as("tokens_before"),
         sum(when(col("kept"), col("nt")).otherwise(0L)).as("tokens_kept"),
         max("rate").as("rate"))
-      .orderBy("source")
   }
 
   val mixApplySql: String = {
@@ -1784,7 +1746,6 @@ object TextQueries {
   def unigramTrain(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Unigram.train(requireDpUnroll(Tables.documents(spark, dir)), "text",
         iters = UnigramIters, topK = UnigramTopK)
-      .orderBy("iter", "piece")
 
   private val UnigramIters = 3
   private val UnigramTopK = 48
@@ -1907,7 +1868,6 @@ object TextQueries {
       .agg(count(lit(1)).as("n_words"), sum(col("units")).cast("bigint").as("n_units"))
       .select(col("doc_id"), col("n_words"), col("n_units"),
         (col("n_units").cast("double") / col("n_words")).as("units_per_word"))
-      .orderBy("doc_id")
   }
 
   val unigramApplySql: String = {
@@ -1959,7 +1919,6 @@ object TextQueries {
       .select(col("source"), col("n_words"), col("bpe_units"), col("uni_units"),
         (col("bpe_units").cast("double") / col("n_words")).as("bpe_fertility"),
         (col("uni_units").cast("double") / col("n_words")).as("uni_fertility"))
-      .orderBy("source")
   }
 
   val tokenizerCompareSql: String =
@@ -2002,7 +1961,6 @@ object TextQueries {
         sum(col("nm")).cast("bigint").as("n_multi_chars"))
       .select(col("source"), col("n_chars"), col("n_multi_chars"),
         (col("n_multi_chars").cast("double") / col("n_chars")).as("multi_char_coverage"))
-      .orderBy("source")
   }
 
   val unigramCoverageSql: String = {
@@ -2029,7 +1987,7 @@ object TextQueries {
     * reproducible across runs, engines, and partitionings, like
     * `mlm_mask_plan` / `span_corruption_plan`. Entirely scan-local
     * column math (size + one hash + string repeat) — ZERO data shuffles
-    * at any corpus size; the result sort is the only exchange. */
+    * at any corpus size. */
   def sftLossMask(spark: SparkSession, dir: String): DataFrame = {
     val toks = graft.operators.TextOps.words(col("text"))
     Tables.documents(spark, dir)
@@ -2045,7 +2003,6 @@ object TextQueries {
           col("n_tokens").cast("double")).as("loss_ratio"),
         concat(expr("repeat('0', CAST(prompt_len AS INT))"),
           expr("repeat('1', CAST(n_tokens - prompt_len AS INT))")).as("loss_mask"))
-      .orderBy("doc_id")
   }
 
   val sftLossMaskSql: String = {
@@ -2088,7 +2045,6 @@ object TextQueries {
         col("n_alpha_runs"),
         (col("n_chars").cast("double") / col("n_tokens").cast("double")).as("chars_per_token"),
         (col("n_alpha_runs").cast("double") / col("n_tokens").cast("double")).as("alpha_per_token"))
-      .orderBy("lang")
   }
 
   val tokenizerFertilitySql: String =
@@ -2124,7 +2080,6 @@ object TextQueries {
           col("sq_sum").cast("double")).as("weight"),
         (((col("n_docs") * col("n_docs")).cast("double") /
           col("sq_sum").cast("double")) * 10000.0).as("exp_docs_at_10k"))
-      .orderBy("source")
   }
 
   val temperatureMixSql: String =
@@ -2157,7 +2112,6 @@ object TextQueries {
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
       .withColumn("fill_ratio", col("n_tokens").cast("double") / lit(budget.toDouble))
-      .orderBy("shard_id")
   }
 
   val shardPlanSql: String =
@@ -2201,7 +2155,6 @@ object TextQueries {
       .select(col("doc_id"), col("source"), col("r"), col("si"),
         (col("r") * col("k") + col("si")).as("position"))
       .filter(col("position") < 60)
-      .orderBy("position")
   }
 
   val interleaveSourcesSql: String = {
@@ -2240,7 +2193,6 @@ object TextQueries {
       .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_tokens"))
       .withColumn("lang_share", col("n_docs").cast("double") /
         sum("n_docs").over(Window.partitionBy("lang")).cast("double"))
-      .orderBy("lang", "split")
   }
 
   val datasetSplitSql: String = {
@@ -2285,7 +2237,6 @@ object TextQueries {
         sum(pow(lit(2.0), -col("max_rho"))).as("s_present"))
       .select(col("source"), col("n_used"),
         (lit(0.709) * 64 * 64 / (col("s_present") + (lit(64) - col("n_used")))).as("estimate"))
-      .orderBy("source")
   }
 
   val hllBySourceSql: String =
@@ -2350,7 +2301,6 @@ object TextQueries {
       .select(col("s1"), col("s2"), col("est_a"), col("est_b"),
         col("est_union"), col("est_inter"),
         (col("est_inter") / col("est_union")).as("jaccard"))
-      .orderBy("s1", "s2")
   }
 
   val hllSourceOverlapSql: String =
@@ -2541,7 +2491,6 @@ object TextQueries {
         size(col("r_bi")).cast("bigint").as("n2_ref"),
         (size(array_intersect(col("c_bi"), col("r_bi"))).cast("double") /
           greatest(size(col("r_bi")), lit(1)).cast("double")).as("rouge2_recall"))
-      .orderBy("cand_id")
   }
 
   val rougePairsSql: String = {
@@ -2601,7 +2550,6 @@ object TextQueries {
       .select(col("lang_a"), col("lang_b"), col("n_shared"), col("na"), col("nb"),
         (col("n_shared").cast("double") /
           (col("na") + col("nb") - col("n_shared")).cast("double")).as("jaccard"))
-      .orderBy("lang_a", "lang_b")
   }
 
   val langGramOverlapSql: String = {
@@ -2697,7 +2645,6 @@ object TextQueries {
       .filter(col("n_docs") >= 2)
       .select(col("prefix"), col("n_docs"),
         ((col("n_docs") - 1L) * 8L).as("tokens_saved"))
-      .orderBy(col("n_docs").desc, col("prefix").asc)
   }
 
   val prefixShareSql: String =
@@ -2736,7 +2683,6 @@ object TextQueries {
         col("sum_qmicro").cast("double") / col("n").cast("double") / 1000000.0)
       .withColumn("accuracy", col("n_pos").cast("double") / col("n").cast("double"))
       .withColumn("gap", abs(col("accuracy") - col("mean_conf")))
-      .orderBy("bin")
   }
 
   val calibrationBinsSql: String =
@@ -2846,7 +2792,6 @@ object TextQueries {
       .agg(count(lit(1)).as("new_types"))
     graft.operators.PrefixScan
       .runningSum(perBucket, Nil, "new_types", "cum_types", col("bucket"))
-      .orderBy("bucket")
   }
 
   val vocabGrowthSql: String =
@@ -2879,7 +2824,6 @@ object TextQueries {
       .groupBy("source")
       .agg(count(lit(1)).as("n_types"), sum("n").as("n_tokens"))
       .withColumn("ttr", col("n_types").cast("double") / col("n_tokens").cast("double"))
-      .orderBy("source")
   }
 
   val ttrBySourceSql: String =
@@ -2918,7 +2862,6 @@ object TextQueries {
       .withColumn("chi2_pico",
         sum(floor(col("contrib") * 1e12).cast("bigint")).over(Window.partitionBy()))
       .withColumn("chi2", col("chi2_pico").cast("double") / 1e12)
-      .orderBy("lang", "source")
   }
 
   val chi2IndependenceSql: String =
@@ -3096,7 +3039,6 @@ object TextQueries {
       .select(col("epoch"), col("source"), col("n_docs"), col("share"),
         ((lit(1.0) - anneal) * (lit(1.0) / col("k").cast("double")) +
           anneal * col("share")).as("weight"))
-      .orderBy("epoch", "source")
   }
 
   val curriculumScheduleSql: String =
@@ -3180,7 +3122,6 @@ object TextQueries {
       .withColumn("rank", row_number().over(w).cast("bigint"))
       .filter(col("rank") <= 5)
       .select(col("term"), col("w").as("exp_term"), col("tf"), col("rank"))
-      .orderBy("term", "rank")
   }
 
   val queryExpansionSql: String =
@@ -3216,7 +3157,6 @@ object TextQueries {
       .withColumn("pos", array_position(col("ws"), col("term")))
       .select(col("term"), col("rn"), col("doc_id"), col("pos"),
         array_join(slice(col("ws"), start.cast("int"), lit(5)), " ").as("snippet"))
-      .orderBy("term", "rn")
   }
 
   val searchSnippetsSql: String =
@@ -3268,7 +3208,6 @@ object TextQueries {
       .select(col("rank").as("top_k"), col("cum_freq"),
         lit(total).as("total"), lit(nTypes).as("n_types"),
         (col("cum_freq").cast("double") / lit(total).cast("double")).as("coverage"))
-      .orderBy("top_k")
   }
 
   val tokenCoverageSql: String =
@@ -3351,7 +3290,6 @@ object TextQueries {
         when(aWins, col("b_q")).otherwise(col("a_q")).as("rejected_q"),
         (when(aWins, col("a_q")).otherwise(col("b_q")) -
           when(aWins, col("b_q")).otherwise(col("a_q"))).as("margin"))
-      .orderBy("pair_id")
   }
 
   val dpoPairsSql: String =
@@ -3393,7 +3331,6 @@ object TextQueries {
       .select(col("source"), col("n_tokens"), col("n_types"),
         (col("num").cast("double") /
           (col("n_tokens") * (col("n_tokens") - 1)).cast("double")).as("simpson"))
-      .orderBy("source")
   }
 
   val simpsonDiversitySql: String =
@@ -3421,7 +3358,6 @@ object TextQueries {
         sum(when(col("n") === 1, 1L).otherwise(0L)).as("n_hapax"))
       .select(col("source"), col("n_types"), col("n_hapax"),
         (col("n_hapax").cast("double") / col("n_types").cast("double")).as("hapax_ratio"))
-      .orderBy("source")
   }
 
   val hapaxRatioSql: String =
@@ -3458,7 +3394,6 @@ object TextQueries {
           (col("n_docs") * col("seq_len")).cast("double")).as("slot_efficiency"),
         (col("truncated_tokens").cast("double") /
           col("total_tokens").cast("double")).as("truncation_share"))
-      .orderBy("seq_len")
   }
 
   val seqlenSweepSql: String =
@@ -3502,7 +3437,6 @@ object TextQueries {
     ranked.join(docMeta, "doc_id")
       .select(col("step"), col("pos_in_batch"), col("doc_id"),
         col("source"), col("lang"), col("n_tokens"))
-      .orderBy("step", "pos_in_batch")
   }
 
   val batchReplaySql: String = {
@@ -3540,7 +3474,6 @@ object TextQueries {
       .withColumn("rk", row_number().over(
         Window.partitionBy("w1").orderBy(col("cnt").desc, col("w2").asc)).cast("bigint"))
       .filter(col("rk") <= 3)
-      .orderBy("w1", "rk")
   }
 
   val nextTokenTopkSql: String =
@@ -3585,7 +3518,6 @@ object TextQueries {
         Window.partitionBy("source").orderBy(col("chi2_score").desc, col("term").asc))
         .cast("bigint"))
       .filter(col("rk") <= 3)
-      .orderBy("source", "rk")
   }
 
   val sourceTermSignaturesSql: String =
@@ -3624,7 +3556,6 @@ object TextQueries {
       .select(col("doc_id"),
         concat(lit("{\"prompt\": \""), prompt,
           lit("\", \"completion\": \""), completion, lit("\"}")).as("line"))
-      .orderBy("doc_id")
   }
 
   val sftRenderSql: String =
@@ -3658,7 +3589,6 @@ object TextQueries {
         col("freq").cast("double") /
           lag("freq", 1).over(Window.orderBy("rank")).cast("double"))
       .select("rank", "term", "freq", "decay")
-      .orderBy("rank")
   }
 
   val zipfProfileSql: String =
@@ -3681,8 +3611,7 @@ object TextQueries {
     * zorder_code) — proving the GraftExtensions FunctionRegistry
     * surface gives a SQL-only client the same primitives the Scala API
     * uses, checked against the same DuckDB register/bit replications as
-    * their host queries. Scan-local expressions: the result sort is the
-    * only exchange. */
+    * their host queries. Scan-local expressions: no exchange. */
   def sqlNativeFunctions(spark: SparkSession, dir: String): DataFrame = {
     Tables.registerViews(spark, dir)
     spark.sql(
@@ -3691,7 +3620,7 @@ object TextQueries {
         |  simhash32(transform(array_distinct(filter(split(text, ' '), x -> x != '')),
         |                      w -> poly_hash(w))) AS sh,
         |  zorder_code(doc_id, n_chars) AS z
-        |FROM documents ORDER BY doc_id""".stripMargin)
+        |FROM documents""".stripMargin)
   }
 
   val sqlNativeFunctionsSql: String = {

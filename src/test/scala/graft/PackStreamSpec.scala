@@ -70,10 +70,11 @@ class PackStreamSpec extends AnyFunSuite {
 
   test("one-shot batch run equals the batch pack_context_bins query") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = graft.queries.MediaStreamQueries.queries("stream_pack")(spark, dir)
-      .collect().map(_.toSeq).toSeq
-    val batch = graft.queries.CurationQueries.queries("pack_context_bins")(spark, dir)
-      .collect().map(_.toSeq).toSeq
+    // Query results are unordered: compare the rows in one canonical order.
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    val streamed = rows(graft.queries.MediaStreamQueries.queries("stream_pack")(spark, dir))
+    val batch = rows(graft.queries.CurationQueries.queries("pack_context_bins")(spark, dir))
     assert(streamed === batch)
     assert(batch.nonEmpty)
   }

@@ -268,7 +268,8 @@ class ScaleSmokeSpec extends AnyFunSuite {
     banned(wf)
     val stages = timed("windowFunnel over 1M events")(wf.collect())
     assert(stages.length === 3)
-    assert(stages(0).getLong(1) > 0L, "stage 1 must see views")
+    val rowsByStage = stages.map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rowsByStage("1_view") > 0L, "stage 1 must see views")
     GraftCaches.releaseAll()
   }
 
