@@ -24,7 +24,7 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // A failing query is REPORTED, never timed: returning 0s for a broken
-    // query would silently improve the total (round-2 VERDICT). The first
+    // query would silently improve the total. The first
     // failure message per query lands in the "errors" JSON map.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def run(name: String,
@@ -35,10 +35,9 @@ object Bench {
           s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")
         false
       }
-    // Median-of-3 timed runs (round-3 protocol was best-of-2; the judge
-    // measured the same plan at 2.35s vs 0.81s depending on run
-    // composition — min-of-2 is not robust to that drift, the median of
-    // three is). Driver heap is PINNED in build.sbt
+    // Median-of-3 timed runs: the same plan measured 2.35s vs 0.81s
+    // depending on run composition — min-of-2 is not robust to that
+    // drift, the median of three is. Driver heap is PINNED in build.sbt
     // (-Xmx${SPARK_DRIVER_MEM:-8g}, run/fork:=true) so heap-size-
     // dependent GC behavior can't vary between invocations. The explicit
     // System.gc() matters: Spark's ContextCleaner reclaims broadcast/
@@ -48,12 +47,10 @@ object Bench {
     // Per query: the three timed runs are kept as sorted [min, med, max]
     // — the median is the headline number, the spread makes composition
     // drift (cache/GC interference between neighboring queries) visible
-    // in the artifact itself instead of discovered by a judge re-run
-    // (round-4 VERDICT item 7).
-    // Per-query session-cost attribution (round-13 VERDICT 2: the
-    // driver/solo gap concentrates on the cache-heavy family — make the
-    // artifact itself show GC burden and working-set volume per query
-    // instead of leaving a judge to infer them). gcMs = driver-JVM GC
+    // in the artifact itself instead of discovered by a re-run.
+    // Per-query session-cost attribution: the driver/solo gap
+    // concentrates on the cache-heavy family, so the artifact itself
+    // shows GC burden and working-set volume per query. gcMs = driver-JVM GC
     // collection-time delta across the query's warm+timed window (local
     // mode: executors share this JVM, so it IS the session's GC);
     // pins/tracks = GraftCaches materializations created in that window
@@ -89,12 +86,12 @@ object Bench {
         else Some((1 to 3).map { _ =>
           spark.catalog.clearCache()
           GraftCaches.releaseAll()
-          // GC BETWEEN the timed runs, not only after all three: the
-          // round-8 artifact showed ascending min→max spreads (2.27 →
+          // GC BETWEEN the timed runs, not only after all three: an
+          // earlier artifact showed ascending min→max spreads (2.27 →
           // 15.44 s on the same plan) from storage/GC debt accumulating
           // ACROSS a query's three runs — checkpoint blocks and driver
           // state freed only via weak refs need a real GC to go away
-          // before the next timed run starts (round-8 VERDICT item 1).
+          // before the next timed run starts.
           System.gc()
           val t0 = System.nanoTime()
           run(name, fn)
@@ -113,7 +110,7 @@ object Bench {
     val firstPass = ordered.flatMap { case (name, fn) =>
       trio(name, fn).map(name -> _)
     }
-    // SELF-HEALING pass (round-9 VERDICT 1): a query whose three timed
+    // SELF-HEALING pass: a query whose three timed
     // runs spread more than 3x max/min was measured under interference —
     // co-tenant load, a neighboring query's page-cache eviction — not a
     // property of the plan (two consecutive rounds needed a judge solo
@@ -185,7 +182,7 @@ object Bench {
       .map { case (k, v) => s"${jstr(k)}:${v(1)}" }.mkString("{", ",", "}")
     // Slowest-5 session-cost detail rides in the trailer too: the
     // driver's stdout capture keeps only a 2000-char tail, and the
-    // driver/solo gap question (round-13 VERDICT 2) is exactly about
+    // driver/solo gap question is exactly about
     // these queries — their GC share must survive truncation.
     val slowestGc = results.sortBy(-_._2(1)).take(5)
       .map { case (k, _) => s"${jstr(k)}:${gcMs.getOrElse(k, -1L)}" }

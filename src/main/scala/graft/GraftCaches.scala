@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * relations — see Dedup/Similarity). Those caches exist to stop Catalyst's
   * projection collapse from re-evaluating an expensive signature expression
   * tree on both sides of a self-join (measured 25x); they are deliberate.
-  * What was missing (round-2 ADVICE/VERDICT) was the release side: a
+  * The registry adds the release side: without it a
   * library user running dedup then similarity in one long-lived session
   * accumulated executor storage with no handle to free it.
   *
@@ -32,9 +32,9 @@ object GraftCaches {
   private val pinnedRdds = new ConcurrentLinkedQueue[RDD[_]]()
 
   // Lifetime creation counters (never reset): Bench diffs them around
-  // each query to attribute working-set volume per query (round-13
-  // VERDICT 2 — the driver/solo gap concentrates on the cache-heavy
-  // family, so the artifact must show WHICH queries build how much).
+  // each query to attribute working-set volume per query (the
+  // driver/solo gap concentrates on the cache-heavy family, so the
+  // artifact must show WHICH queries build how much).
   // There is no hit/miss notion to count: the registry is deliberately
   // build-and-release (Verify/Bench release between queries), so every
   // pin/track is a fresh materialization — creation volume IS the
@@ -70,10 +70,10 @@ object GraftCaches {
     * At cluster scale the same role is played by writing the round's
     * state to a table.
     *
-    * Release (round-8 VERDICT): ContextCleaner frees checkpoint blocks
+    * Release: ContextCleaner frees checkpoint blocks
     * only after the frame is GC'd — on a large driver heap that can be
-    * MANY queries later, accumulating executor storage exactly like the
-    * pre-round-2 operator caches. So the checkpointed RDD is recorded
+    * MANY queries later, accumulating executor storage exactly like
+    * untracked operator caches. So the checkpointed RDD is recorded
     * here and [[releaseAll]] unpersists it explicitly: a pinned frame is
     * never legitimately re-used after its query's action completes. */
   def pin(df: DataFrame): DataFrame = pin(df, eager = true)
@@ -98,8 +98,7 @@ object GraftCaches {
     * Prefer `eager = true` when several SIBLING stages of one action (or
     * concurrent jobs) consume the pin: lazy materialization makes their
     * tasks race on the block-store locks, serializing on whichever task
-    * computes each partition first (measured on pagerank_suppliers,
-    * round 15). */
+    * computes each partition first (measured on pagerank_suppliers). */
   def pin(df: DataFrame, eager: Boolean): DataFrame = {
     val cp = df.localCheckpoint(eager = eager)
     pinnedRdd(cp).foreach(pinnedRdds.add)

@@ -34,8 +34,8 @@ object SparkEntry {
 
   /** Merges per-module maps, failing LOUDLY on a duplicate query name —
     * a plain `++` would let a later module silently shadow an earlier
-    * query (round 9 caught `pack_sequences` being swallowed exactly this
-    * way: the surface shrank by one with every gate still green). */
+    * query (`pack_sequences` was once swallowed exactly this way: the
+    * surface shrank by one with every gate still green). */
   private def merged[V](parts: Iterator[Map[String, V]]): Map[String, V] =
     parts.reduce { (a, b) =>
       val dup = a.keySet.intersect(b.keySet)

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * time after the full dump pass — same long-lived session, same heap,
   * interleaved with the whole set, i.e. the driver's run composition —
   * and compares a canonical result hash against the pass-1 parquet dump.
-  * Any self-mismatch is a nondeterminism bug (round-4 VERDICT item 1);
+  * Any self-mismatch is a nondeterminism bug;
   * the process exits nonzero so the instability cannot pass silently. */
 object Verify {
 
@@ -48,7 +48,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: $msg")
       } finally GraftCaches.releaseAll()
     }
-    // Repeat-stability pass (round-4 VERDICT item 1): under the same heap
+    // Repeat-stability pass: under the same heap
     // and run composition as the dump pass, every query must reproduce
     // its own pass-1 result bit-for-bit. Queries that already failed the
     // dump pass are excluded: they have no parquet to compare against and
@@ -88,7 +88,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Failure record (round-6 VERDICT item 3): a throwing query must leave a
+    // Failure record: a throwing query must leave a
     // trace in the correctness artifacts, not just a stderr line — otherwise
     // the round's CORRECTNESS json silently shrinks and reads fully green.
     val failedJson = failed

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
 object Bpe {
 
   /** The (w, f) word-frequency relation BOTH trainers here ([[Bpe]] and
-    * [[Unigram]]) start from — factored out (round-15, guide §2.4) so a
+    * [[Unigram]]) start from — factored out (guide §2.4) so a
     * caller running the two trainers over the SAME corpus
     * (tokenizer_compare) can build and pin it once instead of paying the
     * corpus scan + explode + aggregate twice. */
@@ -72,7 +72,7 @@ object Bpe {
     val vocab0 = wc
       .select(col("w"), col("f"),
         concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" ")).as("s"))
-    // Lazy pins (round-14): each round's argmax collect is the
+    // Lazy pins: each round's argmax collect is the
     // materializing action, so the dedicated eager-checkpoint job per
     // round folds into a job the loop was running anyway.
     var state = graft.GraftCaches.pin(vocab0, eager = false)

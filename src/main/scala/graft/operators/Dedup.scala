@@ -84,7 +84,7 @@ object Dedup {
   /** Capped bucket self-join over a precomputed (id, band, key) relation.
     *
     * The band relation is PINNED (eager localCheckpoint), not cached
-    * (round-15, guide §3.3): it is consumed by the bucket-cap aggregate
+    * (guide §3.3): it is consumed by the bucket-cap aggregate
     * and by BOTH sides of the self-join — sibling stages of one action
     * that AQE runs concurrently. A cache (a) does not truncate the
     * logical plan, so the whole shingle→hash→band expression tree was
@@ -116,8 +116,8 @@ object Dedup {
     * replaces the exact verify when ±1/8 resolution suffices. */
   def minhashEstimatePairs(docs: DataFrame, id: String, text: String,
       maxBucket: Int = 100): DataFrame = {
-    // Pinned (eager) since round 15 — see [[candidatePairsFromBands]]:
-    // the gram relation feeds the band build AND sibling join sides.
+    // Pinned (eager) — see [[candidatePairsFromBands]]: the gram
+    // relation feeds the band build AND sibling join sides.
     val g = graft.GraftCaches.pin(shingleSets(docs, id, text), eager = true)
     val sig = g.select(
       col(id) +: MinhashSeeds.zipWithIndex.map { case ((a, b), i) =>
@@ -296,7 +296,7 @@ object Dedup {
     * algorithms, one hash. */
   def duplicateComponentsStar(edges: DataFrame, maxIters: Int = 20): DataFrame = {
     // Lazy pins: the per-round fixpoint signature below is the
-    // materializing action (round-14; see [[duplicateComponentsConverged]]).
+    // materializing action (see [[duplicateComponentsConverged]]).
     var e = graft.GraftCaches.pin(
       edges.select(least(col("doc_a"), col("doc_b")).as("a"),
           greatest(col("doc_a"), col("doc_b")).as("b"))
@@ -352,7 +352,7 @@ object Dedup {
     // The fixpoint test above is a 4-field SIGNATURE (count + endpoint
     // sums + hash-sum); a collision would silently accept a non-star
     // edge set and the read-off would emit duplicate doc_id rows with
-    // multiple keepers (round-13 ADVICE). So assert the star-forest
+    // multiple keepers. So assert the star-forest
     // SHAPE exactly before reading it off: every member hangs off
     // exactly one root, and no root is itself a member. Both checks run
     // on the FINAL edge set only (|E| = members, one aggregate + one
@@ -413,8 +413,8 @@ object Dedup {
     * the exact operator instead of a SQL oracle. */
   def contaminationOverlapBloom(docs: DataFrame, id: String, text: String,
       benchPred: Column, threshold: Double, fpp: Double = 0.01): DataFrame = {
-    // Pinned (eager) since round 15 — see [[candidatePairsFromBands]]:
-    // the gram relation feeds the band build AND sibling join sides.
+    // Pinned (eager) — see [[candidatePairsFromBands]]: the gram
+    // relation feeds the band build AND sibling join sides.
     val g = graft.GraftCaches.pin(shingleSets(docs, id, text), eager = true)
     val bench = g.filter(benchPred).select(explode(col("hs")).as("h")).distinct()
     val nBench = math.max(bench.count(), 1L) // bounded: one count over distinct grams
@@ -445,8 +445,8 @@ object Dedup {
     * form the benchmark and are excluded from the output. */
   def contaminationOverlap(docs: DataFrame, id: String, text: String,
       benchPred: Column, threshold: Double): DataFrame = {
-    // Pinned (eager) since round 15 — see [[candidatePairsFromBands]]:
-    // the gram relation feeds the band build AND sibling join sides.
+    // Pinned (eager) — see [[candidatePairsFromBands]]: the gram
+    // relation feeds the band build AND sibling join sides.
     val g = graft.GraftCaches.pin(shingleSets(docs, id, text), eager = true)
     val bench = g.filter(benchPred)
       .select(explode(col("hs")).as("h")).distinct()
@@ -475,8 +475,8 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
       threshold: Double): DataFrame = {
     // One shingle pass feeds BOTH the band keys and the gram arrays.
-    // Pinned (eager) since round 15 — see [[candidatePairsFromBands]]:
-    // the gram relation feeds the band build AND sibling join sides.
+    // Pinned (eager) — see [[candidatePairsFromBands]]: the gram
+    // relation feeds the band build AND sibling join sides.
     val g = graft.GraftCaches.pin(shingleSets(docs, id, text), eager = true)
     val inter = size(array_intersect(col("ga"), col("gb")))
     candidatePairsFromBands(lshBandsFrom(g, id), id)
@@ -657,8 +657,8 @@ object Dedup {
     * one pass (the tracked shingle relation is shared by both sides). */
   def deltaDedup(docs: DataFrame, id: String, text: String, isNew: Column,
       threshold: Double = 0.5, maxBucket: Int = 100): DataFrame = {
-    // Pinned (eager) since round 15 — see [[candidatePairsFromBands]]:
-    // the gram relation feeds the band build AND sibling join sides.
+    // Pinned (eager) — see [[candidatePairsFromBands]]: the gram
+    // relation feeds the band build AND sibling join sides.
     val g = graft.GraftCaches.pin(shingleSets(docs, id, text), eager = true)
     val bands = lshBandsFrom(g, id)
     val ok = bands.groupBy("band", "key").agg(count(lit(1)).as("n"))
@@ -723,7 +723,7 @@ object Dedup {
         .withColumn("n", size(col("l"))))
     // Window starts are 1-based; guarded by n >= w (sequence would run
     // descending otherwise — the shingleHashes discipline).
-    // Window fingerprint (round 8, the shingleHashes discipline): hash
+    // Window fingerprint (the shingleHashes discipline): hash
     // each word once, fold the w word-hashes arithmetically per window
     // in the native WindowFoldHashes codegen expression (the array is
     // emitted in window order, so posexplode's 0-based pos + 1 IS the

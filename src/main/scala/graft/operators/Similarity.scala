@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.GraftCaches
 import graft.functions.{PolyHash, TopKAggregator}
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -22,12 +23,15 @@ import graft.functions.{PolyHash, TopKAggregator}
   *    surviving candidates, so the quadratic step is confined to
   *    bucket-local groups and the shuffle never carries vectors twice.
   *
+  * Every operator is composed from the private steps below, each written
+  * once: the (id, v, nrm) vector relation, the k-lowest-id seed
+  * centroids, nearest-centroid assignment, the vectors × centroids top-n
+  * ranking, the IVF probe-list candidates, the PQ lookup table and ADC
+  * scorer, the capped-cell pair join and the by-id pair verify.
+  *
   * All math is double-precision with a fixed left-to-right fold so results
   * are bit-reproducible across engines (the DuckDB oracles rebuild the same
-  * expression tree). Hot-path note: these are higher-order-function
-  * expressions (interpreted per element); if profiling shows them dominant
-  * at scale the dot product drops into a native codegen Expression with the
-  * same semantics.
+  * expression tree).
   */
 object Similarity {
 
@@ -48,8 +52,11 @@ object Similarity {
     * FunctionsSpec). */
   def dot(a: Column, b: Column): Column = graft.functions.VecDot(a, b)
 
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+  /** Cosine of vector columns `a` and `b` from their precomputed norms
+    * `na` and `nb`: dot(a, b) / (na * nb), the expression tree every
+    * oracle rebuilds. */
+  private[graft] def cosine(a: String, b: String, na: String, nb: String): Column =
+    dot(col(a), col(b)) / (col(na) * col(nb))
 
   /** Band key from `BandBits` random-hyperplane signs: global plane
     * j = band*BandBits + jj has component i (1-based)
@@ -63,42 +70,47 @@ object Similarity {
   def lshBandKey(v: Column, band: Int, bits: Int = BandBits): Column =
     graft.functions.LshBandKey.key(v, band, bits)
 
-  /** The cached ANN index relation: (id, v, nrm, key0..key{NumBands-1}).
-    * One pass computes vectors, norms, and all band keys; `cache`
-    * materializes it so the band join and the scoring join reuse it
-    * (Catalyst projection collapse would otherwise recompute the plane
-    * folds per consumer — see Dedup.lshCandidatePairs). At cluster scale,
-    * write this relation to a table instead. Registered with
-    * [[graft.GraftCaches]] so callers can release it after the consuming
-    * action. */
-  private[graft] def indexed(corpus: DataFrame, id: String, vec: String): DataFrame = {
-    val base = corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
+  /** The (id, v, nrm) vector relation: each vector cast to double once,
+    * with its L2 norm. */
+  private[graft] def vectors(corpus: DataFrame, id: String, vec: String): DataFrame =
+    corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    // PINNED (eager localCheckpoint) since round 15 — see [[embeddingRel]]:
-    // the index relation feeds the band build AND both sides of the
-    // scoring joins (sibling stages), where a cache's lock-serialized
-    // first materialization and per-reference plan inlining both cost.
-    graft.GraftCaches.pin(
-      (0 until NumBands).foldLeft(base) { (d, b) =>
+
+  /** The ANN index relation (id, v, nrm, key0..key{NumBands-1}), pinned
+    * (eager localCheckpoint): it feeds the band build AND both sides of
+    * the scoring joins, sibling stages of one action. A cache would
+    * serialize their first materialization on the block locks and
+    * re-inline the plane folds per reference (Catalyst projection
+    * collapse — see Dedup.lshCandidatePairs). At cluster scale, write
+    * this relation to a table instead. */
+  private[graft] def indexed(corpus: DataFrame, id: String, vec: String): DataFrame =
+    GraftCaches.pin(
+      (0 until NumBands).foldLeft(vectors(corpus, id, vec)) { (d, b) =>
         d.withColumn(s"key$b", lshBandKey(col("v"), b))
       }, eager = true)
-  }
 
-  /** The (id, v, nrm) embedding relation the semDedup family shares,
-    * materialized ONCE up front (eager pin, round 15): it is consumed by
-    * the centroid build, the assignment pass, and BOTH sides of the
-    * verify/truth joins — sibling stages of one action that AQE runs
-    * concurrently. A cache (a) does not truncate the logical plan (the
-    * scan+project subtree re-analyzed inline per reference) and (b) makes
-    * sibling consumers' tasks race on the block-store locks (measured:
-    * repeated 1-task stages at ~130 ms run / ~0 ms CPU). One dedicated
-    * materialization job; every reference then scans stored blocks. At
-    * cluster scale: write the normalized relation to a table. */
+  /** The vector relation pinned ONCE up front (eager localCheckpoint), for
+    * operators that read it from several sibling stages of one action
+    * (centroids, assignment, probes, both sides of the verify and truth
+    * joins). A cache would neither truncate the logical plan (the scan
+    * and projection re-analyzed per reference) nor keep sibling
+    * consumers' tasks off the block-store locks; the pin is one job,
+    * after which every reference scans stored blocks. At cluster scale:
+    * write the relation to a table. */
   private def embeddingRel(corpus: DataFrame, id: String, vec: String): DataFrame =
-    graft.GraftCaches.pin(
-      corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v")))),
-      eager = true)
+    GraftCaches.pin(vectors(corpus, id, vec), eager = true)
+
+  /** The (q_id, qv, q_nrm) query relation: the rows of `e` that `pred`
+    * selects. */
+  private[graft] def queryVectors(e: DataFrame, id: String, pred: Column): DataFrame =
+    e.filter(pred).select(col(id).as("q_id"), col("v").as("qv"), col("nrm").as("q_nrm"))
+
+  /** The `k` seed centroids (c_id, cv, c_nrm): the vectors with id < k —
+    * a deterministic, SQL-reproducible seeding the oracles mirror with
+    * `vec_id < k`. */
+  private def seedCentroids(e: DataFrame, id: String, k: Int): DataFrame =
+    e.filter(col(id) < k)
+      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
 
   /** (id, band, key) rows — the bucket-join relation (no vectors). */
   private[graft] def bandRows(e: DataFrame, id: String): DataFrame =
@@ -116,39 +128,47 @@ object Similarity {
       .select(col("q_id"), col("col.cid").as(id), col("col.sim").as("sim"),
         (col("pos") + 1).cast("bigint").as("rank"))
 
+  /** Score (q_id, id) candidates against their queries: the candidate's
+    * vector rejoins by id, the query's comes from the broadcast `q`.
+    * Emits (q_id, id, keep..., sim). */
+  private[graft] def scoreCandidates(cand: DataFrame, e: DataFrame, q: DataFrame,
+      id: String, keep: String*): DataFrame =
+    cand.join(e.select(col(id), col("v"), col("nrm")), id)
+      .join(broadcast(q), "q_id")
+      .select((Seq(col("q_id"), col(id)) ++ keep.map(col) :+
+        cosine("qv", "v", "q_nrm", "nrm").as("sim")): _*)
+
+  /** Candidate pairs (id_a, id_b) with both vectors joined back by id and
+    * their cosine: (id_a, id_b, sim). */
+  private def verifiedPairs(pairs: DataFrame, e: DataFrame, id: String): DataFrame =
+    pairs
+      .join(e.select(col(id).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
+      .join(e.select(col(id).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
+      .select(col("id_a"), col("id_b"), cosine("va", "vb", "na", "nb").as("sim"))
+
   /** Score each candidate pair ONCE, then mirror — (q_id, nbr, sim) for
-    * BOTH orientations of every (doc_a, doc_b) candidate (round-15, guide
-    * §2.3): the previous shape mirrored FIRST (unionAll of two selects
-    * over `cand`, executing the distinct band self-join twice) and pushed
-    * 2·|cand| rows through the two vector-attach joins. Scoring the
-    * unordered pair once halves the join input and the cosine work, and
-    * the explode emits both orientations in one pass. Bit-identical:
-    * dot(va,vb)=dot(vb,va) (same dimension order, IEEE multiplication
-    * commutes exactly) and na·nb=nb·na, so the mirrored sim is the same
-    * double the swapped-operand evaluation produced. */
+    * BOTH orientations of every (doc_a, doc_b) candidate. Mirroring first
+    * would run the band self-join twice and push 2·|cand| rows through the
+    * two vector-attach joins; the explode emits both orientations in one
+    * pass. Bit-identical: dot(va,vb)=dot(vb,va) (same dimension order,
+    * IEEE multiplication commutes exactly) and na·nb=nb·na, so the
+    * mirrored sim is the same double the swapped-operand evaluation
+    * produces. */
   private def scoredMirroredPairs(e: DataFrame, cand: DataFrame,
       id: String): DataFrame =
-    cand
-      .join(e.select(col(id).as("doc_a"), col("v").as("va"), col("nrm").as("na")), "doc_a")
-      .join(e.select(col(id).as("doc_b"), col("v").as("vb"), col("nrm").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
+    verifiedPairs(cand.select(col("doc_a").as("id_a"), col("doc_b").as("id_b")), e, id)
       .select(explode(array(
-        struct(col("doc_a").as("q_id"), col("doc_b").as("nbr"), col("sim")),
-        struct(col("doc_b").as("q_id"), col("doc_a").as("nbr"), col("sim")))).as("p"))
+        struct(col("id_a").as("q_id"), col("id_b").as("nbr"), col("sim")),
+        struct(col("id_b").as("q_id"), col("id_a").as("nbr"), col("sim")))).as("p"))
       .select(col("p.q_id").as("q_id"), col("p.nbr").as("nbr"), col("p.sim").as("sim"))
 
   /** Exact top-k: per query vector (small set, broadcast), the k nearest
     * corpus vectors by cosine; ties broken by candidate id. */
   def bruteForceTopK(corpus: DataFrame, id: String, vec: String,
       queryPred: Column, k: Int): DataFrame = {
-    val e = corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val q = e.filter(queryPred)
-      .select(col(id).as("q_id"), col("v").as("qv"), col("nrm").as("q_nrm"))
-    val scored = e.join(broadcast(q), col(id) =!= col("q_id"))
-      .select(col("q_id"), col(id),
-        (dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
+    val e = vectors(corpus, id, vec)
+    val scored = e.join(broadcast(queryVectors(e, id, queryPred)), col(id) =!= col("q_id"))
+      .select(col("q_id"), col(id), cosine("qv", "v", "q_nrm", "nrm").as("sim"))
     rankTopK(scored, id, k)
   }
 
@@ -158,53 +178,59 @@ object Similarity {
   def lshTopK(corpus: DataFrame, id: String, vec: String,
       queryPred: Column, k: Int): DataFrame = {
     val e = indexed(corpus, id, vec)
-    val bands = bandRows(e, id)
-    val q = e.filter(queryPred)
-    val qb = bandRows(q, id)
+    val qb = bandRows(e.filter(queryPred), id)
       .select(col(id).as("q_id"), col("band"), col("key"))
-    val cand = bands.as("c").join(broadcast(qb.as("q")),
+    val cand = bandRows(e, id).as("c").join(broadcast(qb.as("q")),
         col("c.band") === col("q.band") && col("c.key") === col("q.key") &&
           col(s"c.$id") =!= col("q.q_id"))
       .select(col("q.q_id").as("q_id"), col(s"c.$id").as(id))
       .distinct()
-    val scored = cand
-      .join(e.select(col(id), col("v"), col("nrm")), id)
-      .join(broadcast(q.select(col(id).as("q_id"), col("v").as("qv"),
-        col("nrm").as("q_nrm"))), "q_id")
-      .select(col("q_id"), col(id),
-        (dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
-    rankTopK(scored, id, k)
+    rankTopK(scoreCandidates(cand, e, queryVectors(e, id, queryPred), id), id, k)
   }
+
+  /** Every vector of `e` paired with every centroid of the broadcast `c`. */
+  private def withCentroids(e: DataFrame, id: String, c: DataFrame): DataFrame =
+    e.select(col(id), col("v"), col("nrm")).crossJoin(broadcast(c))
+
+  /** Nearest-centroid assignment (id, centroid_id, sim): broadcast of the
+    * tiny (c_id, cv, c_nrm) relation against one corpus scan, per-vector
+    * struct-max (ties → lowest centroid id) with map-side partial
+    * aggregation — no shuffle of vectors, the scale shape of an IVF index
+    * build. */
+  private def assignTo(e: DataFrame, id: String, c: DataFrame): DataFrame =
+    withCentroids(e, id, c)
+      .select(col(id),
+        struct(cosine("v", "cv", "nrm", "c_nrm").as("s"), (-col("c_id")).as("nc")).as("sc"))
+      .groupBy(id)
+      .agg(max(col("sc")).as("m"))
+      .select(col(id), (-col("m.nc")).as("centroid_id"), col("m.s").as("sim"))
+
+  /** Per vector, the `n` highest-cosine centroids of the (id, v, nrm,
+    * c_id, cv, c_nrm) `pairs`, in (sim desc, c_id asc) order: (id, tk)
+    * with `tk` the bounded-heap (ids, sims). */
+  private def topCells(pairs: DataFrame, id: String, n: Int): DataFrame =
+    pairs.select(col(id), cosine("v", "cv", "nrm", "c_nrm").as("sim"), col("c_id"))
+      .groupBy(id)
+      .agg(TopKAggregator.topK(n)(col("c_id").cast("long"), col("sim")).as("tk"))
+
+  /** The two nearest cells of every vector of `pairs` as (id, rnk,
+    * centroid_id), rnk 0 the nearest. The heap's (sim desc, c_id asc)
+    * order is [[assignTo]]'s tie-break, so rank 0 IS the top-1 assignment. */
+  private def topTwoCells(pairs: DataFrame, id: String): DataFrame =
+    topCells(pairs, id, 2)
+      .select(col(id), posexplode(col("tk.ids")))
+      .withColumnRenamed("pos", "rnk").withColumnRenamed("col", "centroid_id")
 
   /** IVF cell assignment: each vector joins the cell of its
     * most-cosine-similar centroid (ties → lowest centroid id). Centroids
     * are the `k` lowest-id vectors — a deterministic, SQL-reproducible
     * seeding (production would k-means them; the partitioning and probing
-    * plumbing is identical). The assignment is a broadcast of k tiny
-    * centroids against one corpus scan + a partial-aggregating
-    * per-vector max — no shuffle of vectors, the scale shape of an IVF
-    * index build. */
+    * plumbing is identical). */
   def ivfAssignments(corpus: DataFrame, id: String, vec: String,
       k: Int = 16): DataFrame = {
-    val e = indexed(corpus, id, vec)
-    val c = e.filter(col(id) < k)
-      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
-    assignTo(e, id, c)
+    val e = vectors(corpus, id, vec)
+    assignTo(e, id, seedCentroids(e, id, k))
   }
-
-  /** Nearest-centroid assignment: broadcast of the tiny (c_id, cv, c_nrm)
-    * relation against one corpus scan, per-vector struct-max (ties →
-    * lowest centroid id) with map-side partial aggregation. */
-  private def assignTo(e: DataFrame, id: String, c: DataFrame): DataFrame =
-    e.select(col(id), col("v"), col("nrm"))
-      .crossJoin(broadcast(c))
-      .select(col(id),
-        struct(
-          (dot(col("v"), col("cv")) / (col("nrm") * col("c_nrm"))).as("s"),
-          (-col("c_id")).as("nc")).as("sc"))
-      .groupBy(id)
-      .agg(max(col("sc")).as("m"))
-      .select(col(id), (-col("m.nc")).as("centroid_id"), col("m.s").as("sim"))
 
   /** Int8 quantization of an embedding column: per-vector symmetric
     * max-abs scaling, q_i = floor(x_i/scale + 0.5) with scale =
@@ -245,20 +271,17 @@ object Similarity {
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = corpus.sparkSession
-    val e = graft.GraftCaches.track(
-      corpus.select(col(id).cast("long").as("vid"), toDoubleVec(col(vec)).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
+    val e = GraftCaches.track(
+      vectors(corpus.select(col(id).cast("long").as("vid"), col(vec)), "vid", vec))
     def toCentroid(r: org.apache.spark.sql.Row): Centroid =
       Centroid(r.getLong(0), r.getSeq[Double](1), r.getDouble(2))
     val first = toCentroid(e.orderBy(col("vid")).limit(1).collect()(0))
     val chosen = scala.collection.mutable.ArrayBuffer(first)
     while (chosen.length < k) {
-      val cDf = spark.createDataset(chosen.toSeq)(
-        org.apache.spark.sql.Encoders.product[Centroid]).toDF()
       val picked = e
-        .crossJoin(broadcast(cDf))
+        .crossJoin(broadcast(toCentroidDf(spark, chosen.toSeq)))
         .select(col("vid"), col("v"), col("nrm"),
-          (lit(1.0) - dot(col("v"), col("cv")) / (col("nrm") * col("c_nrm"))).as("d"))
+          (lit(1.0) - cosine("v", "cv", "nrm", "c_nrm")).as("d"))
         .groupBy("vid").agg(min(col("d")).as("mind"))
         .filter(!col("vid").isin(chosen.map(_.c_id).toSeq: _*))
         .join(e, "vid")
@@ -279,31 +302,37 @@ object Similarity {
   /** IVF assignment against maxmin-seeded centroids — the quality-seeded
     * variant of [[ivfAssignments]] (probing plumbing identical). */
   def ivfKmeansPlusPlusAssignments(corpus: DataFrame, id: String, vec: String,
-      k: Int = 8): DataFrame = {
-    val e = corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    assignTo(e, id, kmeansPlusPlusCentroids(corpus, id, vec, k))
-  }
+      k: Int = 8): DataFrame =
+    assignTo(vectors(corpus, id, vec), id, kmeansPlusPlusCentroids(corpus, id, vec, k))
+
+  /** `x` rounded to integral micro-units and summed EXACTLY as an integer
+    * decimal, then cast back to double: addition is associative, so
+    * partial aggregation in any order gives the same double (a double sum
+    * would be run-dependent, and a fractional decimal cast rounds ties
+    * differently across engines). */
+  private def microSum(x: Column): Column =
+    sum(round(x * lit(1e6)).cast(DecimalType(38, 0))).cast("double")
+
+  /** The per-group mean of `x` quantized to 1e-6 by [[microSum]]: the
+    * exact micro-unit sum divided in double by 1e6 · count. */
+  private[graft] def microMean(x: Column): Column =
+    microSum(x) / (lit(1e6) * count(lit(1)))
 
   /** One Lloyd refinement of the seed centroids: assign every vector to
     * its nearest seed, then recompute each cell's centroid as the
-    * per-dimension mean of its members, quantized to 1e-6: members are
-    * rounded to integral micro-units, summed EXACTLY as integer decimals
-    * (order-independent — partial aggregation may add in any order; a
-    * double sum would be run-dependent, and a fractional decimal cast
-    * rounds ties differently across engines), divided in double. The
-    * trained centroids — and every similarity computed against them —
-    * are bit-reproducible and DuckDB-checkable. Training shuffles only
-    * (centroid_id, pos, x) triples: k·dim groups regardless of corpus
-    * size, the scale shape of distributed k-means. */
+    * per-dimension [[microMean]] of its members. The trained centroids —
+    * and every similarity computed against them — are bit-reproducible
+    * and DuckDB-checkable. Training shuffles only (centroid_id, pos, x)
+    * triples: k·dim groups regardless of corpus size, the scale shape of
+    * distributed k-means. */
   def ivfTrainedCentroids(corpus: DataFrame, id: String, vec: String,
-      k: Int = 16, iters: Int = 1): DataFrame = {
+      k: Int = 16, iters: Int = 1): DataFrame =
+    trainedCentroids(vectors(corpus, id, vec), id, k, iters)
+
+  /** The seed centroids of `e` refined by `iters` [[lloydStep]]s. */
+  private def trainedCentroids(e: DataFrame, id: String, k: Int, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val seed = e.filter(col(id) < k)
-      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
-    (1 to iters).foldLeft(seed)((c, _) => lloydStep(e, id, c))
+    (1 to iters).foldLeft(seedCentroids(e, id, k))((c, _) => lloydStep(e, id, c))
   }
 
   /** One Lloyd step: nearest-centroid assignment, then the quantized
@@ -313,9 +342,7 @@ object Similarity {
     val a = assignTo(e, id, c).select(col(id), col("centroid_id"))
     val dims = e.join(a, id)
       .select(col("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-    val means = dims.groupBy("centroid_id", "pos")
-      .agg((sum(round(col("x") * lit(1e6)).cast(DecimalType(38, 0))).cast("double") /
-        (lit(1e6) * count(lit(1)))).as("cval"))
+    val means = dims.groupBy("centroid_id", "pos").agg(microMean(col("x")).as("cval"))
     means.groupBy("centroid_id")
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("cval")))),
@@ -328,85 +355,55 @@ object Similarity {
     * variant of [[ivfAssignments]]; probing/scoring plumbing unchanged. */
   def ivfTrainedAssignments(corpus: DataFrame, id: String, vec: String,
       k: Int = 16, iters: Int = 1): DataFrame = {
-    val e = corpus.select(col(id), toDoubleVec(col(vec)).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    assignTo(e, id, ivfTrainedCentroids(corpus, id, vec, k, iters))
+    val e = vectors(corpus, id, vec)
+    assignTo(e, id, trainedCentroids(e, id, k, iters))
+  }
+
+  /** The IVF candidate step over the seed cells of `e`: per query of
+    * `q`, its `nProbe` nearest cells (ranked by (sim desc, c_id asc) as
+    * `probe_rn`), and every other vector assigned to one of them —
+    * (centroid_id, id, q_id, probe_rn). Candidate generation joins the
+    * (id, centroid_id) assignment with the broadcast probe list; vectors
+    * rejoin by id for scoring, as in the LSH path. Candidate sets are
+    * nested in nProbe because a vector lives in exactly one cell. */
+  private def ivfCandidates(e: DataFrame, id: String, q: DataFrame,
+      nCentroids: Int, nProbe: Int): DataFrame = {
+    val c = seedCentroids(e, id, nCentroids)
+    val probes = q.crossJoin(broadcast(c))
+      .select(col("q_id"), cosine("qv", "cv", "q_nrm", "c_nrm").as("c_sim"), col("c_id"))
+      .withColumn("probe_rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("c_sim").desc, col("c_id").asc)))
+      .filter(col("probe_rn") <= nProbe)
+      .select(col("q_id"), col("c_id").as("centroid_id"), col("probe_rn"))
+    assignTo(e, id, c).select(col(id), col("centroid_id"))
+      .join(broadcast(probes), "centroid_id")
+      .filter(col(id) =!= col("q_id"))
   }
 
   /** IVF approximate top-k: probe the query's `nProbe` nearest cells,
-    * score only vectors assigned there. Candidate generation joins the
-    * (id, centroid_id) assignment relation with a broadcast probe list —
-    * vectors rejoin by id for scoring, as in the LSH path. */
+    * score only vectors assigned there. */
   def ivfTopK(corpus: DataFrame, id: String, vec: String,
       queryPred: Column, k: Int, nCentroids: Int = 16, nProbe: Int = 2): DataFrame = {
-    val e = indexed(corpus, id, vec)
-    val assign = ivfAssignments(corpus, id, vec, nCentroids)
-      .select(col(id), col("centroid_id"))
-    val c = e.filter(col(id) < nCentroids)
-      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
-    val q = e.filter(queryPred)
-      .select(col(id).as("q_id"), col("v").as("qv"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("c_sim").desc, col("c_id").asc)
-    val probes = q.crossJoin(broadcast(c))
-      .select(col("q_id"),
-        (dot(col("qv"), col("cv")) / (col("q_nrm") * col("c_nrm"))).as("c_sim"),
-        col("c_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("c_id").as("centroid_id"))
-    val cand = assign.join(broadcast(probes), "centroid_id")
-      .filter(col(id) =!= col("q_id"))
-      .select(col("q_id"), col(id))
-    val scored = cand
-      .join(e.select(col(id), col("v"), col("nrm")), id)
-      .join(broadcast(q), "q_id")
-      .select(col("q_id"), col(id),
-        (dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
-    rankTopK(scored, id, k)
+    val e = embeddingRel(corpus, id, vec)
+    val q = queryVectors(e, id, queryPred)
+    rankTopK(scoreCandidates(ivfCandidates(e, id, q, nCentroids, nProbe), e, q, id), id, k)
   }
 
-  /** IVF top-k for EVERY probe level 1..maxProbe in one build (round-14,
-    * guide §2.3: share work across a parameter sweep instead of
-    * rebuilding). [[ivfTopK]] called per level rebuilds the assignment
-    * relation (a corpus scan + centroid broadcast + per-vector max) and
-    * re-scores candidates from scratch — a 4-level sweep paid 4 corpus
-    * scans. Here the assignment, probe list (ranked once, cut at
-    * maxProbe) and scored candidate relation are built ONCE; each level
-    * np is a filter `probe_rn <= np` over the cached scored relation
-    * (candidate sets are nested in np because a vector lives in exactly
-    * one cell). Per level the (q_id, id, sim, rank) rows are
-    * bit-identical to `ivfTopK(..., nProbe = np)` — same candidate set,
-    * same scores, same bounded-heap ranking. */
+  /** IVF top-k for EVERY probe level 1..maxProbe in one build: the
+    * assignment, the probe list (ranked once, cut at maxProbe) and the
+    * scored candidate relation are built ONCE, and each level np is a
+    * filter `probe_rn <= np` over the scored relation. Per level the
+    * (q_id, id, sim, rank) rows are bit-identical to
+    * `ivfTopK(..., nProbe = np)` — same candidate set, same scores, same
+    * bounded-heap ranking. */
   def ivfProbeSweepTopK(corpus: DataFrame, id: String, vec: String,
       queryPred: Column, k: Int, nCentroids: Int = 16, maxProbe: Int = 4): DataFrame = {
-    val e = indexed(corpus, id, vec)
-    val assign = ivfAssignments(corpus, id, vec, nCentroids)
-      .select(col(id), col("centroid_id"))
-    val c = e.filter(col(id) < nCentroids)
-      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
-    val q = e.filter(queryPred)
-      .select(col(id).as("q_id"), col("v").as("qv"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("c_sim").desc, col("c_id").asc)
-    val probes = q.crossJoin(broadcast(c))
-      .select(col("q_id"),
-        (dot(col("qv"), col("cv")) / (col("q_nrm") * col("c_nrm"))).as("c_sim"),
-        col("c_id"))
-      .withColumn("probe_rn", row_number().over(w))
-      .filter(col("probe_rn") <= maxProbe)
-      .select(col("q_id"), col("c_id").as("centroid_id"), col("probe_rn"))
-    // Pinned (eager) since round 15: the scored relation is filtered by
-    // all 4 probe levels of the sweep — sibling subtrees whose cache
-    // references raced the block locks and re-carried the whole
-    // assignment chain through analysis per level.
-    val scored = graft.GraftCaches.pin(
-      assign.join(broadcast(probes), "centroid_id")
-        .filter(col(id) =!= col("q_id"))
-        .join(e.select(col(id), col("v"), col("nrm")), id)
-        .join(broadcast(q), "q_id")
-        .select(col("q_id"), col(id), col("probe_rn"),
-          (dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim")),
+    val e = embeddingRel(corpus, id, vec)
+    val q = queryVectors(e, id, queryPred)
+    // Pinned: every probe level filters the scored relation, sibling
+    // subtrees that would otherwise each re-carry the assignment chain.
+    val scored = GraftCaches.pin(
+      scoreCandidates(ivfCandidates(e, id, q, nCentroids, maxProbe), e, q, id, "probe_rn"),
       eager = true)
     (1 to maxProbe).map { np =>
       rankTopK(scored.filter(col("probe_rn") <= np)
@@ -434,7 +431,7 @@ object Similarity {
     * whose length is NOT divisible by `m` fails LOUDLY (raise_error) —
     * silently dropping the trailing dims would falsify pqCodes'
     * documented invariant that per-subspace distances sum to the exact
-    * reconstruction error (round-4 ADVICE). */
+    * reconstruction error. */
   private def pqSubvectors(corpus: DataFrame, id: String, vec: String,
       m: Int): DataFrame = {
     val sd = when(pmod(size(col("v")), lit(m)) === 0,
@@ -448,14 +445,14 @@ object Similarity {
   }
 
   /** Per-subspace codebooks (mi, c_id, cv): the subvectors of the `k`
-    * LOWEST-id vectors, selected by an explicit orderBy/limit — NOT a
-    * `id < k` predicate, which assumed dense numeric ids from 0 and on a
-    * sparse or offset id domain silently seeded fewer than k (possibly
-    * zero) entries, emptying every downstream pqEncode/pqAdcTopK inner
-    * join (round-4 ADVICE). TakeOrdered on k rows, then the same
-    * deterministic, SQL-reproducible convention (production would
-    * Lloyd-refine each subspace exactly as [[ivfTrainedCentroids]] does,
-    * the plumbing is unchanged). m·k rows — always broadcastable. */
+    * LOWEST-id vectors, selected by an explicit orderBy/limit — NOT an
+    * `id < k` predicate, which assumes dense numeric ids from 0 and on a
+    * sparse or offset id domain would seed fewer than k (possibly zero)
+    * entries, emptying every downstream pqEncode/pqAdcTopK inner join.
+    * TakeOrdered on k rows, then the same deterministic,
+    * SQL-reproducible convention (production would Lloyd-refine each
+    * subspace exactly as [[ivfTrainedCentroids]] does, the plumbing is
+    * unchanged). m·k rows — always broadcastable. */
   def pqCodebooks(corpus: DataFrame, id: String, vec: String,
       m: Int = PqM, k: Int = PqK): DataFrame =
     pqSubvectors(corpus.orderBy(col(id)).limit(k), id, vec, m)
@@ -479,8 +476,7 @@ object Similarity {
 
   /** PQ codes per vector plus the exact reconstruction error: because the
     * subspaces partition the dimensions, sum over mi of the per-subspace
-    * distances IS ||v - reconstruction||². The sum uses the scaled-integer
-    * exact-decimal pattern (micro-unit rounding, associative addition) so
+    * distances IS ||v - reconstruction||², summed by [[microSum]] so
     * partition order can't perturb the double. */
   def pqCodes(corpus: DataFrame, id: String, vec: String,
       m: Int = PqM, k: Int = PqK): DataFrame =
@@ -489,35 +485,42 @@ object Similarity {
       .agg(
         transform(array_sort(collect_list(struct(col("mi"), col("code")))),
           s => s.getField("code")).as("codes"),
-        (sum(round(col("d") * lit(1e6)).cast(DecimalType(38, 0))).cast("double")
-          / lit(1e6)).as("recon_err"))
+        (microSum(col("d")) / lit(1e6)).as("recon_err"))
+
+  /** The PQ lookup table (l_qid, l_mi, c_id, d): per query, subspace and
+    * code, the exact squared L2 from the query's subvector to that
+    * codebook entry — |q|·m·k rows, always broadcastable. */
+  private def pqLut(corpus: DataFrame, id: String, vec: String, queryPred: Column,
+      m: Int, k: Int): DataFrame =
+    pqSubvectors(corpus.filter(queryPred), id, vec, m)
+      .select(col(id).as("l_qid"), col("mi").as("l_mi"), col("sv").as("qsv"))
+      .join(pqCodebooks(corpus, id, vec, m, k).withColumnRenamed("mi", "l_mi"), "l_mi")
+      .select(col("l_qid"), col("l_mi"), col("c_id"), sqDist(col("qsv"), col("cv")).as("d"))
+
+  /** The ADC scorer over LUT-joined (query `qId`, id, d) rows: each
+    * pair's distance is the exact-decimal sum of its m looked-up entries,
+    * ranked by the bounded heap (adc asc, id asc) into
+    * (q_id, id, adc, rank). */
+  private def adcTopK(lutRows: DataFrame, qId: String, id: String, topK: Int): DataFrame = {
+    val scored = lutRows.groupBy(col(qId).as("q_id"), col(id))
+      .agg((microSum(col("d")) / lit(1e6)).as("adc"))
+    rankTopK(scored.select(col("q_id"), col(id), (-col("adc")).as("sim")), id, topK)
+      .select(col("q_id"), col(id), (-col("sim")).as("adc"), col("rank"))
+  }
 
   /** PQ asymmetric-distance top-k: the query keeps its exact subvectors;
     * every corpus vector is represented ONLY by its m codes. Scoring is a
-    * lookup-table join — the LUT is per (query, subspace, code) the exact
-    * squared L2 from the query subvector to that codebook entry
-    * (|q|·m·k rows, always broadcastable) — so the corpus side touches
+    * join against the broadcast [[pqLut]], so the corpus side touches
     * nothing but its (id, mi, code) relation: at 100 TB the scan reads
-    * 4 ints per vector, never the floats. ADC distance = exact-decimal
-    * sum of the m looked-up entries; ranking reuses the bounded-heap
-    * top-k (adc asc, id asc). */
+    * 4 ints per vector, never the floats. */
   def pqAdcTopK(corpus: DataFrame, id: String, vec: String,
       queryPred: Column, topK: Int, m: Int = PqM, k: Int = PqK): DataFrame = {
     val codes = pqEncode(corpus, id, vec, m, k)
       .select(col(id), col("mi"), col("code"))
-    val lut = pqSubvectors(corpus.filter(queryPred), id, vec, m)
-      .select(col(id).as("q_id"), col("mi"), col("sv").as("qv"))
-      .join(pqCodebooks(corpus, id, vec, m, k), "mi")
-      .select(col("q_id"), col("mi"), col("c_id"),
-        sqDist(col("qv"), col("cv")).as("d"))
-    val scored = codes.join(broadcast(lut),
-        codes("mi") === lut("mi") && codes("code") === lut("c_id") &&
-          codes(id) =!= lut("q_id"))
-      .groupBy(col("q_id"), codes(id))
-      .agg((sum(round(col("d") * lit(1e6)).cast(DecimalType(38, 0))).cast("double")
-        / lit(1e6)).as("adc"))
-    rankTopK(scored.select(col("q_id"), col(id), (-col("adc")).as("sim")), id, topK)
-      .select(col("q_id"), col(id), (-col("sim")).as("adc"), col("rank"))
+    val lut = pqLut(corpus, id, vec, queryPred, m, k)
+    adcTopK(codes.join(broadcast(lut),
+        col("mi") === col("l_mi") && col("code") === col("c_id") && col(id) =!= col("l_qid")),
+      "l_qid", id, topK)
   }
 
   /** IVF-PQ: the production ANN index shape (FAISS IndexIVFPQ — Jégou
@@ -525,8 +528,7 @@ object Similarity {
     * the IVF coarse quantizer restricts each query to its `nProbe`
     * closest cells, and within those cells scoring is PQ ADC — the
     * corpus side touches ONLY (id, centroid_id) and the m small-int
-    * codes, never the float vectors. At 100 TB this is the index that
-    * makes billion-vector search feasible: candidates shrink by
+    * codes, never the float vectors. Candidates shrink by
     * ~nProbe/nCentroids from the cell filter, and each surviving
     * candidate costs m LUT lookups instead of a d-dim dot product.
     * Centroids, probe lists, and the per-query LUT are all broadcast;
@@ -536,41 +538,15 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, id: String, vec: String,
       queryPred: Column, topK: Int, nCentroids: Int = 16, nProbe: Int = 2,
       m: Int = PqM, k: Int = PqK): DataFrame = {
-    val e = indexed(corpus, id, vec)
-    val assign = ivfAssignments(corpus, id, vec, nCentroids)
-      .select(col(id), col("centroid_id"))
-    val c = e.filter(col(id) < nCentroids)
-      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
-    val q = e.filter(queryPred)
-      .select(col(id).as("q_id"), col("v").as("qv"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("c_sim").desc, col("c_id").asc)
-    val probes = q.crossJoin(broadcast(c))
-      .select(col("q_id"),
-        (dot(col("qv"), col("cv")) / (col("q_nrm") * col("c_nrm"))).as("c_sim"),
-        col("c_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("c_id").as("centroid_id"))
-    val cand = assign.join(broadcast(probes), "centroid_id")
-      .filter(col(id) =!= col("q_id"))
+    val e = embeddingRel(corpus, id, vec)
+    val cand = ivfCandidates(e, id, queryVectors(e, id, queryPred), nCentroids, nProbe)
       .select(col("q_id"), col(id))
     val codes = pqEncode(corpus, id, vec, m, k)
       .select(col(id), col("mi"), col("code"))
-    val lut = pqSubvectors(corpus.filter(queryPred), id, vec, m)
-      .select(col(id).as("l_qid"), col("mi").as("l_mi"), col("sv").as("qsv"))
-      .join(pqCodebooks(corpus, id, vec, m, k).select(
-        col("mi").as("l_mi"), col("c_id"), col("cv")), "l_mi")
-      .select(col("l_qid"), col("l_mi"), col("c_id"),
-        sqDist(col("qsv"), col("cv")).as("d"))
-    val scored = cand.join(codes, id)
-      .join(broadcast(lut), col("q_id") === col("l_qid") &&
-        col("mi") === col("l_mi") && col("code") === col("c_id"))
-      .groupBy(col("q_id"), col(id))
-      .agg((sum(round(col("d") * lit(1e6)).cast(DecimalType(38, 0))).cast("double")
-        / lit(1e6)).as("adc"))
-    rankTopK(scored.select(col("q_id"), col(id), (-col("adc")).as("sim")), id, topK)
-      .select(col("q_id"), col(id), (-col("sim")).as("adc"), col("rank"))
+    val lut = pqLut(corpus, id, vec, queryPred, m, k)
+    adcTopK(cand.join(codes, id).join(broadcast(lut), col("q_id") === col("l_qid") &&
+        col("mi") === col("l_mi") && col("code") === col("c_id")),
+      "q_id", id, topK)
   }
 
   /** Near-duplicate pairs by embedding cosine: banded LSH candidates
@@ -589,12 +565,7 @@ object Similarity {
     val e = indexed(corpus, id, vec)
     val cand = Dedup.candidatePairsFromBands(bandRows(e, id), id, maxBucket)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-    cand
-      .join(e.select(col(id).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(e.select(col(id).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .filter(col("sim") >= threshold)
+    verifiedPairs(cand, e, id).filter(col("sim") >= threshold)
   }
 
   /** kNN label-noise audit (the deep-kNN label-consistency screen of
@@ -646,8 +617,7 @@ object Similarity {
       .join(labels.select(col(id).as("q_id"), col(label).as("q_label")), "q_id")
       .join(labels.select(col(id).as("nbr"), col(label).as("n_label")), "nbr")
       .withColumn("same", col("n_label") === col("q_label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"), col("same")).orderBy(col("sim").desc, col("nbr").asc)
+    val w = Window.partitionBy(col("q_id"), col("same")).orderBy(col("sim").desc, col("nbr").asc)
     lab.withColumn("rk", row_number().over(w).cast("bigint"))
       .filter((col("same") && col("rk") <= nPos) || (!col("same") && col("rk") <= nNeg))
       .select(col("q_id").as(id),
@@ -656,43 +626,59 @@ object Similarity {
         col("q_label").as(label), col("n_label"))
   }
 
+  /** The rows of the (id, centroid_id) `cells` relation whose cell holds
+    * at most `maxCell` rows: each cell is counted and the cells under the
+    * cap are broadcast — the skew guard every within-cluster comparison
+    * needs, since one degenerate cluster would otherwise put a quadratic
+    * task on one core. The oracles apply the identical HAVING cap. */
+  private def capCells(cells: DataFrame, maxCell: Int): DataFrame = {
+    val ok = cells.groupBy("centroid_id").agg(count(lit(1)).as("n"))
+      .filter(col("n") <= maxCell).select("centroid_id")
+    cells.join(broadcast(ok), "centroid_id")
+  }
+
+  /** (id_a, id_b) pairs of vectors sharing a cell of the (id,
+    * centroid_id) `members`, id_a < id_b: the cell-bucketed self-join
+    * carrying only (centroid_id, id) rows. A pair sharing several cells
+    * appears once per shared cell, so callers whose vectors sit in more
+    * than one cell add `.distinct()`. */
+  private def cellPairs(members: DataFrame, id: String): DataFrame = {
+    val m = members.select(col("centroid_id"), col(id))
+    m.as("a").join(m.as("b").withColumnRenamed(id, "id_b"), "centroid_id")
+      .filter(col(id) < col("id_b"))
+      .select(col(id).as("id_a"), col("id_b"))
+  }
+
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     * cluster the corpus, compare vectors ONLY within their cluster, and
     * drop every vector whose cosine to a LOWER-id cell-mate clears
     * `threshold` — one deterministic survivor (the lowest id) per
-    * semantic-duplicate group. Clustering here is the deterministic
-    * k-lowest-id-seed assignment ([[ivfAssignments]]' shape); production
-    * swaps in the Lloyd-trained centroids — the relation shape and every
-    * downstream join are identical.
+    * semantic-duplicate group. Clustering is the nearest-centroid
+    * assignment against [[semDedupCentroids]].
     *
     * Scale shape: the pairwise stage is CELL-bucketed, never corpus-
     * quadratic — the candidate self-join carries only (centroid_id, id)
     * rows, vectors rejoin by id for the cosine verify, and cells larger
-    * than `maxCell` are excluded from pairing (the skew guard every
-    * within-cluster comparison needs: one degenerate cluster would
-    * otherwise put a quadratic task on one core). The oracle applies the
-    * identical HAVING cap, so the guard itself is hash-checked. Returns
+    * than `maxCell` are excluded from pairing. Returns
     * (id, centroid_id, is_kept) for EVERY corpus vector. */
   def semDedup(corpus: DataFrame, id: String, vec: String,
       threshold: Double, k: Int = 16, maxCell: Int = 200,
       trainIters: Int = 0): DataFrame = {
     val e = embeddingRel(corpus, id, vec)
-    val c = semDedupCentroids(e, id, k, trainIters)
-    // Pinned like [[rankedExact]]: consumed by the cap aggregate, the
-    // member join, and the final keeper left-join (sibling subtrees).
-    val assign = graft.GraftCaches.pin(assignTo(e, id, c), eager = true)
-    val okCells = assign.groupBy("centroid_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxCell).select("centroid_id")
-    val members = assign.join(broadcast(okCells), "centroid_id")
-      .select(col("centroid_id"), col(id))
-    val cand = members.as("a")
-      .join(members.as("b").withColumnRenamed(id, "id_b"), "centroid_id")
-      .filter(col(id) < col("id_b"))
-      .select(col(id).as("id_a"), col("id_b"))
-    val dropped = cand
-      .join(e.select(col(id).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(e.select(col(id).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+    // Pinned: the assignment feeds the cap aggregate, the member join
+    // and the final keeper left-join (sibling subtrees).
+    dedupWithinCells(e, id,
+      GraftCaches.pin(assignTo(e, id, semDedupCentroids(e, id, k, trainIters)), eager = true),
+      threshold, maxCell)
+  }
+
+  /** The semDedup body over an (id, centroid_id) top-1 `assign`: capped
+    * cell pairs, cosine verify, and every vector with a verified
+    * lower-id cell-mate dropped. */
+  private def dedupWithinCells(e: DataFrame, id: String, assign: DataFrame,
+      threshold: Double, maxCell: Int): DataFrame = {
+    val dropped = verifiedPairs(cellPairs(capCells(assign, maxCell), id), e, id)
+      .filter(col("sim") >= threshold)
       .select(col("id_b")).distinct()
     assign.join(dropped, col(id) === col("id_b"), "left")
       .select(col(id), col("centroid_id"), col("id_b").isNull.as("is_kept"))
@@ -703,86 +689,62 @@ object Similarity {
     * per cell — comfortably under the family's 200-row cell cap, so
     * candidate generation stays non-degenerate as the corpus grows (a
     * FIXED k=16 at 20k vectors puts ~1250 members in every cell, the cap
-    * excludes all of them, and the dedup silently finds nothing — the
-    * sf1 scale run surfaced exactly this). The floor of 16 keeps every
-    * historical fixture SF at the original seeding; the DuckDB oracles
-    * mirror the same GREATEST(16, count/62) in SQL, so the formula
-    * itself is hash-checked. */
+    * excludes all of them, and the dedup silently finds nothing). The
+    * floor of 16 keeps every small fixture at 16 cells; the DuckDB
+    * oracles mirror the same GREATEST(16, count/62) in SQL, so the
+    * formula itself is hash-checked. Int-clamped: past ~62·2^31 vectors
+    * the Long→Int cast would wrap negative and the `id < k` centroid
+    * filter would select nothing (at that corpus size Int.MaxValue cells
+    * is the right answer anyway). */
   def autoCells(n: Long): Int =
-    // Int-clamped (round-11 ADVICE): past ~62·2^31 vectors the Long→Int
-    // cast would wrap negative and the `id < k` centroid filter would
-    // select nothing — clamp keeps the formula total (at that corpus
-    // size Int.MaxValue cells is the right answer anyway).
     math.min(math.max(16L, n / 62L), Int.MaxValue.toLong).toInt
 
-  /** Per-vector top-`probes` cell MEMBERSHIPS over the `k` deterministic
-    * seed centroids, cells over `maxCell` membership rows excluded — the
-    * multi-probe antidote to [[semDedup]]'s cell-boundary blindness
-    * (round-10 VERDICT 4): a duplicate pair straddling a Voronoi border
-    * still shares its SECOND-nearest cell with high probability, so
-    * probe-2 candidates recover most border pairs at ×probes membership
-    * rows (never all-pairs). Ranking is the bounded-heap
-    * [[TopKAggregator]] (ties → lowest centroid id, mirroring the
-    * oracle's row_number). `e` is the (id, v, nrm) relation. */
   /** Seed-or-Lloyd-trained centroid relation shared by the semDedup
     * family: the k lowest-id vectors, refined by `trainIters` exact
     * quantized-mean Lloyd steps ([[lloydStep]] — the ivf_train_assign
-    * machinery, bit-reproducible and oracle-expressible). Round-12
-    * measurement motivated wiring this in: planted-near-dup probe-2
-    * recall at τ=0.9 was 0.921 with raw seeds at 20k vectors (594 true
-    * pairs) vs 0.976 after ONE Lloyd step (0.988 after two) — trained
-    * cells are shaped by the data, so near-collinear pairs straddle
-    * boundaries less. Training also made the audit FASTER (43.7 s →
-    * 30.8 s at 20k): balanced cells mean fewer over-cap exclusions and
-    * less pair-join skew. One iteration is the family default at the
-    * query layer; extra iterations pay one more (c_id, pos, x) shuffle
-    * each for diminishing recall. */
+    * machinery, bit-reproducible and oracle-expressible). Trained cells
+    * are shaped by the data, so near-collinear pairs straddle boundaries
+    * less (SemDedupPlantedRecallSpec pins the recall gain at 20k
+    * vectors), and balanced cells mean fewer over-cap exclusions and less
+    * pair-join skew. Extra iterations pay one more (c_id, pos, x) shuffle
+    * each for diminishing recall.
+    *
+    * The trained relation is pinned: the top-1 assignment, the probe-2
+    * memberships and, in the two-level path, three broadcast builds
+    * (submitted on concurrent threads) consume it, and each unmaterialized
+    * reference would re-run the k·dim mean shuffle. */
   private[graft] def semDedupCentroids(e: DataFrame, id: String, k: Int,
-      trainIters: Int): DataFrame = {
-    val seed = e.filter(col(id) < k)
-      .select(col(id).as("c_id"), col("v").as("cv"), col("nrm").as("c_nrm"))
-    if (trainIters <= 0) seed
-    else graft.GraftCaches.pin(
-      // Pinned (eager) since round 15: the trained relation is consumed
-      // by the top-1 assignment and the probe-2 membership build — and
-      // in the two-level path by THREE broadcast builds, which Spark
-      // submits on concurrent threads, racing a cache's block locks.
-      // Without materialization each reference re-runs the k·dim mean
-      // shuffle.
-      (1 to trainIters).foldLeft(seed)((c, _) => lloydStep(e, id, c)),
-      eager = true)
-  }
+      trainIters: Int): DataFrame =
+    if (trainIters <= 0) seedCentroids(e, id, k)
+    else GraftCaches.pin(trainedCentroids(e, id, k, trainIters), eager = true)
 
+  /** Per-vector top-`probes` cell MEMBERSHIPS over [[semDedupCentroids]],
+    * cells over `maxCell` membership rows excluded — the multi-probe
+    * antidote to [[semDedup]]'s cell-boundary blindness: a duplicate pair
+    * straddling a Voronoi border still shares its SECOND-nearest cell
+    * with high probability, so probe-2 candidates recover most border
+    * pairs at ×probes membership rows (never all-pairs). Ties → lowest
+    * centroid id, mirroring the oracle's row_number. `e` is the (id, v,
+    * nrm) relation. Pinned: the memberships feed BOTH sides of the cell
+    * self-join, and the checkpoint truncates the N×cells assignment chain
+    * to a leaf per reference. */
   private[graft] def semDedupMembers(e: DataFrame, id: String, k: Int,
       probes: Int, maxCell: Int, trainIters: Int = 0): DataFrame = {
-    val c = semDedupCentroids(e, id, k, trainIters)
-    val m = e.select(col(id), col("v"), col("nrm"))
-      .crossJoin(broadcast(c))
-      .select(col(id),
-        (dot(col("v"), col("cv")) / (col("nrm") * col("c_nrm"))).as("sim"),
-        col("c_id"))
-      .groupBy(id)
-      .agg(TopKAggregator.topK(probes)(col("c_id").cast("long"), col("sim")).as("tk"))
+    val m = topCells(withCentroids(e, id, semDedupCentroids(e, id, k, trainIters)), id, probes)
       .select(col(id), explode(col("tk.ids")).as("centroid_id"))
-    val okCells = m.groupBy("centroid_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxCell).select("centroid_id")
-    // PINNED, not cached — same rationale as [[rankedExact]] (round-15,
-    // guide §3.3): the membership relation feeds BOTH sides of the cell
-    // self-join (sibling stages); the checkpoint truncates the N×cells
-    // assignment chain to a leaf per reference and avoids the sibling
-    // cache-lock race.
-    graft.GraftCaches.pin(
-      m.join(broadcast(okCells), "centroid_id").select(col(id), col("centroid_id")),
-      eager = true)
+    GraftCaches.pin(capCells(m, maxCell).select(col(id), col("centroid_id")), eager = true)
   }
 
-  /** Honest-recall audit for the semantic-dedup candidate generation
-    * (round-10 VERDICT 4): of all TRUE duplicate pairs (cosine ≥
-    * `threshold` over every vector pair — the exact baseline), what
-    * fraction is reachable (a) within [[semDedup]]'s single top-1 cell
-    * and (b) within the probe-2 membership cells of
-    * [[semDedupMembers]]? One row: (n_true, n_caught_p1, n_caught_p2,
-    * recall_p1, recall_p2).
+  /** Honest-recall audit for the semantic-dedup candidate generation: of
+    * all TRUE duplicate pairs (cosine ≥ `threshold` over every vector
+    * pair — the exact baseline), what fraction is reachable (a) within
+    * [[semDedup]]'s single top-1 cell and (b) within the probe-2
+    * membership cells of [[semDedupMembers]]? One row: (n_true,
+    * n_caught_p1, n_caught_p2, recall_p1, recall_p2).
+    *
+    * ONE ranked N×cells pass ([[rankedExact]]) feeds both reaches, as the
+    * oracle derives both from one ranking CTE: the pass is the audit's
+    * dominant super-linear stage (N×cells with cells ∝ N).
     *
     * The exact baseline is a BLOCKED all-pairs equi-join: each id hashes
     * to one of `blocks` buckets, the left side explodes ×blocks keyed
@@ -791,36 +753,23 @@ object Similarity {
     * (N/blocks)² work each — quadratic by intent (it is the truth
     * relation) but spread across tasks, never a single-task Cartesian.
     *
-    * At corpus scale the audit runs on a SAMPLE (round-12 VERDICT 2 —
-    * previously prose, now the `truthSamplePpm` parameter): when
-    * truthSamplePpm < 1,000,000, only vectors whose deterministic
-    * PolyHash-Bernoulli draw (`polyhash(id || ":t9s") % 1e6`) lands
-    * under the threshold feed the truth relation — both endpoints of a
-    * counted pair must be sampled, so the quadratic stage runs on
-    * (ppm/1e6·N)² instead of N². The CANDIDATE relations are still built
-    * from the FULL corpus (cells, caps, and memberships are the
-    * apparatus being audited — sampling must shrink the measurement,
-    * never the thing measured), and recall over the sampled truth is an
-    * unbiased estimate of full-truth recall. The hash is the engine's
-    * cross-engine-reproducible PolyHash, so a DuckDB oracle derives the
-    * identical sample from the identical ids. Default 1,000,000 = full
-    * truth (every driver-SF gate runs unsampled). */
+    * At corpus scale the audit runs on a SAMPLE: when truthSamplePpm <
+    * 1,000,000, only vectors whose deterministic PolyHash-Bernoulli draw
+    * (`polyhash(id || ":t9s") % 1e6`) lands under the threshold feed the
+    * truth relation — both endpoints of a counted pair must be sampled,
+    * so the quadratic stage runs on (ppm/1e6·N)² instead of N². The
+    * CANDIDATE relations are still built from the FULL corpus (cells,
+    * caps, and memberships are the apparatus being audited — sampling
+    * must shrink the measurement, never the thing measured), and recall
+    * over the sampled truth is an unbiased estimate of full-truth recall.
+    * The hash is the engine's cross-engine-reproducible PolyHash, so a
+    * DuckDB oracle derives the identical sample from the identical ids.
+    * Default 1,000,000 = full truth. */
   def semDedupRecall(corpus: DataFrame, id: String, vec: String,
       threshold: Double, k: Int = 16, maxCell: Int = 200,
       blocks: Int = 16, trainIters: Int = 0,
       truthSamplePpm: Int = 1000000): DataFrame = {
     val e = embeddingRel(corpus, id, vec)
-    // ONE ranked N×cells pass feeds BOTH reaches (round 14): the audit
-    // previously ran the corpus×centroids cosine pass twice — assignTo
-    // for the top-1 reach, semDedupMembers for probe-2 — and, because
-    // each call built its own semDedupCentroids relation, Lloyd training
-    // ran twice too. The oracle always derived both from ONE r2 ranking
-    // CTE; the engine now mirrors that: TopKAggregator's (sim desc,
-    // c_id asc) order is exactly assignTo's struct-max tie-break, so
-    // rank 0 IS the top-1 assignment — byte-identical relations, one
-    // assignment pass and one training chain instead of two of each
-    // (the pass is the audit family's dominant super-linear stage:
-    // N×cells with cells ∝ N).
     recallAudit(e, id, rankedExact(e, id, k, trainIters),
       threshold, maxCell, blocks, truthSamplePpm)
   }
@@ -840,33 +789,17 @@ object Similarity {
       threshold, maxCell, blocks, truthSamplePpm)
   }
 
-  /** The exact (exhaustive) ranked assignment: every vector × every
-    * centroid, one broadcast nested-loop pass, top-2 cells per vector
-    * with rank. N×cells cosines — with cells ∝ N (autoCells) this is
-    * the family's quadratic stage; [[semDedupRanked2L]] is the
-    * sub-quadratic alternative. */
+  /** The exact (exhaustive) ranked assignment (id, rnk, centroid_id):
+    * every vector × every centroid, one broadcast nested-loop pass, top-2
+    * cells per vector. N×cells cosines — with cells ∝ N (autoCells) this
+    * is the family's quadratic stage; [[semDedupRanked2L]] is the
+    * sub-quadratic alternative. Pinned like [[semDedupRanked2L]]'s
+    * result: the audit reads it from sibling subtrees. */
   private def rankedExact(e: DataFrame, id: String, k: Int,
-      trainIters: Int): DataFrame = {
-    val c = semDedupCentroids(e, id, k, trainIters)
-    // PINNED, not cached — same rationale as [[semDedupRanked2L]]'s
-    // result (round-15, guide §3.3): the audit consumes this relation
-    // in sibling subtrees (rnk=0 reach + probe-2 reach, caps + both
-    // self-join sides); the checkpoint truncates the N×cells chain to a
-    // leaf for every reference instead of re-carrying it through
-    // analysis/AQE per consumer.
-    graft.GraftCaches.pin(
-      e.select(col(id), col("v"), col("nrm"))
-        .crossJoin(broadcast(c))
-        .select(col(id),
-          (dot(col("v"), col("cv")) / (col("nrm") * col("c_nrm"))).as("sim"),
-          col("c_id"))
-        .groupBy(id)
-        .agg(graft.functions.TopKAggregator.topK(2)(
-          col("c_id").cast("long"), col("sim")).as("tk"))
-        .select(col(id), posexplode(col("tk.ids")))
-        .withColumnRenamed("pos", "rnk").withColumnRenamed("col", "centroid_id"),
+      trainIters: Int): DataFrame =
+    GraftCaches.pin(
+      topTwoCells(withCentroids(e, id, semDedupCentroids(e, id, k, trainIters)), id),
       eager = true)
-  }
 
   /** Shared audit tail: blocked (optionally PolyHash-sampled) exact
     * truth vs the top-1 (`rnk = 0`) and probe-2 reaches of `ranked`
@@ -889,33 +822,19 @@ object Similarity {
     // Pinned (eager): the truth relation anchors two chained left joins
     // (one reference per join side) — the checkpoint truncates the
     // blocks²-reducer quadratic stage to a leaf for both.
-    val truth = graft.GraftCaches.pin(
+    val truth = GraftCaches.pin(
       left.join(right, Seq("p", "q"))
         .filter(col("id_a") < col("id_b"))
-        .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+        .filter(cosine("va", "vb", "na", "nb") >= threshold)
         .select("id_a", "id_b"),
       eager = true)
     // (a) the top-1-cell reach, mirroring semDedup exactly (cells capped
-    // by ASSIGNMENT count, as there; same seed-or-trained centroids).
-    val assign = ranked.filter(col("rnk") === 0)
-      .select(col(id), col("centroid_id"))
-    val ok1 = assign.groupBy("centroid_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxCell).select("centroid_id")
-    val m1 = assign.join(broadcast(ok1), "centroid_id")
-    val cand1 = m1.as("a")
-      .join(m1.as("b").withColumnRenamed(id, "id_b"), "centroid_id")
-      .filter(col(id) < col("id_b"))
-      .select(col(id).as("id_a"), col("id_b"))
-    // (b) the probe-2 membership reach (cells capped by MEMBERSHIP count).
-    val m2 = ranked.select(col(id), col("centroid_id"))
-    val okm = m2.groupBy("centroid_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxCell).select("centroid_id")
-    val mm = m2.join(broadcast(okm), "centroid_id")
-      .select(col(id), col("centroid_id"))
-    val cand2 = mm.as("a")
-      .join(mm.as("b").withColumnRenamed(id, "id_b"), "centroid_id")
-      .filter(col(id) < col("id_b"))
-      .select(col(id).as("id_a"), col("id_b")).distinct()
+    // by ASSIGNMENT count, as there); (b) the probe-2 membership reach
+    // (cells capped by MEMBERSHIP count).
+    val cand1 = cellPairs(capCells(
+      ranked.filter(col("rnk") === 0).select(col(id), col("centroid_id")), maxCell), id)
+    val cand2 = cellPairs(capCells(
+      ranked.select(col(id), col("centroid_id")), maxCell), id).distinct()
     truth
       .join(cand1.withColumn("c1", lit(1)), Seq("id_a", "id_b"), "left")
       .join(cand2.withColumn("c2", lit(1)), Seq("id_a", "id_b"), "left")
@@ -962,15 +881,14 @@ object Similarity {
     * vs N·k full dots. */
   val CoarseProbes: Int = 4
 
-  /** TWO-LEVEL ranked assignment — the sub-quadratic scale path for the
-    * semDedup family (round 14). [[autoCells]] makes cells ∝ N (forced
-    * by the 200-row cell cap), so the exhaustive assignment pass is
-    * N²/62 cosines — measured as the family's dominant growth once the
-    * truth stage was sampled (bare `semdedup` grew 2.37× on 3× data).
-    * Standard remedy (IVF coarse quantizer; Johnson et al., "Billion-
-    * scale similarity search with GPUs", the faiss IVF design): route
-    * each vector through ~√cells COARSE groups first, then rank only
-    * the centroids of its top-2 coarse groups.
+  /** TWO-LEVEL ranked assignment (id, rnk, centroid_id) — the
+    * sub-quadratic scale path for the semDedup family. [[autoCells]]
+    * makes cells ∝ N (forced by the 200-row cell cap), so the exhaustive
+    * assignment pass is N²/62 cosines. Standard remedy (IVF coarse
+    * quantizer; Johnson et al., "Billion-scale similarity search with
+    * GPUs", the faiss IVF design): route each vector through ~√cells
+    * COARSE groups first, then rank only the centroids of its top
+    * coarse groups.
     *
     * Determinism/oracle contract: coarse centroids = the √k lowest-id
     * trained centroids; each centroid joins its nearest coarse group
@@ -980,73 +898,36 @@ object Similarity {
     * the relation is hash-checkable end to end.
     *
     * Scale shape: the coarse pass is a broadcast nested loop over the
-    * √k-row cc relation (N·√k cheap dots); the cell pass is an
-    * equi-join chain that generates only ~[[CoarseProbes]]·N·√k
-    * candidate rows (vs the exhaustive pass's N·k) — sub-quadratic in
-    * BOTH rows and dot work — at the price of one linear corpus
-    * shuffle (the join of the candidate ids back to their vectors).
-    * Candidate rows at 60k vectors: 58M exhaustive → ~7M two-level,
-    * and the gap widens as √N. */
+    * √k-row coarse relation (N·√k cheap dots). The cell pass is an
+    * equi-join chain, not a crossJoin+filter: a nested loop with a
+    * contains-prune still GENERATES N×k rows, while the chain generates
+    * only ~[[CoarseProbes]]·N·√k candidate rows — sub-quadratic in BOTH
+    * rows and dot work — at the price of one linear corpus shuffle (the
+    * join of the candidate ids back to their vectors).
+    *
+    * The result is pinned (eager localCheckpoint), not cached: sibling
+    * subtrees consume it (the rnk=0 assignment and the probe-2
+    * memberships, then their cap aggregates and both sides of each cell
+    * self-join), and a cache does not truncate the logical plan, so every
+    * reference would re-carry the whole coarse→cell chain through
+    * analysis and AQE replanning. At cluster scale this is "write the
+    * assignment to a table". */
   private[graft] def semDedupRanked2L(e: DataFrame, id: String, k: Int,
       trainIters: Int, coarseProbes: Int = CoarseProbes): DataFrame = {
     val ct = semDedupCentroids(e, id, k, trainIters)
-    val gK = coarseCells(k)
-    val cc = ct.filter(col("c_id") < gK)
-      .select(col("c_id").as("g_id"), col("cv").as("gv"),
-        col("c_nrm").as("g_nrm"))
-    // centroid → coarse group: k×√k argmax (struct-max, ties → lowest
-    // g_id — assignTo's exact shape).
-    val cg = ct.crossJoin(broadcast(cc))
-      .select(col("c_id"),
-        struct((dot(col("cv"), col("gv")) / (col("c_nrm") * col("g_nrm"))).as("s"),
-          (-col("g_id")).as("ng")).as("sc"))
-      .groupBy("c_id").agg(max(col("sc")).as("m"))
-      .select(col("c_id"), (-col("m.ng")).as("g_id"))
-    // vector → top-CoarseProbes coarse groups: N×√k.
-    val vg = e.select(col(id), col("v"), col("nrm"))
-      .crossJoin(broadcast(cc))
-      .select(col(id),
-        (dot(col("v"), col("gv")) / (col("nrm") * col("g_nrm"))).as("sim"),
-        col("g_id"))
-      .groupBy(id)
-      .agg(graft.functions.TopKAggregator.topK(coarseProbes)(
-        col("g_id").cast("long"), col("sim")).as("tk"))
+    val cc = ct.filter(col("c_id") < coarseCells(k))
+    // centroid → coarse group: the k×√k nearest-centroid assignment.
+    val cg = assignTo(ct.select(col("c_id").as("cell"), col("cv").as("v"),
+        col("c_nrm").as("nrm")), "cell", cc)
+      .select(col("cell").as("c_id"), col("centroid_id").as("g_id"))
+    // vector → top-coarseProbes coarse groups: N×√k.
+    val vg = topCells(withCentroids(e, id, cc), id, coarseProbes)
       .select(col(id), explode(col("tk.ids")).as("g_id"))
-    // vector → top-2 cells among the centroids of its coarse groups.
-    // JOIN formulation, not crossJoin+filter (round-14 measurement): a
-    // broadcast nested loop with a contains-prune still GENERATES N×k
-    // rows — sub-quadratic dot work but quadratic row work, and at 20k
-    // vectors the row generation already dominated (2L slower absolute
-    // than exhaustive despite 6× less dot work). The equi-join chain
-    // generates only N·probes·(k/√k) candidate rows: vg explodes to
-    // (id, g_id), broadcast-joins the k-row (c_id → g_id) map, the
-    // corpus joins ONCE by id (the only added shuffle — linear in
-    // corpus bytes), and centroid vectors attach from a broadcast.
-    // Same candidate set, same oracle, sub-quadratic rows AND dots.
-    val candC = vg.join(broadcast(cg.select(col("g_id"), col("c_id"))), "g_id")
-      .select(col(id), col("c_id"))
-    // PINNED (eager localCheckpoint), not cached (round-15, guide §3.3
-    // "materialising an intermediate truncates the plan"): the ranked
-    // relation is consumed by SIBLING subtrees (the rnk=0 assignment and
-    // the probe-2 memberships, then their cap aggregates and both sides
-    // of each cell self-join), and a cache does NOT truncate the logical
-    // plan — every reference re-carried the whole coarse→cell chain with
-    // `e`'s subtree inlined (measured: semdedup_recall_2l's pre-execution
-    // plan was 793 KB / 418 static exchanges, all driver-side analysis +
-    // AQE replanning weight, plus concurrent consumers racing the cache
-    // block locks). The checkpoint makes every reference a leaf scan.
-    // At cluster scale this is "write the assignment to a table".
-    graft.GraftCaches.pin(
-      candC.join(e.select(col(id), col("v"), col("nrm")), Seq(id))
-        .join(broadcast(ct), "c_id")
-        .select(col(id),
-          (dot(col("v"), col("cv")) / (col("nrm") * col("c_nrm"))).as("sim"),
-          col("c_id"))
-        .groupBy(id)
-        .agg(graft.functions.TopKAggregator.topK(2)(
-          col("c_id").cast("long"), col("sim")).as("tk"))
-        .select(col(id), posexplode(col("tk.ids")))
-        .withColumnRenamed("pos", "rnk").withColumnRenamed("col", "centroid_id"),
+    // vector → the centroids of its coarse groups, vectors joined once by id.
+    val candC = vg.join(broadcast(cg), "g_id").select(col(id), col("c_id"))
+    GraftCaches.pin(
+      topTwoCells(candC.join(e.select(col(id), col("v"), col("nrm")), Seq(id))
+        .join(broadcast(ct), "c_id"), id),
       eager = true)
   }
 
@@ -1057,31 +938,16 @@ object Similarity {
     * pruned candidate set instead of the global argmax. The dedup
     * semantics a user cares about (which vectors are dropped) shift
     * only where the two assignments disagree — `semdedup_recall_2l`
-    * measures exactly that reach difference. */
+    * measures exactly that reach difference. The ranked relation is
+    * already pinned, so its rnk=0 projection needs no second pin. */
   def semDedup2L(corpus: DataFrame, id: String, vec: String,
       threshold: Double, k: Int = 16, maxCell: Int = 200,
       trainIters: Int = 0): DataFrame = {
     val e = embeddingRel(corpus, id, vec)
-    // The ranked relation is already an eager pin; the rnk=0 projection
-    // over its stored blocks is cheap per reference — no second
-    // materialization layer needed.
-    val assign = semDedupRanked2L(e, id, k, trainIters)
-      .filter(col("rnk") === 0).select(col(id), col("centroid_id"))
-    val okCells = assign.groupBy("centroid_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxCell).select("centroid_id")
-    val members = assign.join(broadcast(okCells), "centroid_id")
-      .select(col("centroid_id"), col(id))
-    val cand = members.as("a")
-      .join(members.as("b").withColumnRenamed(id, "id_b"), "centroid_id")
-      .filter(col(id) < col("id_b"))
-      .select(col(id).as("id_a"), col("id_b"))
-    val dropped = cand
-      .join(e.select(col(id).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(e.select(col(id).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
-      .select(col("id_b")).distinct()
-    assign.join(dropped, col(id) === col("id_b"), "left")
-      .select(col(id), col("centroid_id"), col("id_b").isNull.as("is_kept"))
+    dedupWithinCells(e, id,
+      semDedupRanked2L(e, id, k, trainIters)
+        .filter(col("rnk") === 0).select(col(id), col("centroid_id")),
+      threshold, maxCell)
   }
 
   /** Semantic duplicate FAMILIES: probe-2 capped-cell candidates →
@@ -1096,17 +962,10 @@ object Similarity {
       threshold: Double, k: Int = 16, maxCell: Int = 200,
       trainIters: Int = 0): DataFrame = {
     val e = embeddingRel(corpus, id, vec)
-    val mm = semDedupMembers(e, id, k, probes = 2, maxCell = maxCell,
-      trainIters = trainIters)
-    val cand = mm.as("a")
-      .join(mm.as("b").withColumnRenamed(id, "id_b"), "centroid_id")
-      .filter(col(id) < col("id_b"))
-      .select(col(id).as("id_a"), col("id_b")).distinct()
-    val edges = cand
-      .join(e.select(col(id).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(e.select(col(id).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    Dedup.duplicateComponentsConverged(edges)
+    val cand = cellPairs(semDedupMembers(e, id, k, probes = 2, maxCell = maxCell,
+      trainIters = trainIters), id).distinct()
+    Dedup.duplicateComponentsConverged(verifiedPairs(cand, e, id)
+      .filter(col("sim") >= threshold)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
   }
 }

@@ -47,7 +47,7 @@ object TextOps {
   /** Distinct hashes of overlapping 3-word shingles. Caller must guarantee
     * >= 3 words (sequence(1, n-2) would run descending otherwise).
     *
-    * Fingerprint (since round 8): hash each WORD once with the native
+    * Fingerprint: hash each WORD once with the native
     * PolyHash (one pass over its characters), then combine consecutive
     * word-hash triples arithmetically —
     * `((h1*31 + h2) % M * 31 + h3) % M` — instead of concatenating the
@@ -55,7 +55,7 @@ object TextOps {
     * deterministic int64 fingerprint of the 3-gram, cross-engine
     * reproducible in plain SQL), ~3 char-passes and two string
     * allocations cheaper per gram; everything stays in int64
-    * (h < 1e9+7 ⇒ h*31 + h' < 3.3e10). Since round 8 the fold runs in
+    * (h < 1e9+7 ⇒ h*31 + h' < 3.3e10). The fold runs in
     * the native [[graft.functions.WindowFoldHashes]] codegen expression
     * (one tight double loop, two flat arrays — no per-window slice or
     * lambda interpretation). */

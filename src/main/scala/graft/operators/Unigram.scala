@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM (SentencePiece-style) tokenizer TRAINING as an iterated
-  * operator — the missing sibling of [[Bpe]] in the tokenizer surface
-  * (round-9 VERDICT 3): where BPE grows a vocabulary bottom-up by
-  * merging, the unigram model starts from an over-complete piece
+  * operator — the missing sibling of [[Bpe]] in the tokenizer surface:
+  * where BPE grows a vocabulary bottom-up by merging, the unigram model starts from an over-complete piece
   * inventory and re-estimates piece likelihoods by EM, segmenting each
   * word with the current model and recounting.
   *
@@ -66,7 +65,7 @@ object Unigram {
     counts.toDF("iter", "piece", "cnt")
   }
 
-  // Lazy pin (round-14): the seed-inventory collect is the materializing
+  // Lazy pin: the seed-inventory collect is the materializing
   // action; an eager checkpoint here was a dedicated job. The pin lives on
   // the docs-based entries (NOT inside [[iterate]]) so a caller passing an
   // ALREADY-pinned shared word-count relation (tokenizer_compare) does not
@@ -105,7 +104,7 @@ object Unigram {
             l => col("w").substr(pos, l))))).as("piece"),
         col("f"))
       .groupBy("piece").agg(sum("f").as("cnt"))
-    // ONE collect for topK ∪ single-chars (round-15): the two legs union
+    // ONE collect for topK ∪ single-chars: the two legs union
     // into a single action (a char piece surviving both legs collapses in
     // the Map with the identical count), halving the seed-phase driver
     // round-trips. Each leg still executes the seeds aggregate over the
@@ -141,7 +140,7 @@ object Unigram {
       // The collect above fully consumed this round's broadcast; destroy
       // it NOW instead of leaving one Broadcast per EM iteration for the
       // ContextCleaner to find eventually (the GraftCaches release
-      // discipline applied to broadcasts — round-10 ADVICE).
+      // discipline applied to broadcasts).
       bc.destroy()
       cnts = inventory.iterator.map(p => p -> counted.getOrElse(p, 0L)).toMap
       inventory.toSeq.sorted.foreach(p => log += ((it, p, cnts(p))))

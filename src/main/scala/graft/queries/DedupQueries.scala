@@ -20,7 +20,7 @@ object DedupQueries {
 
   /** Shared oracle CTE: distinct 3-shingle fingerprints per doc —
     * word poly-hashes combined arithmetically per triple, mirroring
-    * [[graft.operators.TextOps.shingleHashes]]'s round-8 fingerprint. */
+    * [[graft.operators.TextOps.shingleHashes]]'s fingerprint. */
   private[queries] val shingleCte: String =
     s"""w AS MATERIALIZED (
        |  SELECT doc_id,
@@ -346,7 +346,7 @@ object DedupQueries {
     * the standard edge-iterator algorithm; the candidate graph is already
     * degree-capped by the LSH bucket cap upstream. */
   def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
-    // Pinned (eager) since round 15: three sibling self-references —
+    // Pinned (eager): three sibling self-references —
     // see Dedup.candidatePairsFromBands for the cache-lock/plan rationale.
     val e = graft.GraftCaches.pin(
       Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"),
@@ -412,7 +412,7 @@ object DedupQueries {
     * cap like the triangle count); zero-support edges survive via the
     * left join; weakest-50 via TakeOrdered. */
   def graphEdgeSupport(spark: SparkSession, dir: String): DataFrame = {
-    // Pinned (eager) since round 15: sibling consumers (deg fold + wedge
+    // Pinned (eager): sibling consumers (deg fold + wedge
     // self-join sides) — see Dedup.candidatePairsFromBands.
     val e = graft.GraftCaches.pin(
       Dedup.lshCandidatePairs(Tables.documents(spark, dir), "doc_id", "text"),
@@ -473,8 +473,8 @@ object DedupQueries {
     * A duplicate crawl B?"). At 100 TB the signature side is the only
     * viable one (8 longs per source on the wire vs the full gram set);
     * the audit side lives in its own query, [[sourceOverlapAudit]]
-    * (round-7 VERDICT item 5 — the documented split, so this query
-    * benches at its production cost).
+    * (the documented split, so this query benches at its production
+    * cost).
     *
     * The production plan never explodes and never shuffles the corpus:
     * signature MINs are duplicate-insensitive, so each document folds
@@ -524,7 +524,7 @@ object DedupQueries {
   /** Estimator-quality audit for [[sourceMinhashOverlap]]: the 8-perm
     * Jaccard estimate next to a ground-truth-shaped exact Jaccard
     * computed on a DETERMINISTIC 1/4 hash-Bernoulli subsample of the
-    * gram space (h % 4 == 0; round-7 VERDICT item 5). A fixed-slice
+    * gram space (h % 4 == 0). A fixed-slice
     * sampled Jaccard is an exact Jaccard OF the sampled gram universe —
     * identical on both engines (no RNG), concentrating tightly at these
     * set sizes — and only the sample pays the dedup shuffle and the
@@ -878,7 +878,7 @@ object DedupQueries {
     * candidate generation and gram-rejoin-by-id shape as
     * [[ngramJaccard]]; kept when EITHER direction clears 0.5. */
   def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    // Pinned (eager) since round 15: band build + both gram-rejoin sides
+    // Pinned (eager): band build + both gram-rejoin sides
     // are sibling consumers — see Dedup.candidatePairsFromBands.
     val g = graft.GraftCaches.pin(
       Dedup.shingleSets(Tables.documents(spark, dir), "doc_id", "text"),
@@ -916,7 +916,7 @@ object DedupQueries {
     * for exact pair enumeration). The eval-sample contract is the same
     * as ann_recall's query subset: measure on a slice, index the corpus. */
   def lshQuality(spark: SparkSession, dir: String): DataFrame = {
-    // Pinned (eager) since round 15: gram explode + band build + rejoin
+    // Pinned (eager): gram explode + band build + rejoin
     // sides are sibling consumers — see Dedup.candidatePairsFromBands.
     val g = graft.GraftCaches.pin(
       Dedup.shingleSets(
@@ -1544,7 +1544,7 @@ object DedupQueries {
     ppjoinCandidatesFrom(ppjoinShingles(spark, dir), positional)
 
   private def ppjoinCandidatesFrom(w: DataFrame, positional: Boolean): DataFrame = {
-    // NOTE (round-15, measured dead end): explicit cores-wide
+    // NOTE (measured dead end): explicit cores-wide
     // `repartition(defaultParallelism, ...)` at the aggregation/join sites
     // here — motivated by AQE byte-based coalescing collapsing these
     // byte-small stages to 1-3 tasks — was tried and REVERTED: on a quiet
@@ -1582,7 +1582,7 @@ object DedupQueries {
     pruned.select("doc_a", "doc_b")
   }
 
-  // Eager pin, not cache (round-15, the change-7 discipline): the shingle
+  // Eager pin, not cache: the shingle
   // working set is consumed by SIBLING subtrees of one action (df-count,
   // ordered, and BOTH verify join legs), whose tasks raced the cache
   // block locks under `track`; the checkpoint is one dedicated

@@ -245,8 +245,8 @@ object MediaStreamQueries {
     * differing in ≤ ⌊13/7⌋ = 1 bit, so the (modality, band, value)
     * equi-join is LOSSLESS over the whole verify range d ≤ 12 —
     * `media_neardup_recall` pins recall = 1.0 as a hash-checked output
-    * (round-9 VERDICT 4; the pre-probe exact-band join was lossless only
-    * to 6 and measured 0.75 at d≤12). The corpus is never self-joined,
+    * (an exact-band join without probes is lossless only to 6 and
+    * measured 0.75 at d≤12). The corpus is never self-joined,
     * the shuffle carries (band key, doc_id, fp) only — the probe
     * expansion is a fixed ×9 on one join side, the price of exactness —
     * and the verify is one `bit_count(xor)` per candidate. The oracle
@@ -257,7 +257,7 @@ object MediaStreamQueries {
     * (56-bit space), and a skewed bucket (constant-signal payloads) caps
     * the same way the LSH maxBucket family does.
     *
-    * BANDING CHOICE, measured (round-10 VERDICT 2): the alternative
+    * BANDING CHOICE, measured: the alternative
     * lossless-to-d<=13 scheme — 14 exact 4-bit bands, NO probe
     * expansion — was benchmarked head-to-head at 50k synthetic docs
     * (identical 472,447-row pair output): 7x8 multi-probe 44.0/44.8 s
@@ -297,7 +297,7 @@ object MediaStreamQueries {
         element_at(array(lit("image"), lit("audio"), lit("video")),
           (pmod(col("doc_id"), lit(3)) + 1).cast("int")).as("modality"),
         graft.functions.PerceptualHash.of(col("text").cast("binary")).as("fp"))
-    // Pinned (eager) since round 15 — the rep relation feeds the probe
+    // Pinned (eager) — the rep relation feeds the probe
     // side AND the exact side of the band join (sibling stages); see
     // Dedup.candidatePairsFromBands for the cache-lock/plan rationale.
     val rep = graft.GraftCaches.pin(
@@ -416,8 +416,8 @@ object MediaStreamQueries {
     * fraction has some band within 1 bit and is therefore reachable by
     * the multi-probe equi-join? With 7 bands and probes at Hamming ≤ 1
     * the pigeonhole guarantees every d ≤ 13 pair qualifies, so the
-    * hash-checked output pins recall = 1.0 (round-9 VERDICT 4; the
-    * pre-probe exact-band join measured 0.75). */
+    * hash-checked output pins recall = 1.0 (an exact-band join without
+    * probes measured 0.75). */
   def mediaNeardupRecall(spark: SparkSession, dir: String): DataFrame = {
     val pairs = neardupAllPairs(spark, dir)
     pairs.agg(
@@ -430,7 +430,7 @@ object MediaStreamQueries {
   /** All exact rep pairs at Hamming ≤ 12, flagged with the band
     * condition (the audit baseline behind [[mediaNeardupRecall]]). */
   private def neardupAllPairs(spark: SparkSession, dir: String): DataFrame = {
-    // Pinned (eager) since round 15 — both self-join sides are sibling
+    // Pinned (eager) — both self-join sides are sibling
     // consumers; see Dedup.candidatePairsFromBands.
     val rep = graft.GraftCaches.pin(
       Tables.documents(spark, dir)

@@ -109,8 +109,7 @@ object Parsing {
     * parse per row materializes a struct all fields project from — vs
     * a regex scan per key (try_cast_defaults keeps the regex
     * deliberately, as the reference-parity artifact whose oracle pays
-    * the identical regex; round-2 VERDICT item 6) or per-key
-    * `get_json_object` re-parses (round-3 VERDICT item 4). */
+    * the identical regex) or per-key `get_json_object` re-parses. */
   def propsJsonExtract(spark: SparkSession, dir: String): DataFrame = {
     val parsed = from_json(col("props"), StructType(Seq(
       StructField("k", IntegerType), StructField("zz", IntegerType),

@@ -736,11 +736,10 @@ object Relational {
     * result is deterministic without a unique tiebreak — the property
     * that makes them safe on real data where the order key repeats.
     * Computed from the (class, value) level relation via grouped
-    * PrefixScan + a fact rejoin — never a per-class population window
-    * (round 8). */
+    * PrefixScan + a fact rejoin — never a per-class population window. */
   def rankMetrics(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.PrefixScan
-    // Tie-aware ranks WITHOUT the per-class population window (round 8):
+    // Tie-aware ranks WITHOUT the per-class population window:
     // all three functions are pure arithmetic over the (class, value)
     // LEVEL relation — rank = rows strictly below + 1, dense_rank =
     // level index, cume_dist = inclusive level count / n — so the
@@ -754,7 +753,7 @@ object Relational {
     val lv = o.groupBy("o_orderpriority", "o_totalprice")
       .agg(count(lit(1)).as("c"))
       .withColumn("one", lit(1L))
-    // ONE two-column grouped prefix scan (round-15, guide §1.2/§2.4):
+    // ONE two-column grouped prefix scan (guide §1.2/§2.4):
     // two chained single-column scans paid two range
     // shuffles + pins + totals collects over the same level relation,
     // and the per-class row count `n` re-scanned the whole FACT table —
@@ -844,14 +843,14 @@ object Relational {
     * totals fold once and broadcast back, a single double division per
     * row. */
   def runningShare(spark: SparkSession, dir: String): DataFrame = {
-    // The per-class running decimal sum rides the GROUPED PrefixScan
-    // (round 8): a 5-priority partitioned window is |orders|/5 rows in
+    // The per-class running decimal sum rides the GROUPED PrefixScan:
+    // a 5-priority partitioned window is |orders|/5 rows in
     // one task at population scale. Class totals come from a plain
     // per-class fold broadcast back — exact decimal both ways.
     // Class totals come from the grouped scan's own per-(partition,
-    // group) collect (round-15, guide §1.2): the separate per-class
-    // fold — and the cache whose blocks its broadcast build raced the
-    // scan for (sibling-consumer lock-wait) — are gone; `base` now has
+    // group) collect (guide §1.2): no separate per-class fold, and no
+    // cache whose blocks its broadcast build would race the scan for
+    // (sibling-consumer lock-wait); `base` has
     // ONE consumer chain. Exact decimal both ways (BigDecimal addition
     // is associative), identical values and sum type.
     val base = Tables.orders(spark, dir)
@@ -1009,10 +1008,10 @@ object Relational {
     * (value ties break on event_id) and cross-engine exact, unlike
     * interpolating percentile functions whose float math differs between
     * engines. Ranks ride the grouped PrefixScan, so no task ever holds
-    * a whole event type (round 8). */
+    * a whole event type. */
   def medianByGroup(spark: SparkSession, dir: String): DataFrame = {
-    // Per-type rank rides the GROUPED PrefixScan (round 8): the
-    // type-partitioned window put |events|/|types| rows in one task —
+    // Per-type rank rides the GROUPED PrefixScan: a
+    // type-partitioned window puts |events|/|types| rows in one task —
     // the per-group single-task class with a handful of event types.
     val ranked = graft.operators.PrefixScan.runningSum(
       Tables.events(spark, dir)
@@ -1818,7 +1817,7 @@ object Relational {
     // stays under 2^63 for any key domain, where raw key * a would
     // silently wrap in Spark at orderkey ~1e10+ while DuckDB raises an
     // overflow — breaking the differential exactly at the scale this
-    // operator claims to serve (round-4 ADVICE). Seeds are < p, so each
+    // operator claims to serve. Seeds are < p, so each
     // term is < p^2 ≈ 1e18 and the 3-term sum is < 3p after the term mod.
     def term(key: Column, a: Long): Column =
       pmod(key.cast("bigint"), lit(m)) * a % lit(m)
@@ -1882,7 +1881,7 @@ object Relational {
     // Degenerate group (all events on one day): the OLS denominator is 0.
     // Spark (non-ANSI) would yield NULL while DuckDB's IEEE division gives
     // Inf/NaN — NULL the denominator explicitly on BOTH engines so the
-    // differential can't diverge on that input (round-4 ADVICE).
+    // differential can't diverge on that input.
     val denRaw = nd * sx2 - sx * sx
     val den = when(denRaw === 0.0d, lit(null).cast("double")).otherwise(denRaw)
     val slope = (nd * sxy - sx * sy) / den
@@ -1925,10 +1924,10 @@ object Relational {
     val perPart = Tables.lineitem(spark, dir)
       .groupBy("l_partkey").agg(sum(revenue).as("rev"))
     // The grand total comes from the scan's own per-partition totals
-    // collect (round-15, guide §1.2): the separate `tot` aggregate — and
-    // the cache whose blocks its broadcast build raced the main pass for
-    // (the sibling-consumer lock-wait signature) — are gone; `ranked` now
-    // has ONE consumer chain, and the total is an exact-decimal literal
+    // collect (guide §1.2): no separate `tot` aggregate, and no cache
+    // whose blocks its broadcast build would race the main pass for (the
+    // sibling-consumer lock-wait signature); `ranked` has ONE consumer
+    // chain, and the total is an exact-decimal literal
     // (BigDecimal addition is associative, identical value and type to
     // the old sum(rev) cross-broadcast).
     val (ranked, grand) = PrefixScan.runningSums(
@@ -2354,8 +2353,8 @@ object Relational {
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), col("value"), col("event_id"))
-    // lowerMedian rides the GROUPED PrefixScan (round 8): each call's
-    // type-partitioned rank window was |events|/|types| rows per task.
+    // lowerMedian rides the GROUPED PrefixScan: a type-partitioned rank
+    // window would put |events|/|types| rows in one task.
     def lowerMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
       val ranked = graft.operators.PrefixScan.runningSum(
         df.withColumn("one", lit(1L)),
@@ -3669,26 +3668,20 @@ object Relational {
     * min-price fold over the qualifying levels. No interpolation, no
     * IEEE ordering hazards — ties are resolved by the level collapse
     * itself. */
-  /* Variance investigation (r9–r12): driver bench trios for this query
-   * spread >7x across rounds 9/11 ([2.62, 9.24, 14.82] in r11) while
-   * solo and scale runs stayed calm — suspected spill/GC in the grouped
-   * decimal PrefixScan. Round-12 measurements on a quiet box: full
-   * 349-query loaded run trio [2.37, 2.50, 3.27] (max/min 1.38, no
-   * retry), 15-heavy-query loaded composition [2.37, 2.43, 2.58], solo
-   * [3.37, 3.67, 3.79] — the SOLO session was the slowest of the three,
-   * and the full-surface session the fastest. The spread does not
-   * correlate with composition or with this plan; it tracks the box's
-   * session state (the same cross-family drift §SURVEY 7.32 pins for
-   * the stream_* queries). Plan left as-is: grouped two-phase decimal
-   * scan + broadcast totals, no partition-less window. */
+  /* Bench-trio variance of this query (spreads up to 7x) does not
+   * correlate with run composition or with this plan: on a quiet box a
+   * solo session measured slower than the full-surface one. It tracks
+   * the box's session state (the cross-family drift §SURVEY 7.32 pins
+   * for the stream_* queries), so the plan stays: grouped two-phase
+   * decimal scan + broadcast totals, no partition-less window. */
   def weightedMedianByGroup(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.PrefixScan
-    // The per-flag cumulative weight rides the GROUPED PrefixScan
-    // (round 8): with 3 return flags, the flag-partitioned window put a
+    // The per-flag cumulative weight rides the GROUPED PrefixScan: with
+    // 3 return flags, a flag-partitioned window would put a
     // third of all price LEVELS in one task — levels grow with the fact
     // table, so that is the per-group single-task class.
     //
-    // INTEGER-CENTS reformulation (round-15, guide §2.3 "narrower
+    // INTEGER-CENTS reformulation (guide §2.3 "narrower
     // types"): both DECIMAL(12,2) quantities scale exactly to LONG
     // hundredths (price·100, qty·100 — the decimal cast keeps the
     // original rounding, the ×100 is exact at scale 2), so the level
@@ -3701,7 +3694,7 @@ object Relational {
     // correctly-rounded division — identical to Decimal(12,2).toDouble).
     // The per-flag totals now come FREE from the scan's own driver-side
     // collect (no second pass over the level relation), so `lv` is
-    // consumed exactly once and the round-8 working-set cache is gone.
+    // consumed exactly once and needs no working-set cache.
     val lv = Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"),
         (col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
@@ -4176,7 +4169,7 @@ object Relational {
     * enumeration, no |n|² anything. */
   def giniByNation(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.PrefixScan
-    // Per-nation ranks ride the GROUPED PrefixScan (round 8): the
+    // Per-nation ranks ride the GROUPED PrefixScan: a
     // nation-partitioned rank window is |customers|/25 rows in ONE task
     // at population scale. The grouped two-phase scan keeps every task
     // at |relation|/#partitions regardless of group cardinality; n per
@@ -4456,9 +4449,8 @@ object Relational {
     * oracle mirrors the same row_number), so the orderkey self-join is
     * bounded at C(cap,2) pairs per order NO MATTER how pathological a
     * mega-basket gets — the maxBucket/capped-LSH discipline applied to
-    * the one remaining quadratic-in-group-size query (round-10 VERDICT
-    * 3). TPC-H baskets are ≤7 items, so the cap never binds on the
-    * fixture shape; it exists for the hot key the fixtures don't have.
+    * the one remaining quadratic-in-group-size query. TPC-H baskets are
+    * ≤7 items, so the cap never binds on the fixture shape; it exists for the hot key the fixtures don't have.
     * Public so the mega-basket spec derives its fixture from it. */
   val BasketCap: Int = 32
 
@@ -4489,7 +4481,7 @@ object Relational {
     * oracle mirrors the identical row_number prefilter, so the capped
     * semantics are what's hash-checked. */
   private[graft] def basketPairsFrom(items: DataFrame, cap: Int): DataFrame = {
-    // Eager pin, not cache (round-15, guide §3.3/§5): the distinct
+    // Eager pin, not cache (guide §3.3/§5): the distinct
     // relation is consumed by THREE sibling subtrees of one action (the
     // basket fold, the per-part frequencies, the order total) — a cached
     // first computation makes their tasks race on block locks and each
@@ -4497,7 +4489,7 @@ object Relational {
     val op = graft.GraftCaches.pin(items.distinct(), eager = true)
     val cnt = op.groupBy("pk").agg(count(lit(1)).as("c"))
     val nOrders = op.select(countDistinct("ok").as("n_orders"))
-    // Capped pair generation in ONE grouped pass (round-15, guide §2.3):
+    // Capped pair generation in ONE grouped pass (guide §2.3):
     // collect each order's distinct parts, sort, keep the first `cap`
     // (identical survivors to the old row_number-over-(ok order by pk)
     // prefilter — (ok, pk) is distinct, so ranks are tie-free), and emit
@@ -4513,7 +4505,7 @@ object Relational {
         transform(slice(col("ps"), i + lit(2), lit(cap)),
           y => struct(x.as("p1"), y.as("p2")))))).as("pr"))
       .select(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
-    // Top-20 cut BEFORE the frequency joins (round-15, guide §2.3): the
+    // Top-20 cut BEFORE the frequency joins (guide §2.3): the
     // ranking keys (pair_cnt desc, p1, p2) are all present right after
     // the pair aggregation — lift only ANNOTATES the surviving rows — so
     // the TakeOrdered heap runs on the raw pair counts and the per-part

@@ -298,15 +298,25 @@ object SimilarityQueries {
     * truth set is the denominator (always k rows per query). */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.GraftCaches.track(Tables.embeddings(spark, dir))
-    val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
+    recallPerQuery(truthTop10(emb),
+      Similarity.lshTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10))
+  }
+
+  /** The recall truth relation: the brute-force top-10 (q_id, vec_id) of
+    * the 5 query vectors (vec_id < 5). */
+  private def truthTop10(emb: DataFrame): DataFrame =
+    Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
       .select(col("q_id"), col("vec_id"))
-    val approx = Similarity.lshTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-    truth.join(approx, Seq("q_id", "vec_id"), "left")
+
+  /** The recall@k tail: `truth` left-joined with the (q_id, vec_id) rows
+    * of `approx`, then per query `k` (the truth count — the denominator,
+    * so the join keeps the truth side), `n_hits` and `recall`. */
+  private def recallPerQuery(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.join(approx.select(col("q_id"), col("vec_id"), lit(1L).as("hit")),
+        Seq("q_id", "vec_id"), "left")
       .groupBy("q_id")
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
-  }
 
   val annRecallSql: String =
     s"""WITH truth AS (SELECT q_id, vec_id FROM ($cosineTopKSql)),
@@ -329,20 +339,11 @@ object SimilarityQueries {
     * across engines, so recalls hash-match. */
   def mrlTruncationRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.GraftCaches.track(Tables.embeddings(spark, dir))
-    val truth = graft.GraftCaches.track(
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-        .select(col("q_id"), col("vec_id")))
+    val truth = graft.GraftCaches.track(truthTop10(emb))
     Seq(8, 16, 32).map { d =>
       val trunc = emb.select(col("vec_id"), slice(col("embedding"), 1, d).as("embedding"))
-      val approx = Similarity.bruteForceTopK(trunc, "vec_id", "embedding",
-          col("vec_id") < 5, k = 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      truth.join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("dim", lit(d.toLong))
+      recallPerQuery(truth, truthTop10(trunc)).withColumn("dim", lit(d.toLong))
     }.reduce(_ unionByName _)
-      .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
       .select("dim", "q_id", "k", "n_hits", "recall")
   }
 
@@ -384,9 +385,7 @@ object SimilarityQueries {
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("dim").cast("bigint").as("dim"), col("x").cast("double").as("x"))
       .groupBy("dim")
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col("x") * 1000000.0).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / (lit(1000000.0) * count(lit(1)))).as("mean_x"),
+      .agg(count(lit(1)).as("n"), Similarity.microMean(col("x")).as("mean_x"),
         min("x").as("min_x"), max("x").as("max_x"))
 
   val embedDimStatsSql: String =
@@ -503,14 +502,8 @@ object SimilarityQueries {
     * the broadcast lookup table. */
   def pqRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.GraftCaches.track(Tables.embeddings(spark, dir))
-    val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-      .select(col("q_id"), col("vec_id"))
-    val approx = Similarity.pqAdcTopK(emb, "vec_id", "embedding", col("vec_id") < 5, topK = 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-    truth.join(approx, Seq("q_id", "vec_id"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
+    recallPerQuery(truthTop10(emb),
+      Similarity.pqAdcTopK(emb, "vec_id", "embedding", col("vec_id") < 5, topK = 10))
   }
 
   val pqRecallSql: String =
@@ -529,14 +522,8 @@ object SimilarityQueries {
     * directly readable next to its parents. */
   def ivfPqRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.GraftCaches.track(Tables.embeddings(spark, dir))
-    val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-      .select(col("q_id"), col("vec_id"))
-    val approx = Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 5, topK = 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-    truth.join(approx, Seq("q_id", "vec_id"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
+    recallPerQuery(truthTop10(emb),
+      Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 5, topK = 10))
   }
 
   val ivfPqRecallSql: String =
@@ -555,14 +542,8 @@ object SimilarityQueries {
     * denominator, left join direction keeps k rows per query. */
   def ivfRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.GraftCaches.track(Tables.embeddings(spark, dir))
-    val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-      .select(col("q_id"), col("vec_id"))
-    val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-    truth.join(approx, Seq("q_id", "vec_id"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
+    recallPerQuery(truthTop10(emb),
+      Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10))
   }
 
   val ivfRecallSql: String =
@@ -590,8 +571,7 @@ object SimilarityQueries {
         transform(col("embedding"), x => x.cast("double")).as("v"))
     val mu = emb.select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("label", "dim")
-      .agg((sum(round(col("x") * lit(1e6)).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .cast("double") / (lit(1e6) * count(lit(1)))).as("mu"))
+      .agg(Similarity.microMean(col("x")).as("mu"))
     val centroids = mu.groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("mu")))),
         s => s.getField("mu")).as("c"))
@@ -617,6 +597,11 @@ object SimilarityQueries {
        |         (sqrt(${dotSql("e.v", "e.v")}) * sqrt(${dotSql("c.c", "c.c")})) AS cos_centroid
        |FROM ev e JOIN c USING (label) ORDER BY e.vec_id""".stripMargin
 
+  /** Query vector 0 as a one-row (q_id, qv, q_nrm) relation: the fixed
+    * query the rerank, fusion and ranking-eval queries score against. */
+  private def queryZero(e: DataFrame): DataFrame =
+    Similarity.queryVectors(e, "vec_id", col("vec_id") === 0)
+
   /** Two-stage retrieval: BM25 lexical candidates re-ranked by embedding
     * cosine against a fixed query vector (vec_id 0) — the classic
     * retrieve-then-rerank pipeline as ONE composed dataflow. Stage 1 is
@@ -629,15 +614,10 @@ object SimilarityQueries {
     * never corpus-sized; only the two index scans touch the corpus. */
   def retrieveRerank(spark: SparkSession, dir: String): DataFrame = {
     val cands = TextQueries.bm25Search(spark, dir).select(col("doc_id")).distinct()
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"),
-        Similarity.toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("v").as("qv"), col("nrm").as("q_nrm"))
+    val e = Similarity.vectors(Tables.embeddings(spark, dir), "vec_id", "embedding")
     e.join(broadcast(cands), col("vec_id") === col("doc_id"))
-      .crossJoin(broadcast(q))
-      .select(col("doc_id"),
-        (Similarity.dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
+      .crossJoin(broadcast(queryZero(e)))
+      .select(col("doc_id"), Similarity.cosine("qv", "v", "q_nrm", "nrm").as("sim"))
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("sim").desc, col("doc_id").asc)).cast("bigint"))
@@ -669,17 +649,13 @@ object SimilarityQueries {
       .groupBy("doc_id").agg(max("score").as("lex_score"))
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("lex_score").desc, col("doc_id").asc)).cast("bigint"))
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"),
-        Similarity.toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("v").as("qv"), col("nrm").as("q_nrm"))
+    val e = Similarity.vectors(Tables.embeddings(spark, dir), "vec_id", "embedding")
     val rrf = lit(1.0) / (lit(60.0) + col("lex_rank")) +
       lit(1.0) / (lit(60.0) + col("sem_rank"))
     e.join(broadcast(lex), col("vec_id") === col("doc_id"))
-      .crossJoin(broadcast(q))
+      .crossJoin(broadcast(queryZero(e)))
       .select(col("doc_id"), col("lex_rank"),
-        (Similarity.dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
+        Similarity.cosine("qv", "v", "q_nrm", "nrm").as("sim"))
       .withColumn("sem_rank", row_number().over(
         Window.orderBy(col("sim").desc, col("doc_id").asc)).cast("bigint"))
       .select(col("doc_id"), col("lex_rank"), col("sem_rank"), rrf.as("rrf"))
@@ -733,8 +709,8 @@ object SimilarityQueries {
       col("nrm16").as("nb16"))
     a.join(b, "id_a")
       .select(col("id_a"), col("id_b"),
-        (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos64"),
-        (Similarity.dot(col("va16"), col("vb16")) / (col("na16") * col("nb16"))).as("cos16"))
+        Similarity.cosine("va", "vb", "na", "nb").as("cos64"),
+        Similarity.cosine("va16", "vb16", "na16", "nb16").as("cos16"))
       .withColumn("cos_gap", abs(col("cos64") - col("cos16")))
       .withColumn("agree16", col("cos_gap") <= 0.1)
   }
@@ -836,16 +812,12 @@ object SimilarityQueries {
     val discounts = Array(1.0, 0.6309297535714575, 0.5, 0.43067655807339306,
       0.38685280723454163, 0.3562071871080222, 0.33333333333333331,
       0.31546487678572871, 0.30102999566398119, 0.28906482631788785)
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"),
-        Similarity.toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("v").as("qv"), col("nrm").as("q_nrm"))
+    val e = Similarity.vectors(Tables.embeddings(spark, dir), "vec_id", "embedding")
     val graded = TextQueries.bm25Search(spark, dir)
       .join(e, col("vec_id") === col("doc_id"))
-      .crossJoin(broadcast(q))
+      .crossJoin(broadcast(queryZero(e)))
       .select(col("term"), col("rn"), col("doc_id"),
-        (Similarity.dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
+        Similarity.cosine("qv", "v", "q_nrm", "nrm").as("sim"))
       .withColumn("rel",
         greatest(lit(0L), least(lit(3L),
           floor(col("sim") * 10.0).cast("bigint") + 1L)))
@@ -923,7 +895,7 @@ object SimilarityQueries {
       trainIters = SemTrainIters)
   }
 
-  /** Lloyd iterations for the semDedup family (round-12): the τ=0.9
+  /** Lloyd iterations for the semDedup family: the τ=0.9
     * planted-near-dup audit measured probe-2 recall 0.921 with raw
     * lowest-id seeds at 20k vectors vs 0.976 after ONE training step
     * (0.988 after two) — and training made the family FASTER (balanced
@@ -940,8 +912,7 @@ object SimilarityQueries {
     * (step index 9x avoids that chain's a1/d1/m1 names, which the
     * recall SQL uses for its own CTEs). */
   private val cAutoCte: String =
-    // LEAST mirrors Similarity.autoCells' Int clamp (round-12 ADVICE):
-    // without it the two engines would derive different centroid counts
+    // LEAST mirrors Similarity.autoCells' Int clamp: without it the two engines would derive different centroid counts
     // past ~62·2^31 vectors — the clamp is part of the shared formula.
     """c AS (SELECT vec_id AS c_id, embedding AS cv, nrm AS c_nrm FROM e0
       |      WHERE vec_id < LEAST(GREATEST(16, (SELECT COUNT(*) FROM e0) // 62), 2147483647))""".stripMargin +
@@ -968,24 +939,24 @@ object SimilarityQueries {
        |SELECT a.vec_id, a.centroid_id, d.id_b IS NULL AS is_kept
        |FROM a LEFT JOIN d ON a.vec_id = d.id_b""".stripMargin
 
-  /** Honest-recall audit for the semantic-dedup candidate generation
-    * (round-10 VERDICT 4): exact all-pairs truth at cosine >= 0.3 (the
+  /** Honest-recall audit for the semantic-dedup candidate generation:
+    * exact all-pairs truth at cosine >= 0.3 (the
     * blocked equi-join baseline — never a single-task Cartesian) vs the
     * reach of (a) semdedup's top-1 cell and (b) the probe-2 capped-cell
     * memberships. One hash-checked row pins both recalls, so the
     * cell-boundary loss is a measured artifact, not a guess.
     *
     * Measured at sf0.01 (500 vectors, 990 true pairs): recall_p1 =
-    * 0.2556, recall_p2 = 0.5838 with the round-12 one-Lloyd-step
-    * trained centroids (seed centroids measured 0.2253/0.4980 in round
-    * 11 — training helps even here). The low absolute numbers are a
+    * 0.2556, recall_p2 = 0.5838 with one-Lloyd-step trained centroids
+    * (seed centroids measured 0.2253/0.4980 — training helps even
+    * here). The low absolute numbers are a
     * property of the FIXTURE, stated honestly:
     * these embeddings are near-random, so a cosine-0.3 "duplicate" pair
     * is weak similarity that doesn't co-locate in Voronoi cells. A real
     * near-dup corpus pairs at tau >= 0.9 where members are nearly
     * collinear and land in the same (or the probe-adjacent) cell — the
-    * regime SemDeDup is built for. Round 11's own lesson was that such
-    * arguments get MEASURED: `semdedup_recall_t9` below runs the same
+    * regime SemDeDup is built for, and measured: `semdedup_recall_t9`
+    * below runs the same
     * audit at τ=0.9, and FixtureGen plants clustered cosine-≈0.95
     * near-dups so the generated corpora have a non-empty τ=0.9 truth
     * relation (SemDedupPlantedRecallSpec pins probe-2 recall there;
@@ -1002,8 +973,8 @@ object SimilarityQueries {
       trainIters = SemTrainIters, truthSamplePpm = truthPpm(n))
   }
 
-  /** Truth-sample target for the recall audits (round-12 VERDICT 2,
-    * directive #2): the blocked all-pairs truth relation is N²/blocks²
+  /** Truth-sample target for the recall audits: the blocked all-pairs
+    * truth relation is N²/blocks²
     * by design — the measurement apparatus, not the dedup itself — and
     * at sf3 (60k vectors) it already dominated the audit's wall clock
     * (sf1→sf3 segment ratio 4.66 on 3× data). When this env-provided
@@ -1012,7 +983,7 @@ object SimilarityQueries {
     * min(1e6, 1e6·target/N) — both engines derive the identical ppm
     * from the identical COUNT in pure integer arithmetic), capping the
     * quadratic stage at ~target² regardless of corpus growth. Unset
-    * (the driver gates) = full truth, bit-identical to round 12. */
+    * (the driver gates) = full truth. */
   private val SemTruthTarget: Long =
     sys.env.get("SPARK_GRAFT_SEM_TRUTH_TARGET").map { raw =>
       // A malformed value must fail naming the knob, not as a bare
@@ -1051,11 +1022,10 @@ object SimilarityQueries {
   /** Constant vector-count target for the standing sampled gate: both
     * engines derive ppm = min(1e6, 1e6·250/COUNT) from their own counts.
     * 250 is chosen so the sf0.01 driver gate (500 vectors) derives
-    * ppm = 500,000 — numerically identical to the round-13 literal, so
-    * the standing hash is unchanged — while at any larger corpus the
-    * truth stage is fixed-SIZE (~250 vectors, ~31k candidate pairs)
-    * instead of fixed-FRACTION (round-13 VERDICT: the 500,000-ppm
-    * literal grew 2.09× on 3× data — the artifact's last quadratic). */
+    * ppm = 500,000, while at any larger corpus the truth stage is
+    * fixed-SIZE (~250 vectors, ~31k candidate pairs) instead of
+    * fixed-FRACTION (a fixed 500,000 ppm grew 2.09× on 3× data — the
+    * audit's last quadratic). */
   private val SampledGateTarget = 250L
 
   /** Standing cross-engine gate for the truth-SAMPLING path itself: the
@@ -1144,8 +1114,7 @@ object SimilarityQueries {
     * either a literal or the LEAST/COUNT derivation mirroring
     * [[truthPpm]]), and by the candidate-generation CTE block (probe-2
     * exhaustive by default, [[twoLevelCtes]] for the coarse-pruned
-    * audit). None = full truth, byte-identical to the round-12
-    * oracle. Empty truth → counts 0 (COALESCE) and recalls NULL (CASE),
+    * audit). None = full truth. Empty truth → counts 0 (COALESCE) and recalls NULL (CASE),
     * mirroring the engine's coalesce/when exactly. */
   private def semDedupRecallSqlFor(threshold: Double,
       samplePpmSql: Option[String] = None,
@@ -1341,18 +1310,15 @@ object SimilarityQueries {
 
   /** The IVF tuning curve: mean recall@10 of the IVF index as nProbe
     * sweeps 1→4 — the readout that picks the probe count for a target
-    * recall before anything ships to a 100 TB index. Round-14: the four
-    * probe levels share ONE assignment build and one scored candidate
-    * relation ([[Similarity.ivfProbeSweepTopK]] — per level bit-identical
-    * to the hash-checked `ivf_topk` at that nProbe); previously each
-    * level rebuilt the IVF assignment from the corpus (4 scans + 4
-    * per-vector max aggregations for a 4-point curve). The brute-force
+    * recall before anything ships to a 100 TB index. The four probe
+    * levels share ONE assignment build and one scored candidate relation
+    * ([[Similarity.ivfProbeSweepTopK]] — per level bit-identical to the
+    * hash-checked `ivf_topk` at that nProbe), not one corpus scan and
+    * per-vector max aggregation per level. The brute-force
     * truth relation is computed ONCE and cache-tracked. Output is 4 rows. */
   def ivfProbeCurve(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.GraftCaches.track(Tables.embeddings(spark, dir))
-    val truth = graft.GraftCaches.track(
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 10)
-        .select(col("q_id"), col("vec_id")))
+    val truth = graft.GraftCaches.track(truthTop10(emb))
     val sweep = Similarity.ivfProbeSweepTopK(emb, "vec_id", "embedding",
         col("vec_id") < 5, k = 10, maxProbe = 4)
       .select(col("n_probe"), col("q_id"), col("vec_id"), lit(1L).as("hit"))
@@ -1439,13 +1405,9 @@ object SimilarityQueries {
     import graft.functions.TopKAggregator
     val e = graft.GraftCaches.track(
       Similarity.indexed(Tables.embeddings(spark, dir), "vec_id", "embedding"))
-    val truth = graft.GraftCaches.track(
-      Similarity.bruteForceTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
-          col("vec_id") < 5, k = 10)
-        .select(col("q_id"), col("vec_id")))
+    val truth = graft.GraftCaches.track(truthTop10(Tables.embeddings(spark, dir)))
     val allBands = graft.GraftCaches.track(Similarity.bandRows(e, "vec_id"))
-    val q = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("q_nrm"))
+    val q = Similarity.queryVectors(e, "vec_id", col("vec_id") < 5)
     (1 to 2).map { nb =>
       val bands = allBands.filter(col("band") < nb)
       val qb = bands.filter(col("vec_id") < 5)
@@ -1455,12 +1417,7 @@ object SimilarityQueries {
             col("c.vec_id") =!= col("q.q_id"))
         .select(col("q.q_id").as("q_id"), col("c.vec_id").as("vec_id"))
         .distinct()
-      val scored = cand
-        .join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-        .join(broadcast(q), "q_id")
-        .select(col("q_id"), col("vec_id"),
-          (Similarity.dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
-      val top = scored.groupBy("q_id")
+      val top = Similarity.scoreCandidates(cand, e, q, "vec_id").groupBy("q_id")
         .agg(TopKAggregator.topK(10)(col("vec_id"), col("sim")).as("tk"))
         .select(col("q_id"), explode(col("tk.ids")).as("vec_id"), lit(1L).as("hit"))
       val nCand = cand.agg(count(lit(1)).as("n_candidates"))
@@ -1522,14 +1479,8 @@ object SimilarityQueries {
     val approx = scored
       .groupBy("q_id")
       .agg(TopKAggregator.topK(10)(col("vec_id"), -col("ham")).as("tk"))
-      .select(col("q_id"), explode(col("tk.ids")).as("vec_id"), lit(1L).as("hit"))
-    val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-        col("vec_id") < 5, k = 10)
-      .select(col("q_id"), col("vec_id"))
-    truth.join(approx, Seq("q_id", "vec_id"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("k").cast("double"))
+      .select(col("q_id"), explode(col("tk.ids")).as("vec_id"))
+    recallPerQuery(truthTop10(emb), approx)
   }
 
   /** 48-bit sign signature rebuilt in SQL: band 0, 48 planes, the same
@@ -1565,16 +1516,14 @@ object SimilarityQueries {
     * fold over the q_vec-sorted max list (sum order pinned, so the
     * score is bit-equal cross-engine); top-5 via TakeOrdered. */
   def colbertMaxsimTopk(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
+    val e = Similarity.vectors(Tables.embeddings(spark, dir), "vec_id", "embedding")
     val q = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("q_vec"), col("v").as("qv"), col("nrm").as("q_nrm"))
     val d = e.filter(col("vec_id") >= 4)
       .select(expr("vec_id div 4").as("grp"), col("v"), col("nrm"))
     val mx = d.crossJoin(broadcast(q))
       .select(col("grp"), col("q_vec"),
-        (Similarity.dot(col("qv"), col("v")) / (col("q_nrm") * col("nrm"))).as("sim"))
+        Similarity.cosine("qv", "v", "q_nrm", "nrm").as("sim"))
       .groupBy("grp", "q_vec").agg(max(col("sim")).as("mx"))
     mx.groupBy("grp")
       .agg(aggregate(

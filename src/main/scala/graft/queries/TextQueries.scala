@@ -944,8 +944,8 @@ object TextQueries {
   def corpusPipeline(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // ONE tokenization pass feeds BOTH the dedup shingles and the
-    // quality grams (round-3 VERDICT item 3 — the query-level analog of
-    // lshBandsFrom sharing shingles between bands and verify). The
+    // quality grams (the query-level analog of lshBandsFrom sharing
+    // shingles between bands and verify). The
     // tokenized relation is tracked in GraftCaches so the words() scan
     // runs once; at cluster scale write it to a table instead.
     val tokenized = graft.GraftCaches.track(docs.select(
@@ -1751,7 +1751,7 @@ object TextQueries {
   private val UnigramTopK = 48
   private val UnigramDpUnroll = 12
 
-  /** Guard the oracle's silent length bound (round-10 ADVICE): the
+  /** Guard the oracle's silent length bound: the
     * DuckDB replay unrolls the Viterbi DP to [[UnigramDpUnroll]]
     * positions, so a corpus word longer than that is simply DROPPED
     * from the oracle's segmentation union while the engine's DP (which
@@ -1896,8 +1896,8 @@ object TextQueries {
   def tokenizerCompare(spark: SparkSession, dir: String): DataFrame = {
     val docs = requireDpUnroll(Tables.documents(spark, dir))
     // ONE shared (w, f) vocabulary relation feeds BOTH trainers
-    // (round-15, guide §2.4): each trainer previously rebuilt the
-    // identical corpus-scan + explode + word-count aggregate. Lazy pin:
+    // (guide §2.4), so the corpus-scan + explode + word-count aggregate
+    // runs once, not once per trainer. Lazy pin:
     // the consumers are sequential driver actions (BPE trains fully
     // before unigram seeding), so the first argmax collect materializes
     // it. Both trained vocabularies are identical by construction — the
@@ -2141,8 +2141,8 @@ object TextQueries {
     val m = PolyHash.Mod
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), ((col("doc_id") * a + b) % m).as("skey"))
-    // Per-source shuffle ranks ride the GROUPED PrefixScan (round 8):
-    // the source-partitioned row_number was |docs|/|sources| in one task.
+    // Per-source shuffle ranks ride the GROUPED PrefixScan: a
+    // source-partitioned row_number would put |docs|/|sources| in one task.
     val ranked = graft.operators.PrefixScan.runningSum(
         d.withColumn("one", lit(1L)), Seq("source"), "one", "r0",
         col("skey"), col("doc_id"))
@@ -2411,8 +2411,8 @@ object TextQueries {
         when(pmod(col("doc_id"), lit(2)) === 1, 1L).otherwise(0L).as("b"))
     val per = d.groupBy("qkey")
       .agg(sum("a").as("na"), sum("b").as("nb"))
-    // ONE two-column prefix scan (round-15, guide §1.2/§2.4): the two
-    // chained single-column scans paid two range shuffles + pins +
+    // ONE two-column prefix scan (guide §1.2/§2.4): two chained
+    // single-column scans paid two range shuffles + pins +
     // totals collects over the same level relation, and the separate
     // `tot` aggregate re-executed the WHOLE document scan (regexp pass
     // included) because `per` sat un-cached. The combined scan computes
@@ -2971,8 +2971,8 @@ object TextQueries {
     * end-stage division. Feeds source-balanced threshold filters where
     * a global cut would silently drop whole sources. */
   def quantileTransform(spark: SparkSession, dir: String): DataFrame = {
-    // Per-source ranks ride the GROUPED PrefixScan (round 8): the
-    // source-partitioned window was |docs|/|sources| rows in one task.
+    // Per-source ranks ride the GROUPED PrefixScan: a source-partitioned
+    // window would put |docs|/|sources| rows in one task.
     val nTokens = size(graft.operators.TextOps.words(col("text"))).cast("bigint")
     val quality = least(col("n_tokens") / lit(50.0), lit(1.0)) * 0.5 +
       (col("n_stop").cast("double") / col("n_tokens")) * 0.5
@@ -3190,8 +3190,8 @@ object TextQueries {
       .select(explode(grams).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("freq"))
       .withColumn("one", lit(1L))
-    // ONE two-column prefix scan (round-15, guide §1.2/§2.4, the ks_drift
-    // shape): two chained single-column scans paid two range
+    // ONE two-column prefix scan (guide §1.2/§2.4, the ks_drift shape):
+    // two chained single-column scans paid two range
     // shuffles + pins + totals collects over the same gram relation, and
     // the separate `tot` aggregate re-executed the WHOLE corpus gram
     // explode because `freq` sat un-cached. The combined scan computes

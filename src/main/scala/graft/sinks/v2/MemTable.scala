@@ -132,7 +132,7 @@ final class MemWriterFactory extends DataWriterFactory {
   * lives, and Spark serializes the partition (UnsafeRow copies are
   * serializable) to whichever executor runs the read task. The earlier
   * shape resolved the store at EXECUTOR time, which silently returned
-  * empty on any real multi-JVM cluster (round-4 ADVICE); now the scan is
+  * empty on any real multi-JVM cluster; the scan is
   * cluster-correct by construction: writes travel driver-ward in commit
   * messages, reads travel executor-ward in the partition. */
 final class MemTableScan(name: String) extends Scan with Batch {

@@ -107,11 +107,7 @@ object AnomalyStream {
 
   /** Batch or streaming: per-user 3σ inter-arrival flags. */
   def gapAnomalies(events: DataFrame): Dataset[GapFlag] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[GapFlag] = Encoders.product[GapFlag]
     events
       .select(col("user_id").cast("long"), unix_micros(col("ts")),

@@ -60,11 +60,7 @@ object AttributionStream {
     * their attribution. Non-click/purchase event types are filtered at
     * the scan — they never ride the keyed exchange. */
   def lastTouch(events: DataFrame): Dataset[Attributed] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Attributed] = Encoders.product[Attributed]
     events
       .filter(col("event_type").isin("click", "purchase"))

@@ -59,11 +59,7 @@ object BitmapStream {
 
   /** Batch or streaming: exact distinct users per event type. */
   def distinctUsers(events: DataFrame): Dataset[DistinctCount] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[DistinctCount] = Encoders.product[DistinctCount]
     events
       .select(col("event_type"), col("user_id").cast("long"))

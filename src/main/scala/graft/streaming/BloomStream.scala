@@ -69,11 +69,7 @@ object BloomStream {
   /** Batch or streaming: the live Bloom register relation of a stream of
     * element hashes (`hashCol`: the engine poly-hash of the element). */
   def sketch(elems: DataFrame, hashCol: String): Dataset[Reg] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = elems.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(elems.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Reg] = Encoders.product[Reg]
     elems.select(explode(array((0 until Sketches.BloomK).map(j =>
         Sketches.bloomBit(col(hashCol), j)): _*)).as("bit"))

@@ -57,11 +57,7 @@ object CdcStream {
   /** Batch or streaming: materialized current row per key (tombstones
     * included — the caller filters `deleted` for a snapshot readout). */
   def materialize(cdc: DataFrame): Dataset[CdcRow] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = cdc.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(cdc.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[CdcRow] = Encoders.product[CdcRow]
     cdc
       .select(col("key").cast("long"), col("seq").cast("long"),

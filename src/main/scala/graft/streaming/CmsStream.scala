@@ -68,11 +68,7 @@ object CmsStream {
   /** Batch or streaming: the live CMS cell relation of a term stream. */
   def sketch(terms: DataFrame, term: String,
       d: Int = Sketches.CmsDepth, w: Int = Sketches.CmsWidth): Dataset[Cell] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = terms.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(terms.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Cell] = Encoders.product[Cell]
     terms.select(explode(array((0 until d).map(j =>
         struct(lit(j).as("row_j"),

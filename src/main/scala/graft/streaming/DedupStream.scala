@@ -49,13 +49,7 @@ object DedupStream {
 
   /** Batch or streaming: group by the dedup key and keep the first row. */
   def firstSeen(events: DataFrame): Dataset[FirstSeen] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats
-    // (see the comment there): one-shot batch transformWithState needs the
-    // coordinator endpoint a streaming query would have registered.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[FirstSeen] = Encoders.product[FirstSeen]
     events
       .select(col("user_id").cast("long"), col("event_type"),

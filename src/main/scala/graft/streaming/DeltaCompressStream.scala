@@ -60,11 +60,7 @@ object DeltaCompressStream {
 
   /** Batch or streaming: the kept (surviving) events per user. */
   def kept(events: DataFrame): Dataset[Kept] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Kept] = Encoders.product[Kept]
     events
       .select(col("user_id").cast("long"), col("event_id").cast("long"),

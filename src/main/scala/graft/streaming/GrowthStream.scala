@@ -68,11 +68,7 @@ object GrowthStream {
     * input frame must carry `cust` (long) and `m_us` (month-start epoch
     * micros), already deduplicated. */
   def monthStatuses(activity: DataFrame): Dataset[MonthStatus] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = activity.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(activity.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[MonthStatus] = Encoders.product[MonthStatus]
     activity
       .select(col("cust").cast("long"), col("m_us").cast("long"))

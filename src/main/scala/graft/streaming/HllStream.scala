@@ -56,11 +56,7 @@ object HllStream {
 
   /** Batch or streaming: per-type distinct-user HLL estimates. */
   def distinctUsers(events: DataFrame): Dataset[HllEstimate] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[HllEstimate] = Encoders.product[HllEstimate]
     events
       .select(col("event_type"), col("user_id").cast("long"))

@@ -76,11 +76,7 @@ object KmvStream {
 
   /** Batch or streaming: per-event-type KMV distinct-user estimate. */
   def distinctUsers(events: DataFrame): Dataset[KmvEstimate] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[KmvEstimate] = Encoders.product[KmvEstimate]
     events
       .select(col("event_type"), col("user_id").cast("long"))

@@ -58,11 +58,7 @@ object PackStream {
   /** Batch or streaming: per-shard next-fit bins. `docs` columns:
     * (shard INT, doc_id LONG, n_tokens LONG). */
   def pack(docs: DataFrame, capacity: Long): Dataset[Bin] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = docs.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(docs.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Bin] = Encoders.product[Bin]
     docs
       .select(col("shard").cast("int"), col("doc_id").cast("long"),

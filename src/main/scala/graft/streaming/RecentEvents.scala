@@ -41,13 +41,7 @@ object RecentEvents {
 
   /** Batch or streaming: group by user and run the processor. */
   def recentPerUser(events: DataFrame): Dataset[RecentOut] = {
-    // Same batch-mode coordinator pre-registration as TypeStats (the
-    // StateStoreCoordinator RPC endpoint only exists once a streaming
-    // query has started; reflection-touch registers it up front).
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[RecentOut] =
       Encoders.product[RecentOut]
     events

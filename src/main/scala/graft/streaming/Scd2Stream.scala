@@ -103,11 +103,7 @@ object Scd2Stream {
   /** Batch or streaming: per-key SCD2 validity intervals (closed rows
     * are final; the trailing open row per key is the current regime). */
   def history(events: DataFrame): Dataset[Scd2Out] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Scd2Out] = Encoders.product[Scd2Out]
     events
       .select(col("user_id").cast("long"), unix_micros(col("ts")),

@@ -105,11 +105,7 @@ object TwapStream {
 
   /** Batch or streaming: per-user running TWAP over closed intervals. */
   def twap(events: DataFrame): Dataset[Twap] = {
-    // Same batch-mode StateStoreCoordinator pre-registration as TypeStats.
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[Twap] = Encoders.product[Twap]
     events
       .select(col("user_id").cast("long"), unix_micros(col("ts")),

@@ -49,18 +49,7 @@ object TypeStats {
 
   /** Batch or streaming: group by user and run the processor. */
   def userTypeStats(events: DataFrame): Dataset[UserTypeStats] = {
-    // Batch-mode TransformWithStateExec asks executors to resolve the
-    // driver's StateStoreCoordinator RPC endpoint, but Spark only
-    // registers that endpoint when a STREAMING query starts — a one-shot
-    // batch run with no prior stream hits RpcEndpointNotFoundException.
-    // Touching the coordinator accessor registers it up front (the
-    // accessor is public bytecode but private[sql] to Scala — reflection
-    // is the least-invasive bridge; a failure just falls through to the
-    // streaming-initialized path).
-    try {
-      val mgr = events.sparkSession.streams
-      mgr.getClass.getMethod("stateStoreCoordinator").invoke(mgr)
-    } catch { case _: ReflectiveOperationException => () }
+    StateCoordinator.register(events.sparkSession)
     implicit val outEnc: org.apache.spark.sql.Encoder[UserTypeStats] =
       Encoders.product[UserTypeStats]
     events

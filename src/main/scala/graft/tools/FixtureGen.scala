@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic synthetic fixture generator for SCALE measurement
-  * (round-10 VERDICT 1): reproduces the driver testdata's ten-table
+/** Deterministic synthetic fixture generator for SCALE measurement:
+  * reproduces the driver testdata's ten-table
   * star schema (TESTDATA.md / FIXTURES.md §A — same column names, types,
   * key ranges, fanouts, and value distributions) at ARBITRARY scale
   * factor, so the growth of a query between two generated SFs measures
@@ -153,10 +153,9 @@ object FixtureGen {
   }
 
   /** The planting predicates, published as the single source of truth
-    * (round-12 ADVICE: SemDedupPlantedRecallSpec used to re-derive them
-    * from duplicated magic constants, so a generator tweak could
-    * silently decouple the spec's notion of "planted" from the
-    * generator's — now both read THESE). A document id is a planted
+    * (a spec re-deriving them from duplicated magic constants would let
+    * a generator tweak silently decouple the spec's notion of "planted"
+    * from the generator's — both read THESE). A document id is a planted
     * exact duplicate iff [[isPlantedDocDup]]; its source is
     * [[docDupSourceId]] (the preceding even id, never itself planted).
     * An embedding id is a planted near-duplicate iff
@@ -179,8 +178,8 @@ object FixtureGen {
     // need a non-empty duplicate relation to measure. Only ODD ids can
     // be duplicates and they always seed from the (even, therefore
     // never-redirected) id-1, so the "exact duplicate of its source"
-    // invariant holds unconditionally (round-11 ADVICE: the old id-1
-    // seed could itself be a redirected doc, silently breaking it).
+    // invariant holds unconditionally (an unconditional id-1 seed could
+    // itself be a redirected doc, silently breaking it).
     // Gate 1/250 on the odd half ≈ the same 0.2% overall rate.
     val seed = when(isPlantedDocDup(col("id")),
       docDupSourceId(col("id"))).otherwise(col("id"))
@@ -198,8 +197,8 @@ object FixtureGen {
       .withColumn("n_chars", length(col("text")))
   }
 
-  /** Embeddings with PLANTED clustered near-duplicates (round-11 VERDICT
-    * 2): ~3% of vectors copy a source vector's components plus small
+  /** Embeddings with PLANTED clustered near-duplicates: ~3% of vectors
+    * copy a source vector's components plus small
     * per-dimension noise, landing at cosine ≈ 0.95–0.97 to the source —
     * the τ≥0.9 regime semantic dedup actually runs in, which the base
     * near-random distribution cannot produce. Source selection is
@@ -239,8 +238,8 @@ object FixtureGen {
     * exactly this many parquet files regardless of the generator
     * session's parallelism. 32 matches local[32] and
     * spark.sql.shuffle.partitions — a table with fewer files caps every
-    * downstream scan below the box's parallelism (the round-12 lesson:
-    * an 8-file regeneration inflated large-SF medians up to 9× on
+    * downstream scan below the box's parallelism (measured: an 8-file
+    * regeneration inflated large-SF medians up to 9× on
     * unchanged queries; the fixture layout, not the engine, was being
     * measured). FixtureLayoutSpec asserts the written count; ScaleBench
     * records per-table counts in its artifact header. */
@@ -284,7 +283,7 @@ object FixtureGen {
       // (parquet min/max skipping friendly). Row CONTENT stays purely
       // id-determined either way; tables with fewer distinct keys than
       // LayoutFiles (region, nation) honestly write fewer files.
-      // REPRODUCIBILITY CONTRACT (round-13 ADVICE): row content and the
+      // REPRODUCIBILITY CONTRACT: row content and the
       // LayoutFiles file COUNT are reproducible across regenerations;
       // file BYTES are not — repartitionByRange picks its boundaries by
       // reservoir-sampling seeded from the RDD id, so row-to-file

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Empirical scaling curve (round-10 VERDICT 1): run the most expensive
+/** Empirical scaling curve: run the most expensive
   * queries at TWO generated scale points (default sf0.1 and sf1 — 10x
   * data) and report per-query growth ratios, converting the "this plan
   * survives a 100x scale-up" design claims from argued (ScaleSmoke plan
@@ -18,12 +18,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `runMain graft.tools.ScaleBench <dirA> <dirB> <outFile>`
   * (dirA = smaller SF). Queries come from SPARK_GRAFT_ONLY or default to
-  * the round-10 bench's 25 slowest plus the round-11/12 additions.
-  * `pagerank_suppliers` — excluded in round 11 because its flat int64
-  * guard refused sf1's ~165k-node graph — is IN the default list since
-  * round 12's adaptive rank scale (GraphQueries.adaptiveR0): the guard
-  * now steps the scale down instead of refusing, and this artifact is
-  * where that claim gets measured. */
+  * the full-surface bench's 25 slowest plus the semantic-dedup, pagerank
+  * and components additions below. `pagerank_suppliers` is in the
+  * default list because the adaptive rank scale
+  * (GraphQueries.adaptiveR0) steps the scale down instead of refusing
+  * sf1's ~165k-node graph, and this artifact is where that claim gets
+  * measured. */
 object ScaleBench {
 
   val DefaultQueries: Seq[String] = Seq(
@@ -35,18 +35,18 @@ object ScaleBench {
     "graph_edge_support", "dedup_cluster_stats", "revenue_by_nation",
     "token_coverage", "bpe_apply", "try_cast_defaults", "contrastive_pairs",
     "bpe_train",
-    // The round-11 semantic-dedup additions ride the scale run too: the
+    // The semantic-dedup queries ride the scale run too: the
     // adaptive cell count (Similarity.autoCells) exists precisely so
     // these stay non-degenerate at sf1 — measure that, don't assume it.
     "semdedup", "semdedup_clusters", "semdedup_recall",
-    // Round 12: the adaptive-R0 pagerank must prove it runs at sf1.
+    // The adaptive-R0 pagerank must prove it runs at sf1.
     "pagerank_suppliers",
-    // Round 13: the sampled-truth recall audits, the star-round
+    // The sampled-truth recall audits, the star-round
     // components (tracked against the min-label fixpoint on the same
     // edge graph), and the CDC merge.
     "semdedup_recall_t9", "semdedup_recall_sampled",
     "dedup_components_converged", "dedup_components_star", "merge_upsert",
-    // Round 14: the two-level (coarse-quantized) assignment — the
+    // The two-level (coarse-quantized) assignment — the
     // sub-quadratic scale path whose growth vs `semdedup` /
     // `semdedup_recall_sampled` is the point of the design.
     "semdedup_2l", "semdedup_recall_2l")
@@ -89,9 +89,9 @@ object ScaleBench {
     // SparkEntry query at both SFs) — the strongest form of the growth
     // artifact; a query whose guard legitimately fires at the larger SF
     // lands in "errors", which is the artifact RECORDING the guard
-    // doing its job, not a failure. (As of round 12 no default-list
-    // query is expected there: pagerank's adaptive scale removed the
-    // last by-design refusal.)
+    // doing its job, not a failure. (No default-list query is expected
+    // there: pagerank's adaptive scale removed the last by-design
+    // refusal.)
     val names =
       if (sys.env.get("SPARK_GRAFT_SCALE_ALL").contains("1"))
         graft.SparkEntry.queries.keys.toSeq.sorted
@@ -124,7 +124,7 @@ object ScaleBench {
     }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
-    // data_ratio is MEASURED, not asserted (round-11 ADVICE): lineitem
+    // data_ratio is MEASURED, not asserted: lineitem
     // row counts at both dirs, parquet-metadata-only. A run against any
     // SF pair reports its own honest ratio.
     val dataRatio = {
@@ -132,11 +132,10 @@ object ScaleBench {
       val b = spark.read.parquet(s"$dirB/lineitem.parquet").count()
       if (a > 0) b.toDouble / a else Double.NaN
     }
-    // Per-table parquet file counts ride in the artifact header
-    // (round-12 VERDICT directive 4): the round-12 measurement bug —
-    // 8-file fixtures capping scans at 8-way parallelism and inflating
-    // large-SF medians up to 9× — is invisible in the timings alone. A
-    // mis-laid-out run is now self-identifying from its own header;
+    // Per-table parquet file counts ride in the artifact header: a
+    // layout fault — 8-file fixtures capping scans at 8-way parallelism
+    // and inflating large-SF medians up to 9× — is invisible in the
+    // timings alone. A mis-laid-out run is self-identifying from its own header;
     // FixtureLayoutSpec pins the generator side of the same contract.
     def fileCountsJson(dir: String): String =
       FixtureGen.TableNames.map { t =>

@@ -17,6 +17,21 @@ import graft.tools.FixtureGen
 class SemDedupPlantedRecallSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** One τ=0.9 audit over the `sf`-scale planted corpus of `n` vectors,
+    * collected. Each audit several tests read is computed once per suite
+    * (the lazy vals below): the audit is deterministic, so a second run
+    * with the same arguments only repeats the cost. */
+  private def audit(sf: Double, n: Long, trainIters: Int = 0): org.apache.spark.sql.Row = {
+    val row = Similarity.semDedupRecall(FixtureGen.embeddings(spark, sf), "vec_id", "embedding",
+      threshold = 0.9, k = Similarity.autoCells(n), trainIters = trainIters).head()
+    GraftCaches.releaseAll()
+    row
+  }
+
+  private lazy val seed2k = audit(0.1, 2000L)                      // 2000 vectors
+  private lazy val trained2k = audit(0.1, 2000L, trainIters = 1)
+  private lazy val trained20k = audit(1.0, 20000L, trainIters = 1) // 20000 vectors
+
   test("planted near-dups exist and pair at cosine >= 0.9 with their source") {
     import spark.implicits._
     val emb = FixtureGen.embeddings(spark, 0.1) // 2000 vectors
@@ -42,10 +57,7 @@ class SemDedupPlantedRecallSpec extends AnyFunSuite {
   }
 
   test("probe-2 candidate recall at tau=0.9 over the planted corpus clears 0.95") {
-    val emb = FixtureGen.embeddings(spark, 0.1) // 2000 vectors
-    val row = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(2000L)).head()
-    GraftCaches.releaseAll()
+    val row = seed2k
     val nTrue = row.getAs[Long]("n_true")
     val recallP2 = row.getAs[Double]("recall_p2")
     assert(nTrue > 20, s"planted corpus must have a non-empty tau=0.9 truth relation, got $nTrue")
@@ -58,13 +70,8 @@ class SemDedupPlantedRecallSpec extends AnyFunSuite {
     // The query layer runs the family with trainIters=1 (sf1 measured:
     // seed 0.921 → trained 0.976 over 594 true pairs). Pin the trained
     // path at this spec's corpus size too: >= the seed recall, >= 0.95.
-    val emb = FixtureGen.embeddings(spark, 0.1)
-    val seed = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(2000L)).head()
-    GraftCaches.releaseAll()
-    val trained = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(2000L), trainIters = 1).head()
-    GraftCaches.releaseAll()
+    val seed = seed2k
+    val trained = trained2k
     assert(trained.getAs[Long]("n_true") === seed.getAs[Long]("n_true"),
       "truth relation is training-invariant")
     val rs = seed.getAs[Double]("recall_p2")
@@ -83,13 +90,8 @@ class SemDedupPlantedRecallSpec extends AnyFunSuite {
     // fixture change that undoes the win now fails here, not in a
     // scale-run postmortem. (~2×30 s: the audit's blocked truth join at
     // 20k vectors, priced in — this is the regime measurement itself.)
-    val emb = FixtureGen.embeddings(spark, 1.0) // 20000 vectors
-    val seed = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(20000L)).head()
-    GraftCaches.releaseAll()
-    val trained = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(20000L), trainIters = 1).head()
-    GraftCaches.releaseAll()
+    val seed = audit(1.0, 20000L)
+    val trained = trained20k
     val nTrue = trained.getAs[Long]("n_true")
     assert(nTrue === seed.getAs[Long]("n_true"), "truth relation is training-invariant")
     assert(nTrue > 400, s"~594 planted true pairs expected at 20k vectors, got $nTrue")
@@ -119,9 +121,7 @@ class SemDedupPlantedRecallSpec extends AnyFunSuite {
     // use the engine's banded sign-LSH dedup instead (linear, recall
     // pinned by LshQuality) — that trade-off is the documented design.
     val emb = FixtureGen.embeddings(spark, 1.0) // 20000 vectors
-    val exact = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(20000L), trainIters = 1).head()
-    GraftCaches.releaseAll()
+    val exact = trained20k
     val two = Similarity.semDedupRecall2L(emb, "vec_id", "embedding",
       threshold = 0.9, k = Similarity.autoCells(20000L), trainIters = 1).head()
     GraftCaches.releaseAll()
@@ -191,9 +191,7 @@ class SemDedupPlantedRecallSpec extends AnyFunSuite {
     // pairs survive), (c) ppm=1e6 is the identity — bit-equal to the
     // unsampled audit.
     val emb = FixtureGen.embeddings(spark, 0.1) // 2000 vectors
-    val full = Similarity.semDedupRecall(emb, "vec_id", "embedding",
-      threshold = 0.9, k = Similarity.autoCells(2000L), trainIters = 1).head()
-    GraftCaches.releaseAll()
+    val full = trained2k
     val ident = Similarity.semDedupRecall(emb, "vec_id", "embedding",
       threshold = 0.9, k = Similarity.autoCells(2000L), trainIters = 1,
       truthSamplePpm = 1000000).head()
